@@ -50,6 +50,12 @@ object Bench {
     if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15) d.toLong.toString
     else f"$d%.4f"
 
+  /** The contract line's "sf" value: the numeric scale factor when the dir
+    * name ends in one (sf0.1 → 0.1), else the dir as a JSON string. */
+  private[graft] def sfField(sfDir: String): String =
+    "sf([0-9]+(\\.[0-9]+)?)/*$".r.findFirstMatchIn(sfDir).map(_.group(1))
+      .getOrElse("\"" + sfDir.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -210,14 +216,10 @@ object Bench {
     // after the JSON, then print and flush. "queries" is the per-query map
     // (min-of-two seconds, ms precision; a failed query reports -1 and is
     // named in "errors") — the driver's differ and scaling table read it.
-    // "sf" is the numeric scale factor when the dir name carries one
-    // (sf0.1 → 0.1), else the dir string.
     spark.stop()
     val qmap = results
       .map(s => s""""${s.name}":${f"${s.min}%.3f"}""").mkString("{", ",", "}")
-    val sfJson = "sf([0-9.]+)/*$".r.findFirstMatchIn(sfDir)
-      .map(_.group(1)).getOrElse("\"" + sfDir + "\"")
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qmap,"sf":$sfJson,"total_sec":${f"$total%.3f"},"n":${results.size},"n_errors":$nErrors,"errors":$errors}""")
+    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qmap,"sf":${sfField(sfDir)},"total_sec":${f"$total%.3f"},"n":${results.size},"n_errors":$nErrors,"errors":$errors}""")
     System.out.flush()
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.functions.CosineSimilarity
+import graft.plans.GraftExtensions
 import org.apache.spark.sql.SparkSession
 
 /** Opinionated session factory: the conf an operator of this engine should
@@ -18,22 +20,32 @@ import org.apache.spark.sql.SparkSession
   *    memory with room for a hash aggregate.
   *  - UTC session timezone: all date logic timezone-pure (the DuckDB oracle
   *    and any cross-system consumer agree).
+  *
+  * It is also the one place the engine plugs into Catalyst: every session
+  * is built with [[GraftExtensions]], so the native functions and the
+  * top-k-per-group strategy are part of the session state from the start
+  * and no query has to register anything.
   */
 object GraftSession {
 
   def build(master: String, parallelism: Int,
       appName: String = "graft",
       extraConf: Map[String, String] = Map.empty): SparkSession = {
-    // getOrCreate silently ignores static confs (master!) on an existing
-    // session while still applying runtime confs — a half-reconfigured
-    // session is worse than an error, so refuse a master mismatch outright.
+    // getOrCreate silently ignores static confs (master!) and extensions on
+    // an existing session while still applying runtime confs — a
+    // half-reconfigured session is worse than an error, so refuse a master
+    // mismatch, or a session built without the extensions, outright.
     SparkSession.getDefaultSession.filter(s => !s.sparkContext.isStopped)
       .foreach { existing =>
         val m = existing.sparkContext.master
         require(m == master,
           s"a SparkSession with master '$m' already exists; cannot rebuild as '$master'")
+        require(existing.sessionState.functionRegistry.functionExists(CosineSimilarity.ident),
+          "a SparkSession built without graft.plans.GraftExtensions already exists; " +
+            "its queries could not resolve the engine's native functions")
       }
     val b = SparkSession.builder()
+      .withExtensions(new GraftExtensions)
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", parallelism.toString)
@@ -53,9 +65,7 @@ object GraftSession {
       // to satisfy it (see Joins.qJoinBucketed)
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     extraConf.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    graft.functions.CosineSimilarity.register(s)
-    s
+    b.getOrCreate()
   }
 
   /** The local entry-point shape Verify/Bench/Profile/Explain share: every

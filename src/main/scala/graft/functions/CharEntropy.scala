@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -101,8 +100,4 @@ object CharEntropy {
     case other => throw new IllegalArgumentException(
       s"char_entropy expects 1 argument, got ${other.size}")
   }
-
-  /** Runtime registration for sessions not launched with the extension. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

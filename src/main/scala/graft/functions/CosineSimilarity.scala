@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -96,8 +95,4 @@ object CosineSimilarity {
     case other => throw new IllegalArgumentException(
       s"cosine_sim expects 2 arguments, got ${other.size}")
   }
-
-  /** Runtime registration for sessions not launched with the extension. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

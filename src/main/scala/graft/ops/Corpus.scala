@@ -621,7 +621,6 @@ object Corpus extends QueryModule {
     * both engines. At 100 TB this is the cheapest shape there is: one
     * map-combined aggregation, a |lang|-row result, no joins. */
   def qTokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SubTokenCount.register(spark)
     Tables.documents(spark, dir)
       .select(col("lang"),
         size(split(lower(trim(col("text"))), " ")).cast("long").as("w"),

@@ -34,7 +34,6 @@ object IvfIndex {
     * `vectors` (vec_id, embedding) and persist centroids + assignments,
     * replacing any prior index at `path`. */
   def init(spark: SparkSession, vectors: DataFrame, path: String): Unit = {
-    graft.functions.CosineSimilarity.register(spark)
     val cent = Similarity.ivfCentroids(vectors, 16, 2)
     cent.write.mode("overwrite").parquet(s"$path/centroids")
     Similarity.assignToCentroids(vectors, cent)
@@ -44,7 +43,6 @@ object IvfIndex {
   /** Append a new batch's list assignments under the FROZEN centroids;
     * vectors already present are skipped (idempotent re-ingest). */
   def upsert(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    graft.functions.CosineSimilarity.register(spark)
     val cent = spark.read.parquet(s"$path/centroids")
     val existing = spark.read.parquet(s"$path/assignments")
       .select(col("vec_id")).distinct()
@@ -62,7 +60,6 @@ object IvfIndex {
   def probe(spark: SparkSession, queries: DataFrame, path: String,
       nprobe: Int = 4, topk: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.CosineSimilarity.register(spark)
     val cent = spark.read.parquet(s"$path/centroids")
     val assigned = spark.read.parquet(s"$path/assignments")
     val probeW = Window.partitionBy(col("qid")).orderBy(col("qsim").desc, col("cid"))

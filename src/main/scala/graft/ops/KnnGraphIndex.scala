@@ -37,7 +37,6 @@ object KnnGraphIndex {
     * embedding — pre-filtered to the canonical 64-dim nonzero form) and
     * persist graph + vectors, replacing any prior index at `path`. */
   def init(spark: SparkSession, vectors: DataFrame, path: String): Unit = {
-    graft.functions.CosineSimilarity.register(spark)
     val parts = Similarity.knnGraphParts(vectors)
     parts.nn1.write.mode("overwrite").parquet(s"$path/graph")
     vectors.select(col("vec_id"), col("embedding"))
@@ -51,7 +50,6 @@ object KnnGraphIndex {
     * already-stored vec_ids are dropped before linking. */
   def upsert(spark: SparkSession, batch: DataFrame, path: String,
       degree: Int = 4): Unit = {
-    graft.functions.CosineSimilarity.register(spark)
     import org.apache.spark.sql.expressions.Window
     val stored = spark.read.parquet(s"$path/vectors")
     val fresh = batch.select(col("vec_id"), col("embedding"))
@@ -77,7 +75,6 @@ object KnnGraphIndex {
     * (cos DESC, vec_id ASC) tie-break, self-matches excluded. */
   def search(spark: SparkSession, queries: DataFrame, path: String,
       hops: Int = 3, beam: Int = 8, topk: Int = 5): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     import org.apache.spark.sql.expressions.Window
     val visited = Similarity.beamSearch(
       spark.read.parquet(s"$path/graph"),

@@ -699,8 +699,13 @@ object Relational extends QueryModule {
         col("n_rows"), col("chk"))
   }
 
-  def qTxnCommit(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$sinkRoot${Integer.toHexString(dir.hashCode)}/txn_${System.nanoTime()}"
+  def qTxnCommit(spark: SparkSession, dir: String): DataFrame =
+    txnCommitCensus(spark, dir,
+      s"$sinkRoot${Integer.toHexString(dir.hashCode)}/txn_${System.nanoTime()}")
+
+  /** [[qTxnCommit]] with the table created at `path`. */
+  private[graft] def txnCommitCensus(spark: SparkSession, dir: String,
+      path: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
     TxnLog.init(ev.filter(col("event_id") % 5 =!= 0), path, nFiles = 4)
@@ -726,8 +731,7 @@ object Relational extends QueryModule {
       (v, action, attempts.toLong, TxnLog.liveFiles(path, v).size.toLong)
     }.toDF("version", "action", "attempts", "n_files"))
     spark.read.parquet(distinctFiles: _*)
-      .select(col("event_id"),
-        regexp_replace(input_file_name(), "^file:(//)?", "").as("_file"))
+      .select(col("event_id"), TxnLog.inputFilePath.as("_file"))
       .join(fv, "_file")
       .groupBy(col("version"))
       .agg(count(lit(1)).as("n_rows"),

@@ -109,7 +109,6 @@ object Similarity extends QueryModule {
          |  (x, w) -> CAST(x AS DOUBLE) * w), 0D, (a, b) -> a + b) > 0
          |  THEN ${1 << h} ELSE 0 END)""".stripMargin
     }.mkString("(", " + ", ")")
-    graft.functions.CosineSimilarity.register(spark)
     val coded = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
       .withColumn("code", expr(codeExpr))
@@ -128,7 +127,6 @@ object Similarity extends QueryModule {
     * order, bit-identical output (shares the brute-force oracle), one fused
     * primitive loop per row instead of ~192 interpreted lambda evals. */
   def qCosineTopkNative(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     withQuery(spark, dir)
       .filter(col("vec_id") =!= 0 && size(col("embedding")) === 64 && expr(normSqExpr) > 0)
       .withColumn("cos_raw", expr("cosine_sim(embedding, qvec)"))
@@ -153,7 +151,6 @@ object Similarity extends QueryModule {
     * scanning it. */
   def qKnnJoin(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.CosineSimilarity.register(spark)
     val base = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
     val batch = base.filter(servingBatchPred)
@@ -198,7 +195,6 @@ object Similarity extends QueryModule {
     * linear in batches × corpus. */
   def qRetrievalEval(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.CosineSimilarity.register(spark)
     val base = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
     val batch = base.filter(servingBatchPred)
@@ -393,7 +389,6 @@ object Similarity extends QueryModule {
     * the same training and verifies the whole batch exactly. */
   def qAnnIvfBatch(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
     val cent = ivfCentroids(e, 16, 2)
@@ -436,7 +431,6 @@ object Similarity extends QueryModule {
     * probe reads 4/16 of the data); the 64-query page and its probe lists
     * broadcast; index growth is append-only parquet. */
   def qIvfIncremental(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
       .select(col("vec_id"), col("embedding"))
@@ -464,7 +458,6 @@ object Similarity extends QueryModule {
     * Spark vs NaN in DuckDB would otherwise diverge — NaN sorts first in
     * a DuckDB DESC). */
   def qAnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
     val centroids = ivfCentroids(e, 16, 2)
@@ -590,7 +583,6 @@ object Similarity extends QueryModule {
     * [[ivfCentroids]] discipline. k and the pool size are serving-time
     * constants; a bigger pool changes only the tiny loop, not the scan. */
   def qMmrDiversify(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
@@ -643,7 +635,6 @@ object Similarity extends QueryModule {
     * only true near-dup pairs in the min() shuffle. */
   def qSemdedup(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
     val cent = ivfCentroids(e, 16, 2)
@@ -689,7 +680,6 @@ object Similarity extends QueryModule {
     * in LlmOpsSpec measures recall where it matters; precision is exactly
     * 1.0 by construction (every emitted pair passed the exact verify). */
   def qDedupEmbedding(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
     // 8 band keys per vector: bit j of band b = sign(embedding[b*8+j]).
@@ -860,7 +850,6 @@ object Similarity extends QueryModule {
     * combinable. */
   def qKnnClassify(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.CosineSimilarity.register(spark)
     val base = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
     val batch = base.filter(servingBatchPred)
@@ -1049,7 +1038,6 @@ object Similarity extends QueryModule {
     * product they cannot win. */
   def qHardNegatives(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.CosineSimilarity.register(spark)
     val base = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
     val batch = base.filter(servingBatchPred)
@@ -1158,7 +1146,6 @@ object Similarity extends QueryModule {
     * top-k is a rank window partitioned by node. */
   def qAnnNndescent(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.CosineSimilarity.register(spark)
     val parts = knnGraphParts(Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
       .select(col("vec_id"), col("embedding")), report = true)
@@ -1258,7 +1245,6 @@ object Similarity extends QueryModule {
     * round-10 change) — its build plan is NOT what this twin pins. */
   private[graft] def graphServeUncheckpointed(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.CosineSimilarity.register(spark)
     // report = true: the twin pins the HOP joins' shape, so the BUILD
     // half stays behind its checkpoints exactly as it did before the
     // round-10 serving-path change (PlanSpec reads this plan; the
@@ -1291,7 +1277,6 @@ object Similarity extends QueryModule {
     * expansion — not just the final page — is hash-checked. */
   def qAnnGraphServe(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.CosineSimilarity.register(spark)
     val parts = knnGraphParts(Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
       .select(col("vec_id"), col("embedding")))

@@ -38,7 +38,6 @@ object TextAnalysis extends QueryModule {
     * regexp_extract_all's per-char regex step plus a match array built
     * only to be counted (took q_text_quality from ~8 s to regex-free). */
   def qTextQuality(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SubTokenCount.register(spark)
     Tables.documents(spark, dir)
       .withColumn("toks", split(lower(trim(col("text"))), " "))
       .select(
@@ -215,7 +214,6 @@ object TextAnalysis extends QueryModule {
     * DuckDB oracle shares). Empty documents have no distribution and are
     * excluded by contract. */
   def qTextEntropy(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CharEntropy.register(spark)
     Tables.documents(spark, dir)
       .filter(length(col("text")) > 0)
       .select(col("doc_id"),

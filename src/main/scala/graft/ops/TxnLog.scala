@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Minimal optimistic-concurrency transaction log — the atomic-commit
@@ -216,9 +216,15 @@ object TxnLog {
     throw new IllegalStateException("unreachable")
   }
 
-  /** `input_file_name()` URIs back to the absolute paths the log stores. */
+  /** `input_file_name()` URIs back to the absolute paths the log stores.
+    * The URI is percent-encoded, so a table path holding a space, `%` or
+    * `#` must be decoded by a URI parser, not prefix-stripped. */
   private def toLocalPath(uri: String): String =
     if (uri.startsWith("file:")) java.net.URI.create(uri).getPath else uri
+
+  /** [[toLocalPath]] of each row's `input_file_name()`, for joining scanned
+    * rows against the file lists of the log. */
+  private[ops] def inputFilePath: Column = udf(toLocalPath _).apply(input_file_name())
 
   /** Row-level MERGE (upsert by `key`) committed through the log — the
     * scalable dual of the reference's replace-mode load

@@ -3,11 +3,12 @@ package graft.plans
 import graft.functions.{CharEntropy, CosineSimilarity, JaroWinkler, SubTokenCount}
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** Session-extension entry point: launch with
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions` to make the
-  * engine's native expressions available to pure-SQL users on every session
-  * of the cluster (the harness registers them at runtime instead — see
-  * [[CosineSimilarity.register]]).
+/** Everything the engine adds to Catalyst: the four native expressions and
+  * the top-k-per-group planner strategy. [[graft.GraftSession.build]]
+  * installs it on every session it builds — the single install site, so
+  * no query registers a function or a strategy at run time. A pure-SQL
+  * session outside that factory gets the same surface by launching with
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -19,10 +20,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       SubTokenCount.builder))
     ext.injectFunction((JaroWinkler.ident, JaroWinkler.info,
       JaroWinkler.builder))
-    ext.injectOptimizerRule(_ => LevenshteinGuard)
-    // the per-group top-k physical operator: sessions built with the
-    // extensions plan TopKPerGroupPlan without needing the runtime
-    // experimental-strategies registration in TopKPerGroup.apply
     ext.injectPlannerStrategy(_ => TopKPerGroup.Strategy)
   }
 }

@@ -105,9 +105,8 @@ object TopKPerGroup {
     }
   }
 
-  /** Planner strategy mapping the logical node to the exec — registered
-    * idempotently on first use via `spark.experimental.extraStrategies`
-    * (runtime registration, same discipline as the function registry). */
+  /** Planner strategy mapping the logical node to the exec, injected by
+    * [[GraftExtensions]]. */
   object Strategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
       case TopKPerGroupPlan(g, o, k, r, child) =>
@@ -121,15 +120,6 @@ object TopKPerGroup {
     * — plus a 1-based `rn` column. */
   def apply(df: DataFrame, groupCols: Seq[String],
       order: Seq[(String, Boolean)], k: Int): DataFrame = {
-    val spark = df.sparkSession
-    // synchronized: concurrent first-uses from parallel driver threads
-    // (the bench's concurrent-families mode) would otherwise race the
-    // read-modify-write and drop a registration
-    Strategy.synchronized {
-      if (!spark.experimental.extraStrategies.contains(Strategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ Strategy
-    }
     val analyzed = df.queryExecution.analyzed
     val resolve = analyzed.output.map(a => a.name -> a).toMap
     def attr(c: String): Attribute = resolve.getOrElse(c,
@@ -141,7 +131,7 @@ object TopKPerGroup {
         else org.apache.spark.sql.catalyst.expressions.Ascending)
     }
     val rankAttr = AttributeReference("rn", LongType, nullable = false)()
-    InternalDataFrames.ofPlan(spark,
+    InternalDataFrames.ofPlan(df.sparkSession,
       TopKPerGroupPlan(groupExprs, sortOrder, k, rankAttr, analyzed))
   }
 }

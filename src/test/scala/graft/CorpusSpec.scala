@@ -62,7 +62,6 @@ class CorpusSpec extends SparkSpec {
 
   test("native subtoken_count is identical to the regexp_extract_all formulation") {
     import spark.implicits._
-    graft.functions.SubTokenCount.register(spark)
     val edge = Seq("", "   ", "abc", "abc123", "a1b2", "don't stop-me now!!",
       "x  y", "é ü ñ", "😀a😀", "3.14 costs $2", "ABCdef GHI", "a", "7")
       .toDF("text")

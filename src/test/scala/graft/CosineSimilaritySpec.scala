@@ -17,7 +17,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("known values: parallel=1, orthogonal=0, antiparallel=-1; zero-norm=null") {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     val df = Seq(
       ("par",  Array(1f, 2f, 3f), Array(2f, 4f, 6f)),
@@ -33,7 +32,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("length mismatch and null elements yield NULL, matching zip_with") {
-    CosineSimilarity.register(spark)
     import spark.implicits._
     val df = Seq(
       ("short", Array(1f, 2f), Array(1f, 2f, 3f)),
@@ -57,7 +55,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("expression participates in whole-stage codegen") {
-    CosineSimilarity.register(spark)
     val df = Tables.embeddings(spark, sf)
       .withColumn("c", expr("cosine_sim(embedding, embedding)"))
     df.collect()
@@ -77,7 +74,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("wrong arity raises a clear error") {
-    CosineSimilarity.register(spark)
     val e = intercept[Exception] {
       Tables.embeddings(spark, sf).withColumn("c", expr("cosine_sim(embedding)")).collect()
     }

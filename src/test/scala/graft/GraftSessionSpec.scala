@@ -1,20 +1,33 @@
 package graft
 
+import graft.plans.TopKPerGroup
+import graft.plans.TopKPerGroup.TopKPerGroupExec
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.BareSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftSessionSpec extends AnyFunSuite {
 
-  test("session factory applies scale confs and registers engine functions") {
-    // All suites share one JVM-wide session: create the canonical test
-    // session FIRST (so its static confs — temp warehouse dir, no UI —
-    // win), snapshot the runtime confs build() touches, and restore them
-    // so other suites aren't order-dependent on this one.
+  /** All suites share one JVM-wide session: create the canonical test
+    * session FIRST (so its static confs — temp warehouse dir, no UI — win),
+    * snapshot the runtime confs build() touches, and restore them so other
+    * suites aren't order-dependent on this one. */
+  private def withSharedConfRestored(body: => Unit): Unit = {
     val shared = SparkSpec.session
     val touched = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
       "spark.sql.adaptive.skewJoin.enabled", "spark.sql.adaptive.coalescePartitions.enabled",
       "spark.sql.files.maxPartitionBytes", "spark.sql.session.timeZone")
     val saved = touched.map(k => k -> shared.conf.getOption(k)).toMap
-    try {
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => shared.conf.set(k, v)
+      case (k, None)    => shared.conf.unset(k)
+    }
+  }
+
+  test("session factory applies scale confs and registers engine functions") {
+    withSharedConfRestored {
       val s = GraftSession.build("local[4]", parallelism = 4, appName = "graft-test")
       assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
       assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
@@ -30,10 +43,41 @@ class GraftSessionSpec extends AnyFunSuite {
         GraftSession.build("local[2]", parallelism = 2)
       }
       assert(e.getMessage.contains("already exists"))
-    } finally saved.foreach {
-      case (k, Some(v)) => shared.conf.set(k, v)
-      case (k, None)    => shared.conf.unset(k)
     }
+  }
+
+  test("a built session resolves every native function in SQL and plans TopKPerGroupExec") {
+    withSharedConfRestored {
+      val s = GraftSession.build("local[4]", parallelism = 4, appName = "graft-test")
+      val r = s.sql(
+        """SELECT cosine_sim(array(CAST(1 AS FLOAT), CAST(0 AS FLOAT)),
+          |                  array(CAST(0 AS FLOAT), CAST(1 AS FLOAT))) AS cos,
+          |       char_entropy('aabb') AS ent,
+          |       subtoken_count('abc123 x!') AS toks,
+          |       jaro_winkler('MARTHA', 'MARHTA') AS jw""".stripMargin).collect()(0)
+      assert(r.getDouble(0) == 0.0)
+      assert(math.abs(r.getDouble(1) - 1.0) < 1e-12)
+      assert(r.getInt(2) == 4) // "abc", "123", "x", "!"
+      assert(math.abs(r.getDouble(3) - 0.9611) < 1e-4)
+      val top = TopKPerGroup(
+        s.range(100).select((col("id") % 5).as("g"), col("id").as("v")),
+        Seq("g"), Seq(("v", true)), k = 2)
+      assert(top.queryExecution.sparkPlan.collect { case e: TopKPerGroupExec => e }.nonEmpty,
+        top.queryExecution.sparkPlan.toString)
+      assert(top.filter(col("rn") === 1L).select("v").collect().map(_.getLong(0)).sorted
+        .sameElements(95L to 99L))
+    }
+  }
+
+  test("refuses an existing session that was built without the extensions") {
+    val shared = SparkSpec.session
+    SparkSession.setDefaultSession(BareSession.on(shared.sparkContext))
+    try {
+      val e = intercept[IllegalArgumentException] {
+        GraftSession.build("local[4]", parallelism = 4)
+      }
+      assert(e.getMessage.contains("GraftExtensions"))
+    } finally SparkSession.setDefaultSession(shared)
   }
 
   test("events loader normalizes ts to TimestampType on the HARNESS data") {

@@ -22,7 +22,6 @@ class IvfIndexSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("init+upsert reproduces from-scratch assignment; re-upsert is a no-op") {
-    graft.functions.CosineSimilarity.register(spark)
     val path = java.nio.file.Files.createTempDirectory("ivf_index").toString + "/idx"
     val v = vectors
     val init = v.filter(col("vec_id") % 10 =!= 0)
@@ -44,7 +43,6 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("LIVE streaming ingest across forced micro-batches: index and probe equal the batch twin") {
-    graft.functions.CosineSimilarity.register(spark)
     val tmp = java.nio.file.Files.createTempDirectory("ivf_stream").toString
     val stage = s"$tmp/in"; val cp = s"$tmp/cp"; val path = s"$tmp/idx"
     val v = vectors
@@ -79,7 +77,6 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("probe from the upserted index equals the in-query serving result") {
-    graft.functions.CosineSimilarity.register(spark)
     val path = java.nio.file.Files.createTempDirectory("ivf_probe").toString + "/idx"
     val v = vectors
     IvfIndex.init(spark, v.filter(col("vec_id") % 10 =!= 0), path)

@@ -28,7 +28,6 @@ class JaroWinklerSpec extends SparkSpec {
   }
 
   test("SQL registration works and the expression stays in codegen") {
-    JaroWinkler.register(spark)
     import spark.implicits._
     val lit = Seq(("MARTHA", "MARHTA")).toDF("a", "b")
       .select(expr("jaro_winkler(a, b)").as("jw"))

@@ -22,7 +22,6 @@ class KnnGraphIndexSpec extends SparkSpec {
       .toSeq.sortBy(t => (t._1, t._4))
 
   test("init+search serves exactly the in-query q_ann_graph_serve page") {
-    graft.functions.CosineSimilarity.register(spark)
     val path = java.nio.file.Files.createTempDirectory("knng").toString + "/idx"
     val v = vectors
     KnnGraphIndex.init(spark, v, path)
@@ -35,7 +34,6 @@ class KnnGraphIndexSpec extends SparkSpec {
   }
 
   test("upsert links deterministically; new nodes reachable; re-upsert is a no-op") {
-    graft.functions.CosineSimilarity.register(spark)
     val v = vectors
     val seed = v.filter(col("vec_id") % 5 =!= 0)
     val batch = v.filter(col("vec_id") % 5 === 0)

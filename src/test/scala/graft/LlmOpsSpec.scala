@@ -391,7 +391,6 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("semdedup: keep/drop partitions the corpus and every verdict is justified") {
-    graft.functions.CosineSimilarity.register(spark)
     val out = Similarity.qSemdedup(spark, sf)
     val rows = out.collect()
     val e = Tables.embeddings(spark, sf)
@@ -474,7 +473,6 @@ class LlmOpsSpec extends SparkSpec {
           .toDouble) }
     assert(got.toSeq == want, "PQ pipeline must replay bit-for-bit")
     // honest recall floor on this uniform corpus (see the op's doc)
-    graft.functions.CosineSimilarity.register(spark)
     val qv = emb(0L)
     val exact = emb.toSeq.filter(_._1 != 0L)
       .map { case (id, v) =>
@@ -485,7 +483,6 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("mmr: the 5 picks replay an in-memory greedy selection over the top-20 pool") {
-    graft.functions.CosineSimilarity.register(spark)
     val got = Similarity.qMmrDiversify(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
     val emb = Tables.embeddings(spark, sf)

@@ -66,38 +66,38 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("char_entropy"), "native expression must drive the plan")
   }
 
-  test("LevenshteinGuard injects the length short-circuit and is idempotent") {
+  test("thresholded levenshtein keeps exactly the <= 3 pairs and drives q_dedup_fuzzy") {
+    // levenshtein(a, b, 3) is -1 past the threshold, so `>= 0` must keep the
+    // same pairs, with the same distances, as the true-distance `<= 3`.
+    // Truncated copies of the names put pairs on both sides of the bound.
     import org.apache.spark.sql.functions._
     val p = Tables.part(spark, sf)
     val a = p.select(col("p_partkey").as("ak"), col("p_name").as("an"))
-    val b = p.select(col("p_partkey").as("bk"), col("p_name").as("bn"))
-    val joined = a.crossJoin(b).filter(levenshtein(col("an"), col("bn")) <= 2)
-    val analyzed = joined.queryExecution.analyzed
-    val once = graft.plans.LevenshteinGuard(analyzed)
-    val s = once.toString
-    assert(s.contains("abs") && s.contains("length"),
-      s"guard must appear in the rewritten plan:\n$s")
-    assert(graft.plans.LevenshteinGuard(once) == once,
-      "second application must be a no-op (fixed point)")
-    // the guard is implied by the levenshtein bound — row sets identical
-    val guarded = a.crossJoin(b).filter(
-      abs(length(col("an")) - length(col("bn"))) <= 2 &&
-        levenshtein(col("an"), col("bn")) <= 2)
-    assert(joined.count() == guarded.count())
-  }
+    val b = p.filter(col("p_partkey") <= 50)
+      .select(col("p_partkey").as("bk"), explode(sequence(lit(0), lit(5))).as("cut"),
+        col("p_name"))
+      .select(col("bk"), col("cut"),
+        expr("substring(p_name, 1, length(p_name) - cut)").as("bn"))
+    val pairs = a.crossJoin(b)
+    val thresholded = pairs
+      .withColumn("dist", levenshtein(col("an"), col("bn"), 3))
+      .filter(col("dist") >= 0).select("ak", "bk", "cut", "dist")
+    val exact = pairs
+      .withColumn("dist", levenshtein(col("an"), col("bn")))
+      .filter(col("dist") <= 3).select("ak", "bk", "cut", "dist")
+    assert(thresholded.count() == exact.count())
+    assert(thresholded.exceptAll(exact).isEmpty && exact.exceptAll(thresholded).isEmpty)
+    assert(exact.select("dist").distinct().collect().map(_.getInt(0)).sorted
+      .sameElements(0 to 3), "the data must reach every distance up to the bound")
 
-  test("LevenshteinGuard leaves the 3-arg threshold form alone") {
-    // levenshtein(a, b, t) returns -1 past the threshold; the length guard
-    // is only implied when the expression returns the TRUE distance, so the
-    // rule must not touch the thresholded form (it would drop rows).
-    import org.apache.spark.sql.functions._
-    val p = Tables.part(spark, sf)
-    val a = p.select(col("p_partkey").as("ak"), col("p_name").as("an"))
-    val b = p.select(col("p_partkey").as("bk"), col("p_name").as("bn"))
-    val j = a.crossJoin(b).filter(expr("levenshtein(an, bn, 2) <= 2"))
-    val analyzed = j.queryExecution.analyzed
-    assert(graft.plans.LevenshteinGuard(analyzed) == analyzed,
-      "thresholded levenshtein must pass through unguarded")
+    // the physical plan AQE starts from: at sf0.001 no blocked pair is
+    // within the bound, and the final plan collapses to an empty relation
+    val df = graft.ops.Dedup.qFuzzyPairs(spark, sf)
+    val adaptive = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val lev = adaptive.flatMap(df.queryExecution.executedPlan)(_.expressions.flatMap(_.collect {
+      case l: org.apache.spark.sql.catalyst.expressions.Levenshtein => l }))
+    assert(lev.nonEmpty && lev.forall(_.threshold.isDefined),
+      s"q_dedup_fuzzy must run the 3-argument levenshtein:\n${df.queryExecution.executedPlan}")
   }
 
   // The three event_type windows were re-planned in round 3 so that no

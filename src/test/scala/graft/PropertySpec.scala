@@ -65,7 +65,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("cosine_sim is symmetric, bounded, and 1 on self (non-zero vectors)") {
-    graft.functions.CosineSimilarity.register(spark)
     val vecs = Gen.listOfN(8, Gen.listOfN(6, Gen.chooseNum(-5f, 5f)))
     forAllSamples(vecs, 6) { vs =>
       val nonZero = vs.filter(_.exists(_ != 0f))

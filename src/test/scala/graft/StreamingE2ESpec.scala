@@ -330,14 +330,12 @@ class StreamingE2ESpec extends SparkSpec {
     assert(out.select("event_id").distinct().count() == 130)
   }
 
-  test("cosine_sim resolves in pure SQL after registration") {
-    // The withExtensions path can't be exercised in-JVM (getOrCreate returns
-    // the shared session); GraftExtensions delegates to the same
-    // (ident, info, builder) triple the runtime path registers, so SQL-level
-    // resolution through the analyzer is the behavior under test.
-    new graft.plans.GraftExtensions() // constructs cleanly
-    graft.functions.CosineSimilarity.register(spark)
-    val r = spark.sql(
+  test("cosine_sim resolves in pure SQL through the session extensions") {
+    // newSession() builds its function registry from the builtins plus the
+    // extensions the shared session was built with; nothing registered at
+    // run time on the parent carries over, so resolving here proves the
+    // GraftExtensions install in GraftSession.build.
+    val r = spark.newSession().sql(
       "SELECT cosine_sim(array(CAST(1 AS FLOAT), CAST(0 AS FLOAT)), " +
         "array(CAST(1 AS FLOAT), CAST(0 AS FLOAT))) AS c").collect()(0).getDouble(0)
     assert(math.abs(r - 1.0) < 1e-12)

@@ -224,4 +224,20 @@ class TxnLogSpec extends SparkSpec {
       (1L, 2L, "compact", "*", 0L, 0L, 0L, 0L)).sortBy(t => (t._1, t._4))
     assert(got == want, "CDF must be derived from commit churn exactly")
   }
+
+  test("q_txn_commit census keeps every version on a path with a space and a %") {
+    // input_file_name() percent-encodes the path (" " -> %20, "%" -> %25);
+    // a census that matched it against the log's plain paths by string
+    // would silently drop every row of every version
+    val path = freshPath("txn 100% census")
+    val census = graft.ops.Relational.txnCommitCensus(spark, sf, path).collect()
+      .map(r => (r.getLong(0), r.getLong(4), r.getLong(5))).toSeq
+    val pinned = (0L to 2L).map { v =>
+      val r = TxnLog.read(spark, path, v)
+        .agg(count(lit(1)), coalesce(sum(col("event_id")), lit(0L))).head()
+      (v, r.getLong(0), r.getLong(1))
+    }
+    assert(pinned.forall(_._2 > 0L))
+    assert(census == pinned, s"census $census must equal the pinned reads $pinned")
+  }
 }

@@ -18,7 +18,7 @@ import java.nio.file.{Files, Paths}
   * (StdoutOutput) and suppresses the banner (showSuccess := false), and
   * the per-query map — which the driver's round-over-round differ and
   * scaling table need — is restored. Every per-query number (both timing
-  * samples, GC-time deltas, JVM counters, the optional concurrent pass)
+  * samples, GC-time and codegen-compile deltas, JVM counters, the optional concurrent pass)
   * ALSO goes to `bench_full.json` plus a core-count-stamped copy
   * (`bench_full_c<cpus>.json`), so the driver's 8-core rerun can no
   * longer clobber its 32-core per-query data.
@@ -31,9 +31,8 @@ import java.nio.file.{Files, Paths}
   * SPARK_GRAFT_BENCH_ONLY (comma-separated key filter for spot-benching
   * a subset — e.g. the sf0.5 scaling probe; a filtered run writes its
   * artifact to `bench_only.json`, never touching the driver-graded
-  * `bench_full.json`), SPARK_GRAFT_CONC_OUT (a round-stamped path the
-  * concurrent pass is durably copied to — bench_full.json is overwritten
-  * by the driver's sequential rerun each round).
+  * `bench_full.json`), SPARK_GRAFT_BENCH_OUT (a durable extra copy of the
+  * full artifact, concurrent pass included).
   */
 object Bench {
 
@@ -46,6 +45,12 @@ object Bench {
       .map(_.getCollectionTime.max(0L)).sum
   }
 
+  /** Classes Janino has compiled in this JVM so far (Spark's own
+    * `CodegenMetrics` counter; local[N] runs driver and tasks in one JVM).
+    * The delta around a key counts the generated classes it recompiled. */
+  private def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   private def jsonNum(d: Double): String =
     if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15) d.toLong.toString
     else f"$d%.4f"
@@ -55,6 +60,39 @@ object Bench {
   private[graft] def sfField(sfDir: String): String =
     "sf([0-9]+(\\.[0-9]+)?)/*$".r.findFirstMatchIn(sfDir).map(_.group(1))
       .getOrElse("\"" + sfDir.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
+
+  /** One key's timed samples and what they cost besides time. */
+  private[graft] final case class Sample(name: String, t1: Double, t2: Double,
+      gcMs: Long, compiles: Long) {
+    def min: Double = if (t1 < 0 || t2 < 0) -1.0 else math.min(t1, t2)
+    /** The key's entry in bench_full.json's "queries" map. */
+    def json: String =
+      s""""$name":{"t1":${jsonNum(t1)},"t2":${jsonNum(t2)},"min":${jsonNum(min)},""" +
+        s""""gc_ms":$gcMs,"codegen_compiles":$compiles}"""
+  }
+
+  /** Time `run` TWICE; the key reports the MIN: on a shared box a single
+    * sample randomly absorbs neighbor GC/JIT churn (observed 7.9 s vs 0.8 s
+    * steady state for the same query in one run); min-of-two is the
+    * standard steady-state estimator and applies identically to every
+    * query and every round. A query that throws reports -1 (never its
+    * meaningless elapsed time) and lands in "errors" — a silently broken
+    * query must not skew the total or read as a measurement. GC time and
+    * codegen compiles are deltas over both samples. */
+  private[graft] def sample(name: String)(run: => Unit): Sample = {
+    def timed(): Double = {
+      val t0 = System.nanoTime()
+      run
+      (System.nanoTime() - t0) / 1e9
+    }
+    val g0 = gcMillis()
+    val c0 = codegenCompiles()
+    try { val a = timed(); val b = timed()
+      Sample(name, a, b, gcMillis() - g0, codegenCompiles() - c0) }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $name: $e")
+      Sample(name, -1.0, -1.0, gcMillis() - g0, codegenCompiles() - c0) }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -77,7 +115,11 @@ object Bench {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     // One untimed warmup pass: JIT + codegen compilation + parquet footer
     // caching otherwise lands entirely on whichever query happens to run
-    // first and dominates its wall time 3-10x over steady state.
+    // first and dominates its wall time 3-10x over steady state. It warms
+    // codegen only because the session's codegen cache holds the whole
+    // suite's working set (GraftSession.CodegenCacheEntries); were it
+    // smaller, the LRU would evict each key's classes before its timed
+    // samples, and `codegen_compiles` in bench_full.json would show it.
     selected.foreach { case (_, fn) =>
       try run(fn) catch { case _: Throwable => () }
     }
@@ -98,28 +140,7 @@ object Bench {
     ordered.headOption.foreach { case (_, fn) =>
       try run(fn) catch { case _: Throwable => () }
     }
-    // A query that throws reports -1 (never its meaningless elapsed time)
-    // and lands in "errors" — a silently broken query must not skew the
-    // total or read as a measurement. Each query is timed TWICE and reports
-    // the MIN: on a shared box a single sample randomly absorbs neighbor
-    // GC/JIT churn (observed 7.9 s vs 0.8 s steady state for the same
-    // query in one run); min-of-two is the standard steady-state estimator
-    // and applies identically to every query and every round.
-    case class Sample(name: String, t1: Double, t2: Double, gcMs: Long) {
-      def min: Double = if (t1 < 0 || t2 < 0) -1.0 else math.min(t1, t2)
-    }
-    val results = ordered.map { case (name, fn) =>
-      def timed(): Double = {
-        val t0 = System.nanoTime()
-        run(fn)
-        (System.nanoTime() - t0) / 1e9
-      }
-      val g0 = gcMillis()
-      try { val a = timed(); val b = timed(); Sample(name, a, b, gcMillis() - g0) }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name: $e")
-        Sample(name, -1.0, -1.0, gcMillis() - g0) }
-    }
+    val results = ordered.map { case (name, fn) => sample(name)(run(fn)) }
     // Optional concurrent pass: families submitted from N driver threads,
     // each thread in its own FAIR pool. Wall-clock for the whole pass plus
     // per-family wall — interference shows as family wall >> its
@@ -172,9 +193,7 @@ object Bench {
     val total = results.map(_.min).filter(_ >= 0).sum
     // Full artifact: every sample, GC attribution, JVM shape, concurrency.
     val rt = Runtime.getRuntime
-    val fullQueries = results.map { s =>
-      s""""${s.name}":{"t1":${jsonNum(s.t1)},"t2":${jsonNum(s.t2)},"min":${jsonNum(s.min)},"gc_ms":${s.gcMs}}"""
-    }.mkString("{", ",", "}")
+    val fullQueries = results.map(_.json).mkString("{", ",", "}")
     val concJson = concurrent match {
       case None => "null"
       case Some((wall, fams)) =>
@@ -199,18 +218,6 @@ object Bench {
       Files.writeString(Paths.get(s"bench_full_c$cpus.json"), full)
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { out =>
       Files.writeString(Paths.get(out), full)
-    }
-    // Durable home for the concurrent-families evidence: the driver's own
-    // sequential rerun OVERWRITES bench_full.json each round (the round-7
-    // lesson — the builder's 4-thread pass vanished under it), so when
-    // SPARK_GRAFT_CONC_OUT names a round-stamped file the concurrent pass
-    // is ALSO written there, with the same-JVM sequential total alongside
-    // for the speedup ratio. The driver never touches that path.
-    sys.env.get("SPARK_GRAFT_CONC_OUT").foreach { out =>
-      if (concJson != "null")
-        Files.writeString(Paths.get(out),
-          s"""{"sf":"$sfDir","cpus":$cpus,"sequential_total_sec":${jsonNum(total)},
-             |"concurrent":$concJson}""".stripMargin)
     }
     // Contract line LAST: stop Spark first so no shutdown log can land
     // after the JSON, then print and flush. "queries" is the per-query map

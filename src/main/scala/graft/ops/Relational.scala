@@ -726,19 +726,23 @@ object Relational extends QueryModule {
       .flatMap(v => TxnLog.liveFiles(path, v).map(f => (f, v)))
     val distinctFiles = fileVers.map(_._1).distinct.sorted
     val fv = broadcast(fileVers.toDF("_file", "version"))
-    val metaDf = broadcast((0L to v2).map { v =>
+    val metaDf = (0L to v2).map { v =>
       val (action, attempts) = meta(v)
       (v, action, attempts.toLong, TxnLog.liveFiles(path, v).size.toLong)
-    }.toDF("version", "action", "attempts", "n_files"))
-    spark.read.parquet(distinctFiles: _*)
-      .select(col("event_id"), TxnLog.inputFilePath.as("_file"))
-      .join(fv, "_file")
-      .groupBy(col("version"))
-      .agg(count(lit(1)).as("n_rows"),
-        coalesce(sum(col("event_id")), lit(0L)).as("chk"))
-      .join(metaDf, "version")
+    }.toDF("version", "action", "attempts", "n_files")
+    // a version whose live files hold no rows tags no row, so the census
+    // is driven from the log (metaDf) and an absent count reads as 0
+    val perVersion =
+      if (distinctFiles.isEmpty) Seq.empty[(Long, Long, Long)].toDF("version", "n_rows", "chk")
+      else spark.read.parquet(distinctFiles: _*)
+        .select(col("event_id"), TxnLog.inputFilePath.as("_file"))
+        .join(fv, "_file")
+        .groupBy(col("version"))
+        .agg(count(lit(1)).as("n_rows"), sum(col("event_id")).as("chk"))
+    metaDf.join(perVersion, Seq("version"), "left")
       .select(col("version"), col("action"), col("attempts"), col("n_files"),
-        col("n_rows"), col("chk"))
+        coalesce(col("n_rows"), lit(0L)).as("n_rows"),
+        coalesce(col("chk"), lit(0L)).as("chk"))
       .orderBy(col("version"))
   }
 

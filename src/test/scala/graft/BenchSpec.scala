@@ -1,9 +1,8 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.scalatest.funsuite.AnyFunSuite
 
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends SparkSpec {
 
   private def parsedSf(dir: String) =
     new ObjectMapper().readTree(s"""{"sf":${Bench.sfField(dir)}}""").get("sf")
@@ -17,5 +16,18 @@ class BenchSpec extends AnyFunSuite {
       val v = parsedSf(dir)
       assert(v.isTextual && v.asText == dir, s"$dir -> $v")
     }
+  }
+
+  test("each key's bench_full.json entry counts the codegen compiles of its samples") {
+    val shape = spark.range(8).selectExpr("id * 7919 + 104729 AS x")
+    def run(): Unit = shape.write.format("noop").mode("overwrite").save()
+    val cold = Bench.sample("cold")(run())
+    // the first sample compiles the shape's classes, the second reuses them
+    assert(cold.min >= 0 && cold.compiles > 0, cold)
+    val warm = Bench.sample("warm")(run())
+    assert(warm.compiles == 0L, warm)
+    val entry = new ObjectMapper().readTree(s"{${cold.json}}").get("cold")
+    assert(entry.get("codegen_compiles").asLong == cold.compiles, entry)
+    for (f <- Seq("t1", "t2", "min", "gc_ms")) assert(entry.has(f), s"$f missing from $entry")
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.plans.TopKPerGroup
 import graft.plans.TopKPerGroup.TopKPerGroupExec
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.BareSession
@@ -66,6 +67,25 @@ class GraftSessionSpec extends AnyFunSuite {
         top.queryExecution.sparkPlan.toString)
       assert(top.filter(col("rn") === 1L).select("v").collect().map(_.getLong(0)).sorted
         .sameElements(95L to 99L))
+    }
+  }
+
+  test("a built session compiles each generated class once, past Spark's 100-entry cache") {
+    withSharedConfRestored {
+      val s = GraftSession.build("local[4]", parallelism = 4, appName = "graft-test")
+      assert(s.conf.get("spark.sql.codegen.cache.maxEntries") ==
+        GraftSession.CodegenCacheEntries.toString)
+      // 60 distinct shapes, two generated classes each: 120 classes, more
+      // than Spark's default cache holds, so at that size the LRU evicts
+      // every class before the second round reaches it
+      def round(): Unit = (1 to 60).foreach { i =>
+        s.range(8).selectExpr(s"id * $i + 7 AS x").collect()
+      }
+      def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      round()
+      val before = compiles
+      round()
+      assert(compiles == before, s"the second round recompiled ${compiles - before} classes")
     }
   }
 

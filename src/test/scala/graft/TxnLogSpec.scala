@@ -240,4 +240,19 @@ class TxnLogSpec extends SparkSpec {
     assert(pinned.forall(_._2 > 0L))
     assert(census == pinned, s"census $census must equal the pinned reads $pinned")
   }
+
+  test("q_txn_commit census keeps a version whose live files hold no rows") {
+    // every event_id of this fixture is a multiple of 5, so v0 (the rows
+    // with event_id % 5 <> 0) is empty and v1's append carries them all
+    val dir = java.nio.file.Files.createTempDirectory("txn_empty_v0").toString
+    spark.read.parquet(s"$sf/events.parquet").filter(col("event_id") % 5 === 0)
+      .write.parquet(s"$dir/events.parquet")
+    val all = Tables.events(spark, dir).agg(count(lit(1)), sum(col("event_id"))).head()
+    val (n, chk) = (all.getLong(0), all.getLong(1))
+    assert(n > 0L)
+    val census = graft.ops.Relational.txnCommitCensus(spark, dir, freshPath("txn_empty_v0"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(4), r.getLong(5))).toSeq
+    assert(census == Seq((0L, "init", 0L, 0L), (1L, "append", n, chk), (2L, "compact", n, chk)),
+      s"census $census")
+  }
 }

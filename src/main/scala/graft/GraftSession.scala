@@ -1,7 +1,9 @@
 package graft
 
 import graft.functions.CosineSimilarity
+import graft.ops.Relational
 import graft.plans.GraftExtensions
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Opinionated session factory: the conf an operator of this engine should
@@ -27,7 +29,9 @@ import org.apache.spark.sql.SparkSession
   * It is also the one place the engine plugs into Catalyst: every session
   * is built with [[GraftExtensions]], so the native functions and the
   * top-k-per-group strategy are part of the session state from the start
-  * and no query has to register anything.
+  * and no query has to register anything. It also installs [[SinkCleanup]],
+  * so the directories queries write below [[Relational.sinkRoot]] go when
+  * the application ends.
   */
 object GraftSession {
 
@@ -45,6 +49,14 @@ object GraftSession {
     * `CodeGenerator` sizes its cache once, from the conf active the first
     * time it is used, and a JVM that compiled anything earlier keeps 100. */
   val CodegenCacheEntries = 8192
+
+  /** Deletes this JVM's sink directories ([[Relational.deleteSinks]]) once
+    * the application has ended. Installed through `spark.extraListeners`,
+    * so the context creates exactly one, however often [[build]] runs. */
+  final class SinkCleanup extends SparkListener {
+    override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+      Relational.deleteSinks()
+  }
 
   def build(master: String, parallelism: Int,
       appName: String = "graft",
@@ -83,6 +95,7 @@ object GraftSession {
       // to satisfy it (see Joins.qJoinBucketed)
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.extraListeners", classOf[SinkCleanup].getName)
     extraConf.foreach { case (k, v) => b.config(k, v) }
     b.getOrCreate()
   }

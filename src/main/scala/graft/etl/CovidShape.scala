@@ -7,9 +7,10 @@ import org.apache.spark.sql.types.StructType
 /** The reference pipeline, re-expressed (SURVEY.md §3): both Airflow tasks of
   * reference dags/create-data-lake.py as lazy Spark plans.
   *
-  *  Task A (lines 64-84): CSV scan w/ inference (R1) → batch stamp (R4) →
-  *    null-drop on key columns (R5) → blank/null→0 on the rate column (R6) →
-  *    bulk load, replace mode (R9).
+  *  Task A (lines 64-84): one fail-fast CSV scan under the declared,
+  *    header-checked caso_full schema (R1) → batch stamp (R4) → null-drop
+  *    on key columns (R5) → blank/null→0 on the rate column (R6) → bulk
+  *    load, replace mode (R9).
   *  Task B (lines 86-105): JSON fetch (R2) → json_normalize 4-level flatten
   *    to dot-named columns (R3) → stamp (R4) → load (R9).
   *
@@ -21,9 +22,38 @@ import org.apache.spark.sql.types.StructType
   */
 object CovidShape {
 
-  /** R1: header + schema-inference CSV scan (pd.read_csv analog). */
+  /** The 18 columns of caso_full.csv, the brasil.io national per-place
+    * daily export, in file order. The types are exactly the ones
+    * `inferSchema` gives on the file, so declaring them leaves the lake
+    * unchanged. The per-100k rate stays STRING: the export writes blanks
+    * and single spaces in it, which [[fillRate]] turns into 0.0. */
+  val CasoFullSchema: StructType = StructType.fromDDL(
+    "city STRING, city_ibge_code INT, date DATE, epidemiological_week INT, " +
+      "estimated_population INT, estimated_population_2019 INT, is_last BOOLEAN, " +
+      "is_repeated BOOLEAN, last_available_confirmed INT, " +
+      "last_available_confirmed_per_100k_inhabitants STRING, last_available_date DATE, " +
+      "last_available_death_rate DOUBLE, last_available_deaths INT, order_for_place INT, " +
+      "place_type STRING, state STRING, new_confirmed INT, new_deaths INT")
+
+  /** R1: caso_full scan under [[CasoFullSchema]] (pd.read_csv analog). The
+    * file is parsed once: `inferSchema` would parse all of it a first time
+    * just to find types that are known in advance. The declared schema
+    * must not make the load any less strict than inference was:
+    *  - enforceSchema=false checks each file's header names against the
+    *    schema, so a renamed or reordered column fails the load instead of
+    *    landing in the wrong field;
+    *  - FAILFAST fails the load on a value that does not fit its column,
+    *    where inference would have widened the type and PERMISSIVE would
+    *    silently NULL the value.
+    * caso_full only; input that must survive bad rows goes through
+    * [[readCsvQuarantine]]. */
   def readCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
+    spark.read
+      .option("header", "true")
+      .option("enforceSchema", "false")
+      .option("mode", "FAILFAST")
+      .schema(CasoFullSchema)
+      .csv(path)
 
   /** R1 hardened: explicit-schema CSV scan that QUARANTINES malformed rows
     * into `_corrupt_record` instead of silently nulling fields (Spark's

@@ -292,10 +292,6 @@ object Joins extends QueryModule {
     * this function would break the lazily-returned join plan the caller
     * has not executed yet. */
   private def sweepStaleBucketed(): Unit = {
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-      f.delete(): Unit
-    }
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     val mine = s"_p${ProcessHandle.current().pid()}"
     // Strict suffix parse: a graft_bucketed_* name NOT ending in _p<digits>
@@ -309,7 +305,7 @@ object Joins extends QueryModule {
           case PidSfx(pid) =>
             val alive = pid.toLongOption.exists(p =>
               ProcessHandle.of(p).map[java.lang.Boolean](_.isAlive).orElse(false))
-            if (!alive) deleteRec(f)
+            if (!alive) Relational.deleteTree(f)
           case _ => () // malformed name: ownership unknown, leave it alone
         }
       }

@@ -248,6 +248,23 @@ object Relational extends QueryModule {
   private[graft] val sinkRoot: String =
     s"${System.getProperty("java.io.tmpdir")}/graft_sink_p${ProcessHandle.current().pid()}_"
 
+  /** Deletes every sink directory of this JVM. [[graft.GraftSession]] runs
+    * it when the application ends, never inside a query: a lazily returned
+    * plan reads its sink until it has run. */
+  private[graft] def deleteSinks(): Unit = {
+    val root = new java.io.File(sinkRoot)
+    Option(root.getParentFile.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(_.getName.startsWith(root.getName))
+      .foreach(deleteTree)
+  }
+
+  /** Deletes `f` and, unless it is a symbolic link, everything below it. */
+  private[graft] def deleteTree(f: java.io.File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(deleteTree)
+    f.delete(): Unit
+  }
+
   /** Partitioned-layout round-trip — the WRITE-side 100 TB lever the other
     * keys only exercise on read: lay events out `partitionBy(event_type)`
     * (Hive-style directory partitioning, the layout a lake table declares),

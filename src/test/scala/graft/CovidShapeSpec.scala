@@ -3,6 +3,7 @@ package graft
 import graft.etl.CovidShape
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end reference-pipeline parity on fixtures shaped like the real
   * inputs: a caso_full-style CSV (with state-level rows whose city is empty
@@ -18,14 +19,31 @@ class CovidShapeSpec extends SparkSpec {
     p.toString
   }
 
-  private val covidCsv = writeFixture("caso_full.csv",
-    """city,city_ibge_code,date,state,new_confirmed,last_available_confirmed_per_100k_inhabitants,is_last
-      |Abadia de Goias,5200050,2021-01-01,GO,5,123.45,true
-      |,52,2021-01-01,GO,100,999.9,true
-      |Abadiania,5200100,2021-01-01,GO,2,,false
-      |Agua Fria,5200175,2021-01-02,GO,0, ,true
-      |Alto Horizonte,5200209,2021-01-02,GO,1,77.0,false
-      |""".stripMargin)
+  /** caso_full's real 18-column header, as the brasil.io export writes it. */
+  private val casoFullHeader =
+    "city,city_ibge_code,date,epidemiological_week,estimated_population," +
+      "estimated_population_2019,is_last,is_repeated,last_available_confirmed," +
+      "last_available_confirmed_per_100k_inhabitants,last_available_date," +
+      "last_available_death_rate,last_available_deaths,order_for_place,place_type,state," +
+      "new_confirmed,new_deaths"
+
+  /** One caso_full row; `rate` is the per-100k column, written verbatim. */
+  private def casoRow(city: String, code: String, date: String, pop: String, isLast: String,
+      confirmed: Int, rate: String, newConfirmed: Int, placeType: String = "city"): String =
+    s"$city,$code,$date,202053,$pop,$pop,$isLast,False,$confirmed,$rate,$date,0.0125,1,3," +
+      s"$placeType,GO,$newConfirmed,0"
+
+  private val casoRows = Seq(
+    casoRow("Abadia de Goias", "5200050", "2021-01-01", "8773", "True", 80, "123.45", 5),
+    casoRow("", "52", "2021-01-01", "7113540", "True", 71000, "999.9", 100, "state"),
+    casoRow("Abadiania", "5200100", "2021-01-01", "20042", "False", 12, "", 2),
+    casoRow("Agua Fria", "5200175", "2021-01-02", "5090", "True", 0, " ", 0),
+    casoRow("Alto Horizonte", "5200209", "2021-01-02", "6969", "False", 5, "77.0", 1))
+
+  private def casoFullCsv(name: String, header: String, rows: Seq[String]): String =
+    writeFixture(name, (header +: rows).mkString("", "\n", "\n"))
+
+  private val covidCsv = casoFullCsv("caso_full.csv", casoFullHeader, casoRows)
 
   private val ibgeJson = writeFixture("municipios.json",
     """[
@@ -41,7 +59,7 @@ class CovidShapeSpec extends SparkSpec {
       |         "regiao": {"id": 3, "sigla": "SE", "nome": "Sudeste"}}}}}
       |]""".stripMargin)
 
-  test("covid task: schema inferred, state rows dropped, blanks coalesced, stamped") {
+  test("covid task: declared schema, state rows dropped, blanks coalesced, stamped") {
     val raw = CovidShape.readCsv(spark, covidCsv)
     assert(raw.schema("new_confirmed").dataType.typeName == "integer")
     val out = CovidShape.covidTransform(raw, Some("2026-01-01 00:00:00"))
@@ -53,6 +71,68 @@ class CovidShapeSpec extends SparkSpec {
       .map(_.getAs[Double]("last_available_confirmed_per_100k_inhabitants"))
     assert(rates.sameElements(Array(123.45, 0.0, 0.0, 77.0)))
     assert(out.columns.contains("created_at_datalake"))
+  }
+
+  test("inferSchema on caso_full yields exactly the declared CasoFullSchema") {
+    val inferred = spark.read.option("header", "true").option("inferSchema", "true")
+      .csv(covidCsv).schema
+    assert(inferred == CovidShape.CasoFullSchema,
+      s"inferred ${inferred.toDDL}\ndeclared ${CovidShape.CasoFullSchema.toDDL}")
+  }
+
+  /** Runs the covid task's load of `csv` into `lake`. */
+  private def loadCovid(csv: String, lake: String = s"$tmp/lake/covid_checked"): Unit =
+    CovidShape.loadReplaceParquet(
+      CovidShape.covidTransform(CovidShape.readCsv(spark, csv), Some("2026-01-01 00:00:00")),
+      lake)
+
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).mkString("\n")
+
+  test("a renamed or reordered caso_full header column fails the load") {
+    val renamed = casoFullCsv("renamed.csv",
+      casoFullHeader.replace(",new_confirmed,", ",new_cases,"), casoRows)
+    val reordered = casoFullCsv("reordered.csv",
+      casoFullHeader.replace("new_confirmed,new_deaths", "new_deaths,new_confirmed"), casoRows)
+    for (csv <- Seq(renamed, reordered)) {
+      val e = intercept[Exception](loadCovid(csv))
+      assert(messages(e).contains("CSV header does not conform to the schema"), messages(e))
+    }
+  }
+
+  test("a value that does not fit its declared type fails the load, never becomes NULL") {
+    val csv = casoFullCsv("bad_value.csv", casoFullHeader,
+      casoRows :+ casoRow("Amaralina", "5200258", "2021-01-02", "12.5", "True", 3, "1.0", 1))
+    val lake = Paths.get(tmp, "lake", "covid_bad_value")
+    val e = intercept[Exception](loadCovid(csv, lake.toString))
+    assert(messages(e).contains("FAILFAST"), messages(e))
+    val written = if (Files.exists(lake)) Files.walk(lake).iterator().asScala
+      .count(_.toString.endsWith(".parquet")) else 0
+    assert(written == 0, "the failed load must leave no lake file")
+  }
+
+  test("csv quarantine on the caso_full schema: rows in = clean + quarantined, text kept") {
+    val bad = Seq(
+      casoRow("BadPopulation", "5200308", "2021-01-02", "12.5", "True", 3, "1.0", 1),
+      casoRow("BadDate", "5200407", "2021-13-45", "4000", "True", 3, "1.0", 1),
+      casoRow("BadBoolean", "5200506", "2021-01-02", "4000", "maybe", 3, "1.0", 1),
+      casoRow("ExtraField", "5200555", "2021-01-02", "4000", "True", 3, "1.0", 1) + ",surprise")
+    val tricky = casoRow("\"Comma, City\"", "5200605", "2021-01-02", "4000", "True", 3, "", 1)
+    val rowsIn = casoRows ++ bad :+ tricky
+    val csv = casoFullCsv("caso_full_dirty.csv", casoFullHeader, rowsIn)
+    val df = CovidShape.readCsvQuarantine(spark, csv, CovidShape.CasoFullSchema)
+    val clean = df.filter(col("_corrupt_record").isNull)
+    val dead = df.filter(col("_corrupt_record").isNotNull)
+    assert(clean.count() + dead.count() == rowsIn.size, "nothing dropped, nothing doubled")
+    assert(dead.count() == bad.size)
+    val deadText = dead.select("_corrupt_record").collect().map(_.getString(0)).toSet
+    assert(deadText == bad.toSet, "each quarantined row keeps its original text")
+    // the valid rows, the state row, blank rates and the quoted comma included, stay typed
+    assert(clean.filter(col("city") === "Comma, City").count() == 1)
+    assert(clean.filter(col("city").isNull).count() == 1)
+    assert(clean.agg(sum("new_confirmed")).collect()(0).getLong(0) == 5 + 100 + 2 + 0 + 1 + 1)
+    assert(clean.filter(col("last_available_confirmed_per_100k_inhabitants") === " ").count() == 1)
+    df.unpersist()
   }
 
   test("ibge task: 4-level nesting flattens to dot-named columns") {

@@ -1,14 +1,20 @@
 package graft
 
+import java.io.File
+import java.lang.management.ManagementFactory
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import graft.ops.Relational
 import graft.plans.TopKPerGroup
 import graft.plans.TopKPerGroup.TopKPerGroupExec
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.BareSession
-import org.scalatest.funsuite.AnyFunSuite
 
-class GraftSessionSpec extends AnyFunSuite {
+class GraftSessionSpec extends SparkSpec {
 
   /** All suites share one JVM-wide session: create the canonical test
     * session FIRST (so its static confs — temp warehouse dir, no UI — win),
@@ -100,6 +106,24 @@ class GraftSessionSpec extends AnyFunSuite {
     } finally SparkSession.setDefaultSession(shared)
   }
 
+  test("a stopped session leaves no graft_sink_p<pid>_* directory behind") {
+    // the shared session lives as long as this JVM, so the session under
+    // test runs in a JVM of its own, with a tmpdir of its own
+    val tmp = Files.createTempDirectory("sink_cleanup").toFile
+    val opens = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filter(_.startsWith("--add-opens"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ opens ++
+      Seq(s"-Djava.io.tmpdir=$tmp", "-cp", System.getProperty("java.class.path"),
+        StoppedSessionProbe.getClass.getName.stripSuffix("$"), sf)
+    val child = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(child.getInputStream).mkString
+    assert(child.waitFor() == 0, out)
+    assert(out.contains("sink dirs before stop: 1\n"), out)
+    assert(out.contains("sink dirs after stop: 0\n"), out)
+    assert(StoppedSessionProbe.sinkDirs(tmp, child.pid()).isEmpty, "left behind at exit")
+    Relational.deleteTree(tmp)
+  }
+
   test("events loader normalizes ts to TimestampType on the HARNESS data") {
     // Round-4 regression: the generator switched events.ts from
     // TIMESTAMP(NANOS) to TIMESTAMP(MICROS, NTZ) and a loader hard-wired to
@@ -140,5 +164,25 @@ class GraftSessionSpec extends AnyFunSuite {
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(ex).exists(_.contains("epoch-nanos")),
       s"expected the plausibility guard to fire, got: $ex")
+  }
+}
+
+/** The session under test of GraftSessionSpec's sink-cleanup test: builds a
+  * session, runs a query that writes a sink, stops the session, and prints
+  * how many sink directories of this JVM exist before and after the stop.
+  * Usage: StoppedSessionProbe <data dir> */
+object StoppedSessionProbe {
+  def sinkDirs(tmp: File, pid: Long): Seq[File] =
+    Option(tmp.listFiles()).toSeq.flatten.filter(_.getName.startsWith(s"graft_sink_p${pid}_"))
+
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession.buildLocal("2", "sink-cleanup")
+    spark.sparkContext.setLogLevel("ERROR")
+    Relational.qSinkPartitionPrune(spark, args(0)).collect()
+    val tmp = new File(System.getProperty("java.io.tmpdir"))
+    val pid = ProcessHandle.current().pid()
+    println(s"sink dirs before stop: ${sinkDirs(tmp, pid).size}")
+    spark.stop()
+    println(s"sink dirs after stop: ${sinkDirs(tmp, pid).size}")
   }
 }

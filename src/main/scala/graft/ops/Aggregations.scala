@@ -127,11 +127,8 @@ object Aggregations extends QueryModule {
     * For sketch-tolerant pipelines percentile_approx remains the cheaper
     * single-pass path below. */
   def qAggPercentile(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Chunked-prefix exact rank (the qPercentileDisc shape): ranking within
-    // (flag, price-chunk) plus the broadcast per-chunk prefix offset keeps
-    // every task bounded by the chunk width — a flat row_number() over the
-    // 3-value l_returnflag would put a third of lineitem in one task.
+    // A flat row_number() over the 3-value l_returnflag would put a third
+    // of lineitem in one task; the rank is chunked by $2000 of price.
     // Ties across equal v still need no value tie-break for correctness
     // (every rank assignment among them carries the same v); the id order
     // just pins the permutation.
@@ -139,19 +136,9 @@ object Aggregations extends QueryModule {
       .select(col("l_returnflag"), col("l_extendedprice").as("v"),
         col("l_orderkey"), col("l_linenumber"))
       .withColumn("chunk", floor(col("v") / lit(2000.0)))
-    val byChunk = Window.partitionBy(col("l_returnflag")).orderBy(col("chunk"))
-    val offs = l.groupBy(col("l_returnflag"), col("chunk"))
-      .agg(count(lit(1)).as("cn"))
-      .withColumn("off", coalesce(sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("l_returnflag"), col("chunk"), col("off"), col("n"))
-    val ranked = l.join(broadcast(offs), Seq("l_returnflag", "chunk"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("l_returnflag"), col("chunk"))
-          .orderBy(col("v"), col("l_orderkey"), col("l_linenumber")))
-        + col("off"))
+    val ranked = Windows.chunkedRunningSums(l, Seq("l_returnflag"), "chunk",
+        Seq(col("v"), col("l_orderkey"), col("l_linenumber")), "rn" -> lit(1L))
+      .withColumnRenamed("rn_total", "n")
     def lo(q: String) = max(when(expr(s"rn = CAST(floor((n - 1) * $q) AS INT) + 1"), col("v")))
     def hi(q: String) = max(when(expr(s"rn = CAST(ceil((n - 1) * $q) AS INT) + 1"), col("v")))
     def interp(q: String, l: String, h: String): org.apache.spark.sql.Column =
@@ -321,33 +308,16 @@ object Aggregations extends QueryModule {
     * ceil(q·n) in the per-group value order. Same determinism argument as
     * [[qAggPercentile]] (ties carry equal values). */
   def qPercentileDisc(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Chunked-prefix exact rank (the q_hist_equidepth shape): l_returnflag
-    // has 3 values, so a flat row_number() over it puts a third of
-    // lineitem in ONE task at any scale. Instead each row ranks locally
-    // within a (flag, price-chunk) partition — bounded by the chunk width,
-    // not the key's share of the table — and its exact global rank is the
-    // local rank plus the broadcast per-chunk prefix offset (the offsets
-    // window runs over the ~160-row chunk-count table, never the data).
-    val chunkWidth = 2000.0
+    // l_returnflag has 3 values, so a flat row_number() over it puts a
+    // third of lineitem in ONE task; $2000 price chunks give a ~160-row
+    // chunk table.
     val l = Tables.lineitem(spark, dir)
       .select(col("l_returnflag"), col("l_extendedprice").as("v"),
         col("l_orderkey"), col("l_linenumber"))
-      .withColumn("chunk", floor(col("v") / lit(chunkWidth)))
-    val cnts = l.groupBy(col("l_returnflag"), col("chunk"))
-      .agg(count(lit(1)).as("cn"))
-    val byChunk = Window.partitionBy(col("l_returnflag")).orderBy(col("chunk"))
-    val offs = cnts
-      .withColumn("off", coalesce(sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("l_returnflag"), col("chunk"), col("off"), col("n"))
-    val ranked = l.join(broadcast(offs), Seq("l_returnflag", "chunk"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("l_returnflag"), col("chunk"))
-          .orderBy(col("v"), col("l_orderkey"), col("l_linenumber")))
-        + col("off"))
+      .withColumn("chunk", floor(col("v") / lit(2000.0)))
+    val ranked = Windows.chunkedRunningSums(l, Seq("l_returnflag"), "chunk",
+        Seq(col("v"), col("l_orderkey"), col("l_linenumber")), "rn" -> lit(1L))
+      .withColumnRenamed("rn_total", "n")
     def at(q: String) = max(when(expr(s"rn = CAST(ceil(n * $q) AS BIGINT)"), col("v")))
     ranked.groupBy(col("l_returnflag"))
       .agg(at("0.5").as("p50_disc"), at("0.9").as("p90_disc"),
@@ -462,38 +432,25 @@ object Aggregations extends QueryModule {
     * (actual data values — no interpolation), the clamp is integer
     * greatest/least, and the mean comes from an exact DECIMAL sum — so the
     * whole pipeline is accumulation-order-independent and cross-engine
-    * exact. Uses the chunked-prefix exact rank of [[qPercentileDisc]] for
-    * the bounds: event_type has a handful of values, so a flat per-group
-    * row_number() would put one group's whole history in one task; ranking
-    * within (event_type, cent-chunk) and adding the broadcast chunk
-    * offsets bounds every task by the chunk width instead. */
+    * exact. The bounds' rank is chunked by $10 of value
+    * ([[Windows.chunkedRunningSums]]): event_type has a handful of values,
+    * so a flat per-group row_number() would put one group's whole history
+    * in one task. */
   def qWinsorize(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // checkpointed: the chunked-rank bounds pass (offsets + rank join) and
-    // the final clamp join each consume this frame — uncheckpointed the
+    // checkpointed: the chunked-rank bounds pass (chunk table + rank join)
+    // and the final clamp join each consume this frame — uncheckpointed the
     // events scan was planted 3× (round-10 plan)
     val cents = Tables.events(spark, dir)
       .select(col("event_type"), col("event_id"),
         expr("CAST(round(value * 100) AS BIGINT)").as("c"))
       .localCheckpoint(eager = false)
-    val chunked = cents.withColumn("chunk", floor(col("c") / lit(1000L)))
-    val byChunk = Window.partitionBy(col("event_type")).orderBy(col("chunk"))
-    val offs = chunked.groupBy(col("event_type"), col("chunk"))
-      .agg(count(lit(1)).as("cn"))
-      .withColumn("off", coalesce(sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("event_type"), col("chunk"), col("off"), col("n"))
-    val ranked = chunked.join(broadcast(offs), Seq("event_type", "chunk"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("event_type"), col("chunk"))
-          .orderBy(col("c"), col("event_id")))
-        + col("off"))
-    val bounds = ranked.groupBy(col("event_type"))
+    val bounds = Windows.chunkedRunningSums(
+        cents.withColumn("chunk", floor(col("c") / lit(1000L))), Seq("event_type"), "chunk",
+        Seq(col("c"), col("event_id")), "rn" -> lit(1L))
+      .groupBy(col("event_type"))
       .agg(
-        max(when(expr("rn = CAST(ceil(n * 0.05) AS BIGINT)"), col("c"))).as("lo"),
-        max(when(expr("rn = CAST(ceil(n * 0.95) AS BIGINT)"), col("c"))).as("hi"))
+        max(when(expr("rn = CAST(ceil(rn_total * 0.05) AS BIGINT)"), col("c"))).as("lo"),
+        max(when(expr("rn = CAST(ceil(rn_total * 0.95) AS BIGINT)"), col("c"))).as("hi"))
     cents.join(bounds, "event_type")
       .withColumn("w", greatest(col("lo"), least(col("hi"), col("c"))))
       .groupBy(col("event_type"))

@@ -91,29 +91,19 @@ object Behavior extends QueryModule {
       .orderBy(col("from_type"), col("to_type"))
   }
 
-  /** Exact discrete quantile thresholds of `valueCol` over `df`, via the
-    * chunked-prefix rank (the [[Aggregations.qPercentileDisc]] shape:
-    * rank within a fixed-width value chunk + broadcast per-chunk prefix
-    * offsets — never a single-partition global ROW_NUMBER). Returns one
-    * row per prob: (prob, threshold = value at rank ceil(prob·n)), the
-    * percentile_disc definition. `chunkWidth` buckets the value range so
-    * each rank task is bounded; `tieCol` pins the in-chunk permutation. */
+  /** Exact discrete quantile thresholds of `valueCol` over `df`, from a
+    * global rank chunked by `chunkWidth` of value
+    * ([[Windows.chunkedRunningSums]] — never a single-partition global
+    * ROW_NUMBER). Returns one row: a threshold column per prob, the value
+    * at rank ceil(prob·n) (the percentile_disc definition). `tieCol` pins
+    * the permutation of equal values. */
   private def discThresholds(df: DataFrame, valueCol: String, tieCol: String,
       chunkWidth: Long, probs: Seq[Double]): DataFrame = {
-    val v = df.withColumn("chunk", floor(col(valueCol) / lit(chunkWidth.toDouble)))
-    val byChunk = Window.orderBy(col("chunk"))
-    val offs = v.groupBy(col("chunk")).agg(count(lit(1)).as("cn"))
-      .withColumn("off", coalesce(sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("chunk"), col("off"), col("n"))
-    val ranked = v.join(broadcast(offs), Seq("chunk"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("chunk")).orderBy(col(valueCol), col(tieCol)))
-        + col("off"))
+    val ranked = Windows.chunkedRunningSums(
+      df.withColumn("chunk", floor(col(valueCol) / lit(chunkWidth.toDouble))), Nil, "chunk",
+      Seq(col(valueCol), col(tieCol)), "rn" -> lit(1L))
     val picks = probs.map { p =>
-      max(when(expr(s"rn = CAST(ceil($p * n) AS BIGINT)"), col(valueCol)))
+      max(when(expr(s"rn = CAST(ceil($p * rn_total) AS BIGINT)"), col(valueCol)))
         .as(s"t${(p * 100).round}")
     }
     ranked.agg(picks.head, picks.tail: _*)
@@ -128,9 +118,9 @@ object Behavior extends QueryModule {
     * Scale shape: the per-customer base table aggregates once (one
     * o_custkey shuffle) and is localCheckpoint'd because four consumers
     * read it (three threshold computations + the scoring pass). Each
-    * threshold set uses the chunked-prefix exact rank — at 1.5e8
-    * customers a flat global ROW_NUMBER would put the whole table in one
-    * task; chunking bounds every task by its value band. The three
+    * threshold set uses the chunked exact rank of [[discThresholds]] — at
+    * 1.5e8 customers a flat global ROW_NUMBER would put the whole table
+    * in one task; chunking bounds every task by its value band. The three
     * 1-row threshold frames broadcast into a map-side CASE scoring pass,
     * and the final census groups ≤ 125 cells. Everything is integer
     * arithmetic (days, counts, cents) — no float anywhere. */
@@ -183,46 +173,26 @@ object Behavior extends QueryModule {
     * count and parts-per-million share of the base — cover 50% / 80% / 90%
     * of total revenue, walking customers in descending-revenue order.
     *
-    * Scale shape: the descending walk is the chunked-prefix pattern twice
-    * over — rank AND running revenue both computed within a fixed-width
-    * revenue chunk and lifted by a broadcast per-chunk offset table
-    * (prefix counts + prefix sums over the tiny chunk census), so no task
-    * ever owns the global order. Descending order falls out of ranking on
-    * the NEGATED cents with the same ascending machinery. The threshold
-    * probe `cum·100 ≥ p·total` stays in integer cents — no float share
-    * ever computed before the final ppm, which is BIGINT floor division. */
+    * Scale shape: the descending walk's rank AND running revenue are both
+    * running sums ([[Windows.chunkedRunningSums]]) over $100k revenue
+    * chunks, so no task ever owns the global order. Descending order falls
+    * out of ordering on the NEGATED cents. The threshold probe
+    * `cum·100 ≥ p·total` stays in integer cents — no float share ever
+    * computed before the final ppm, which is BIGINT floor division. */
   def qPareto(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"))
-      // negate: ascending rank over v == descending rank over cents
+      // negate: ascending order over v == descending order over cents
       .withColumn("v", -col("cents"))
       .withColumn("chunk", floor(col("v") / lit(10000000.0)))
-    val byChunk = Window.orderBy(col("chunk"))
-    val offs = base.groupBy(col("chunk"))
-      .agg(count(lit(1)).as("cn"), sum(col("cents")).as("cs"))
-      .withColumn("off", coalesce(sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("cum_off", coalesce(sum(col("cs")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("total", sum(col("cs")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("chunk"), col("off"), col("cum_off"), col("n"), col("total"))
-    val inChunk = Window.partitionBy(col("chunk"))
-      .orderBy(col("v"), col("o_custkey"))
-    val walked = base.join(broadcast(offs), Seq("chunk"))
-      .withColumn("rnk", row_number().over(inChunk) + col("off"))
-      .withColumn("cum", sum(col("cents")).over(
-        inChunk.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        + col("cum_off"))
+    val walked = Windows.chunkedRunningSums(base, Nil, "chunk",
+      Seq(col("v"), col("o_custkey")), "rnk" -> lit(1L), "cum" -> col("cents"))
     val picks = Seq(50, 80, 90).map { p =>
-      min(when(col("cum") * 100 >= lit(p.toLong) * col("total"), col("rnk")))
+      min(when(col("cum") * 100 >= lit(p.toLong) * col("cum_total"), col("rnk")))
         .as(s"n$p")
     }
-    val agg = walked.agg(picks.head, picks.tail: _*)
-      .crossJoin(broadcast(offs.select(max(col("n")).as("n_total"))))
+    val agg = walked.agg(max(col("rnk_total")).as("n_total"), picks: _*)
     val tall = agg.select(
       expr("stack(3, 50, n50, 80, n80, 90, n90) AS (pct, n_customers)"),
       col("n_total"))
@@ -314,7 +284,7 @@ object Behavior extends QueryModule {
     * span in days), never data-bounded. The cumulative product is
     * inherently sequential ONCE FLOOR-QUANTIZED (S_ppm(t) =
     * ⌊S_ppm(t−1)·(n−d)/n⌋ admits no prefix decomposition, unlike the
-    * chunked-prefix ranks elsewhere in this module), so it runs as a
+    * chunked ranks elsewhere in this module), so it runs as a
     * single-partition sorted mapPartitions over those ≤ |days| rows —
     * integer-exact in both engines (DuckDB replays the identical
     * recursion in a recursive CTE), never a driver-side collect, and the

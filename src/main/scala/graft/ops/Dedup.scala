@@ -351,78 +351,13 @@ object Dedup extends QueryModule {
     * follows chains — A~B, B~C groups {A,B,C} even when A!~C directly — the
     * standard corpus-build step before survivor selection.
     *
-    * Implementation is Pregel-style min-label propagation: each round every
-    * node takes the min of its own label and its neighbors' labels; fixpoint
-    * ≤ diameter rounds. Each round is ONE shuffle join + ONE aggregation on
-    * the (small) edge list — the documents table is never re-scanned inside
-    * the loop. The driver-side loop tests a scalar convergence count, never
-    * row data. Every round `localCheckpoint`s its result: without lineage
-    * truncation the logical plan DOUBLES per round (labels feeds `next`
-    * twice) and planning alone goes exponential — measured 81 s vs 8 s on a
-    * 4-doc corpus. On a multi-executor cluster, reliable `checkpoint()` (or
-    * GraphX/GraphFrames CC) is the fault-tolerant variant of the same loop;
-    * at extreme diameters large-star/small-star gives O(log n) rounds —
-    * near-dup components are short chains, so diameter rounds are fine. */
-  def qDedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val pairs = qDedupNear(spark, dir).select(col("d1"), col("d2"))
-    // symmetric edge list, checkpointed once: every round re-reads it and
-    // must not re-derive the whole shingle/Jaccard pipeline. Placed on d2
-    // (the per-round neighbor-lookup key) via PartitionedCheckpoint, so —
-    // as in qPagerank — each round's join starts from two pre-placed,
-    // pre-sorted sides instead of re-exchanging the edge list every time.
-    // Symmetrized by EXPLODE, not union-of-two-selects: the union planted
-    // the WHOLE near-dup pipeline (shingle checkpoint + df filter +
-    // posting self-join + Jaccard) once per orientation inside the
-    // checkpoint's materialization job — the r11 Graph-family fix applied
-    // here (row set identical: union all ≡ explode of both orientations).
-    val edges = graft.plans.PartitionedCheckpoint.byKey(
-      pairs.select(explode(array(
-        struct(col("d1"), col("d2")),
-        struct(col("d2").as("d1"), col("d1").as("d2")))).as("e"))
-        .select(col("e.d1").as("d1"), col("e.d2").as("d2")), "d2", parts)
-    var labels = graft.plans.PartitionedCheckpoint.byKey(
-      edges.select(col("d1").as("doc_id")).distinct()
-        .withColumn("cluster_id", col("doc_id")),
-      "doc_id", parts)
-    var changed = 1L
-    var rounds = 0
-    // generous safety valve only — convergence is REQUIRED below, because
-    // silently-truncated propagation would emit a component with multiple
-    // labels and fail (or worse, skip) the oracle gate
-    val maxRounds = 4096
-    while (changed > 0 && rounds < maxRounds) {
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("d2"), col("cluster_id").as("nbr_label")), "d2")
-        .groupBy(col("d1")).agg(min(col("nbr_label")).as("nbr_min"))
-      val next = graft.plans.PartitionedCheckpoint.byKey(
-        labels
-          .join(nbrMin.withColumnRenamed("d1", "doc_id"), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
-              .as("cluster_id"),
-            col("cluster_id").as("prev")),
-        "doc_id", parts)
-      changed = next.filter(col("cluster_id") =!= col("prev")).count()
-      labels = next.select(col("doc_id"), col("cluster_id"))
-      rounds += 1
-      // Once `next` is materialized the previous round's checkpoint blocks
-      // are dead, but they are freed by ContextCleaner only when the driver
-      // GCs the dropped Dataset reference (Dataset.unpersist does NOT cover
-      // checkpoint blocks) — on a large idle heap that GC may never come,
-      // stacking diameter-many label-table copies in block-manager storage.
-      // Real components are short chains (a few rounds); the nudge guards
-      // the pathological tail the 4096-round valve allows.
-      if (rounds % 16 == 0) System.gc()
-    }
-    require(changed == 0,
-      s"label propagation did not converge in $maxRounds rounds " +
-        s"($changed labels still changing) — component diameter is pathological; " +
-        "switch to large-star/small-star")
-    labels
-      .withColumn("is_survivor", col("doc_id") === col("cluster_id"))
+    * The components come from [[Graph.ccFromEdges]] (large-star/small-star,
+    * O(log n) rounds), whose labels are the component minimum. */
+  def qDedupClusters(spark: SparkSession, dir: String): DataFrame =
+    Graph.ccFromEdges(qDedupNear(spark, dir).select(col("d1").as("u"), col("d2").as("v")))
+      .select(col("node").as("doc_id"), col("component").as("cluster_id"),
+        col("is_root").as("is_survivor"))
       .orderBy(col("doc_id"))
-  }
 
   /** The corpus after near-dedup with keep-first policy: every document
     * except those appearing as the larger id of a near-dup pair. (Full

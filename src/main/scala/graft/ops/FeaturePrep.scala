@@ -153,35 +153,20 @@ object FeaturePrep extends QueryModule {
     * distribution shape (and the input to quantile-matching pipelines).
     *
     * Semantics are a plain per-type ROW_NUMBER over the total order
-    * (value, event_id) — but the EXECUTION is the chunked two-phase rank
-    * (the round-3 re-plan convention): partition by (event_type,
-    * VALUE-RANGE bucket), rank within each bounded bucket, then add the
-    * broadcast per-bucket offsets (cumulative counts of strictly lower
-    * buckets). Range-bucketing by value is what lets a global
-    * order-statistic run without any single task owning a whole type's
-    * rows — the distributed-sort shape, expressed relationally. The
-    * DuckDB oracle uses the plain window; same rows, same quantiles. */
+    * (value, event_id); the execution is a running count
+    * ([[Windows.chunkedRunningSums]]) chunked by value ranges of 16, so no
+    * task owns a whole type's rows. The DuckDB oracle uses the plain
+    * window; same rows, same quantiles. */
   def qQuantileNorm(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"))
       .withColumn("bucket", floor(col("value") / 16).cast("long"))
-    val wBucket = Window.partitionBy(col("event_type"), col("bucket"))
-      .orderBy(col("value"), col("event_id"))
-    val wOffsets = Window.partitionBy(col("event_type")).orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = e.withColumn("r_in", row_number().over(wBucket))
-    val offsets = ranked.groupBy(col("event_type"), col("bucket"))
-      .agg(max(col("r_in")).as("bucket_total"))
-      .withColumn("offset", coalesce(sum(col("bucket_total")).over(wOffsets), lit(0L)))
-      .select(col("event_type"), col("bucket"), col("offset"))
-    val sizes = e.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-    ranked
-      .join(broadcast(offsets), Seq("event_type", "bucket"))
-      .join(broadcast(sizes), "event_type")
+    Windows.chunkedRunningSums(e, Seq("event_type"), "bucket",
+        Seq(col("value"), col("event_id")), "r" -> lit(1L))
+      .withColumnRenamed("r_total", "n")
       .filter(col("n") > 1)
       .withColumn("q", floor(
-        (col("offset") + col("r_in") - 1).cast("double") / (col("n") - 1).cast("double")
+        (col("r") - 1).cast("double") / (col("n") - 1).cast("double")
           * 1000000 + 0.5) / 1000000)
       .select(col("event_id"), col("event_type"), col("value"), col("q"))
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph computation on DataFrames — the pattern behind PageRank,
-  * label propagation (see Dedup's connected components), and influence
+  * label propagation, connected components, and influence
   * scoring, expressed as a driver-side loop over declarative joins.
   *
   * The graph: parts co-ordered within the same order form an undirected
@@ -496,18 +496,18 @@ object Graph extends QueryModule {
   /** Connected components via alternating large-star/small-star (Kiveris
     * et al., "Connected Components in MapReduce and Beyond") over the
     * thresholded co-purchase graph — the O(log n)-ROUND component finder,
-    * vs. the diameter-round min-label propagation that
-    * [[Dedup.qDedupClusters]] uses (right there because near-dup
-    * components are short chains; wrong for arbitrary graphs whose
-    * diameter is unbounded). Each round is two min-aggregations and two
+    * where min-label propagation needs as many rounds as the largest
+    * component's diameter, which is unbounded in an arbitrary graph
+    * ([[Dedup.qDedupClusters]] runs the same loop over the near-dup
+    * pairs). Each round is two min-aggregations and two
     * equi-joins on node ids — no step ever materializes a neighborhood in
     * one task, so a 100 TB edge set runs the same plan with the round
     * count growing as log of the largest component, not its diameter.
     *
     * Convergence: the driver loop compares a per-round (count, xor of
     * row-hashes) fingerprint (xor: overflow-free under ANSI mode, and the
-    * edge set is distinct so xor cancellation needs a hash collision) — two scalars, never row data (the
-    * [[Dedup.qDedupClusters]] scalar-convergence discipline); a fingerprint
+    * edge set is distinct so xor cancellation needs a hash collision) —
+    * two scalars, never row data; a fingerprint
     * collision would surface as an oracle mismatch, and convergence is
     * REQUIRED (the safety valve raises rather than emitting a
     * part-propagated labeling). On convergence the edge set IS the

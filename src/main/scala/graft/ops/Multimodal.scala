@@ -106,25 +106,16 @@ object Multimodal extends QueryModule {
     * lands in); the manifest is what makes shards addressable without
     * opening them.
     *
-    * Scale shape: the running byte offset is the CHUNKED-PREFIX pattern
-    * (Behavior.qRfm discipline) — per-1000-doc-id chunk sums broadcast
-    * back as offsets, the within-chunk running sum windows over ≤ 1000
-    * rows — never a global single-task window; the manifest aggregation
-    * is |shards| rows. */
+    * Scale shape: the running byte offset is an exclusive running sum
+    * ([[Windows.chunkedRunningSums]]) chunked by 1000 doc ids, never a
+    * global single-task window; the manifest aggregation is |shards| rows. */
   def qShardManifest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val d = withBinary(spark, dir)
       .select(col("doc_id"), col("meta.n_bytes").cast("long").as("nb"))
       .withColumn("chunk", expr("div(doc_id, 1000)"))
-    val byChunk = Window.orderBy(col("chunk"))
-    val offs = d.groupBy(col("chunk")).agg(sum(col("nb")).as("cb"))
-      .withColumn("off", coalesce(sum(col("cb")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("chunk"), col("off"))
-    val inChunk = Window.partitionBy(col("chunk")).orderBy(col("doc_id"))
-    d.join(broadcast(offs), Seq("chunk"))
-      .withColumn("offset", col("off") + coalesce(sum(col("nb")).over(
-        inChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    Windows.chunkedRunningSums(d, Nil, "chunk", Seq(col("doc_id")),
+        "end" -> coalesce(col("nb"), lit(0L)))
+      .withColumn("offset", col("end") - coalesce(col("nb"), lit(0L)))
       .withColumn("shard_id", expr(s"div(offset, ${ShardBytes}L)"))
       .groupBy(col("shard_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("nb")).as("shard_bytes"),

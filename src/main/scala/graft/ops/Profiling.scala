@@ -50,35 +50,20 @@ object Profiling extends QueryModule {
     * most bins empty. Bucket of a row = ⌊(rank−1)·8/n⌋+1 from its EXACT
     * global rank in (cents, orderkey) order.
     *
-    * The global rank is computed with the repo's two-phase chunked-prefix
-    * shape (same as q_win_count_distinct), NOT a global-ORDER-BY window:
-    * rows rank locally within fixed-width price chunks (the q_hist
-    * buckets), the ~20-row per-chunk count table prefix-sums on the driver
-    * side of a broadcast, and local rank + chunk offset = global rank. No
-    * task ever sorts more than one chunk; a single-partition ROW_NUMBER
-    * over the full table would serialize the whole 100 TB sort into one
-    * reducer. Ties carry distinct (pc, o_orderkey) keys, so ranks — and
-    * therefore bucket splits mid-tie — are deterministic in both engines. */
+    * The global rank is a running count ([[Windows.chunkedRunningSums]])
+    * chunked by the q_hist buckets (a ~20-row chunk table), NOT a
+    * global-ORDER-BY window, which would serialize the whole 100 TB sort
+    * into one reducer. Ties carry distinct (pc, o_orderkey) keys, so ranks
+    * — and therefore bucket splits mid-tie — are deterministic in both
+    * engines. */
   def qHistEquidepth(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("pc"))
       .withColumn("chunk", floor(col("o_totalprice") / lit(bucketWidth)))
-    val cnts = o.groupBy(col("chunk")).agg(count(lit(1)).as("cn"))
-    // windows over the per-chunk COUNT table only: ~|range|/25k rows, not data
-    val byChunk = Window.orderBy(col("chunk"))
-    val offs = cnts
-      .withColumn("off", coalesce(sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("chunk"), col("off"), col("n"))
-    o.join(broadcast(offs), "chunk")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("chunk")).orderBy(col("pc"), col("o_orderkey")))
-        + col("off"))
-      .withColumn("bucket", expr("(rn - 1) * 8 div n + 1"))
+    Windows.chunkedRunningSums(o, Nil, "chunk", Seq(col("pc"), col("o_orderkey")),
+        "rn" -> lit(1L))
+      .withColumn("bucket", expr("(rn - 1) * 8 div rn_total + 1"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("o_totalprice")).as("lo"),
@@ -315,34 +300,21 @@ object Profiling extends QueryModule {
     * integer half-cents (2·c vs 5·q1 − 3·q3) so no fractional boundary
     * arithmetic exists anywhere.
     *
-    * Scale shape: the quartile ranks use the chunked-prefix exact rank
-    * (rank within (event_type, cent-chunk) + broadcast chunk offsets —
-    * the qPercentileDisc shape; a flat per-type row_number() would put a
-    * whole event type's history in one task), the bounds table is a
+    * Scale shape: the quartile ranks are chunked by $10 of value
+    * ([[Windows.chunkedRunningSums]]; a flat per-type row_number() would
+    * put a whole event type's history in one task), the bounds table is a
     * ≤5-row broadcast, and the outlier count is one more map-side pass. */
   def qOutlierIqr(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cents = Tables.events(spark, dir)
       .select(col("event_type"), col("event_id"),
         expr("CAST(round(value * 100) AS BIGINT)").as("c"))
-    val chunked = cents.withColumn("chunk", floor(col("c") / lit(1000L)))
-    val byChunk = Window.partitionBy(col("event_type")).orderBy(col("chunk"))
-    val offs = chunked.groupBy(col("event_type"), col("chunk"))
-      .agg(count(lit(1)).as("cn"))
-      .withColumn("off", coalesce(sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum(col("cn")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("event_type"), col("chunk"), col("off"), col("n"))
-    val bounds = chunked.join(broadcast(offs), Seq("event_type", "chunk"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("event_type"), col("chunk"))
-          .orderBy(col("c"), col("event_id")))
-        + col("off"))
+    val bounds = Windows.chunkedRunningSums(
+        cents.withColumn("chunk", floor(col("c") / lit(1000L))), Seq("event_type"), "chunk",
+        Seq(col("c"), col("event_id")), "rn" -> lit(1L))
       .groupBy(col("event_type"))
       .agg(
-        max(when(expr("rn = CAST(ceil(n * 0.25) AS BIGINT)"), col("c"))).as("q1"),
-        max(when(expr("rn = CAST(ceil(n * 0.75) AS BIGINT)"), col("c"))).as("q3"))
+        max(when(expr("rn = CAST(ceil(rn_total * 0.25) AS BIGINT)"), col("c"))).as("q1"),
+        max(when(expr("rn = CAST(ceil(rn_total * 0.75) AS BIGINT)"), col("c"))).as("q3"))
     cents.join(broadcast(bounds), "event_type")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -392,33 +364,21 @@ object Profiling extends QueryModule {
     * cross-multiplied integer compare 6745·|x−med| > 35000·MAD — no float
     * boundary anywhere, so the oracle matches hash-for-hash.
     *
-    * Scale shape: TWO chunked-prefix exact rank passes (the qOutlierIqr
-    * shape — rank within (event_type, cent-chunk) + broadcast chunk
-    * offsets; a flat per-type row_number() puts a whole type's history in
-    * one task), the second over |x−med| after broadcasting the ≤5-row
-    * median table; the final count is one more map-side pass. */
+    * Scale shape: TWO exact rank passes chunked by $10 of value
+    * ([[Windows.chunkedRunningSums]]; a flat per-type row_number() puts a
+    * whole type's history in one task), the second over |x−med| after
+    * broadcasting the ≤5-row median table; the final count is one more
+    * map-side pass. */
   def qAnomalyMad(spark: SparkSession, dir: String): DataFrame = {
-    def discMedian(df: DataFrame, valueCol: String): DataFrame = {
-      val chunked = df.withColumn("chunk", floor(col(valueCol) / lit(1000L)))
-      val byChunk = Window.partitionBy(col("event_type")).orderBy(col("chunk"))
-      val offs = chunked.groupBy(col("event_type"), col("chunk"))
-        .agg(count(lit(1)).as("cn"))
-        .withColumn("off", coalesce(sum(col("cn")).over(
-          byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("n", sum(col("cn")).over(
-          byChunk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .select(col("event_type"), col("chunk"), col("off"), col("n"))
-      chunked.join(broadcast(offs), Seq("event_type", "chunk"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("event_type"), col("chunk"))
-            .orderBy(col(valueCol), col("event_id")))
-          + col("off"))
+    def discMedian(df: DataFrame, valueCol: String): DataFrame =
+      Windows.chunkedRunningSums(
+          df.withColumn("chunk", floor(col(valueCol) / lit(1000L))), Seq("event_type"),
+          "chunk", Seq(col(valueCol), col("event_id")), "rn" -> lit(1L))
         .groupBy(col("event_type"))
-        .agg(max(when(expr("rn = CAST(ceil(n * 0.5) AS BIGINT)"), col(valueCol)))
+        .agg(max(when(expr("rn = CAST(ceil(rn_total * 0.5) AS BIGINT)"), col(valueCol)))
           .as(s"med_$valueCol"))
-    }
     // checkpointed: each discMedian pass consumes its input twice (chunk
-    // offsets + rank join) and `cents` additionally feeds the deviation
+    // table + rank join) and `cents` additionally feeds the deviation
     // join — uncheckpointed the events scan was planted 9× (round-10 plan)
     val cents = Tables.events(spark, dir)
       .select(col("event_type"), col("event_id"),
@@ -1239,38 +1199,23 @@ object Profiling extends QueryModule {
     * candidate x identically and the argmax (ties broken by smallest value)
     * is deterministic.
     *
-    * Scale shape: the global cumulative counts use the repo's two-phase
-    * chunked-prefix idiom (q_hist_equidepth): per-value counts rank INSIDE
-    * fixed $25 price chunks, the ~20-row per-chunk total table prefix-sums
-    * under a broadcast, and local cumsum + chunk offset = global CDF — no
-    * task ever windows more than one chunk, where a single ORDER-BY-value
-    * window would serialize the 100 TB sort into one reducer. The final
-    * argmax is a TakeOrdered top-1, not a driver collect. */
+    * Scale shape: the global cumulative counts are running sums over the
+    * per-value counts ([[Windows.chunkedRunningSums]]) chunked by $25 of
+    * price (a ~20-row chunk table), where a single ORDER-BY-value window
+    * would serialize the 100 TB sort into one reducer; the group totals
+    * are the population sizes. The final argmax is a TakeOrdered top-1,
+    * not a driver collect. */
   def qKsDrift(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
+    val perPc = Tables.events(spark, dir)
       .filter(col("value").isNotNull && col("event_type").isin("click", "purchase"))
-      .select(col("event_type").as("pop"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("pc"))
-    val perPc = ev.groupBy(col("pc"))
-      .agg(count(when(col("pop") === "click", 1)).as("k1"),
-        count(when(col("pop") === "purchase", 1)).as("k2"))
+      .groupBy(expr("CAST(round(value * 100) AS BIGINT)").as("pc"))
+      .agg(count(when(col("event_type") === "click", 1)).as("k1"),
+        count(when(col("event_type") === "purchase", 1)).as("k2"))
       .withColumn("chunk", expr("pc div 2500"))
-    val byChunk = Window.orderBy(col("chunk"))
-    val offs = perPc.groupBy(col("chunk"))
-      .agg(sum(col("k1")).as("ck1"), sum(col("k2")).as("ck2"))
-      .withColumn("off1", coalesce(sum(col("ck1")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("off2", coalesce(sum(col("ck2")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("chunk"), col("off1"), col("off2"))
-    val tot = ev.groupBy().agg(
-      count(when(col("pop") === "click", 1)).as("n1"),
-      count(when(col("pop") === "purchase", 1)).as("n2"))
-    val wc = Window.partitionBy(col("chunk")).orderBy(col("pc"))
-    perPc.join(broadcast(offs), "chunk")
-      .withColumn("c1", sum(col("k1")).over(wc) + col("off1"))
-      .withColumn("c2", sum(col("k2")).over(wc) + col("off2"))
-      .crossJoin(broadcast(tot))
+    Windows.chunkedRunningSums(perPc, Nil, "chunk", Seq(col("pc")),
+        "c1" -> col("k1"), "c2" -> col("k2"))
+      .withColumnRenamed("c1_total", "n1")
+      .withColumnRenamed("c2_total", "n2")
       .withColumn("diff", expr(
         "abs(CAST(c1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(c2 AS DOUBLE) / CAST(n2 AS DOUBLE))"))
       .orderBy(col("diff").desc, col("pc"))
@@ -1294,8 +1239,7 @@ object Profiling extends QueryModule {
     *
     * Scale shape: identical to [[qKsDrift]] — one per-cent-value rollup
     * (map-side combinable; the spine is bounded by value granularity, not
-    * row count), then the chunked-prefix global cumsum: per-chunk totals
-    * broadcast as offsets, the within-chunk window partitioned by chunk.
+    * row count), then the chunked global cumsum; C is the exclusive sum.
     * No single-reducer global sort at any size. */
   def qMannWhitney(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
@@ -1307,17 +1251,11 @@ object Profiling extends QueryModule {
         count(when(col("pop") === "purchase", 1)).as("k2"))
       .withColumn("t", col("k1") + col("k2"))
       .withColumn("chunk", expr("pc div 2500"))
-    val byChunk = Window.orderBy(col("chunk"))
-    val offs = perPc.groupBy(col("chunk")).agg(sum(col("t")).as("ct"))
-      .withColumn("off", coalesce(sum(col("ct")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("chunk"), col("off"))
-    val wc = Window.partitionBy(col("chunk")).orderBy(col("pc"))
     val tot = ev.groupBy().agg(
       count(when(col("pop") === "click", 1)).as("n1"),
       count(when(col("pop") === "purchase", 1)).as("n2"))
-    perPc.join(broadcast(offs), "chunk")
-      .withColumn("c_before", sum(col("t")).over(wc) + col("off") - col("t"))
+    Windows.chunkedRunningSums(perPc, Nil, "chunk", Seq(col("pc")), "c" -> col("t"))
+      .withColumn("c_before", col("c") - col("t"))
       .agg(sum(expr("k1 * (2 * c_before + t + 1)")).as("r1_2x"),
         sum(expr("t * t * t - t")).as("tie_cubes"))
       .crossJoin(broadcast(tot))
@@ -1351,23 +1289,16 @@ object Profiling extends QueryModule {
     *
     * Scale shape: one groupBy per customer (map-side combinable), one
     * groupBy per distinct TOTAL (bounded by value granularity), then the
-    * chunked-prefix cumsum over the value spine — per-chunk offsets
-    * broadcast, within-chunk windows partition-parallel, no global
-    * single-reducer sort ([[qKsDrift]] discipline). */
+    * chunked cumsum over the value spine ([[Windows.chunkedRunningSums]],
+    * $100k chunks); C is the exclusive sum. */
   def qGini(spark: SparkSession, dir: String): DataFrame = {
     val perCust = Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(sum(expr("CAST(round(o_totalprice) AS BIGINT)")).as("v"))
     val perVal = perCust.groupBy(col("v")).agg(count(lit(1)).as("k"))
       .withColumn("chunk", expr("v div 100000"))
-    val byChunk = Window.orderBy(col("chunk"))
-    val offs = perVal.groupBy(col("chunk")).agg(sum(col("k")).as("ck"))
-      .withColumn("off", coalesce(sum(col("ck")).over(
-        byChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("chunk"), col("off"))
-    val wc = Window.partitionBy(col("chunk")).orderBy(col("v"))
-    perVal.join(broadcast(offs), "chunk")
-      .withColumn("c_before", sum(col("k")).over(wc) + col("off") - col("k"))
+    Windows.chunkedRunningSums(perVal, Nil, "chunk", Seq(col("v")), "c" -> col("k"))
+      .withColumn("c_before", col("c") - col("k"))
       .agg(sum(col("k")).as("n"),
         sum(expr("v * k")).as("sum_v"),
         sum(expr("""CAST(v AS DECIMAL(18,0)) * CAST(k AS DECIMAL(10,0))

@@ -311,6 +311,22 @@ object Similarity extends QueryModule {
       .orderBy(col("bucket"))
   }
 
+  /** Nearest-centroid assignment (cosine, ties to the smallest cid) — ONE
+    * definition shared by the in-query IVF keys and the durable
+    * [[IvfIndex]], so index-side and query-side assignment can't drift.
+    * Input columns (vec_id, embedding, ...); output `keep` + cid, where
+    * the default `keep` is the schema of [[IvfIndex]]'s stored lists. */
+  private[graft] def assignToCentroids(vectors: DataFrame, cent: DataFrame,
+      keep: Seq[String] = Seq("vec_id", "embedding")): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid"))
+    vectors.crossJoin(broadcast(cent))
+      .withColumn("csim", expr("cosine_sim(embedding, cvec)"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select((keep :+ "cid").map(col): _*)
+  }
+
   /** Deterministic Lloyd k-means for the IVF index: seeded by the first
     * `k` vectors, `iters` fixed iterations of (assign to cosine-argmax
     * centroid, tie-broken by cid) → (centroid = member mean). The mean is
@@ -331,33 +347,11 @@ object Similarity extends QueryModule {
     * window distributes perfectly); the update explodes 64 dims and hash-
     * aggregates — one shuffle of (k × 64) running sums. A production run
     * raises k and iters; the plan shape is unchanged. */
-  /** Nearest-centroid assignment (cosine, ties to the smallest cid) — ONE
-    * definition shared by the in-query IVF keys and the durable
-    * [[IvfIndex]], so index-side and query-side assignment can't drift.
-    * Input columns (vec_id, embedding, ...); output (vec_id, embedding,
-    * cid). */
-  private[graft] def assignToCentroids(vectors: DataFrame, cent: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid"))
-    vectors.crossJoin(broadcast(cent))
-      .withColumn("csim", expr("cosine_sim(embedding, cvec)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"), col("cid"))
-  }
-
   private[ops] def ivfCentroids(e: DataFrame, k: Int, iters: Int): DataFrame = {
-    val assignW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid"))
     var cent = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     for (_ <- 1 to iters) {
-      val assigned = e.crossJoin(broadcast(cent))
-        .withColumn("csim", expr("cosine_sim(embedding, cvec)"))
-        .withColumn("rn", row_number().over(assignW))
-        .filter(col("rn") === 1)
-        .select(col("embedding"), col("cid"))
-      val means = assigned
+      val means = assignToCentroids(e, cent)
         .select(col("cid"),
           posexplode(expr("transform(embedding, x -> CAST(round(x * 1e6) AS BIGINT))")))
         .toDF("cid", "dim", "micro")
@@ -461,14 +455,7 @@ object Similarity extends QueryModule {
     val e = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
     val centroids = ivfCentroids(e, 16, 2)
-    // assign every vector to its nearest centroid
-    val assignW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid"))
-    val assigned = e.crossJoin(broadcast(centroids))
-      .withColumn("csim", expr("cosine_sim(embedding, cvec)"))
-      .withColumn("rn", row_number().over(assignW))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("label"), col("embedding"), col("cid"))
+    val assigned = assignToCentroids(e, centroids, Seq("vec_id", "label", "embedding"))
     // probe the 4 centroids nearest the query vector
     val qvec = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
     val probes = centroids.crossJoin(broadcast(qvec))
@@ -634,16 +621,9 @@ object Similarity extends QueryModule {
     * parallel across clusters. The verify-before-aggregate ordering keeps
     * only true near-dup pairs in the min() shuffle. */
   def qSemdedup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
-    val cent = ivfCentroids(e, 16, 2)
-    val assignW = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid"))
-    val assigned = e.crossJoin(broadcast(cent))
-      .withColumn("csim", expr("cosine_sim(embedding, cvec)"))
-      .withColumn("rn", row_number().over(assignW))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"), col("cid"))
+    val assigned = assignToCentroids(e, ivfCentroids(e, 16, 2))
       // three consumers (both pair sides + the final left join): one pass
       .localCheckpoint(eager = false)
     val a = assigned.select(col("cid"), col("vec_id").as("u"), col("embedding").as("eu"))
@@ -1544,19 +1524,13 @@ object Similarity extends QueryModule {
     * computed identically in both engines — RRF's rank-only design is
     * precisely what makes hybrid fusion engine-portable (score-based
     * fusion would inherit every float divergence of both retrievers).
-    * Both global ranks are CHUNK-ROLLED (the discThresholds two-phase
-    * shape): rank = per-chunk offset + in-chunk row_number, where the
-    * dense chunks bucket cos_raw (≤ 2·1024 buckets on [−1, 1]) and the
-    * lex chunks bucket n_chars (value-range-bounded) — so no window ever
+    * Both global ranks are running counts ([[Windows.chunkedRunningSums]]):
+    * the dense chunks bucket cos_raw (≤ 2·1024 buckets on [−1, 1]) and the
+    * lex chunks bucket n_chars (value-range-bounded), so no window ever
     * moves the corpus into one partition (the r10 driver tails' "No
     * Partition Defined" WARN on this key was the only corpus-sized
-    * instance; every in-chunk partition is bounded by its bucket's
-    * population and the offset spine by the bucket count). The composed
-    * rank is IDENTICAL to the global row_number: chunks partition the
-    * ordering key's range in order, and the in-chunk tie-break is the
-    * same (ordering-key, doc_id). */
+    * instance). */
   def qRankFusion(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
       .filter(col("lang") === "en")
       .select(col("doc_id"), col("n_chars"))
@@ -1565,26 +1539,16 @@ object Similarity extends QueryModule {
       .withColumn("cos_raw", expr(cosineExpr))
       .join(docs, col("vec_id") === col("doc_id"))
       // ascending chunk ≡ descending ordering key; floor is monotone so
-      // equal cos_raw values land in one chunk and the in-chunk sort
-      // restores the exact (cos_raw desc, doc_id) order
+      // equal cos_raw values land in one chunk
       .withColumn("dchunk", floor(-col("cos_raw") * 1024))
       .withColumn("lchunk", -floor(col("n_chars") / 64))
-      .localCheckpoint(eager = false) // feeds both offset spines + ranks
-    def offsets(chunkCol: String, off: String): DataFrame =
-      scored.groupBy(col(chunkCol)).agg(count(lit(1)).as("cn"))
-        .withColumn(off, coalesce(sum(col("cn")).over(
-          Window.orderBy(col(chunkCol))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .drop("cn")
-    val dense = Window.partitionBy(col("dchunk"))
-      .orderBy(col("cos_raw").desc, col("doc_id"))
-    val lex = Window.partitionBy(col("lchunk"))
-      .orderBy(col("n_chars").desc, col("doc_id"))
-    scored
-      .join(broadcast(offsets("dchunk", "doff")), "dchunk")
-      .join(broadcast(offsets("lchunk", "loff")), "lchunk")
-      .withColumn("r_dense", (col("doff") + row_number().over(dense)).cast("int"))
-      .withColumn("r_lex", (col("loff") + row_number().over(lex)).cast("int"))
+      .localCheckpoint(eager = false) // feeds both chunk tables + ranks
+    val dense = Windows.chunkedRunningSums(scored, Nil, "dchunk",
+      Seq(col("cos_raw").desc, col("doc_id")), "r_dense" -> lit(1L))
+    Windows.chunkedRunningSums(dense, Nil, "lchunk",
+        Seq(col("n_chars").desc, col("doc_id")), "r_lex" -> lit(1L))
+      .withColumn("r_dense", col("r_dense").cast("int"))
+      .withColumn("r_lex", col("r_lex").cast("int"))
       .withColumn("rrf_raw", expr(
         "1.0 / (60.0 + CAST(r_dense AS DOUBLE)) + 1.0 / (60.0 + CAST(r_lex AS DOUBLE))"))
       .orderBy(col("rrf_raw").desc, col("doc_id"))

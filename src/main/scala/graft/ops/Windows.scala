@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,6 +25,58 @@ import org.apache.spark.sql.functions._
   * deterministic across engines.
   */
 object Windows extends QueryModule {
+
+  /** Exact running sums over groups too large for one task. For each
+    * `(name, v)` in `sums` the result gains two columns:
+    *   - `name` = `sum(v) OVER (PARTITION BY partitionBy ORDER BY orderBy
+    *     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)`;
+    *   - `name_total` = `sum(v) OVER (PARTITION BY partitionBy)`.
+    * A rank is the running sum of `lit(1)`; an exclusive sum is `name − v`.
+    *
+    * Preconditions, both the caller's:
+    *   - `chunk` (the name of a column of `df`) does not decrease along
+    *     `orderBy`, NULL first as Spark sorts it — e.g. a floor of the
+    *     leading order key, negated for a descending key;
+    *   - `orderBy` is a total order within each partition.
+    *
+    * A window partitioned only by a low-cardinality key streams a whole
+    * group through one task, and with no key the whole table. Instead the
+    * group splits into chunks, in two phases:
+    *   1. one row per (partition, chunk) holds that chunk's sums; a window
+    *      over this small table gives each chunk the sum of the chunks
+    *      before it, and the group total;
+    *   2. a running window partitioned by (partition, chunk) sums within
+    *      the chunk, and the table, broadcast back, adds the chunk's offset.
+    * No task holds more than one chunk of one group. The broadcast join
+    * matches the keys with `<=>`, so rows with a NULL partition key or
+    * chunk keep their place. `df` is read twice (the chunk table and the
+    * rows): checkpoint it first when it is costly to derive. */
+  private[graft] def chunkedRunningSums(df: DataFrame, partitionBy: Seq[String],
+      chunk: String, orderBy: Seq[Column], sums: (String, Column)*): DataFrame = {
+    val keys = partitionBy :+ chunk
+    val names = sums.map(_._1)
+    val chunkSums = sums.map { case (n, v) => sum(v).as(s"_cs_$n") }
+    val byChunk = Window.partitionBy(partitionBy.map(col): _*).orderBy(col(chunk))
+    val offsets = df.groupBy(keys.map(col): _*).agg(chunkSums.head, chunkSums.tail: _*)
+      .select(keys.map(k => col(k).as(s"_k_$k")) ++ names.flatMap { n => Seq(
+        sum(col(s"_cs_$n")).over(byChunk.rowsBetween(Window.unboundedPreceding, -1))
+          .as(s"_off_$n"),
+        sum(col(s"_cs_$n")).over(
+          byChunk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+          .as(s"${n}_total")) }: _*)
+    val inChunk = Window.partitionBy(keys.map(col): _*).orderBy(orderBy: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // window before join: the rows' shuffle does not wait for the broadcast
+    val joined = sums.foldLeft(df) { case (t, (n, v)) => t.withColumn(n, sum(v).over(inChunk)) }
+      .join(broadcast(offsets), keys.map(k => col(k) <=> col(s"_k_$k")).reduce(_ && _))
+      .drop(keys.map(k => s"_k_$k"): _*)
+    names.foldLeft(joined) { (t, n) =>
+        // NULL only where the plain window is NULL: no non-NULL value yet
+        val (off, in) = (col(s"_off_$n"), col(n))
+        t.withColumn(n, coalesce(off + in, off, in))
+      }
+      .drop(names.map(n => s"_off_$n"): _*)
+  }
 
   /** Salt-bucket count for the two-phase top-k windows below: the local
     * phase shuffles on (group, salt) so no task ever owns more than 1/64th
@@ -251,40 +303,24 @@ object Windows extends QueryModule {
     * rewrite: mark each user's FIRST occurrence within the event type
     * (row_number over (type, user) = 1), then running-sum the markers.
     *
-    * The running sum is CHUNKED, because a window partitioned only by
-    * low-cardinality event_type would stream one type's entire history
-    * through a single task at 100×. Instead: partition by (event_type,
-    * day-bucket) — a function of ts, so bucket order agrees with ts order
-    * — compute the in-bucket running sum, reduce each bucket to its total
-    * (max of the running sum), prefix-sum those totals over the tiny
-    * (types × days) bucket table, and broadcast the per-bucket offsets
-    * back. offset + in-bucket running = the global running value, exactly,
-    * with every task bounded by one day of one type. */
+    * The running sum goes through [[chunkedRunningSums]], chunked by day
+    * bucket (a function of ts, so bucket order agrees with ts order),
+    * because event_type has a handful of values: every task is bounded by
+    * one day of one type. */
   def qWinCountDistinct(spark: SparkSession, dir: String): DataFrame = {
     val wUser = Window.partitionBy(col("event_type"), col("user_id"))
       .orderBy(col("ts"), col("event_id"))
-    val wBucket = Window.partitionBy(col("event_type"), col("bucket"))
-      .orderBy(col("ts"), col("event_id"))
-    val wOffsets = Window.partitionBy(col("event_type")).orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // checkpointed: the offsets rollup AND the final join both consume this
-    // two-window frame, and Catalyst has no cross-branch reuse — the
-    // round-10 plan showed the whole scan→window→window subtree planted
-    // twice (once under the broadcast side), doubling the stage work
-    val inBucket = Tables.events(spark, dir)
+    // checkpointed: the chunk table AND the running window both consume
+    // this frame, and Catalyst has no cross-branch reuse — the round-10
+    // plan showed the whole scan→window subtree planted twice (once under
+    // the broadcast side), doubling the stage work
+    val marked = Tables.events(spark, dir)
       .withColumn("is_first", when(row_number().over(wUser) === 1, 1L).otherwise(0L))
       .withColumn("bucket", date_trunc("day", col("ts")))
-      .withColumn("run_in_bucket", sum(col("is_first")).over(wBucket))
       .localCheckpoint(eager = false)
-    val offsets = inBucket
-      .groupBy(col("event_type"), col("bucket"))
-      .agg(max(col("run_in_bucket")).as("bucket_total"))
-      .withColumn("offset", coalesce(sum(col("bucket_total")).over(wOffsets), lit(0L)))
-      .select(col("event_type"), col("bucket"), col("offset"))
-    inBucket
-      .join(broadcast(offsets), Seq("event_type", "bucket"))
-      .select(col("event_id"), col("event_type"),
-        (col("offset") + col("run_in_bucket")).as("distinct_users_so_far"))
+    chunkedRunningSums(marked, Seq("event_type"), "bucket", Seq(col("ts"), col("event_id")),
+        "distinct_users_so_far" -> col("is_first"))
+      .select(col("event_id"), col("event_type"), col("distinct_users_so_far"))
   }
 
   /** Trailing-15-row exact rolling median per user: the frame's values as a

@@ -154,6 +154,29 @@ class PlanSpec extends SparkSpec {
     assert(joined.exceptAll(expected).isEmpty && expected.exceptAll(joined).isEmpty)
   }
 
+  test("a plain localCheckpoint forgets its hash layout: the reason PartitionedCheckpoint exists") {
+    // The restored LogicalRDD reports no partitioning, so a join under AQE
+    // re-exchanges both sides though each is already hash-placed and sorted
+    // on the key. When this fails, Spark keeps the layout and the graftshim
+    // InternalDataFrames route can go.
+    import org.apache.spark.sql.functions._
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val c = Tables.customer(spark, sf)
+    def placed(k: String, other: String, eager: Boolean) =
+      c.select(col("c_custkey").as(k), col(other))
+        .repartition(8, col(k)).sortWithinPartitions(k)
+        .localCheckpoint(eager)
+    val left = placed("k1", "c_acctbal", eager = true)
+    val right = placed("k2", "c_nationkey", eager = false)
+    // the hint keeps a sort-merge join, the shape PartitionedCheckpoint serves
+    val joined = left.join(right.hint("shuffle_merge"), col("k1") === col("k2"))
+    assert(joined.collect().length == c.count())
+    val plan = joined.queryExecution.executedPlan.toString
+    for (k <- Seq("k1", "k2"))
+      assert(plan.contains(s"Exchange hashpartitioning($k#"),
+        s"the $k side kept its layout through localCheckpoint:\n$plan")
+  }
+
   test("q_triangle's wedge self-join runs on the checkpointed apex layout, exchange-free") {
     val df = graft.ops.Graph.qTriangle(spark, sf)
     df.write.format("noop").mode("overwrite").save()

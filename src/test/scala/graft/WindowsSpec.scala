@@ -232,4 +232,75 @@ class WindowsSpec extends SparkSpec {
     val want = parts.filterNot(dominated).sortBy(p => (p._2, p._1))
     assert(rows.toSeq == want.toSeq)
   }
+
+  // Windows.chunkedRunningSums against the plain single-window expression
+  // it replaces, on small generated frames (p, o, id, v). Each frame is
+  // checked with a partition key and without, for two sums at once: a rank
+  // (the sum of 1) and a running sum of a nullable value.
+
+  private type GenRow = (String, Option[String], Option[Int], Long, Option[Long])
+
+  private def checkAgainstPlainWindow(rows: Seq[GenRow], width: Int): Unit = {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val df = rows.toDF("case", "p", "o", "id", "v")
+      .withColumn("chunk", floor(col("o") / lit(width)))
+    for (part <- Seq(Seq("case", "p"), Seq("case"))) {
+      val order = Seq(col("o"), col("id"))
+      def pick(d: org.apache.spark.sql.DataFrame) =
+        d.select(col("case"), col("id"), col("rk"), col("s"), col("rk_total"), col("s_total"))
+          .collect().map(r => (r.getString(0), r.getLong(1)) -> (2 until 6).map(i => Option(r.get(i))))
+          .toMap
+      val got = pick(graft.ops.Windows.chunkedRunningSums(df, part, "chunk", order,
+        "rk" -> lit(1L), "s" -> col("v")))
+      val running = Window.partitionBy(part.map(col): _*).orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val whole = Window.partitionBy(part.map(col): _*)
+      val want = pick(df
+        .withColumn("rk", sum(lit(1L)).over(running))
+        .withColumn("s", sum(col("v")).over(running))
+        .withColumn("rk_total", sum(lit(1L)).over(whole))
+        .withColumn("s_total", sum(col("v")).over(whole)))
+      assert(got.size == rows.size, s"rows lost under partitionBy $part")
+      assert(got == want, s"partitionBy $part: ${(got.toSet diff want.toSet).take(5)}")
+    }
+  }
+
+  private def frame(name: String, seed: Long, n: Int)(
+      gen: scala.util.Random => (Option[String], Option[Int], Option[Long])): Seq[GenRow] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map { i => val (p, o, v) = gen(rnd); (name, p, o, i.toLong, v) }
+  }
+
+  test("chunkedRunningSums = plain window: ties at chunk boundaries, negative values, floor chunks") {
+    // order values sit on and next to multiples of the width, many tied
+    val ties = frame("ties", 11, 60) { r =>
+      (Some(s"g${r.nextInt(2)}"), Some(10 * r.nextInt(4) + r.nextInt(3) - 1),
+        Some(r.nextInt(100).toLong)) }
+    // negative order values: floor (not truncation) keeps chunks ordered
+    val negative = frame("negative", 12, 60) { r =>
+      (Some(s"g${r.nextInt(3)}"), Some(r.nextInt(101) - 50),
+        Some(r.nextInt(201).toLong - 100)) }
+    checkAgainstPlainWindow(ties, 10)
+    checkAgainstPlainWindow(negative, 7)
+  }
+
+  test("chunkedRunningSums = plain window: empty frame, single-row groups, NULL values") {
+    checkAgainstPlainWindow(Nil, 5)
+    val singles = (0 until 6).map(i =>
+      ("single", Some(s"s$i"), Some(i * 13 - 30), i.toLong, Some(i.toLong * 7)))
+    val nullValues = frame("null_v", 13, 40) { r =>
+      (Some(s"g${r.nextInt(2)}"), Some(r.nextInt(30)),
+        if (r.nextInt(3) == 0) None else Some(r.nextInt(50).toLong)) }
+    checkAgainstPlainWindow(singles ++ nullValues, 5)
+  }
+
+  test("chunkedRunningSums = plain window: NULL order key and NULL partition key") {
+    // a NULL order key makes a NULL chunk; both sort first, as Spark orders
+    val nulls = frame("null_keys", 14, 60) { r =>
+      (if (r.nextInt(4) == 0) None else Some(s"g${r.nextInt(2)}"),
+        if (r.nextInt(5) == 0) None else Some(r.nextInt(40) - 10),
+        Some(r.nextInt(100).toLong)) }
+    checkAgainstPlainWindow(nulls, 6)
+  }
 }

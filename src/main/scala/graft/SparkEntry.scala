@@ -20,7 +20,7 @@ object SparkEntry {
   def queryFamilies: Map[String, Map[String, (SparkSession, String) => DataFrame]] =
     modules.map(m => m.getClass.getSimpleName.stripSuffix("$") -> m.queries).toMap
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables; every key has one. */
   def oracleSql: Map[String, String] =
     modules.map(_.oracle).reduce(_ ++ _)
 }

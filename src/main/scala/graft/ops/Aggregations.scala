@@ -464,55 +464,32 @@ object Aggregations extends QueryModule {
       .orderBy(col("event_type"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_agg_group"           -> (qAggGroup _),
-    "q_agg_stats"           -> (qAggStats _),
-    "q_agg_global"          -> (qAggGlobal _),
-    "q_agg_count_distinct"  -> (qAggCountDistinct _),
-    "q_agg_approx_distinct" -> (qAggApproxDistinct _),
-    "q_agg_filtered"        -> (qAggFiltered _),
-    "q_per_capita"          -> (qPerCapita _),
-    "q_agg_mode"            -> (qAggMode _),
-    "q_agg_percentile"        -> (qAggPercentile _),
-    "q_percentile_disc"       -> (qPercentileDisc _),
-    "q_agg_percentile_approx" -> (qAggPercentileApprox _),
-    "q_agg_collect"         -> (qAggCollect _),
-    "q_rollup"              -> (qRollup _),
-    "q_cube"                -> (qCube _),
-    "q_grouping_sets"       -> (qGroupingSets _),
-    "q_agg_bool"            -> (qAggBool _),
-    "q_agg_bits"            -> (qAggBits _),
-    "q_regr"                -> (qRegr _),
-    "q_agg_merge"           -> (qAggMerge _),
-    "q_winsorize"           -> (qWinsorize _),
-  )
-
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, (Query, String)] = Map(
     // Sketch certificates: the oracle computes the EXACT side and asserts
     // the bound booleans as literal TRUE — the hash matches iff Spark's
     // sketch actually landed within its declared error bound.
-    "q_agg_approx_distinct" ->
+    "q_agg_approx_distinct" -> (qAggApproxDistinct _,
       """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_exact,
         |       TRUE AS within_5pct
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_percentile_approx" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q_agg_percentile_approx" -> (qAggPercentileApprox _,
       """SELECT l_returnflag, COUNT(*) AS n,
         |       TRUE AS within_p25, TRUE AS within_p50, TRUE AS within_p75
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_bool" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q_agg_bool" -> (qAggBool _,
       """SELECT o_orderpriority,
         |       bool_and(o_totalprice > 500) AS all_over_500,
         |       bool_or(o_orderstatus = 'F') AS any_f,
         |       CAST(count_if(o_totalprice > 100000) AS BIGINT) AS n_big
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_agg_bits" ->
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    "q_agg_bits" -> (qAggBits _,
       """SELECT l_returnflag,
         |       bit_and(l_partkey) AS mask_and,
         |       bit_or(l_partkey) AS mask_or,
         |       bit_xor(l_partkey) AS mask_xor,
         |       COUNT(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_regr" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q_regr" -> (qRegr _,
       """WITH cents AS (
         |  SELECT l_returnflag,
         |         CAST(ROUND(l_quantity * 100) AS BIGINT) AS qc,
@@ -537,8 +514,8 @@ object Aggregations extends QueryModule {
         |  ROUND((CAST(sy AS DOUBLE) - (num / den) * CAST(sx AS DOUBLE))
         |        / CAST(n AS DOUBLE) / 100.0, 4) AS intercept,
         |  ROUND((num * num) / (den * den_y), 6) AS r2
-        |FROM moments ORDER BY l_returnflag""".stripMargin,
-    "q_winsorize" ->
+        |FROM moments ORDER BY l_returnflag""".stripMargin),
+    "q_winsorize" -> (qWinsorize _,
       """WITH cents AS (
         |  SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS c FROM events),
         |ranked AS (
@@ -559,8 +536,8 @@ object Aggregations extends QueryModule {
         |       CAST(MIN(lo) AS DOUBLE) / 100.0 AS p05,
         |       CAST(MIN(hi) AS DOUBLE) / 100.0 AS p95
         |FROM cents JOIN bounds USING (event_type)
-        |GROUP BY cents.event_type ORDER BY cents.event_type""".stripMargin,
-    "q_agg_merge" ->
+        |GROUP BY cents.event_type ORDER BY cents.event_type""".stripMargin),
+    "q_agg_merge" -> (qAggMerge _,
       """SELECT event_type,
         |       COUNT(DISTINCT CAST(ts AS DATE)) AS n_days,
         |       COUNT(*) AS n_events,
@@ -568,8 +545,8 @@ object Aggregations extends QueryModule {
         |         / 100.0 AS total,
         |       ROUND(MIN(value), 4) AS vmin,
         |       ROUND(MAX(value), 4) AS vmax
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_agg_mode" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    "q_agg_mode" -> (qAggMode _,
       """WITH cnt AS (
         |  SELECT p_brand, p_type, COUNT(*) AS n FROM part GROUP BY p_brand, p_type),
         |rk AS (
@@ -577,8 +554,8 @@ object Aggregations extends QueryModule {
         |         ROW_NUMBER() OVER (PARTITION BY p_brand ORDER BY n DESC, p_type) AS rk
         |  FROM cnt)
         |SELECT p_brand, p_type AS mode_type, n
-        |FROM rk WHERE rk = 1 ORDER BY p_brand""".stripMargin,
-    "q_percentile_disc" ->
+        |FROM rk WHERE rk = 1 ORDER BY p_brand""".stripMargin),
+    "q_percentile_disc" -> (qPercentileDisc _,
       """WITH ranked AS (
         |  SELECT l_returnflag, l_extendedprice AS v,
         |         ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice) AS rn,
@@ -588,8 +565,8 @@ object Aggregations extends QueryModule {
         |       MAX(CASE WHEN rn = CAST(CEIL(n * 0.5) AS BIGINT) THEN v END) AS p50_disc,
         |       MAX(CASE WHEN rn = CAST(CEIL(n * 0.9) AS BIGINT) THEN v END) AS p90_disc,
         |       MAX(CASE WHEN rn = CAST(CEIL(n * 0.99) AS BIGINT) THEN v END) AS p99_disc
-        |FROM ranked GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_stats" ->
+        |FROM ranked GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q_agg_stats" -> (qAggStats _,
       """WITH cents AS (
         |  SELECT l_returnflag,
         |         CAST(ROUND(l_quantity * 100) AS BIGINT) AS qc,
@@ -614,32 +591,32 @@ object Aggregations extends QueryModule {
         |         / (sqrt(CAST(n AS DOUBLE) * CAST(sq2 AS DOUBLE) - CAST(sq AS DOUBLE) * CAST(sq AS DOUBLE))
         |            * sqrt(CAST(n AS DOUBLE) * CAST(sp2 AS DOUBLE) - CAST(sp AS DOUBLE) * CAST(sp AS DOUBLE)))
         |         END, 6) AS corr_qty_price
-        |FROM sums ORDER BY l_returnflag""".stripMargin,
-    "q_agg_group" ->
+        |FROM sums ORDER BY l_returnflag""".stripMargin),
+    "q_agg_group" -> (qAggGroup _,
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
         |       ROUND(SUM(l_quantity), 2) AS sum_qty,
         |       ROUND(AVG(l_extendedprice), 2) AS avg_price,
         |       ROUND(MIN(l_discount), 2) AS min_disc,
         |       ROUND(MAX(l_discount), 2) AS max_disc
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_agg_global" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    "q_agg_global" -> (qAggGlobal _,
       """SELECT COUNT(*) AS n_orders,
         |       ROUND(SUM(o_totalprice), 2) AS sum_total,
         |       ROUND(AVG(o_totalprice), 2) AS avg_total,
         |       MIN(CAST(o_orderdate AS DATE)) AS first_day,
         |       MAX(CAST(o_orderdate AS DATE)) AS last_day
-        |FROM orders""".stripMargin,
-    "q_agg_count_distinct" ->
+        |FROM orders""".stripMargin),
+    "q_agg_count_distinct" -> (qAggCountDistinct _,
       """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
         |       COUNT(DISTINCT l_suppkey) AS n_supps
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_filtered" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q_agg_filtered" -> (qAggFiltered _,
       """SELECT l_linestatus,
         |       ROUND(SUM(CASE WHEN l_returnflag = 'R' THEN l_extendedprice ELSE 0.0 END), 2) AS returned_value,
         |       COUNT(CASE WHEN l_discount > 0.05 THEN 1 END) AS n_discounted
-        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-    "q_per_capita" ->
+        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin),
+    "q_per_capita" -> (qPerCapita _,
       """SELECT n_name,
         |       FLOOR(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
         |             / COUNT(DISTINCT c_custkey) * 100 + 0.5) / 100
@@ -647,19 +624,19 @@ object Aggregations extends QueryModule {
         |FROM orders
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q_agg_percentile" ->
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    "q_agg_percentile" -> (qAggPercentile _,
       """SELECT l_returnflag,
         |       ROUND(QUANTILE_CONT(l_extendedprice, 0.25), 4) AS p25,
         |       ROUND(QUANTILE_CONT(l_extendedprice, 0.5), 4) AS p50,
         |       ROUND(QUANTILE_CONT(l_extendedprice, 0.75), 4) AS p75
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_collect" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q_agg_collect" -> (qAggCollect _,
       """SELECT l_returnflag,
         |       ARRAY_TO_STRING(LIST_SORT(LIST(DISTINCT l_linestatus)), ',') AS statuses,
         |       ARRAY_TO_STRING(LIST_SORT(LIST(DISTINCT l_linenumber)), ',') AS linenumbers
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_rollup" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q_rollup" -> (qRollup _,
       """SELECT r_name, n_name, COUNT(*) AS n_customers,
         |       ROUND(SUM(c_acctbal), 2) AS sum_bal,
         |       CAST(GROUPING(r_name) AS TINYINT) AS g_region,
@@ -668,22 +645,22 @@ object Aggregations extends QueryModule {
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
         |GROUP BY ROLLUP(r_name, n_name)
-        |ORDER BY g_region, g_nation, r_name, n_name""".stripMargin,
-    "q_cube" ->
+        |ORDER BY g_region, g_nation, r_name, n_name""".stripMargin),
+    "q_cube" -> (qCube _,
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
         |       ROUND(SUM(l_quantity), 2) AS sum_qty,
         |       CAST(GROUPING(l_returnflag) AS TINYINT) AS g_flag,
         |       CAST(GROUPING(l_linestatus) AS TINYINT) AS g_status
         |FROM lineitem
         |GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY g_flag, g_status, l_returnflag, l_linestatus""".stripMargin,
-    "q_grouping_sets" ->
+        |ORDER BY g_flag, g_status, l_returnflag, l_linestatus""".stripMargin),
+    "q_grouping_sets" -> (qGroupingSets _,
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
         |       ROUND(SUM(l_quantity), 2) AS sum_qty,
         |       CAST(GROUPING(l_returnflag) AS TINYINT) AS g_flag,
         |       CAST(GROUPING(l_linestatus) AS TINYINT) AS g_status
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY g_flag, g_status, l_returnflag, l_linestatus""".stripMargin,
+        |ORDER BY g_flag, g_status, l_returnflag, l_linestatus""".stripMargin),
   )
 }

@@ -325,16 +325,6 @@ object Behavior extends QueryModule {
       .orderBy(col("t"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_growth"      -> (qGrowth _),
-    "q_survival_km" -> (qSurvivalKm _),
-    "q_basket_lift" -> (qBasketLift _),
-    "q_markov"      -> (qMarkov _),
-    "q_rfm"         -> (qRfm _),
-    "q_pareto"      -> (qPareto _),
-    "q_audience_overlap" -> (qAudienceOverlap _),
-  )
-
   /** Generated from the same audienceTypes/audiencePairs lists as the
     * Spark columns. */
   private val audienceOverlapOracle: String = {
@@ -363,8 +353,8 @@ object Behavior extends QueryModule {
       |FROM pairs ORDER BY pair""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "q_survival_km" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_survival_km" -> (qSurvivalKm _,
       """WITH RECURSIVE per AS (
         |  SELECT user_id, MIN(epoch_us(ts)) AS first_us, MAX(epoch_us(ts)) AS last_us
         |  FROM events GROUP BY user_id),
@@ -397,8 +387,8 @@ object Behavior extends QueryModule {
         |SELECT t, n_risk, d_events,
         |       (1000000 * d_events) // n_risk AS hazard_ppm,
         |       survival_ppm
-        |FROM surv ORDER BY t""".stripMargin,
-    "q_growth" ->
+        |FROM surv ORDER BY t""".stripMargin),
+    "q_growth" -> (qGrowth _,
       """WITH weekly AS (
         |  SELECT CAST(DATE_TRUNC('week', o_orderdate) AS DATE) AS week,
         |         SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS rev_cents
@@ -411,9 +401,9 @@ object Behavior extends QueryModule {
         |       CASE WHEN prev_cents IS NULL OR prev_cents = 0 THEN NULL
         |            ELSE (1000000 * (rev_cents - prev_cents)) // prev_cents END
         |         AS growth_ppm
-        |FROM lagged ORDER BY week""".stripMargin,
-    "q_audience_overlap" -> audienceOverlapOracle,
-    "q_pareto" ->
+        |FROM lagged ORDER BY week""".stripMargin),
+    "q_audience_overlap" -> (qAudienceOverlap _, audienceOverlapOracle),
+    "q_pareto" -> (qPareto _,
       """WITH base AS (
         |  SELECT o_custkey, SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS cents
         |  FROM orders GROUP BY o_custkey),
@@ -436,8 +426,8 @@ object Behavior extends QueryModule {
         |  SELECT 50 AS pct, n50 AS n_customers, n_total FROM agg
         |  UNION ALL SELECT 80, n80, n_total FROM agg
         |  UNION ALL SELECT 90, n90, n_total FROM agg)
-        |ORDER BY pct""".stripMargin,
-    "q_basket_lift" ->
+        |ORDER BY pct""".stripMargin),
+    "q_basket_lift" -> (qBasketLift _,
       """WITH items AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
         |n AS (SELECT COUNT(DISTINCT ok) AS n_baskets FROM items),
@@ -453,8 +443,8 @@ object Behavior extends QueryModule {
         |JOIN ic i1 ON i1.pk = pairs.pk1
         |JOIN ic i2 ON i2.pk = pairs.pk2
         |CROSS JOIN n
-        |ORDER BY pk1, pk2""".stripMargin,
-    "q_markov" ->
+        |ORDER BY pk1, pk2""".stripMargin),
+    "q_markov" -> (qMarkov _,
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS tus FROM events),
         |flagged AS (
@@ -478,8 +468,8 @@ object Behavior extends QueryModule {
         |       (1000000 * n_trans) //
         |         CAST(SUM(n_trans) OVER (PARTITION BY from_type) AS BIGINT)
         |         AS prob_ppm
-        |FROM cnt ORDER BY from_type, to_type""".stripMargin,
-    "q_rfm" ->
+        |FROM cnt ORDER BY from_type, to_type""".stripMargin),
+    "q_rfm" -> (qRfm _,
       """WITH maxd AS (SELECT MAX(CAST(o_orderdate AS DATE)) AS max_d FROM orders),
         |base AS (
         |  SELECT o_custkey,
@@ -534,6 +524,6 @@ object Behavior extends QueryModule {
         |            ELSE 'core' END AS segment,
         |       COUNT(*) AS n_customers, CAST(SUM(mon_cents) AS BIGINT) AS cell_cents
         |FROM scored GROUP BY 1, 2, 3
-        |ORDER BY r_score, f_score, m_score""".stripMargin,
+        |ORDER BY r_score, f_score, m_score""".stripMargin),
   )
 }

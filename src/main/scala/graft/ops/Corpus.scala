@@ -38,7 +38,7 @@ object Corpus extends QueryModule {
     * tokens contribute nothing (mirrors the oracle's list slicing). */
   private def gramTable(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
       .select(col("doc_id"), col("source"), explode(array_distinct(expr(
         s"""CASE WHEN size(toks) < $GramSize THEN array()
            |ELSE transform(sequence(0, size(toks) - $GramSize),
@@ -84,7 +84,7 @@ object Corpus extends QueryModule {
   def qTfidfTop(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val toks = docs.select(col("doc_id"),
-      explode(split(lower(trim(col("text"))), " ")).as("token"))
+      explode(TextAnalysis.tokens(col("text"))).as("token"))
     val tf = toks.groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
     val dfreq = toks.distinct().groupBy(col("token"))
@@ -147,7 +147,7 @@ object Corpus extends QueryModule {
   def qHeavyHitters(spark: SparkSession, dir: String): DataFrame =
     heavyHitters(
       Tables.documents(spark, dir)
-        .select(explode(split(lower(trim(col("text"))), " ")).as("token")),
+        .select(explode(TextAnalysis.tokens(col("text"))).as("token")),
       "token", k = 40)
 
   /** Tokens a packed training sequence may hold. 256 keeps multiple docs
@@ -176,7 +176,7 @@ object Corpus extends QueryModule {
       // fine here but silently break the oracle's recursive join
       // (NULL never equi-joins), a latent cross-engine divergence
       .select(coalesce(col("lang"), lit("")).as("lang"), col("doc_id"),
-        size(split(lower(trim(col("text"))), " ")).cast("long").as("n_toks"))
+        size(TextAnalysis.tokens(col("text"))).cast("long").as("n_toks"))
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (lang, it) =>
@@ -214,7 +214,7 @@ object Corpus extends QueryModule {
     val terms = Seq("spark", "vector", "stream")
     val docs = Tables.documents(spark, dir)
     val withLen = docs.select(col("doc_id"),
-      split(lower(trim(col("text"))), " ").as("toks"))
+      TextAnalysis.tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("toks"), size(col("toks")).cast("long").as("dl"))
     val stats = withLen.agg(count(lit(1)).cast("double").as("n_docs"),
       avg(col("dl")).as("avgdl"))
@@ -276,7 +276,7 @@ object Corpus extends QueryModule {
     val toks = Tables.documents(spark, dir)
       .filter(col("source").isin(driftSources: _*))
       .select(col("source"),
-        explode(split(lower(trim(col("text"))), " ")).as("token"))
+        explode(TextAnalysis.tokens(col("text"))).as("token"))
     val cntCols = driftSources.map(s =>
       count(when(col("source") === s, 1)).as(s"c_$s"))
     val cnt = toks.groupBy(col("token")).agg(cntCols.head, cntCols.tail: _*)
@@ -357,7 +357,7 @@ object Corpus extends QueryModule {
     * is a TakeOrdered. */
   def qBpePairStats(spark: SparkSession, dir: String): DataFrame = {
     val words = Tables.documents(spark, dir)
-      .select(explode(split(lower(trim(col("text"))), " ")).as("w"))
+      .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("wf"))
       .filter(length(col("w")) >= 2)
@@ -380,7 +380,7 @@ object Corpus extends QueryModule {
     * representation a BPE merge rewrites. Vocabulary-bounded. */
   private def bpeWords(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(explode(split(lower(trim(col("text"))), " ")).as("w"))
+      .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "" && !col("w").contains(BpeSep))
       .groupBy(col("w")).agg(count(lit(1)).as("wf"))
       .filter(length(col("w")) >= 2)
@@ -480,7 +480,7 @@ object Corpus extends QueryModule {
     * bounded-aggregate house rule), never the corpus. */
   def qGoodTuring(spark: SparkSession, dir: String): DataFrame = {
     val fof = Tables.documents(spark, dir)
-      .select(explode(split(lower(trim(col("text"))), " ")).as("w"))
+      .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("wf"))
       .groupBy(col("wf").as("r")).agg(count(lit(1)).as("n_r"))
@@ -541,7 +541,7 @@ object Corpus extends QueryModule {
     * doc_id, min → smaller) is mirrored in the oracle's window ordering. */
   def qPreferencePairs(spark: SparkSession, dir: String): DataFrame = {
     val scored = Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
       .select(col("lang"), col("source"), col("doc_id"),
         (size(array_distinct(col("toks"))).cast("long") * 1000 + col("n_chars"))
           .as("s"))
@@ -569,7 +569,7 @@ object Corpus extends QueryModule {
     * and every join against it broadcasts. */
   def qNgramBackoff(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
     // vocabulary-bounded; feeds five consumers below (same lazy-checkpoint
     // reuse pattern as qDecontaminate's gram table)
     val uni = docs.select(explode(col("toks")).as("w"))
@@ -623,7 +623,7 @@ object Corpus extends QueryModule {
   def qTokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
     Tables.documents(spark, dir)
       .select(col("lang"),
-        size(split(lower(trim(col("text"))), " ")).cast("long").as("w"),
+        size(TextAnalysis.tokens(col("text"))).cast("long").as("w"),
         expr("subtoken_count(text)").cast("long").as("st"),
         col("n_chars"))
       .groupBy(col("lang"))
@@ -654,7 +654,7 @@ object Corpus extends QueryModule {
     import org.apache.spark.sql.expressions.Window
     val tok = Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars"),
-        explode(split(lower(trim(col("text"))), " ")).as("w"))
+        explode(TextAnalysis.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
     val uni = tok.groupBy(col("w")).agg(count(lit(1)).as("c"))
     val rel = uni.crossJoin(broadcast(uni.agg(sum(col("c")).as("n_tot"))))
@@ -710,7 +710,7 @@ object Corpus extends QueryModule {
     * m_ppm, bucket). */
   private def lmScoredDocs(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
     val bigramsOf = expr(
       """CASE WHEN size(toks) < 2 THEN array()
         |ELSE transform(sequence(0, size(toks) - 2),
@@ -826,7 +826,7 @@ object Corpus extends QueryModule {
     * map-side-combinable word count; everything else is |V|. */
   def qBpeEncode(spark: SparkSession, dir: String): DataFrame = {
     val wl = Tables.documents(spark, dir)
-      .select(col("lang"), explode(split(lower(trim(col("text"))), " ")).as("w"))
+      .select(col("lang"), explode(TextAnalysis.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "" && !col("w").contains(BpeSep))
       .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("wf"))
       .localCheckpoint(eager = false) // feeds the type table AND the census join
@@ -943,7 +943,7 @@ object Corpus extends QueryModule {
          |  x -> CAST(conv(substring(md5(concat('span:', CAST(doc_id AS STRING), ':',
          |    CAST($gExpr AS STRING))), 1, 15), 16, 10) AS BIGINT) % 20 < 3)) AS LONG)""".stripMargin
     Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
       .withColumn("n", size(col("toks")).cast("long"))
       .withColumn("m", expr(maskCount("sequence(0, CAST(n AS INT) - 1)", "div(x, 3)")))
       .withColumn("sp", expr(maskCount("sequence(0, CAST(div(n - 1, 3) AS INT))", "x")))
@@ -976,7 +976,7 @@ object Corpus extends QueryModule {
     * to |lang×source| cells. Nothing shuffles but the 100-cell result. */
   def qChatTemplate(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
       .withColumn("n", size(col("toks")).cast("long"))
       .withColumn("rendered", expr(
         """concat('<|user|>\n', concat_ws(' ', slice(toks, 1, 8)),
@@ -1009,7 +1009,7 @@ object Corpus extends QueryModule {
     * ingest should publish. */
   def qDatasetCard(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
       .withColumn("n", size(col("toks")).cast("long"))
       .localCheckpoint(eager = false) // feeds stats, dups, vocab, profile
     val basic = docs.agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"),
@@ -1062,7 +1062,7 @@ object Corpus extends QueryModule {
     * table a router builds to decide what to pin. */
   def qPrefixCache(spark: SparkSession, dir: String): DataFrame = {
     val pref = Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
       .select(col("lang"),
         expr("concat_ws(' ', slice(toks, 1, 3))").as("prefix"))
       .withColumn("plen", length(col("prefix")).cast("long"))
@@ -1091,7 +1091,6 @@ object Corpus extends QueryModule {
     * map-only per pair on the ≤|lang×source| mined pairs, each scoring
     * one array_intersect of two bounded token sets. */
   def qRougeOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val toksOf = (c: String) => split(lower(trim(col(c))), " ")
     def gramsExpr(t: String) =
       s"""CASE WHEN size($t) < 2 THEN array()
          |ELSE transform(sequence(0, size($t) - 2),
@@ -1102,9 +1101,9 @@ object Corpus extends QueryModule {
     val scored = pairs
       .join(docs.select(col("doc_id").as("chosen_id"), col("text").as("t_ch")), "chosen_id")
       .join(docs.select(col("doc_id").as("rejected_id"), col("text").as("t_rj")), "rejected_id")
-      .withColumn("a1", array_distinct(toksOf("t_ch")))
-      .withColumn("b1", array_distinct(toksOf("t_rj")))
-      .withColumn("ta", toksOf("t_ch")).withColumn("tb", toksOf("t_rj"))
+      .withColumn("a1", array_distinct(TextAnalysis.tokens(col("t_ch"))))
+      .withColumn("b1", array_distinct(TextAnalysis.tokens(col("t_rj"))))
+      .withColumn("ta", TextAnalysis.tokens(col("t_ch"))).withColumn("tb", TextAnalysis.tokens(col("t_rj")))
       .withColumn("a2", array_distinct(expr(gramsExpr("ta"))))
       .withColumn("b2", array_distinct(expr(gramsExpr("tb"))))
       .select(col("lang"),
@@ -1120,35 +1119,6 @@ object Corpus extends QueryModule {
         sum(when(col("bi_f1_ppm") > 500000L, 1L).otherwise(0L)).as("n_degenerate"))
       .orderBy(col("lang"))
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_prefix_cache" -> (qPrefixCache _),
-    "q_rouge_overlap" -> (qRougeOverlap _),
-    "q_filter_sweep" -> (qFilterSweep _),
-    "q_chat_template" -> (qChatTemplate _),
-    "q_dataset_card" -> (qDatasetCard _),
-    "q_ccnet_buckets" -> (qCcnetBuckets _),
-    "q_bpe_encode" -> (qBpeEncode _),
-    "q_temperature_mixture" -> (qTemperatureMixture _),
-    "q_epoch_shuffle" -> (qEpochShuffle _),
-    "q_span_corruption" -> (qSpanCorruption _),
-    "q_curriculum_bins" -> (qCurriculumBins _),
-    "q_preference_pairs" -> (qPreferencePairs _),
-    "q_ngram_backoff" -> (qNgramBackoff _),
-    "q_tokenizer_fertility" -> (qTokenizerFertility _),
-    "q_source_quality" -> (qSourceQuality _),
-    "q_bpe_pair_stats" -> (qBpePairStats _),
-    "q_bpe_merge_step" -> (qBpeMergeStep _),
-    "q_good_turing"   -> (qGoodTuring _),
-    "q_corpus_mixture" -> (qCorpusMixture _),
-    "q_corpus_drift"  -> (qCorpusDrift _),
-    "q_bm25"          -> (qBm25 _),
-    "q_decontaminate" -> (qDecontaminate _),
-    "q_sample_capped" -> (qSampleCapped _),
-    "q_tfidf_top"     -> (qTfidfTop _),
-    "q_heavy_hitters" -> (qHeavyHitters _),
-    "q_pack_sequences" -> (qPackSequences _),
-  )
 
   /** Generated from the same `driftPairs` list as the Spark columns. */
   private val corpusDriftOracle: String = {
@@ -1277,8 +1247,8 @@ object Corpus extends QueryModule {
       |n AS (SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs
       |      FROM scored GROUP BY 1, 2)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q_prefix_cache" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_prefix_cache" -> (qPrefixCache _,
       """WITH p AS (
         |  SELECT lang,
         |         ARRAY_TO_STRING((STRING_SPLIT(LOWER(TRIM(text)), ' '))[1:3], ' ')
@@ -1294,8 +1264,8 @@ object Corpus extends QueryModule {
         |       MAX(c) AS hottest_prefix_docs,
         |       (1000000 * (CAST(SUM(c) AS BIGINT) - CAST(COUNT(*) AS BIGINT)))
         |         // CAST(SUM(c) AS BIGINT) AS cache_hit_ppm
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_rouge_overlap" ->
+        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_rouge_overlap" -> (qRougeOverlap _,
       s"""WITH $pairMiningCtes,
         |pairs AS (
         |  SELECT n.lang, ch.doc_id AS chosen_id, rj.doc_id AS rejected_id
@@ -1328,8 +1298,8 @@ object Corpus extends QueryModule {
         |       MAX(bi_f1_ppm) AS max_bi_f1_ppm,
         |       CAST(SUM(CASE WHEN bi_f1_ppm > 500000 THEN 1 ELSE 0 END) AS BIGINT)
         |         AS n_degenerate
-        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_filter_sweep" -> {
+        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_filter_sweep" -> (qFilterSweep _, {
       val tCols = (1 to 9).map(k =>
         s"MIN(CASE WHEN cum >= ($k * n_all + 9) // 10 THEN bucket END) AS t$k")
         .mkString(",\n        |         ")
@@ -1355,8 +1325,8 @@ object Corpus extends QueryModule {
         |FROM prof JOIN thresholds ON prof.bucket >= thresholds.threshold_bucket
         |CROSS JOIN n
         |GROUP BY 1, 2 ORDER BY k""".stripMargin
-    },
-    "q_chat_template" ->
+    }),
+    "q_chat_template" -> (qChatTemplate _,
       """WITH d AS (
         |  SELECT lang, source, STRING_SPLIT(LOWER(TRIM(text)), ' ') AS t
         |  FROM documents),
@@ -1374,8 +1344,8 @@ object Corpus extends QueryModule {
         |       CAST(SUM(LENGTH(rendered)) AS BIGINT) AS sum_rendered_chars,
         |       (1000000 * CAST(SUM(CASE WHEN seq_tokens > 64 THEN 1 ELSE 0 END)
         |          AS BIGINT)) // CAST(COUNT(*) AS BIGINT) AS trunc_ppm
-        |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_dataset_card" ->
+        |FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q_dataset_card" -> (qDatasetCard _,
       """WITH d AS (
         |  SELECT doc_id, lang, source, text,
         |         CAST(LEN(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS BIGINT) AS n
@@ -1420,8 +1390,8 @@ object Corpus extends QueryModule {
         |            FROM basic
         |  UNION ALL SELECT 'p50_doc_tokens', p50_doc_tokens FROM pcts
         |  UNION ALL SELECT 'p90_doc_tokens', p90_doc_tokens FROM pcts)
-        |ORDER BY metric""".stripMargin,
-    "q_ccnet_buckets" ->
+        |ORDER BY metric""".stripMargin),
+    "q_ccnet_buckets" -> (qCcnetBuckets _,
       s"""WITH $lmScoreCtes,
         |prof AS (SELECT lang, bucket, CAST(COUNT(*) AS BIGINT) AS cn
         |         FROM pd GROUP BY 1, 2),
@@ -1442,8 +1412,8 @@ object Corpus extends QueryModule {
         |       MIN(m_ppm) AS min_ppm, MAX(m_ppm) AS max_ppm,
         |       CAST(SUM(n_chars) // COUNT(*) AS BIGINT) AS avg_chars
         |FROM pd JOIN th ON th.lang = pd.lang
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_bpe_encode" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q_bpe_encode" -> (qBpeEncode _,
       s"""WITH tokl AS (
         |  SELECT lang, w FROM (
         |    SELECT lang, UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS w
@@ -1478,8 +1448,8 @@ object Corpus extends QueryModule {
         |                               ELSE 0 END) AS BIGINT))
         |         // CAST(SUM(wl.wf) AS BIGINT) AS merged_word_ppm
         |FROM wl JOIN enc e ON e.w = wl.w
-        |GROUP BY wl.lang ORDER BY wl.lang""".stripMargin,
-    "q_temperature_mixture" ->
+        |GROUP BY wl.lang ORDER BY wl.lang""".stripMargin),
+    "q_temperature_mixture" -> (qTemperatureMixture _,
       """WITH cells AS (SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs
         |               FROM documents GROUP BY 1, 2),
         |tot AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS n_tot FROM cells),
@@ -1493,8 +1463,8 @@ object Corpus extends QueryModule {
         |       ((n_tot // 4) * w_micro) // w_tot AS epoch_docs,
         |       (1000000 * (((n_tot // 4) * w_micro) // w_tot)) // n_docs AS upsample_ppm
         |FROM w CROSS JOIN wt
-        |ORDER BY lang, source""".stripMargin,
-    "q_epoch_shuffle" ->
+        |ORDER BY lang, source""".stripMargin),
+    "q_epoch_shuffle" -> (qEpochShuffle _,
       """WITH e AS (SELECT doc_id, epoch FROM documents
         |           CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(1, 3)) AS epoch)),
         |k AS (SELECT doc_id, epoch,
@@ -1510,8 +1480,8 @@ object Corpus extends QueryModule {
         |       ARG_MAX(doc_id, pos) AS tail_doc,
         |       CAST(SUM(((pos % 1000000007) * (doc_id % 1000000007)) % 1000000007)
         |              % 1000000007 AS BIGINT) AS order_checksum
-        |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_span_corruption" ->
+        |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q_span_corruption" -> (qSpanCorruption _,
       """WITH d AS (SELECT doc_id, lang,
         |                  STRING_SPLIT(LOWER(TRIM(text)), ' ') AS t FROM documents),
         |s AS (SELECT lang,
@@ -1535,8 +1505,8 @@ object Corpus extends QueryModule {
         |       CASE WHEN SUM(sp) = 0 THEN NULL
         |            ELSE (1000000 * CAST(SUM(m) AS BIGINT)) // CAST(SUM(sp) AS BIGINT)
         |       END AS mean_span_ppm
-        |FROM s GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_source_quality" ->
+        |FROM s GROUP BY lang ORDER BY lang""".stripMargin),
+    "q_source_quality" -> (qSourceQuality _,
       """WITH dups AS (
         |  SELECT source,
         |         CAST(SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS BIGINT) AS dup_docs
@@ -1555,8 +1525,8 @@ object Corpus extends QueryModule {
         |       d.dup_docs,
         |       CAST(d.dup_docs AS DOUBLE) / CAST(g.n_docs AS DOUBLE) AS dup_rate
         |FROM g JOIN dups d ON g.source = d.source
-        |ORDER BY g.source""".stripMargin,
-    "q_bpe_pair_stats" ->
+        |ORDER BY g.source""".stripMargin),
+    "q_bpe_pair_stats" -> (qBpePairStats _,
       """WITH words AS (
         |  SELECT w, COUNT(*) AS wf FROM (
         |    SELECT UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS w FROM documents)
@@ -1568,8 +1538,8 @@ object Corpus extends QueryModule {
         |        FROM words WHERE LENGTH(w) >= 2))
         |SELECT "left", "right", CAST(SUM(wf) AS BIGINT) AS pair_count
         |FROM pairs GROUP BY 1, 2
-        |ORDER BY pair_count DESC, "left", "right" LIMIT 20""".stripMargin,
-    "q_bpe_merge_step" ->
+        |ORDER BY pair_count DESC, "left", "right" LIMIT 20""".stripMargin),
+    "q_bpe_merge_step" -> (qBpeMergeStep _,
       """WITH words AS (
         |  SELECT w, COUNT(*) AS wf FROM (
         |    SELECT UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS w FROM documents)
@@ -1622,8 +1592,8 @@ object Corpus extends QueryModule {
         |  UNION ALL
         |  SELECT CAST(3 AS BIGINT), l, r, pc FROM (
         |    SELECT l, r, pc FROM p2 ORDER BY pc DESC, l, r LIMIT 8))
-        |ORDER BY round, pair_count DESC, "left", "right"""".stripMargin,
-    "q_good_turing" ->
+        |ORDER BY round, pair_count DESC, "left", "right"""".stripMargin),
+    "q_good_turing" -> (qGoodTuring _,
       """WITH words AS (
         |  SELECT w, COUNT(*) AS wf FROM (
         |    SELECT UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS w FROM documents)
@@ -1643,8 +1613,8 @@ object Corpus extends QueryModule {
         |       n_tokens, n_types,
         |       CAST((1000000 * n1) // n_tokens AS BIGINT) AS p0_ppm
         |FROM led CROSS JOIN tot
-        |WHERE rk <= 20 ORDER BY r""".stripMargin,
-    "q_corpus_mixture" ->
+        |WHERE rk <= 20 ORDER BY r""".stripMargin),
+    "q_corpus_mixture" -> (qCorpusMixture _,
       """WITH census AS (
         |  SELECT source, COUNT(*) AS n_s FROM documents GROUP BY source),
         |wq AS (
@@ -1673,9 +1643,9 @@ object Corpus extends QueryModule {
         |         AS sampled_chars,
         |       (1000000 * CAST(SUM(a) AS BIGINT)) // n_s AS accept_ppm
         |FROM acc GROUP BY source, n_s, w_milli
-        |ORDER BY source""".stripMargin,
-    "q_corpus_drift" -> corpusDriftOracle,
-    "q_bm25" ->
+        |ORDER BY source""".stripMargin),
+    "q_corpus_drift" -> (qCorpusDrift _, corpusDriftOracle),
+    "q_bm25" -> (qBm25 _,
       """WITH d AS (
         |  SELECT doc_id, STRING_SPLIT(LOWER(TRIM(text)), ' ') AS toks
         |  FROM documents),
@@ -1700,8 +1670,8 @@ object Corpus extends QueryModule {
         |SELECT doc_id, CAST(SUM(s_micro) AS DOUBLE) / 1000000 AS bm25,
         |       COUNT(*) AS n_terms
         |FROM scored GROUP BY doc_id
-        |ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin,
-    "q_pack_sequences" ->
+        |ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin),
+    "q_pack_sequences" -> (qPackSequences _,
       """WITH RECURSIVE d AS (
         |  SELECT COALESCE(lang, '') AS lang, doc_id,
         |         CAST(LEN(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS BIGINT) AS n_toks,
@@ -1718,16 +1688,16 @@ object Corpus extends QueryModule {
         |              ELSE p.bin_fill + d.n_toks END
         |  FROM d JOIN packed p ON d.lang = p.lang AND d.rn = p.rn + 1)
         |SELECT lang, doc_id, n_toks, bin, bin_fill
-        |FROM packed ORDER BY lang, doc_id""".stripMargin,
-    "q_heavy_hitters" ->
+        |FROM packed ORDER BY lang, doc_id""".stripMargin),
+    "q_heavy_hitters" -> (qHeavyHitters _,
       """WITH toks AS (
         |  SELECT UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS token FROM documents),
         |counts AS (SELECT token, COUNT(*) AS n FROM toks GROUP BY token),
         |total AS (SELECT COUNT(*) AS total FROM toks)
         |SELECT token, n FROM counts, total
         |WHERE n * 40 > total
-        |ORDER BY n DESC, token""".stripMargin,
-    "q_decontaminate" ->
+        |ORDER BY n DESC, token""".stripMargin),
+    "q_decontaminate" -> (qDecontaminate _,
       """WITH toks AS (
         |  SELECT doc_id, source, STRING_SPLIT(LOWER(TRIM(text)), ' ') AS t FROM documents),
         |grams AS (
@@ -1741,16 +1711,16 @@ object Corpus extends QueryModule {
         |SELECT g.doc_id, COUNT(*) AS n_shared
         |FROM grams g JOIN bench USING (gram)
         |WHERE g.source <> 'src0'
-        |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin,
-    "q_sample_capped" ->
+        |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin),
+    "q_sample_capped" -> (qSampleCapped _,
       """WITH ranked AS (
         |  SELECT doc_id, source,
         |         ROW_NUMBER() OVER (PARTITION BY source
         |           ORDER BY md5(source || ':' || CAST(doc_id AS VARCHAR)), doc_id) AS rk
         |  FROM documents)
         |SELECT doc_id, source, CAST(rk AS INTEGER) AS rk
-        |FROM ranked WHERE rk <= 5 ORDER BY doc_id""".stripMargin,
-    "q_tfidf_top" ->
+        |FROM ranked WHERE rk <= 5 ORDER BY doc_id""".stripMargin),
+    "q_tfidf_top" -> (qTfidfTop _,
       """WITH toks AS (
         |  SELECT doc_id, UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS token FROM documents),
         |tf AS (
@@ -1768,8 +1738,8 @@ object Corpus extends QueryModule {
         |  FROM scored)
         |SELECT doc_id, token, FLOOR(s * 1000000 + 0.5) / 1000000 AS tfidf
         |FROM ranked WHERE rk <= 3
-        |ORDER BY doc_id, tfidf DESC, token""".stripMargin,
-    "q_preference_pairs" ->
+        |ORDER BY doc_id, tfidf DESC, token""".stripMargin),
+    "q_preference_pairs" -> (qPreferencePairs _,
       s"""WITH $pairMiningCtes
         |SELECT n.lang, n.source, n.n_docs,
         |       ch.doc_id AS chosen_id, ch.s AS chosen_score,
@@ -1779,8 +1749,8 @@ object Corpus extends QueryModule {
         |JOIN ch ON ch.lang = n.lang AND ch.source = n.source AND ch.rk = 1
         |JOIN rj ON rj.lang = n.lang AND rj.source = n.source AND rj.rk = 1
         |WHERE n.n_docs >= 2 AND ch.s > rj.s
-        |ORDER BY n.lang, n.source""".stripMargin,
-    "q_curriculum_bins" ->
+        |ORDER BY n.lang, n.source""".stripMargin),
+    "q_curriculum_bins" -> (qCurriculumBins _,
       """WITH tok AS (
         |  SELECT doc_id, n_chars, w FROM (
         |    SELECT doc_id, n_chars,
@@ -1811,8 +1781,8 @@ object Corpus extends QueryModule {
         |       MIN(d_ppm) AS min_ppm, MAX(d_ppm) AS max_ppm,
         |       CAST(SUM(n_chars) // COUNT(*) AS BIGINT) AS avg_chars
         |FROM per_doc CROSS JOIN th
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_tokenizer_fertility" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_tokenizer_fertility" -> (qTokenizerFertility _,
       """WITH per_doc AS (
         |  SELECT lang,
         |         CAST(LEN(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS BIGINT) AS w,
@@ -1825,8 +1795,8 @@ object Corpus extends QueryModule {
         |       (1000000 * CAST(SUM(st) AS BIGINT)) // CAST(SUM(w) AS BIGINT) AS fertility_ppm,
         |       (1000000 * CAST(SUM(n_chars) AS BIGINT)) // CAST(SUM(st) AS BIGINT)
         |         AS chars_per_subtoken_ppm
-        |FROM per_doc GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_ngram_backoff" ->
+        |FROM per_doc GROUP BY lang ORDER BY lang""".stripMargin),
+    "q_ngram_backoff" -> (qNgramBackoff _,
       """WITH d AS (SELECT STRING_SPLIT(LOWER(TRIM(text)), ' ') AS t FROM documents),
         |uni AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
         |        FROM (SELECT UNNEST(t) AS w FROM d) WHERE w <> '' GROUP BY w),
@@ -1855,6 +1825,6 @@ object Corpus extends QueryModule {
         |JOIN uni u1 ON u1.w = p.w1
         |JOIN uni u2 ON u2.w = p.w2
         |CROSS JOIN tot
-        |ORDER BY p.w1, p.w2""".stripMargin,
+        |ORDER BY p.w1, p.w2""".stripMargin),
   )
 }

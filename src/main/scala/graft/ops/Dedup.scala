@@ -69,7 +69,7 @@ object Dedup extends QueryModule {
     * interpreted mode (measured: minutes vs seconds at sf0.001). */
   private[graft] def shingleTable(docs: DataFrame): DataFrame =
     docs
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
       .select(col("doc_id"), explode(array_distinct(expr(
         """CASE WHEN size(toks) < 3 THEN array()
           |ELSE transform(sequence(0, size(toks) - 3), i -> concat_ws(' ', slice(toks, i + 1, 3)))
@@ -334,7 +334,7 @@ object Dedup extends QueryModule {
     // computed once per (token, bit) row, never inside an array lambda.
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        explode(split(lower(trim(col("text"))), " ")).as("token"))
+        explode(TextAnalysis.tokens(col("text"))).as("token"))
       .withColumn("h", expr(md5Hash60("token")))
       .select(col("doc_id"), col("h"), explode(sequence(lit(0), lit(59))).as("i"))
       .withColumn("vote", expr("CAST((shiftright(h, CAST(i AS INT)) & 1L) * 2 - 1 AS BIGINT)"))
@@ -385,7 +385,7 @@ object Dedup extends QueryModule {
     // filtering cannot resurrect a near-dup.
     val losers = qDedupNear(spark, dir).select(col("d2").as("doc_id")).distinct()
     Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
       .filter(size(col("toks")).between(20, 10000)
         && size(expr("filter(toks, t -> t IN ('the','a','of','and','to','in','is','it'))"))
           / size(col("toks")).cast("double") >= 0.01
@@ -539,7 +539,7 @@ object Dedup extends QueryModule {
     * frame, as (d1, d2, o, n1, n2, jaccard). */
   private def ppjoinPairs(documents: DataFrame): DataFrame = {
     val toks = documents
-      .withColumn("t", split(lower(trim(col("text"))), " "))
+      .withColumn("t", TextAnalysis.tokens(col("text")))
       .select(col("doc_id"), explode(array_distinct(expr(
         """CASE WHEN size(t) < 2 THEN array()
           |ELSE transform(sequence(1, size(t) - 1),
@@ -618,7 +618,7 @@ object Dedup extends QueryModule {
   def qDedupParagraph(spark: SparkSession, dir: String): DataFrame = {
     val segs = TextAnalysis.chunkTokens(
       Tables.documents(spark, dir)
-        .select(col("doc_id"), split(lower(trim(col("text"))), " ").as("toks")),
+        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks")),
       idCol = "doc_id", toksCol = "toks", chunkSize = 16)
       .select(col("doc_id"), col("chunk_idx"), col("chunk"))
     val keepers = segs.groupBy(col("chunk"))
@@ -688,7 +688,7 @@ object Dedup extends QueryModule {
   def qDedupSubstring(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
       .select(col("doc_id"), col("toks"), size(col("toks")).as("n_tokens"))
       .filter(col("n_tokens") >= 5)
       .localCheckpoint(eager = false) // feeds postings AND the final left join
@@ -945,7 +945,7 @@ object Dedup extends QueryModule {
   def qDupCrossSource(spark: SparkSession, dir: String): DataFrame = {
     val segs = TextAnalysis.chunkTokens(
       Tables.documents(spark, dir)
-        .select(col("source"), split(lower(trim(col("text")))," ").as("toks")),
+        .select(col("source"), TextAnalysis.tokens(col("text")).as("toks")),
       idCol = "source", toksCol = "toks", chunkSize = 16)
     val perSrc = segs
       .groupBy(md5(col("chunk")).as("h"), col("source"))
@@ -992,7 +992,7 @@ object Dedup extends QueryModule {
   def qSourceOverlap(spark: SparkSession, dir: String): DataFrame = {
     val K = 32
     val sh = Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
       .select(col("source"), explode(expr(
         """CASE WHEN size(toks) < 3 THEN array()
           |ELSE transform(sequence(0, size(toks) - 3), i -> concat_ws(' ', slice(toks, i + 1, 3)))
@@ -1053,32 +1053,6 @@ object Dedup extends QueryModule {
           .as("err_ppm"))
       .orderBy(col("source_a"), col("source_b"))
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_source_overlap" -> (qSourceOverlap _),
-    "q_er_linkage"      -> (qErLinkage _),
-    "q_dup_cross_source" -> (qDupCrossSource _),
-    "q_dedup_pipeline"  -> (qDedupPipeline _),
-    "q_dedup_pipeline_cert" -> (qDedupPipelineCert _),
-    "q_setsim_cert"     -> (qSetsimCert _),
-    "q_dedup_substring" -> (qDedupSubstring _),
-    "q_dedup_containment" -> (qDedupContainment _),
-    "q_dedup_fuzzy"     -> (qFuzzyPairs _),
-    "q_fuzzy_jw"        -> (qFuzzyJw _),
-    "q_train_test_leakage" -> (qTrainTestLeakage _),
-    "q_golden_record"   -> (qGoldenRecord _),
-    "q_setsim_join"     -> (qSetsimJoin _),
-    "q_dedup_paragraph" -> (qDedupParagraph _),
-    "q_dedup_exact"     -> (qDedupExact _),
-    "q_dedup_near"      -> (qDedupNear _),
-    "q_dedup_minhash"   -> (qDedupMinhash _),
-    "q_dedup_simhash"   -> (qDedupSimhash _),
-    "q_dedup_clusters"  -> (qDedupClusters _),
-    "q_dedup_survivors" -> (qDedupSurvivors _),
-    "q_dedup_incremental" -> (qDedupIncremental _),
-    "q_minhash_incremental" -> (qMinhashIncremental _),
-    "q_corpus_filter"   -> (qCorpusFilter _),
-  )
 
   /** Train/test split-leakage audit — the eval-integrity check a training
     * run does AFTER the split, not against an external benchmark
@@ -1296,9 +1270,9 @@ object Dedup extends QueryModule {
        |ORDER BY e.source_a, e.source_b""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "q_source_overlap" -> sourceOverlapSql,
-    "q_golden_record" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_source_overlap" -> (qSourceOverlap _, sourceOverlapSql),
+    "q_golden_record" -> (qGoldenRecord _,
       """WITH c AS (
         |  SELECT c_custkey, c_name, c_mktsegment,
         |         CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS cents
@@ -1334,8 +1308,8 @@ object Dedup extends QueryModule {
         |       CAST(bal_enc // 1000000000000 AS BIGINT) AS bal_prio,
         |       CAST(SUBSTR(seg_enc, 1, 1) AS BIGINT) AS seg_prio,
         |       n_feeds
-        |FROM g ORDER BY c_custkey""".stripMargin,
-    "q_train_test_leakage" -> {
+        |FROM g ORDER BY c_custkey""".stripMargin),
+    "q_train_test_leakage" -> (qTrainTestLeakage _, {
       // the sig/bands block is the SHARED minhashSigBandCtes — identical
       // hash family, band count, and key packing as q_dedup_minhash
       s"""WITH $shingleCtes,
@@ -1371,8 +1345,8 @@ object Dedup extends QueryModule {
         |          AS BIGINT)) // CAST(COUNT(*) AS BIGINT) AS leak_ppm
         |FROM split LEFT JOIN leaked l ON split.doc_id = l.d1
         |WHERE is_test GROUP BY lang ORDER BY lang""".stripMargin
-    },
-    "q_dup_cross_source" ->
+    }),
+    "q_dup_cross_source" -> (qDupCrossSource _,
       """WITH t AS (
         |  SELECT source, STRING_SPLIT(LOWER(TRIM(text)), ' ') AS toks FROM documents),
         |seg AS (
@@ -1392,8 +1366,8 @@ object Dedup extends QueryModule {
         |SELECT source_a, source_b, CAST(SUM(pairs) AS BIGINT) AS n_dup_pairs,
         |       CAST(COUNT(*) AS BIGINT) AS n_clusters
         |FROM pairs WHERE pairs > 0
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_er_linkage" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q_er_linkage" -> (qErLinkage _,
       """WITH dirty AS (
         |  SELECT p_partkey AS true_key, 1000000 + p_partkey AS dirty_id,
         |         p_brand, p_size,
@@ -1430,8 +1404,8 @@ object Dedup extends QueryModule {
         |       (1000000 * CAST(SUM(CASE WHEN matched_key = true_key THEN 1 ELSE 0 END) AS BIGINT))
         |         // n.n_entities AS recall_ppm
         |FROM pred CROSS JOIN n
-        |GROUP BY n.n_entities""".stripMargin,
-    "q_dedup_pipeline" ->
+        |GROUP BY n.n_entities""".stripMargin),
+    "q_dedup_pipeline" -> (qDedupPipeline _,
       s"""WITH ${funnelCtes("documents")},
          |counts AS (
          |  SELECT (SELECT COUNT(*) FROM documents) AS n0,
@@ -1445,8 +1419,8 @@ object Dedup extends QueryModule {
          |  SELECT '2_near', n1, n1 - n2, n2 FROM counts
          |  UNION ALL
          |  SELECT '3_semantic', n2, n2 - n3, n3 FROM counts)
-         |ORDER BY stage""".stripMargin,
-    "q_dedup_pipeline_cert" ->
+         |ORDER BY stage""".stripMargin),
+    "q_dedup_pipeline_cert" -> (qDedupPipelineCert _,
       s"""WITH docs4 AS (SELECT * FROM documents WHERE doc_id % 4 = 0),
          |${funnelCtes("docs4")},
          |counts AS (
@@ -1465,8 +1439,8 @@ object Dedup extends QueryModule {
          |  SELECT '2_near', n1, n1 - n2, n2, c2 FROM counts
          |  UNION ALL
          |  SELECT '3_semantic', n2, n2 - n3, n3, c3 FROM counts)
-         |ORDER BY stage""".stripMargin,
-    "q_dedup_substring" ->
+         |ORDER BY stage""".stripMargin),
+    "q_dedup_substring" -> (qDedupSubstring _,
       """WITH toks AS (
         |  SELECT doc_id, STRING_SPLIT(LOWER(TRIM(text)), ' ') AS t,
         |         LEN(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS n_tokens
@@ -1502,8 +1476,8 @@ object Dedup extends QueryModule {
         |       ROUND(CAST(COALESCE(c.covered, 0) AS DOUBLE)
         |             / CAST(tk.n_tokens AS DOUBLE), 6) AS dup_coverage
         |FROM toks tk LEFT JOIN cov c ON c.doc_id = tk.doc_id
-        |ORDER BY tk.doc_id""".stripMargin,
-    "q_dedup_containment" ->
+        |ORDER BY tk.doc_id""".stripMargin),
+    "q_dedup_containment" -> (qDedupContainment _,
       s"""WITH $shingleCtes,
          |cand AS (
          |  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
@@ -1521,8 +1495,8 @@ object Dedup extends QueryModule {
          |       ROUND(cont_raw, 6) AS containment,
          |       ROUND(jaccard_raw, 6) AS jaccard
          |FROM pairs WHERE cont_raw >= $ContainmentThreshold
-         |ORDER BY contained_id, container_id""".stripMargin,
-    "q_dedup_paragraph" ->
+         |ORDER BY contained_id, container_id""".stripMargin),
+    "q_dedup_paragraph" -> (qDedupParagraph _,
       """WITH t AS (
         |  SELECT doc_id, STRING_SPLIT(LOWER(TRIM(text)), ' ') AS toks FROM documents),
         |c AS (
@@ -1547,16 +1521,16 @@ object Dedup extends QueryModule {
         |       COALESCE(ka.n_kept, 0) AS n_kept,
         |       COALESCE(ka.text_kept, '') AS text_kept
         |FROM tot LEFT JOIN ka ON ka.doc_id = tot.doc_id
-        |ORDER BY tot.doc_id""".stripMargin,
-    "q_setsim_join" ->
+        |ORDER BY tot.doc_id""".stripMargin),
+    "q_setsim_join" -> (qSetsimJoin _,
       s"""WITH ${ppjoinCtes("documents")}
         |SELECT d1, d2, o, n1, n2,
         |       FLOOR(CAST(o AS DOUBLE) / (n1 + n2 - o) * 1000000 + 0.5)
         |         / 1000000 AS jaccard
         |FROM scored
         |WHERE o * 10 >= (n1 + n2 - o) * 8
-        |ORDER BY d1, d2""".stripMargin,
-    "q_setsim_cert" ->
+        |ORDER BY d1, d2""".stripMargin),
+    "q_setsim_cert" -> (qSetsimCert _,
       s"""WITH d4 AS (SELECT * FROM documents WHERE doc_id % 4 = 0),
         |${ppjoinCtes("d4")}
         |SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
@@ -1567,8 +1541,8 @@ object Dedup extends QueryModule {
         |           * 1000000 + 0.5) AS BIGINT)), 0) AS BIGINT) AS sum_jaccard_ppm,
         |       CAST(COALESCE(SUM((d1 * 31 + d2) % 1000000007), 0) AS BIGINT) AS chk
         |FROM scored
-        |WHERE o * 10 >= (n1 + n2 - o) * 8""".stripMargin,
-    "q_fuzzy_jw" ->
+        |WHERE o * 10 >= (n1 + n2 - o) * 8""".stripMargin),
+    "q_fuzzy_jw" -> (qFuzzyJw _,
       """SELECT a.p_partkey AS a_key, b.p_partkey AS b_key,
         |       a.p_name AS a_name, b.p_name AS b_name,
         |       FLOOR(jaro_winkler_similarity(a.p_name, b.p_name) * 1000000 + 0.5)
@@ -1578,8 +1552,8 @@ object Dedup extends QueryModule {
         | AND a.p_partkey < b.p_partkey
         |WHERE FLOOR(jaro_winkler_similarity(a.p_name, b.p_name) * 1000000 + 0.5)
         |        / 1000000 >= 0.88
-        |ORDER BY a_key, b_key""".stripMargin,
-    "q_dedup_fuzzy" ->
+        |ORDER BY a_key, b_key""".stripMargin),
+    "q_dedup_fuzzy" -> (qFuzzyPairs _,
       """SELECT a.p_partkey AS a_key, b.p_partkey AS b_key,
         |       a.p_name AS a_name, b.p_name AS b_name,
         |       CAST(levenshtein(a.p_name, b.p_name) AS INT) AS dist
@@ -1587,16 +1561,16 @@ object Dedup extends QueryModule {
         |  ON a.p_brand = b.p_brand AND a.p_size = b.p_size
         | AND a.p_partkey < b.p_partkey
         |WHERE levenshtein(a.p_name, b.p_name) <= 3
-        |ORDER BY a_key, b_key""".stripMargin,
-    "q_dedup_exact" ->
+        |ORDER BY a_key, b_key""".stripMargin),
+    "q_dedup_exact" -> (qDedupExact _,
       """SELECT MIN(doc_id) AS survivor_id, COUNT(*) AS n_dups,
         |       SHA256(LOWER(TRIM(text))) AS h
-        |FROM documents GROUP BY h ORDER BY survivor_id""".stripMargin,
-    "q_dedup_near" ->
+        |FROM documents GROUP BY h ORDER BY survivor_id""".stripMargin),
+    "q_dedup_near" -> (qDedupNear _,
       s"""WITH $nearDupCtes
         |SELECT d1, d2, ROUND(jaccard_raw, 6) AS jaccard
-        |FROM near_pairs ORDER BY d1, d2""".stripMargin,
-    "q_dedup_incremental" ->
+        |FROM near_pairs ORDER BY d1, d2""".stripMargin),
+    "q_dedup_incremental" -> (qDedupIncremental _,
       s"""WITH $shingleCtes,
         |cand AS (
         |  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
@@ -1616,8 +1590,8 @@ object Dedup extends QueryModule {
         |           ORDER BY jaccard_raw DESC, d2) AS rn
         |  FROM scored)
         |SELECT d1 AS doc_id, d2 AS dup_of, ROUND(jaccard_raw, 6) AS jaccard
-        |FROM best WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    "q_minhash_incremental" -> {
+        |FROM best WHERE rn = 1 ORDER BY doc_id""".stripMargin),
+    "q_minhash_incremental" -> (qMinhashIncremental _, {
       // signature/banding block shared with q_dedup_minhash; same
       // batch/corpus split + best-match tail as q_dedup_incremental
       s"""WITH $shingleCtes,
@@ -1647,8 +1621,8 @@ object Dedup extends QueryModule {
         |  FROM scored)
         |SELECT d1 AS doc_id, d2 AS dup_of, ROUND(jaccard_raw, 6) AS jaccard
         |FROM best WHERE rn = 1 ORDER BY doc_id""".stripMargin
-    },
-    "q_dedup_minhash" -> {
+    }),
+    "q_dedup_minhash" -> (qDedupMinhash _, {
       // signature/banding block shared with q_train_test_leakage
       s"""WITH $shingleCtes,
         |$minhashSigBandCtes,
@@ -1669,8 +1643,8 @@ object Dedup extends QueryModule {
         |JOIN sizes s2 ON s2.doc_id = d2
         |WHERE CAST(inter AS DOUBLE) / (s1.n_sh + s2.n_sh - inter) >= $JaccardThreshold
         |ORDER BY d1, d2""".stripMargin
-    },
-    "q_dedup_simhash" ->
+    }),
+    "q_dedup_simhash" -> (qDedupSimhash _,
       s"""WITH tok AS (
         |  SELECT doc_id, UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS token
         |  FROM documents),
@@ -1693,8 +1667,8 @@ object Dedup extends QueryModule {
         |FROM bands b1 JOIN bands b2
         |  ON b1.band = b2.band AND b1.key = b2.key AND b1.doc_id < b2.doc_id
         |WHERE bit_count(xor(b1.fingerprint, b2.fingerprint)) <= 3
-        |ORDER BY d1, d2""".stripMargin,
-    "q_dedup_clusters" ->
+        |ORDER BY d1, d2""".stripMargin),
+    "q_dedup_clusters" -> (qDedupClusters _,
       s"""WITH RECURSIVE $nearDupCtes,
         |edges AS (
         |  SELECT d1 AS a, d2 AS b FROM near_pairs
@@ -1705,15 +1679,15 @@ object Dedup extends QueryModule {
         |  SELECT e.a, reach.r FROM edges e JOIN reach ON reach.doc_id = e.b)
         |SELECT doc_id, MIN(r) AS cluster_id,
         |       (doc_id = MIN(r)) AS is_survivor
-        |FROM reach GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q_dedup_survivors" ->
+        |FROM reach GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    "q_dedup_survivors" -> (qDedupSurvivors _,
       s"""WITH $nearDupCtes,
         |losers AS (
         |  SELECT DISTINCT d2 AS doc_id FROM near_pairs)
         |SELECT doc_id, lang, source, n_chars FROM documents
         |WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-        |ORDER BY doc_id""".stripMargin,
-    "q_corpus_filter" ->
+        |ORDER BY doc_id""".stripMargin),
+    "q_corpus_filter" -> (qCorpusFilter _,
       s"""WITH $nearDupCtes,
         |losers AS (
         |  SELECT DISTINCT d2 AS doc_id FROM near_pairs),
@@ -1726,6 +1700,6 @@ object Dedup extends QueryModule {
         |SELECT doc_id, lang, source, n_chars FROM documents
         |WHERE doc_id NOT IN (SELECT doc_id FROM losers)
         |  AND doc_id IN (SELECT doc_id FROM quality)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
   )
 }

@@ -148,7 +148,7 @@ object Evaluation extends QueryModule {
   def qVocabCoverage(spark: SparkSession, dir: String): DataFrame = {
     val tok = Tables.documents(spark, dir)
       .select(col("lang"),
-        explode(split(lower(trim(col("text"))), " ")).as("token"))
+        explode(TextAnalysis.tokens(col("text"))).as("token"))
       .filter(col("token") =!= "")
     val vocab = tok.groupBy(col("token")).agg(count(lit(1)).as("tf"))
       .orderBy(col("tf").desc, col("token")).limit(1000)
@@ -294,7 +294,7 @@ object Evaluation extends QueryModule {
     * discipline applied to rank correlation. */
   def qRankTau(spark: SparkSession, dir: String): DataFrame = {
     val scored = Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
       .select(col("lang"), col("doc_id"), col("n_chars").as("score_a"),
         expr("div(1000000 * cast(size(array_distinct(toks)) as bigint), size(toks))")
           .as("score_b"))
@@ -319,21 +319,8 @@ object Evaluation extends QueryModule {
       .orderBy(col("lang"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_rank_tau"         -> (qRankTau _),
-    "q_offpolicy_ips"    -> (qOffpolicyIps _),
-    "q_kappa"            -> (qKappa _),
-    "q_coldstart"        -> (qColdstart _),
-    "q_uplift"           -> (qUplift _),
-    "q_auc"              -> (qAuc _),
-    "q_calibration_bins" -> (qCalibrationBins _),
-    "q_crossval_folds"   -> (qCrossvalFolds _),
-    "q_dp_noise"         -> (qDpNoise _),
-    "q_vocab_coverage"   -> (qVocabCoverage _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_rank_tau" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_rank_tau" -> (qRankTau _,
       """WITH scored AS (
         |  SELECT lang, doc_id, n_chars AS score_a,
         |         (1000000 * CAST(LEN(LIST_DISTINCT(STRING_SPLIT(LOWER(TRIM(text)), ' ')))
@@ -357,8 +344,8 @@ object Evaluation extends QueryModule {
         |       (1000000 * (CAST(SUM(CASE WHEN s > 0 THEN 1 ELSE 0 END) AS BIGINT)
         |                   - CAST(SUM(CASE WHEN s < 0 THEN 1 ELSE 0 END) AS BIGINT)))
         |         // CAST(COUNT(*) AS BIGINT) AS tau_ppm
-        |FROM pairs GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_offpolicy_ips" ->
+        |FROM pairs GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_offpolicy_ips" -> (qOffpolicyIps _,
       """WITH e AS (
         |  SELECT DAYOFWEEK(ts) + 1 AS dow,
         |         CAST(ROUND(value * 100) AS BIGINT) AS cents,
@@ -377,8 +364,8 @@ object Evaluation extends QueryModule {
         |       CASE WHEN n_matched > 0
         |            THEN CAST(matched_cents AS DOUBLE) / CAST(n_matched * 100 AS DOUBLE)
         |       END AS snips_value
-        |FROM g ORDER BY dow""".stripMargin,
-    "q_kappa" ->
+        |FROM g ORDER BY dow""".stripMargin),
+    "q_kappa" -> (qKappa _,
       """WITH e AS (
         |  SELECT DAYOFWEEK(ts) + 1 AS dow,
         |         CASE WHEN CAST(ROUND(value * 100) AS BIGINT) >= 10000 THEN 1 ELSE 0 END AS a,
@@ -397,8 +384,8 @@ object Evaluation extends QueryModule {
         |SELECT dow, n, n11, n10, n01, n00,
         |       CAST(n * (n11 + n00) - pe_num AS DOUBLE)
         |         / CAST(n * n - pe_num AS DOUBLE) AS kappa
-        |FROM k ORDER BY dow""".stripMargin,
-    "q_coldstart" ->
+        |FROM k ORDER BY dow""".stripMargin),
+    "q_coldstart" -> (qColdstart _,
       """WITH li AS (
         |  SELECT l_partkey,
         |         CAST('0x' || SUBSTR(MD5('split:' || CAST(l_orderkey AS VARCHAR)), 1, 15)
@@ -414,8 +401,8 @@ object Evaluation extends QueryModule {
         |       CAST(SUM(1 - pres.in_train) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS cold_rate
         |FROM pres JOIN part p ON pres.l_partkey = p.p_partkey
         |WHERE pres.in_test = 1
-        |GROUP BY p.p_brand ORDER BY p.p_brand""".stripMargin,
-    "q_uplift" ->
+        |GROUP BY p.p_brand ORDER BY p.p_brand""".stripMargin),
+    "q_uplift" -> (qUplift _,
       """WITH u AS (
         |  SELECT DAYOFWEEK(ts) + 1 AS dow, user_id,
         |         MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
@@ -437,8 +424,8 @@ object Evaluation extends QueryModule {
         |       CAST(conv_ctrl AS DOUBLE) / CAST(n_ctrl AS DOUBLE) AS rate_ctrl,
         |       CAST(conv_treat AS DOUBLE) / CAST(n_treat AS DOUBLE)
         |         - CAST(conv_ctrl AS DOUBLE) / CAST(n_ctrl AS DOUBLE) AS uplift
-        |FROM g ORDER BY dow""".stripMargin,
-    "q_auc" ->
+        |FROM g ORDER BY dow""".stripMargin),
+    "q_auc" -> (qAuc _,
       """WITH e AS (
         |  SELECT DAYOFWEEK(ts) + 1 AS dow,
         |         CAST(ROUND(value * 100) AS BIGINT) AS cents,
@@ -458,8 +445,8 @@ object Evaluation extends QueryModule {
         |  FROM pref GROUP BY dow)
         |SELECT dow, npos, nneg, u2,
         |       CAST(u2 AS DOUBLE) / CAST(npos * nneg * 2 AS DOUBLE) AS auc
-        |FROM agg WHERE npos > 0 AND nneg > 0 ORDER BY dow""".stripMargin,
-    "q_calibration_bins" ->
+        |FROM agg WHERE npos > 0 AND nneg > 0 ORDER BY dow""".stripMargin),
+    "q_calibration_bins" -> (qCalibrationBins _,
       """WITH e AS (
         |  SELECT CAST(ROUND(value * 100) AS BIGINT) AS cents,
         |         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
@@ -467,8 +454,8 @@ object Evaluation extends QueryModule {
         |SELECT cents // 3280 AS bin, COUNT(*) AS n, CAST(SUM(pos) AS BIGINT) AS npos,
         |       CAST(SUM(cents) AS DOUBLE) / CAST(COUNT(*) * 100 AS DOUBLE) AS mean_score,
         |       CAST(SUM(pos) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pos_rate
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_crossval_folds" ->
+        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_crossval_folds" -> (qCrossvalFolds _,
       """WITH u AS (
         |  SELECT user_id, COUNT(*) AS n_ev,
         |         SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS np
@@ -479,8 +466,8 @@ object Evaluation extends QueryModule {
         |  FROM u)
         |SELECT fold, COUNT(*) AS n_users, CAST(SUM(n_ev) AS BIGINT) AS n_events, CAST(SUM(np) AS BIGINT) AS npos,
         |       CAST(SUM(np) AS DOUBLE) / CAST(SUM(n_ev) AS DOUBLE) AS pos_rate
-        |FROM f GROUP BY fold ORDER BY fold""".stripMargin,
-    "q_dp_noise" ->
+        |FROM f GROUP BY fold ORDER BY fold""".stripMargin),
+    "q_dp_noise" -> (qDpNoise _,
       """WITH c AS (
         |  SELECT event_type, COUNT(*) AS true_n FROM events GROUP BY event_type),
         |n AS (
@@ -492,8 +479,8 @@ object Evaluation extends QueryModule {
         |SELECT event_type, true_n + sgn * (52 - LENGTH(BIN(m))) AS noisy_n,
         |       CAST(52 - LENGTH(BIN(m)) AS BIGINT) AS noise_mag,
         |       CAST(sgn AS BIGINT) AS noise_sign
-        |FROM n ORDER BY event_type""".stripMargin,
-    "q_vocab_coverage" ->
+        |FROM n ORDER BY event_type""".stripMargin),
+    "q_vocab_coverage" -> (qVocabCoverage _,
       """WITH tok AS (
         |  SELECT lang, UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS token
         |  FROM documents),
@@ -508,6 +495,6 @@ object Evaluation extends QueryModule {
         |       CAST(SUM(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
         |         / CAST(COUNT(*) AS DOUBLE) AS oov_rate
         |FROM tok2 t LEFT JOIN vocab v ON t.token = v.token
-        |GROUP BY t.lang ORDER BY t.lang""".stripMargin,
+        |GROUP BY t.lang ORDER BY t.lang""".stripMargin),
   )
 }

@@ -652,27 +652,6 @@ object EventAnalytics extends QueryModule {
       .orderBy(col("pattern"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_seq_pattern"    -> (qSeqPattern _),
-    "q_funnel_window" -> (qFunnelWindow _),
-    "q_ohlc" -> (qOhlc _),
-    "q_active_users" -> (qActiveUsers _),
-    "q_cart_sessions" -> (qCartSessions _),
-    "q_win_streak" -> (qWinStreak _),
-    "q_conversion_lag" -> (qConversionLag _),
-    "q_attribution" -> (qAttribution _),
-    "q_scd2"      -> (qScd2 _),
-    "q_scd2_snapshot" -> (qScd2Snapshot _),
-    "q_throttle_dedup" -> (qThrottleDedup _),
-    "q_funnel"    -> (qFunnel _),
-    "q_retention" -> (qRetention _),
-    "q_cohort_ltv" -> (qCohortLtv _),
-    "q_sessionize" -> (qSessionize _),
-    "q_gapfill"   -> (qGapfill _),
-    "q_interpolate" -> (qInterpolate _),
-    "q_event_path" -> (qEventPath _),
-  )
-
   /** Shared change-island CTE chain for the two SCD2 oracles (one copy, so
     * the history and its snapshot can never disagree about versioning).
     * `ts` is floored to microseconds FIRST (make_timestamp(epoch_us(ts)))
@@ -702,8 +681,8 @@ object EventAnalytics extends QueryModule {
       |         MIN(ts) AS valid_from, COUNT(*) AS n_events
       |  FROM ver GROUP BY user_id, version)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q_seq_pattern" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_seq_pattern" -> (qSeqPattern _,
       """WITH p AS (
         |  SELECT user_id,
         |         STRING_AGG(SUBSTR(event_type, 1, 1), '' ORDER BY ts, event_id) AS path
@@ -718,8 +697,8 @@ object EventAnalytics extends QueryModule {
         |       CAST(SUM(CASE WHEN REGEXP_MATCHES(path, re) THEN 1 ELSE 0 END) AS DOUBLE)
         |         / CAST(COUNT(*) AS DOUBLE) AS match_rate
         |FROM p CROSS JOIN pats
-        |GROUP BY pattern ORDER BY pattern""".stripMargin,
-    "q_funnel_window" ->
+        |GROUP BY pattern ORDER BY pattern""".stripMargin),
+    "q_funnel_window" -> (qFunnelWindow _,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, epoch_us(ts) AS tsm
         |  FROM events),
@@ -747,8 +726,8 @@ object EventAnalytics extends QueryModule {
         |  SELECT '1_view' AS stage, s1 AS hit FROM per_user
         |  UNION ALL SELECT '2_click_4h', s2 FROM per_user
         |  UNION ALL SELECT '3_purchase_4h', s3 FROM per_user)
-        |GROUP BY stage ORDER BY stage""".stripMargin,
-    "q_ohlc" ->
+        |GROUP BY stage ORDER BY stage""".stripMargin),
+    "q_ohlc" -> (qOhlc _,
       """WITH e AS (
         |  SELECT event_type, CAST(ts AS DATE) AS d, ts, event_id, value,
         |         CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT) AS micro,
@@ -765,8 +744,8 @@ object EventAnalytics extends QueryModule {
         |       COUNT(*) AS n,
         |       CAST(SUM(micro) AS BIGINT) // COUNT(*) AS mean_micro
         |FROM e GROUP BY event_type, d
-        |ORDER BY event_type, d""".stripMargin,
-    "q_active_users" ->
+        |ORDER BY event_type, d""".stripMargin),
+    "q_active_users" -> (qActiveUsers _,
       """WITH act AS (
         |  SELECT DISTINCT user_id,
         |         DATEDIFF('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
@@ -784,8 +763,8 @@ object EventAnalytics extends QueryModule {
         |SELECT DATE '1970-01-01' + CAST(d.day AS INT) AS d, dau, mau,
         |       (1000000 * dau) // mau AS stickiness_ppm
         |FROM dau d JOIN mau m ON d.day = m.obs_day
-        |ORDER BY d""".stripMargin,
-    "q_cart_sessions" ->
+        |ORDER BY d""".stripMargin),
+    "q_cart_sessions" -> (qCartSessions _,
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS tus FROM events),
         |flagged AS (
@@ -805,8 +784,8 @@ object EventAnalytics extends QueryModule {
         |  FROM sess GROUP BY user_id, sess_id)
         |SELECT has_view, has_click, has_purchase, COUNT(*) AS n_sessions
         |FROM per_sess GROUP BY 1, 2, 3
-        |ORDER BY has_view, has_click, has_purchase""".stripMargin,
-    "q_win_streak" ->
+        |ORDER BY has_view, has_click, has_purchase""".stripMargin),
+    "q_win_streak" -> (qWinStreak _,
       """WITH days AS (
         |  SELECT DISTINCT user_id,
         |         DATEDIFF('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
@@ -821,8 +800,8 @@ object EventAnalytics extends QueryModule {
         |  SELECT user_id, CAST(MAX(len) AS BIGINT) AS best_streak
         |  FROM runs GROUP BY user_id)
         |SELECT best_streak, COUNT(*) AS n_users
-        |FROM best GROUP BY best_streak ORDER BY best_streak""".stripMargin,
-    "q_conversion_lag" ->
+        |FROM best GROUP BY best_streak ORDER BY best_streak""".stripMargin),
+    "q_conversion_lag" -> (qConversionLag _,
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS tus FROM events),
         |f AS (
@@ -842,8 +821,8 @@ object EventAnalytics extends QueryModule {
         |       COUNT(*) AS n_users,
         |       ROUND(CAST(SUM(lag_us) AS DOUBLE) / COUNT(*) / 3600000000, 3)
         |         AS avg_lag_hours
-        |FROM lag_per_user GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_attribution" ->
+        |FROM lag_per_user GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_attribution" -> (qAttribution _,
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS tus,
         |         CAST(ROUND(value * 100) AS BIGINT) AS vc
@@ -865,8 +844,8 @@ object EventAnalytics extends QueryModule {
         |       ROUND(CAST(SUM(CAST(vc AS DECIMAL(38,0))) AS DOUBLE) / 100.0, 2)
         |         AS revenue
         |FROM t WHERE event_type = 'purchase'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_throttle_dedup" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_throttle_dedup" -> (qThrottleDedup _,
       """WITH RECURSIVE ordered AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS tus,
         |         ROW_NUMBER() OVER (PARTITION BY user_id
@@ -883,28 +862,28 @@ object EventAnalytics extends QueryModule {
         |  FROM ordered o
         |  JOIN keep k ON o.user_id = k.user_id AND o.rn = k.rn + 1)
         |SELECT user_id, event_id FROM keep WHERE kept
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_scd2_snapshot" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    "q_scd2_snapshot" -> (qScd2Snapshot _,
       s"""WITH $scd2Ctes,
         |live AS (
         |  SELECT user_id, attr, version, valid_from,
         |         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY version DESC) AS rn
         |  FROM grp WHERE valid_from <= TIMESTAMP '2024-01-15 00:00:00')
         |SELECT user_id, attr AS state_at_probe, version, valid_from
-        |FROM live WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "q_scd2" ->
+        |FROM live WHERE rn = 1 ORDER BY user_id""".stripMargin),
+    "q_scd2" -> (qScd2 _,
       s"""WITH $scd2Ctes
         |SELECT user_id, version, attr, valid_from, n_events,
         |       LEAD(valid_from) OVER (PARTITION BY user_id ORDER BY version) AS valid_to,
         |       LEAD(valid_from) OVER (PARTITION BY user_id ORDER BY version) IS NULL
         |         AS is_current
-        |FROM grp ORDER BY user_id, version""".stripMargin,
+        |FROM grp ORDER BY user_id, version""".stripMargin),
     // comparisons run on epoch_us (explicit microsecond floor): the parquet
     // ts is TIMESTAMP(NANOS) and Spark floors to micros at load, so an
     // oracle comparing raw nanos would call a same-microsecond-later-nanos
     // event "strictly after" where Spark sees a tie — epoch_us pins the
     // truncation regardless of how the DuckDB build reads TIMESTAMP_NS
-    "q_funnel" ->
+    "q_funnel" -> (qFunnel _,
       """WITH ev AS (
         |  SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
         |v AS (
@@ -919,8 +898,8 @@ object EventAnalytics extends QueryModule {
         |SELECT '1_view' AS stage, COUNT(*) AS n_users FROM v
         |UNION ALL SELECT '2_click', COUNT(*) FROM c
         |UNION ALL SELECT '3_purchase', COUNT(*) FROM p
-        |ORDER BY stage""".stripMargin,
-    "q_sessionize" ->
+        |ORDER BY stage""".stripMargin),
+    "q_sessionize" -> (qSessionize _,
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS tus FROM events),
         |flagged AS (
@@ -937,8 +916,8 @@ object EventAnalytics extends QueryModule {
         |SELECT user_id, sess_id, MIN(tus) AS start_us, MAX(tus) AS end_us,
         |       COUNT(*) AS n_events
         |FROM sess GROUP BY user_id, sess_id
-        |ORDER BY user_id, sess_id""".stripMargin,
-    "q_event_path" ->
+        |ORDER BY user_id, sess_id""".stripMargin),
+    "q_event_path" -> (qEventPath _,
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS tus FROM events),
         |flagged AS (
@@ -958,8 +937,8 @@ object EventAnalytics extends QueryModule {
         |  FROM sess GROUP BY user_id, sess_id)
         |SELECT path, COUNT(*) AS n_sessions, COUNT(DISTINCT user_id) AS n_users
         |FROM paths GROUP BY path
-        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin,
-    "q_gapfill" ->
+        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin),
+    "q_gapfill" -> (qGapfill _,
       """WITH daily AS (
         |  SELECT user_id, CAST(ts AS DATE) AS d, COUNT(*) AS n_day,
         |         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS vc_day
@@ -976,8 +955,8 @@ object EventAnalytics extends QueryModule {
         |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / 100.0
         |         AS filled_sum
         |FROM spine s LEFT JOIN daily dy ON s.user_id = dy.user_id AND s.d = dy.d
-        |ORDER BY s.user_id, s.d""".stripMargin,
-    "q_cohort_ltv" ->
+        |ORDER BY s.user_id, s.d""".stripMargin),
+    "q_cohort_ltv" -> (qCohortLtv _,
       """WITH first AS (
         |  SELECT user_id, CAST(DATE_TRUNC('week', MIN(ts)) AS DATE) AS cohort
         |  FROM events GROUP BY user_id),
@@ -1000,8 +979,8 @@ object EventAnalytics extends QueryModule {
         |       CAST(c.cum_c AS DOUBLE) / CAST(s.cohort_size * 100 AS DOUBLE)
         |         AS ltv_per_member
         |FROM cum c JOIN sizes s USING (cohort)
-        |ORDER BY c.cohort, c.week_offset""".stripMargin,
-    "q_interpolate" ->
+        |ORDER BY c.cohort, c.week_offset""".stripMargin),
+    "q_interpolate" -> (qInterpolate _,
       """WITH daily AS (
         |  SELECT user_id, CAST(ts AS DATE) AS d, COUNT(*) AS n_day,
         |         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS vc_day
@@ -1032,8 +1011,8 @@ object EventAnalytics extends QueryModule {
         |                 AS DOUBLE)
         |            / CAST(DATE_DIFF('day', dp, dn) * 100 AS DOUBLE) END AS value,
         |  CAST(vc_day IS NULL AS INT) AS interp
-        |FROM f ORDER BY user_id, d""".stripMargin,
-    "q_retention" ->
+        |FROM f ORDER BY user_id, d""".stripMargin),
+    "q_retention" -> (qRetention _,
       """WITH first AS (
         |  SELECT user_id, CAST(DATE_TRUNC('week', MIN(ts)) AS DATE) AS cohort
         |  FROM events GROUP BY user_id),
@@ -1045,6 +1024,6 @@ object EventAnalytics extends QueryModule {
         |       COUNT(*) AS n_users
         |FROM first JOIN active USING (user_id)
         |GROUP BY cohort, week_offset
-        |ORDER BY cohort, week_offset""".stripMargin,
+        |ORDER BY cohort, week_offset""".stripMargin),
   )
 }

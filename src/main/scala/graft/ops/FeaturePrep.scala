@@ -365,20 +365,8 @@ object FeaturePrep extends QueryModule {
       .orderBy(col("feature"), col("threshold"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tree_split" -> (qTreeSplit _),
-    "q_negative_sampling" -> (qNegativeSampling _),
-    "q_woe_encode"    -> (qWoeEncode _),
-    "q_target_encode" -> (qTargetEncode _),
-    "q_feature_scale" -> (qFeatureScale _),
-    "q_decay_score"   -> (qDecayScore _),
-    "q_label_balance" -> (qLabelBalance _),
-    "q_feature_hash"  -> (qFeatureHash _),
-    "q_quantile_norm" -> (qQuantileNorm _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_tree_split" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_tree_split" -> (qTreeSplit _,
       """WITH li AS (
         |  SELECT CAST(ROUND(l_quantity) AS BIGINT) AS qty,
         |         CAST(ROUND(l_discount * 100) AS BIGINT) AS disc,
@@ -403,8 +391,8 @@ object FeaturePrep extends QueryModule {
         |          + ((CAST(s_t - s_l AS HUGEINT) * (s_t - s_l)) // (n_t - n_l))
         |          - ((CAST(s_t AS HUGEINT) * s_t) // n_t) AS BIGINT) AS gain
         |FROM pre WHERE n_l < n_t
-        |ORDER BY feature, threshold""".stripMargin,
-    "q_negative_sampling" ->
+        |ORDER BY feature, threshold""".stripMargin),
+    "q_negative_sampling" -> (qNegativeSampling _,
       """WITH pos AS (
         |  SELECT DISTINCT o.o_custkey AS u, l.l_partkey AS item
         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
@@ -424,8 +412,8 @@ object FeaturePrep extends QueryModule {
         |         ROW_NUMBER() OVER (PARTITION BY u ORDER BY k) AS rk
         |  FROM neg)
         |SELECT u, rk, k, item AS neg_item
-        |FROM r WHERE rk <= 8 ORDER BY u, rk""".stripMargin,
-    "q_woe_encode" ->
+        |FROM r WHERE rk <= 8 ORDER BY u, rk""".stripMargin),
+    "q_woe_encode" -> (qWoeEncode _,
       """WITH cat AS (
         |  SELECT o_orderpriority,
         |         CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS pos_c,
@@ -445,8 +433,8 @@ object FeaturePrep extends QueryModule {
         |             LN(((CAST(pos_c AS DOUBLE) + 0.5) / CAST(pos_t AS DOUBLE)) /
         |                ((CAST(neg_c AS DOUBLE) + 0.5) / CAST(neg_t AS DOUBLE))), 6)
         |         + 0.0 AS iv_part
-        |FROM tot ORDER BY o_orderpriority""".stripMargin,
-    "q_target_encode" ->
+        |FROM tot ORDER BY o_orderpriority""".stripMargin),
+    "q_target_encode" -> (qTargetEncode _,
       """WITH oc AS (
         |  SELECT o.o_orderkey, c.c_mktsegment,
         |         CAST(ROUND(o.o_totalprice * 100) AS BIGINT) AS cents
@@ -467,8 +455,8 @@ object FeaturePrep extends QueryModule {
         |             / 100.0, 6) AS smooth_enc
         |FROM oc JOIN seg s ON oc.c_mktsegment = s.c_mktsegment
         |CROSS JOIN tot g
-        |ORDER BY oc.o_orderkey""".stripMargin,
-    "q_quantile_norm" ->
+        |ORDER BY oc.o_orderkey""".stripMargin),
+    "q_quantile_norm" -> (qQuantileNorm _,
       """WITH r AS (
         |  SELECT event_id, event_type, value,
         |         ROW_NUMBER() OVER (PARTITION BY event_type
@@ -478,8 +466,8 @@ object FeaturePrep extends QueryModule {
         |SELECT event_id, event_type, value,
         |       FLOOR(CAST(rnk - 1 AS DOUBLE) / CAST(n - 1 AS DOUBLE)
         |         * 1000000 + 0.5) / 1000000 AS q
-        |FROM r WHERE n > 1 ORDER BY event_id""".stripMargin,
-    "q_feature_hash" ->
+        |FROM r WHERE n > 1 ORDER BY event_id""".stripMargin),
+    "q_feature_hash" -> (qFeatureHash _,
       """WITH feats AS (
         |  SELECT UNNEST([
         |    'seg=' || c_mktsegment,
@@ -490,8 +478,8 @@ object FeaturePrep extends QueryModule {
         |       COUNT(*) AS n_rows,
         |       CAST(COUNT(DISTINCT feat) AS BIGINT) AS n_feats,
         |       MIN(feat) AS example
-        |FROM feats GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q_feature_scale" ->
+        |FROM feats GROUP BY bucket ORDER BY bucket""".stripMargin),
+    "q_feature_scale" -> (qFeatureScale _,
       """WITH cents AS (
         |  SELECT event_id, event_type, value,
         |         CAST(ROUND(value * 100) AS BIGINT) AS vc FROM events),
@@ -510,8 +498,8 @@ object FeaturePrep extends QueryModule {
         |       ROUND(CAST(c.vc - s.mn AS DOUBLE) / CAST(s.mx - s.mn AS DOUBLE), 6) AS minmax
         |FROM cents c JOIN stats s ON c.event_type = s.event_type
         |WHERE s.std_c > 0
-        |ORDER BY c.event_id""".stripMargin,
-    "q_decay_score" ->
+        |ORDER BY c.event_id""".stripMargin),
+    "q_decay_score" -> (qDecayScore _,
       """WITH e AS (
         |  SELECT user_id, CAST(ts AS DATE) AS d,
         |         CAST(ROUND(value * 100) AS BIGINT) AS vc FROM events),
@@ -525,8 +513,8 @@ object FeaturePrep extends QueryModule {
         |       ROUND(CAST(SUM(CAST(term AS HUGEINT)) AS DOUBLE) / 104857600.0, 6)
         |         AS decay_score
         |FROM terms GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-    "q_label_balance" ->
+        |ORDER BY user_id""".stripMargin),
+    "q_label_balance" -> (qLabelBalance _,
       """WITH counts AS (SELECT label, COUNT(*) AS n FROM embeddings GROUP BY label),
         |tot AS (SELECT CAST(SUM(n) AS BIGINT) AS n_total,
         |               COUNT(*) AS n_classes FROM counts)
@@ -535,6 +523,6 @@ object FeaturePrep extends QueryModule {
         |       ROUND(CAST(g.n_total AS DOUBLE) / CAST(g.n_classes * c.n AS DOUBLE), 6)
         |         AS class_weight
         |FROM counts c CROSS JOIN tot g
-        |ORDER BY c.label""".stripMargin,
+        |ORDER BY c.label""".stripMargin),
   )
 }

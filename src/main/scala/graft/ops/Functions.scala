@@ -196,7 +196,7 @@ object Functions extends QueryModule {
     * generate runs inside the scan stage, no shuffle until the sort. */
   def qExplodePos(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"), posexplode(split(lower(trim(col("text"))), " ")))
+      .select(col("doc_id"), posexplode(TextAnalysis.tokens(col("text"))))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
         col("col").as("token"))
 
@@ -276,25 +276,8 @@ object Functions extends QueryModule {
         try_variant_get(col("var"), "$.et", "int").as("et_as_int"),
         variant_get(col("var"), "$.missing", "string").as("absent"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_fn_variant" -> (qFnVariant _),
-    "q_fn_string" -> (qFnString _),
-    "q_fn_zorder" -> (qFnZorder _),
-    "q_fn_date"   -> (qFnDate _),
-    "q_fn_math"   -> (qFnMath _),
-    "q_fn_bitwise" -> (qFnBitwise _),
-    "q_fn_hash"   -> (qFnHash _),
-    "q_fn_array"  -> (qFnArray _),
-    "q_fn_json"   -> (qFnJson _),
-    "q_flatten"   -> (qFlatten _),
-    "q_stamp"     -> (qStamp _),
-    "q_fn_struct" -> (qFnStruct _),
-    "q_fn_map"    -> (qFnMap _),
-    "q_explode_pos" -> (qExplodePos _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_fn_variant" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_fn_variant" -> (qFnVariant _,
       """SELECT event_id,
         |       event_type AS et,
         |       CAST(JSON_EXTRACT_STRING(props, '$.k') AS INTEGER) AS k,
@@ -302,8 +285,8 @@ object Functions extends QueryModule {
         |       user_id * 2 AS id2,
         |       CAST(NULL AS INTEGER) AS et_as_int,
         |       CAST(NULL AS VARCHAR) AS absent
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_fn_zorder" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    "q_fn_zorder" -> (qFnZorder _,
       """WITH p AS (
         |  SELECT DISTINCT l_partkey % 65536 AS x, l_suppkey % 65536 AS y
         |  FROM lineitem),
@@ -320,21 +303,21 @@ object Functions extends QueryModule {
         |  ((ax | (ax << 1)) & 1431655765) AS ax, ((ay | (ay << 1)) & 1431655765) AS ay
         |  FROM s2)
         |SELECT x, y, (ax | (ay << 1)) AS z
-        |FROM s3 ORDER BY z, x, y LIMIT 100""".stripMargin,
-    "q_fn_map" ->
+        |FROM s3 ORDER BY z, x, y LIMIT 100""".stripMargin),
+    "q_fn_map" -> (qFnMap _,
       """SELECT event_id,
         |       'k,type' AS keys_sorted,
         |       CAST(json_extract(props, '$.k') AS INT) AS k_val,
         |       2 AS n_entries,
         |       'type' AS keys_no_k,
         |       UPPER(event_type) AS type_upper
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_explode_pos" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    "q_explode_pos" -> (qExplodePos _,
       """WITH t AS (
         |  SELECT doc_id, STRING_SPLIT(LOWER(TRIM(text)), ' ') AS l FROM documents)
         |SELECT doc_id, UNNEST(RANGE(1, LEN(l) + 1)) AS pos, UNNEST(l) AS token
-        |FROM t ORDER BY doc_id, pos""".stripMargin,
-    "q_fn_struct" ->
+        |FROM t ORDER BY doc_id, pos""".stripMargin),
+    "q_fn_struct" -> (qFnStruct _,
       """SELECT c_custkey,
         |       c_mktsegment AS seg_from_struct,
         |       to_json(struct_pack(
@@ -342,8 +325,8 @@ object Functions extends QueryModule {
         |         seg := c_mktsegment,
         |         nation := CAST(c_nationkey AS BIGINT))) AS meta_json
         |FROM customer WHERE c_acctbal > 9500
-        |ORDER BY c_custkey""".stripMargin,
-    "q_fn_bitwise" ->
+        |ORDER BY c_custkey""".stripMargin),
+    "q_fn_bitwise" -> (qFnBitwise _,
       """SELECT event_id,
         |       event_id & 255 AS lo_byte,
         |       event_id | 4096 AS with_flag,
@@ -352,14 +335,14 @@ object Functions extends QueryModule {
         |       event_id >> 2 AS shifted_r,
         |       CAST(BIT_COUNT(event_id) AS INT) AS popcount,
         |       LOWER(TO_HEX(event_id)) AS id_hex
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_fn_hash" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    "q_fn_hash" -> (qFnHash _,
       """SELECT doc_id,
         |       MD5(text) AS text_md5,
         |       SHA256(text) AS text_sha256,
         |       CAST(('0x' || SUBSTR(MD5(text), 1, 15)) AS BIGINT) AS hash60
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_fn_string" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    "q_fn_string" -> (qFnString _,
       """SELECT c_custkey,
         |       UPPER(c_mktsegment) AS seg_upper,
         |       LOWER(c_name) AS name_lower,
@@ -373,8 +356,8 @@ object Functions extends QueryModule {
         |       TRANSLATE(c_mktsegment, 'AEIOU', 'aeiou') AS vowels_low,
         |       REVERSE(c_mktsegment) AS seg_rev,
         |       REPEAT('-', CAST(c_custkey % 5 AS INTEGER)) AS dashes
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_fn_date" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    "q_fn_date" -> (qFnDate _,
       """SELECT o_orderkey,
         |       EXTRACT(YEAR FROM o_orderdate) AS y,
         |       EXTRACT(MONTH FROM o_orderdate) AS m,
@@ -383,8 +366,8 @@ object Functions extends QueryModule {
         |       CAST(DATE_TRUNC('month', o_orderdate) AS DATE) AS month_start,
         |       CAST(o_orderdate AS DATE) + 30 AS due_date,
         |       DATEDIFF('day', CAST(o_orderdate AS DATE), DATE '1998-12-31') AS days_to_eoy
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_fn_math" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    "q_fn_math" -> (qFnMath _,
       """SELECT l_orderkey, l_linenumber,
         |       ROUND(l_extendedprice, 1) AS price_r1,
         |       ABS(l_discount - 0.05) AS disc_dev,
@@ -394,8 +377,8 @@ object Functions extends QueryModule {
         |       ROUND(LN(l_extendedprice + 1), 6) AS price_ln,
         |       GREATEST(l_tax, l_discount) AS max_rate,
         |       LEAST(l_tax, l_discount) AS min_rate
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_fn_array" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    "q_fn_array" -> (qFnArray _,
       """SELECT vec_id,
         |       LEN(embedding) AS dim,
         |       ROUND(CAST(embedding[1] AS DOUBLE), 6) AS first_elem,
@@ -404,23 +387,23 @@ object Functions extends QueryModule {
         |       ARRAY_TO_STRING(LIST_TRANSFORM(embedding[1:4],
         |         x -> CAST(CAST(ROUND(CAST(x AS DOUBLE), 4) + 0.0 AS DECIMAL(10,4)) AS VARCHAR)), '|') AS head4,
         |       CAST(LIST_POSITION(embedding, embedding[3]) AS INTEGER) AS pos_of_third
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q_fn_json" ->
+        |FROM embeddings ORDER BY vec_id""".stripMargin),
+    "q_fn_json" -> (qFnJson _,
       """SELECT event_id,
         |       CAST(JSON_EXTRACT_STRING(props, '$.k') AS INTEGER) AS k_path,
         |       CAST(JSON_EXTRACT_STRING(props, '$.k') AS INTEGER) AS k_typed,
         |       CAST(JSON_EXTRACT_STRING(props, '$.k') AS INTEGER) AS k_map
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_flatten" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    "q_flatten" -> (qFlatten _,
       """SELECT event_id,
         |       event_type AS "municipio.tipo",
         |       user_id AS "municipio.sub.id",
         |       ROUND(value, 4) AS "municipio.sub.detalhe.valor",
         |       CAST(JSON_EXTRACT_STRING(props, '$.k') AS INTEGER) AS "municipio.sub.detalhe.k"
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_stamp" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    "q_stamp" -> (qStamp _,
       """SELECT n_nationkey, n_name,
         |       TIMESTAMP '2026-01-01 00:00:00' AS created_at_datalake
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
   )
 }

@@ -979,24 +979,6 @@ object Graph extends QueryModule {
           .as("alpha_ppm"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_powerlaw" -> (qPowerlaw _),
-    "q_random_walk" -> (qRandomWalk _),
-    "q_graph_modularity" -> (qGraphModularity _),
-    "q_degree_assort" -> (qDegreeAssort _),
-    "q_kcore"         -> (qKcore _),
-    "q_kcore_cert"    -> (qKcoreCert _),
-    "q_triangle_cert" -> (qTriangleCert _),
-    "q_hits"          -> (qHits _),
-    "q_community_lpa" -> (qCommunityLpa _),
-    "q_pagerank"      -> (qPagerank _),
-    "q_triangle"      -> (qTriangle _),
-    "q_khop"          -> (qKhop _),
-    "q_link_predict"  -> (qLinkPredict _),
-    "q_graph_cc"      -> (qGraphCc _),
-    "q_shortest_path" -> (qShortestPath _),
-  )
-
   /** Shared oracle CTE block: the 64-capped order lines + the distinct
     * directed co-purchase edge set — the exact SQL twin of
     * [[cappedLines]]/[[edges]]. One source of truth for the cap and the
@@ -1054,8 +1036,8 @@ object Graph extends QueryModule {
        |ORDER BY walk_id, step""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "q_powerlaw" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_powerlaw" -> (qPowerlaw _,
       s"""WITH ${edgeCtes("e")},
         |deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM e GROUP BY src),
         |hist AS (SELECT d, CAST(COUNT(*) AS BIGINT) AS k FROM deg GROUP BY d),
@@ -1071,9 +1053,9 @@ object Graph extends QueryModule {
         |       CAST(1000000 + (1000000000000::HUGEINT * CAST(SUM(k) AS BIGINT))
         |              // CAST(SUM(cell_ppm) AS BIGINT) AS BIGINT)
         |         AS alpha_ppm
-        |FROM cells""".stripMargin,
-    "q_random_walk" -> randomWalkSql,
-    "q_degree_assort" ->
+        |FROM cells""".stripMargin),
+    "q_random_walk" -> (qRandomWalk _, randomWalkSql),
+    "q_degree_assort" -> (qDegreeAssort _,
       s"""WITH ${edgeCtes("e0")},
         |deg AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg
         |        FROM e0 GROUP BY src),
@@ -1098,8 +1080,8 @@ object Graph extends QueryModule {
         |                   * CAST(CAST(m AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy AS DOUBLE))
         |              * 1000000 + 0.5) / 1000000
         |       END AS assort
-        |FROM s""".stripMargin,
-    "q_kcore" ->
+        |FROM s""".stripMargin),
+    "q_kcore" -> (qKcore _,
       s"""WITH ${edgeCtes("e0")},
         |$kcorePeelCtes
         |SELECT * FROM (
@@ -1108,8 +1090,8 @@ object Graph extends QueryModule {
         |  SELECT CAST(2 AS BIGINT), COUNT(DISTINCT src), COUNT(*) FROM e2
         |  UNION ALL
         |  SELECT CAST(3 AS BIGINT), COUNT(DISTINCT src), COUNT(*) FROM e3)
-        |ORDER BY round""".stripMargin,
-    "q_kcore_cert" ->
+        |ORDER BY round""".stripMargin),
+    "q_kcore_cert" -> (qKcoreCert _,
       s"""WITH ${edgeCtes("eall")},
         |e0 AS MATERIALIZED (SELECT src, dst FROM eall WHERE src % 4 = 0 AND dst % 4 = 0),
         |$kcorePeelCtes
@@ -1126,8 +1108,8 @@ object Graph extends QueryModule {
         |  SELECT CAST(3 AS BIGINT), COUNT(DISTINCT src), COUNT(*),
         |         CAST(COALESCE(SUM(src), 0) AS BIGINT),
         |         CAST(COALESCE(SUM(dst), 0) AS BIGINT) FROM e3)
-        |ORDER BY round""".stripMargin,
-    "q_hits" ->
+        |ORDER BY round""".stripMargin),
+    "q_hits" -> (qHits _,
       s"""WITH ${edgeCtes("e")},
         |h0 AS (
         |  SELECT node, CAST(1024 AS BIGINT) AS h FROM (
@@ -1148,8 +1130,8 @@ object Graph extends QueryModule {
         |       CAST(COALESCE(a2.a, 0) AS BIGINT) AS authority,
         |       CAST(COALESCE(h2.h, 0) AS BIGINT) AS hub
         |FROM a2 FULL OUTER JOIN h2 ON a2.node = h2.node
-        |ORDER BY authority DESC, node LIMIT 100""".stripMargin,
-    "q_community_lpa" ->
+        |ORDER BY authority DESC, node LIMIT 100""".stripMargin),
+    "q_community_lpa" -> (qCommunityLpa _,
       """WITH lines AS (
         |  SELECT l_orderkey, l_partkey FROM (
         |    SELECT l_orderkey, l_partkey,
@@ -1185,8 +1167,8 @@ object Graph extends QueryModule {
         |    FROM sym s JOIN r2 l ON s.v = l.node
         |    GROUP BY s.u, l.lbl) WHERE rk = 1)
         |SELECT lbl AS community, COUNT(*) AS n_nodes, MIN(node) AS min_node
-        |FROM r3 GROUP BY lbl ORDER BY community""".stripMargin,
-    "q_graph_modularity" ->
+        |FROM r3 GROUP BY lbl ORDER BY community""".stripMargin),
+    "q_graph_modularity" -> (qGraphModularity _,
       """WITH lines AS (
         |  SELECT l_orderkey, l_partkey FROM (
         |    SELECT l_orderkey, l_partkey,
@@ -1244,8 +1226,8 @@ object Graph extends QueryModule {
         |SELECT community, n_nodes, intra, d_c, contrib_ppm, m, q_ppm
         |FROM (SELECT * FROM contrib ORDER BY n_nodes DESC, community LIMIT 10)
         |     CROSS JOIN qq
-        |ORDER BY n_nodes DESC, community""".stripMargin,
-    "q_graph_cc" ->
+        |ORDER BY n_nodes DESC, community""".stripMargin),
+    "q_graph_cc" -> (qGraphCc _,
       """WITH RECURSIVE lines AS (
         |  SELECT l_orderkey, l_partkey FROM (
         |    SELECT l_orderkey, l_partkey,
@@ -1264,8 +1246,8 @@ object Graph extends QueryModule {
         |  SELECT e.u, r.lbl FROM e JOIN reach r ON e.v = r.node)
         |SELECT node, MIN(lbl) AS component, node = MIN(lbl) AS is_root
         |FROM reach GROUP BY node
-        |ORDER BY component, node""".stripMargin,
-    "q_shortest_path" ->
+        |ORDER BY component, node""".stripMargin),
+    "q_shortest_path" -> (qShortestPath _,
       """WITH lines AS (
         |  SELECT l_orderkey, l_partkey FROM (
         |    SELECT l_orderkey, l_partkey,
@@ -1304,8 +1286,8 @@ object Graph extends QueryModule {
         |  SELECT p.v, d3.dist + p.w FROM pruned p JOIN d3 ON p.u = d3.node)
         |  GROUP BY node)
         |SELECT node AS partkey, CAST(dist AS BIGINT) AS dist_micro
-        |FROM d4 ORDER BY dist_micro, partkey""".stripMargin,
-    "q_link_predict" ->
+        |FROM d4 ORDER BY dist_micro, partkey""".stripMargin),
+    "q_link_predict" -> (qLinkPredict _,
       s"""WITH ${edgeCtes("e")},
         |deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY src),
         |focus AS (
@@ -1328,8 +1310,8 @@ object Graph extends QueryModule {
         |  FROM nonadj n JOIN deg dc ON dc.src = n.c)
         |SELECT qn, c, cn, ROUND(jac_raw, 6) AS jaccard, rk
         |FROM scored WHERE rk <= 5
-        |ORDER BY qn, rk""".stripMargin,
-    "q_khop" ->
+        |ORDER BY qn, rk""".stripMargin),
+    "q_khop" -> (qKhop _,
       s"""WITH ${edgeCtes("e")},
         |s AS (SELECT DISTINCT src AS node FROM e WHERE src % 1000 = 0),
         |h1 AS (
@@ -1347,8 +1329,8 @@ object Graph extends QueryModule {
         |  UNION ALL SELECT 1, CAST(COUNT(*) AS BIGINT) FROM h1
         |  UNION ALL SELECT 2, CAST(COUNT(*) AS BIGINT) FROM h2
         |  UNION ALL SELECT 3, CAST(COUNT(*) AS BIGINT) FROM h3
-        |) ORDER BY hop""".stripMargin,
-    "q_pagerank" ->
+        |) ORDER BY hop""".stripMargin),
+    "q_pagerank" -> (qPagerank _,
       s"""WITH ${edgeCtes("e")},
         |deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY src),
         |r0 AS (SELECT DISTINCT src AS node, CAST(1000000 AS BIGINT) AS r FROM e),
@@ -1365,8 +1347,8 @@ object Graph extends QueryModule {
         |  FROM e JOIN r2 r ON e.src = r.node JOIN deg d ON e.src = d.src
         |  GROUP BY e.dst)
         |SELECT node AS partkey, CAST(r AS BIGINT) AS rank_micro
-        |FROM r3 ORDER BY r DESC, node LIMIT 100""".stripMargin,
-    "q_triangle" ->
+        |FROM r3 ORDER BY r DESC, node LIMIT 100""".stripMargin),
+    "q_triangle" -> (qTriangle _,
       s"""WITH ${edgeCtes("e")},
         |${triangleCtes(apexMod = 1)},
         |corners AS (
@@ -1377,8 +1359,8 @@ object Graph extends QueryModule {
         |SELECT t.node AS partkey, d.d AS degree, t.triangles,
         |       ROUND(2.0 * t.triangles / (d.d * (d.d - 1)), 6) AS clustering
         |FROM t JOIN deg d ON t.node = d.node
-        |ORDER BY t.triangles DESC, t.node LIMIT 100""".stripMargin,
-    "q_triangle_cert" ->
+        |ORDER BY t.triangles DESC, t.node LIMIT 100""".stripMargin),
+    "q_triangle_cert" -> (qTriangleCert _,
       s"""WITH ${edgeCtes("e")},
         |${triangleCtes(apexMod = 8)}
         |SELECT c % 16 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_triangles,
@@ -1386,7 +1368,7 @@ object Graph extends QueryModule {
         |       CAST(SUM(b) AS BIGINT) AS sum_b,
         |       CAST(SUM(c) AS BIGINT) AS sum_c,
         |       CAST(SUM((a * 1009 + b * 31 + c) % 1000000007) AS BIGINT) AS chk
-        |FROM tri GROUP BY 1 ORDER BY bucket""".stripMargin,
+        |FROM tri GROUP BY 1 ORDER BY bucket""".stripMargin),
   )
 
   /** Shared orientation + wedge + close CTE chain (und/deg/o/tri) over an

@@ -444,28 +444,8 @@ object Joins extends QueryModule {
       .orderBy(col("n_salts"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_skew_salt_plan" -> (qSkewSaltPlan _),
-    "q_join_card_est"  -> (qJoinCardEst _),
-    "q_join_bucketed"  -> (qJoinBucketed _),
-    "q_join_interval"  -> (qJoinInterval _),
-    "q_join_inner"     -> (qJoinInner _),
-    "q_join_left"      -> (qJoinLeft _),
-    "q_join_broadcast" -> (qJoinBroadcast _),
-    "q_join_semi"      -> (qJoinSemi _),
-    "q_join_anti"      -> (qJoinAnti _),
-    "q_join_star"      -> (qJoinStar _),
-    "q_join_range"     -> (qJoinRange _),
-    "q_join_full"      -> (qJoinFull _),
-    "q_join_salted"    -> (qJoinSalted _),
-    "q_join_nullsafe"  -> (qJoinNullsafe _),
-    "q_join_bloom"     -> (qJoinBloom _),
-    "q_asof"           -> (qAsof _),
-    "q_asof_nearest"   -> (qAsofNearest _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_skew_salt_plan" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_skew_salt_plan" -> (qSkewSaltPlan _,
       """WITH cnts AS (
         |  SELECT CASE WHEN l_partkey % 11 < 3 THEN l_partkey % 2
         |              ELSE l_partkey END AS k,
@@ -482,8 +462,8 @@ object Joins extends QueryModule {
         |       MAX((cnt + n_salts - 1) // n_salts) AS max_task_rows_after,
         |       CAST(SUM(n_salts) AS BIGINT) AS dim_replication,
         |       MIN(target) AS target_rows
-        |FROM planned GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_join_card_est" ->
+        |FROM planned GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_join_card_est" -> (qJoinCardEst _,
       """WITH a AS (
         |  SELECT 'customer-orders' AS join_name,
         |         (SELECT COUNT(*) FROM customer) AS n_left,
@@ -519,15 +499,15 @@ object Joins extends QueryModule {
         |                   // GREATEST(ndv_left, ndv_right) - actual_rows))
         |                   // actual_rows AS BIGINT)
         |       END AS err_ppm
-        |FROM u ORDER BY join_name""".stripMargin,
-    "q_join_bucketed" ->
+        |FROM u ORDER BY join_name""".stripMargin),
+    "q_join_bucketed" -> (qJoinBucketed _,
       """SELECT c.c_mktsegment, COUNT(*) AS n_orders,
         |       ROUND(CAST(SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS DOUBLE)
         |             / 100.0, 2) AS revenue
         |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         |GROUP BY c.c_mktsegment
-        |ORDER BY c.c_mktsegment""".stripMargin,
-    "q_join_interval" ->
+        |ORDER BY c.c_mktsegment""".stripMargin),
+    "q_join_interval" -> (qJoinInterval _,
       """WITH l AS (
         |  SELECT l_suppkey, l_orderkey, l_linenumber,
         |         CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS sd
@@ -539,33 +519,33 @@ object Joins extends QueryModule {
         |      OR (a.l_orderkey = b.l_orderkey AND a.l_linenumber < b.l_linenumber))
         | AND a.sd <= b.sd + 2 AND b.sd <= a.sd + 2
         |GROUP BY a.l_suppkey
-        |ORDER BY n_conflicts DESC, a.l_suppkey LIMIT 100""".stripMargin,
-    "q_join_inner" ->
+        |ORDER BY n_conflicts DESC, a.l_suppkey LIMIT 100""".stripMargin),
+    "q_join_inner" -> (qJoinInner _,
       """SELECT o_orderstatus, COUNT(*) AS n_lines,
         |       ROUND(SUM(l_extendedprice), 2) AS sum_price
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q_join_left" ->
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    "q_join_left" -> (qJoinLeft _,
       """SELECT c_custkey, c_name, COUNT(o_orderkey) AS n_orders,
         |       ROUND(COALESCE(SUM(o_totalprice), 0.0), 2) AS total_spent
         |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey, c_name ORDER BY c_custkey""".stripMargin,
-    "q_join_broadcast" ->
+        |GROUP BY c_custkey, c_name ORDER BY c_custkey""".stripMargin),
+    "q_join_broadcast" -> (qJoinBroadcast _,
       """SELECT r_name, COUNT(*) AS n_customers,
         |       ROUND(AVG(c_acctbal), 2) AS avg_acctbal
         |FROM customer
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-    "q_join_semi" ->
+        |GROUP BY r_name ORDER BY r_name""".stripMargin),
+    "q_join_semi" -> (qJoinSemi _,
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_join_anti" ->
+        |ORDER BY c_custkey""".stripMargin),
+    "q_join_anti" -> (qJoinAnti _,
       """SELECT c_custkey, c_name, c_acctbal FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_join_star" ->
+        |ORDER BY c_custkey""".stripMargin),
+    "q_join_star" -> (qJoinStar _,
       """SELECT r_name, EXTRACT(YEAR FROM o_orderdate) AS order_year,
         |       ROUND(SUM(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
         |FROM lineitem
@@ -573,16 +553,16 @@ object Joins extends QueryModule {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, order_year ORDER BY r_name, order_year""".stripMargin,
-    "q_join_range" ->
+        |GROUP BY r_name, order_year ORDER BY r_name, order_year""".stripMargin),
+    "q_join_range" -> (qJoinRange _,
       """SELECT band, COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS total
         |FROM orders
         |JOIN (VALUES ('tiny', 0.0, 1000.0), ('small', 1000.0, 5000.0),
         |             ('mid', 5000.0, 20000.0), ('large', 20000.0, 100000.0),
         |             ('huge', 100000.0, 1e12)) AS bands(band, lo, hi)
         |  ON o_totalprice >= lo AND o_totalprice < hi
-        |GROUP BY band ORDER BY band""".stripMargin,
-    "q_join_full" ->
+        |GROUP BY band ORDER BY band""".stripMargin),
+    "q_join_full" -> (qJoinFull _,
       """WITH cagg AS (
         |  SELECT c_nationkey, COUNT(*) AS n_rich_cust FROM customer
         |  WHERE c_acctbal > 9500 GROUP BY c_nationkey),
@@ -592,21 +572,21 @@ object Joins extends QueryModule {
         |SELECT COALESCE(c_nationkey, s_nationkey) AS nationkey,
         |       n_rich_cust, n_rich_supp
         |FROM cagg FULL OUTER JOIN sagg ON c_nationkey = s_nationkey
-        |ORDER BY nationkey""".stripMargin,
-    "q_join_salted" ->
+        |ORDER BY nationkey""".stripMargin),
+    "q_join_salted" -> (qJoinSalted _,
       """SELECT o_orderstatus, COUNT(*) AS n_lines,
         |       ROUND(SUM(l_quantity), 2) AS sum_qty
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q_join_bloom" ->
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    "q_join_bloom" -> (qJoinBloom _,
       """SELECT l_returnflag, COUNT(*) AS n_lines,
         |       ROUND(SUM(l_extendedprice), 2) AS sum_price
         |FROM lineitem
         |WHERE l_orderkey IN (
         |  SELECT o_orderkey FROM orders
         |  WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 150000)
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_join_nullsafe" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q_join_nullsafe" -> (qJoinNullsafe _,
       """WITH o AS (
         |  SELECT CASE WHEN o_orderpriority = '3-MEDIUM' THEN NULL
         |              ELSE o_orderpriority END AS pri,
@@ -617,8 +597,8 @@ object Joins extends QueryModule {
         |  FROM (SELECT DISTINCT pri FROM o) t)
         |SELECT pri_label, COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS total
         |FROM o JOIN d ON o.pri IS NOT DISTINCT FROM d.d_pri
-        |GROUP BY pri_label ORDER BY pri_label""".stripMargin,
-    "q_asof_nearest" ->
+        |GROUP BY pri_label ORDER BY pri_label""".stripMargin),
+    "q_asof_nearest" -> (qAsofNearest _,
       """SELECT l_orderkey, l_linenumber,
         |       CAST(l_shipdate AS DATE) AS nearest_ship, days_off
         |FROM (SELECT l_orderkey, l_linenumber, l_shipdate,
@@ -628,14 +608,14 @@ object Joins extends QueryModule {
         |          ORDER BY ABS(DATE_DIFF('day', o_orderdate + INTERVAL 30 DAY, l_shipdate)),
         |                   l_shipdate, l_linenumber) AS rn
         |      FROM lineitem JOIN orders ON l_orderkey = o_orderkey) t
-        |WHERE rn = 1 ORDER BY l_orderkey""".stripMargin,
-    "q_asof" ->
+        |WHERE rn = 1 ORDER BY l_orderkey""".stripMargin),
+    "q_asof" -> (qAsof _,
       """SELECT l_orderkey, l_linenumber, CAST(l_shipdate AS DATE) AS asof_date,
         |       l_quantity
         |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY l_orderkey
         |        ORDER BY l_shipdate DESC, l_linenumber, l_partkey) AS rn
         |      FROM lineitem
         |      WHERE l_shipdate <= TIMESTAMP '1997-06-30 00:00:00') t
-        |WHERE rn = 1 ORDER BY l_orderkey""".stripMargin,
+        |WHERE rn = 1 ORDER BY l_orderkey""".stripMargin),
   )
 }

@@ -343,16 +343,8 @@ object Multimodal extends QueryModule {
       .orderBy(col("doc_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_multimodal_resize" -> (qMultimodalResize _),
-    "q_multimodal_meta" -> (qMultimodalMeta _),
-    "q_multimodal_frames" -> (qMultimodalFrames _),
-    "q_multimodal_phash" -> (qMultimodalPhash _),
-    "q_shard_manifest" -> (qShardManifest _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_multimodal_resize" -> {
+  val registry: Map[String, (Query, String)] = Map(
+    "q_multimodal_resize" -> (qMultimodalResize _, {
       val binSums = (0 until 16)
         .map(b => s"CAST(SUM(CASE WHEN v = $b THEN 1 ELSE 0 END) AS BIGINT)")
         .mkString("[", ", ", "]")
@@ -376,8 +368,8 @@ object Multimodal extends QueryModule {
         |SELECT doc_id, total,
         |       $pooled
         |FROM hist ORDER BY doc_id""".stripMargin
-    },
-    "q_shard_manifest" ->
+    }),
+    "q_shard_manifest" -> (qShardManifest _,
       s"""WITH d AS (
         |  SELECT doc_id, CAST(OCTET_LENGTH(ENCODE(text)) AS BIGINT) AS nb
         |  FROM documents),
@@ -390,13 +382,13 @@ object Multimodal extends QueryModule {
         |SELECT "offset" // $ShardBytes AS shard_id, COUNT(*) AS n_docs,
         |       CAST(SUM(nb) AS BIGINT) AS shard_bytes,
         |       MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-        |FROM o GROUP BY 1 ORDER BY shard_id""".stripMargin,
-    "q_multimodal_meta" ->
+        |FROM o GROUP BY 1 ORDER BY shard_id""".stripMargin),
+    "q_multimodal_meta" -> (qMultimodalMeta _,
       s"""SELECT doc_id, 'application/octet-stream' AS mime,
         |       OCTET_LENGTH(ENCODE(text)) AS n_bytes,
         |       CAST(CEIL(OCTET_LENGTH(ENCODE(text)) / $FrameBytes.0) AS INTEGER) AS n_frames
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_multimodal_frames" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    "q_multimodal_frames" -> (qMultimodalFrames _,
       s"""WITH m AS (
         |  SELECT doc_id, hex(ENCODE(text)) AS h,
         |         CAST(CEIL(OCTET_LENGTH(ENCODE(text)) / $FrameBytes.0) AS INTEGER)
@@ -414,8 +406,8 @@ object Multimodal extends QueryModule {
         |              ((n_frames - 1) // 4) * 4 * ${2 * FrameBytes} + 1,
         |              ${2 * FrameBytes})) END
         |         AS last_frame_md5
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "q_multimodal_phash" -> {
+        |FROM m ORDER BY doc_id""".stripMargin),
+    "q_multimodal_phash" -> (qMultimodalPhash _, {
       val binSums = (0 until 64)
         .map(b => s"SUM(CASE WHEN v = $b THEN 1 ELSE 0 END)")
         .mkString("[", ", ", "]")
@@ -465,6 +457,6 @@ object Multimodal extends QueryModule {
         |       CAST(bit_count(xor(h1, h2)) AS INTEGER) AS hamming
         |FROM cand WHERE bit_count(xor(h1, h2)) <= 3
         |ORDER BY d1, d2""".stripMargin
-    },
+    }),
   )
 }

@@ -914,7 +914,7 @@ object Profiling extends QueryModule {
       (conv(substring(md5(concat(lit(s"$j:"), tok)), 1, 15), 16, 10)
         .cast("long") % W).as(s"b$j")
     val toks = Tables.documents(spark, dir)
-      .select(explode(split(lower(trim(col("text"))), " ")).as("tok"))
+      .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
       .localCheckpoint(eager = false) // feeds the sketch AND the exact top-10
     val cells = toks
@@ -1041,7 +1041,7 @@ object Profiling extends QueryModule {
     * at any scale. */
   def qSliceFinder(spark: SparkSession, dir: String): DataFrame = {
     val perDoc = Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
       .select(col("lang"), col("source"),
         expr("div(1000000 * cast(size(array_distinct(toks)) as bigint), size(toks))")
           .as("ratio_ppm"))
@@ -1343,43 +1343,6 @@ object Profiling extends QueryModule {
       .orderBy(col("lang"), col("source"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_psi"            -> (qPsi _),
-    "q_ks_drift"       -> (qKsDrift _),
-    "q_mann_whitney"   -> (qMannWhitney _),
-    "q_gini"           -> (qGini _),
-    "q_mutual_info"    -> (qMutualInfo _),
-    "q_bloom_fpr"      -> (qBloomFpr _),
-    "q_theil_sen"      -> (qTheilSen _),
-    "q_f2_sketch"      -> (qF2Sketch _),
-    "q_hll_sketch"     -> (qHllSketch _),
-    "q_count_min"      -> (qCountMin _),
-    "q_slice_finder"   -> (qSliceFinder _),
-    "q_forecast_holt"  -> (qForecastHolt _),
-    "q_dq_rules"       -> (qDqRules _),
-    "q_bootstrap_ci"   -> (qBootstrapCi _),
-    "q_acf"            -> (qAcf _),
-    "q_kanon"          -> (qKanon _),
-    "q_ldiversity"     -> (qLdiversity _),
-    "q_tclose"         -> (qTclose _),
-    "q_seasonal_decompose" -> (qSeasonalDecompose _),
-    "q_freshness"      -> (qFreshness _),
-    "q_anomaly_seasonal" -> (qAnomalySeasonal _),
-    "q_changepoint_cusum" -> (qChangepointCusum _),
-    "q_skew_audit"     -> (qSkewAudit _),
-    "q_anomaly_mad"    -> (qAnomalyMad _),
-    "q_benford"        -> (qBenford _),
-    "q_outlier_iqr"    -> (qOutlierIqr _),
-    "q_corr_matrix"    -> (qCorrMatrix _),
-    "q_chisq"          -> (qChisq _),
-    "q_fk_audit"       -> (qFkAudit _),
-    "q_hist"           -> (qHist _),
-    "q_hist_equidepth" -> (qHistEquidepth _),
-    "q_profile"        -> (qProfile _),
-    "q_anomaly_zscore" -> (qAnomalyZscore _),
-    "q_abtest"         -> (qAbtest _),
-  )
-
   /** Generated from the SAME bootConsts/bootW family as the Spark columns
     * (DuckDB CASE over the affine transform of the shared md5 residue). */
   private val bootstrapCiOracle: String = {
@@ -1416,8 +1379,8 @@ object Profiling extends QueryModule {
       |FROM r""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "q_psi" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_psi" -> (qPsi _,
       """WITH ev AS (
         |  SELECT LEAST(9, CAST(FLOOR(value / 50.0) AS BIGINT)) AS bucket, ts
         |  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL),
@@ -1444,8 +1407,8 @@ object Profiling extends QueryModule {
         |  FROM filled CROSS JOIN tot)
         |SELECT bucket, n_ref, n_cur, psi_ppm,
         |       CAST(SUM(psi_ppm) OVER () AS BIGINT) AS psi_total_ppm
-        |FROM scored ORDER BY bucket""".stripMargin,
-    "q_ks_drift" ->
+        |FROM scored ORDER BY bucket""".stripMargin),
+    "q_ks_drift" -> (qKsDrift _,
       """WITH ev AS (
         |  SELECT event_type AS pop, CAST(ROUND(value * 100) AS BIGINT) AS pc
         |  FROM events
@@ -1470,8 +1433,8 @@ object Profiling extends QueryModule {
         |  FROM cum CROSS JOIN tot)
         |SELECT 'click' AS pop_a, 'purchase' AS pop_b, n1, n2, pc AS arg_pc,
         |       CAST(FLOOR(diff * 1000000 + 0.5) AS BIGINT) AS ks_ppm
-        |FROM scored ORDER BY diff DESC, pc LIMIT 1""".stripMargin,
-    "q_mann_whitney" ->
+        |FROM scored ORDER BY diff DESC, pc LIMIT 1""".stripMargin),
+    "q_mann_whitney" -> (qMannWhitney _,
       """WITH ev AS (
         |  SELECT event_type AS pop, CAST(ROUND(value * 100) AS BIGINT) AS pc
         |  FROM events
@@ -1494,8 +1457,8 @@ object Profiling extends QueryModule {
         |  CAST(SUM(k1 * (2 * c_before + t + 1)) AS BIGINT)
         |    - (n1 * (n1 + 1) + n1 * n2) AS delta_2x,
         |  CAST(SUM(t * t * t - t) AS BIGINT) AS tie_cubes
-        |FROM w CROSS JOIN tot GROUP BY n1, n2""".stripMargin,
-    "q_gini" ->
+        |FROM w CROSS JOIN tot GROUP BY n1, n2""".stripMargin),
+    "q_gini" -> (qGini _,
       """WITH pc AS (
         |  SELECT o_custkey,
         |         CAST(SUM(CAST(ROUND(o_totalprice) AS BIGINT)) AS BIGINT) AS v
@@ -1516,8 +1479,8 @@ object Profiling extends QueryModule {
         |       CAST(CAST(n AS HUGEINT) * sum_v AS BIGINT) AS gini_den,
         |       CAST((1000000::HUGEINT * (two_rank_sum - CAST(n + 1 AS HUGEINT) * sum_v))
         |            // (CAST(n AS HUGEINT) * sum_v) AS BIGINT) AS gini_ppm
-        |FROM agg""".stripMargin,
-    "q_mutual_info" ->
+        |FROM agg""".stripMargin),
+    "q_mutual_info" -> (qMutualInfo _,
       """WITH cells AS (
         |  SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n
         |  FROM documents GROUP BY lang, source),
@@ -1536,8 +1499,8 @@ object Profiling extends QueryModule {
         |  FROM m)
         |SELECT lang, source, n, mi_ppm,
         |       CAST(SUM(mi_ppm) OVER () AS BIGINT) AS mi_total_ppm
-        |FROM scored ORDER BY lang, source""".stripMargin,
-    "q_f2_sketch" ->
+        |FROM scored ORDER BY lang, source""".stripMargin),
+    "q_f2_sketch" -> (qF2Sketch _,
       """WITH keys AS (SELECT CAST(l_partkey AS VARCHAR) AS k FROM lineitem),
         |cells AS (
         |  SELECT j AS row_id,
@@ -1556,8 +1519,8 @@ object Profiling extends QueryModule {
         |  FROM (SELECT k, CAST(COUNT(*) AS BIGINT) AS c FROM keys GROUP BY k))
         |SELECT n_keys, f2_exact, f2_est,
         |       (1000000 * (f2_est - f2_exact)) // f2_exact AS over_ppm
-        |FROM exact CROSS JOIN est""".stripMargin,
-    "q_bloom_fpr" ->
+        |FROM exact CROSS JOIN est""".stripMargin),
+    "q_bloom_fpr" -> (qBloomFpr _,
       """WITH members AS (
         |  SELECT DISTINCT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'),
         |bits AS (
@@ -1587,8 +1550,8 @@ object Profiling extends QueryModule {
         |          // 1000000)
         |       * ((((1000000 * n_bits_set) // 16384) * ((1000000 * n_bits_set) // 16384))
         |          // 1000000) // 1000000 AS est_fpr_ppm
-        |FROM card CROSS JOIN fp""".stripMargin,
-    "q_theil_sen" ->
+        |FROM card CROSS JOIN fp""".stripMargin),
+    "q_theil_sen" -> (qTheilSen _,
       """WITH daily AS (
         |  SELECT event_type,
         |         CAST(DATEDIFF('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS d,
@@ -1618,8 +1581,8 @@ object Profiling extends QueryModule {
         |       min_slope_ppm, max_slope_ppm
         |FROM med m JOIN nd ON nd.event_type = m.event_type
         |JOIN rng ON rng.event_type = m.event_type
-        |ORDER BY m.event_type""".stripMargin,
-    "q_forecast_holt" ->
+        |ORDER BY m.event_type""".stripMargin),
+    "q_forecast_holt" -> (qForecastHolt _,
       """WITH RECURSIVE daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS d,
         |         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS y
@@ -1639,8 +1602,8 @@ object Profiling extends QueryModule {
         |    ON s.event_type = h.event_type AND s.rn = h.rn + 1)
         |SELECT event_type, d, y AS y_cents, level, trend,
         |       level + 7 * trend AS forecast7
-        |FROM holt ORDER BY event_type, d""".stripMargin,
-    "q_dq_rules" ->
+        |FROM holt ORDER BY event_type, d""".stripMargin),
+    "q_dq_rules" -> (qDqRules _,
       """WITH o AS (
         |  SELECT COUNT(*) AS n,
         |         CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v_null,
@@ -1674,9 +1637,9 @@ object Profiling extends QueryModule {
         |SELECT rule, n_rows, n_violations,
         |       CASE WHEN n_rows = 0 THEN 0
         |            ELSE (1000000 * n_violations) // n_rows END AS violation_ppm
-        |FROM rules ORDER BY rule""".stripMargin,
-    "q_bootstrap_ci" -> bootstrapCiOracle,
-    "q_acf" ->
+        |FROM rules ORDER BY rule""".stripMargin),
+    "q_bootstrap_ci" -> (qBootstrapCi _, bootstrapCiOracle),
+    "q_acf" -> (qAcf _,
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS d,
         |         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS x
@@ -1700,8 +1663,8 @@ object Profiling extends QueryModule {
         |JOIN stats st ON st.event_type = a.event_type
         |WHERE st.den > 0
         |GROUP BY a.event_type, k.k, st.den
-        |ORDER BY a.event_type, k.k""".stripMargin,
-    "q_seasonal_decompose" ->
+        |ORDER BY a.event_type, k.k""".stripMargin),
+    "q_seasonal_decompose" -> (qSeasonalDecompose _,
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS d,
         |         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS y
@@ -1728,8 +1691,8 @@ object Profiling extends QueryModule {
         |             - CAST(e.se AS DOUBLE) / CAST(e.ne * 7 AS DOUBLE) / 100.0, 6) + 0.0
         |         AS residual
         |FROM full7 f JOIN eff e ON f.event_type = e.event_type AND f.dow = e.dow
-        |ORDER BY f.event_type, f.d""".stripMargin,
-    "q_freshness" ->
+        |ORDER BY f.event_type, f.d""".stripMargin),
+    "q_freshness" -> (qFreshness _,
       """WITH horizon AS (SELECT MAX(ts) AS h FROM events),
         |g AS (
         |  SELECT event_type, COUNT(*) AS n_events,
@@ -1743,14 +1706,14 @@ object Profiling extends QueryModule {
         |             / CAST(DATE_DIFF('day', CAST(g.first_ts AS DATE),
         |                    CAST(g.last_ts AS DATE)) + 1 AS DOUBLE), 6) AS events_per_day
         |FROM g CROSS JOIN horizon h
-        |ORDER BY g.event_type""".stripMargin,
-    "q_ldiversity" ->
+        |ORDER BY g.event_type""".stripMargin),
+    "q_ldiversity" -> (qLdiversity _,
       """SELECT c_nationkey, COUNT(*) AS n_rows,
         |       COUNT(DISTINCT c_mktsegment) AS l_div,
         |       COUNT(DISTINCT c_mktsegment) >= 5 AS diverse
         |FROM customer GROUP BY c_nationkey
-        |ORDER BY c_nationkey""".stripMargin,
-    "q_tclose" ->
+        |ORDER BY c_nationkey""".stripMargin),
+    "q_tclose" -> (qTclose _,
       """WITH cust AS (SELECT c_nationkey, c_mktsegment FROM customer),
         |gcnt AS (SELECT c_nationkey, c_mktsegment, COUNT(*) AS c_gv
         |         FROM cust GROUP BY 1, 2),
@@ -1772,8 +1735,8 @@ object Profiling extends QueryModule {
         |SELECT c_nationkey, n_rows, l1_ppm,
         |       CAST(l1_ppm // 2 AS BIGINT) AS tv_ppm,
         |       (l1_ppm // 2) > 200000 AS breach
-        |FROM agg ORDER BY c_nationkey""".stripMargin,
-    "q_anomaly_seasonal" ->
+        |FROM agg ORDER BY c_nationkey""".stripMargin),
+    "q_anomaly_seasonal" -> (qAnomalySeasonal _,
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS d, DAYOFWEEK(CAST(ts AS DATE)) AS dow,
         |         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS y
@@ -1789,8 +1752,8 @@ object Profiling extends QueryModule {
         |FROM daily d JOIN base b ON d.event_type = b.event_type AND d.dow = b.dow
         |WHERE CAST(d.y AS HUGEINT) * b.n * 5 < b.s * 4
         |   OR CAST(d.y AS HUGEINT) * b.n * 4 > b.s * 5
-        |ORDER BY d.event_type, d.d""".stripMargin,
-    "q_changepoint_cusum" ->
+        |ORDER BY d.event_type, d.d""".stripMargin),
+    "q_changepoint_cusum" -> (qChangepointCusum _,
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS d,
         |         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS y
@@ -1815,8 +1778,8 @@ object Profiling extends QueryModule {
         |SELECT event_type, d AS change_day,
         |       ROUND(CAST(c AS DOUBLE) / CAST(nn AS DOUBLE) / 100.0, 6) AS cusum
         |FROM r WHERE rn = 1
-        |ORDER BY event_type""".stripMargin,
-    "q_kanon" ->
+        |ORDER BY event_type""".stripMargin),
+    "q_kanon" -> (qKanon _,
       """WITH cls AS (
         |  SELECT c_nationkey, c_mktsegment, COUNT(*) AS cnt
         |  FROM customer GROUP BY c_nationkey, c_mktsegment),
@@ -1828,8 +1791,8 @@ object Profiling extends QueryModule {
         |SELECT c_nationkey, c_mktsegment, cnt, k_anon, n_classes, risky_ppm
         |FROM cls CROSS JOIN summary
         |WHERE cnt < 10
-        |ORDER BY cnt, c_nationkey, c_mktsegment""".stripMargin,
-    "q_skew_audit" ->
+        |ORDER BY cnt, c_nationkey, c_mktsegment""".stripMargin),
+    "q_skew_audit" -> (qSkewAudit _,
       """WITH cnts AS (
         |  SELECT l_partkey, COUNT(*) AS cnt FROM lineitem GROUP BY l_partkey),
         |summary AS (
@@ -1843,8 +1806,8 @@ object Profiling extends QueryModule {
         |       (1000000 * cnt) // total AS share_ppm,
         |       (1000 * max_cnt * n_keys) // total AS skew_x1000
         |FROM top CROSS JOIN summary
-        |ORDER BY cnt DESC, l_partkey""".stripMargin,
-    "q_anomaly_mad" ->
+        |ORDER BY cnt DESC, l_partkey""".stripMargin),
+    "q_anomaly_mad" -> (qAnomalyMad _,
       """WITH cents AS (
         |  SELECT event_type, event_id, CAST(ROUND(value * 100) AS BIGINT) AS c
         |  FROM events),
@@ -1873,8 +1836,8 @@ object Profiling extends QueryModule {
         |       CAST(SUM(CASE WHEN 6745 * d.dev > 35000 * m.med_dev THEN 1 ELSE 0 END)
         |            AS BIGINT) AS n_outliers
         |FROM devs d JOIN mad m USING (event_type)
-        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin,
-    "q_benford" -> {
+        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin),
+    "q_benford" -> (qBenford _, {
       val expSql = (1 to 9).map(d => s"WHEN digit = $d THEN ${BenfordPpm(d)}")
         .mkString("CASE ", " ", " END")
       s"""WITH digits AS (
@@ -1888,8 +1851,8 @@ object Profiling extends QueryModule {
          |       ABS((1000000 * n) // CAST(SUM(n) OVER () AS BIGINT) - ($expSql))
          |         AS dev_ppm
          |FROM cnt ORDER BY digit""".stripMargin
-    },
-    "q_outlier_iqr" ->
+    }),
+    "q_outlier_iqr" -> (qOutlierIqr _,
       """WITH cents AS (
         |  SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS c FROM events),
         |ranked AS (
@@ -1911,8 +1874,8 @@ object Profiling extends QueryModule {
         |                + SUM(CASE WHEN 2 * c > 5 * q3 - 3 * q1 THEN 1 ELSE 0 END) AS DOUBLE)
         |             / COUNT(*) * 100, 4) AS pct_out
         |FROM cents c JOIN bounds b USING (event_type)
-        |GROUP BY c.event_type ORDER BY c.event_type""".stripMargin,
-    "q_corr_matrix" ->
+        |GROUP BY c.event_type ORDER BY c.event_type""".stripMargin),
+    "q_corr_matrix" -> (qCorrMatrix _,
       """WITH cents AS (
         |  SELECT CAST(ROUND(l_quantity * 100) AS BIGINT) AS a,
         |         CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS b,
@@ -1944,8 +1907,8 @@ object Profiling extends QueryModule {
         |    / (SQRT(CAST(n AS DOUBLE) * CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE))
         |       * SQRT(CAST(n AS DOUBLE) * CAST(scc AS DOUBLE) - CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE))), 6)
         |FROM m
-        |ORDER BY col_a, col_b""".stripMargin,
-    "q_chisq" ->
+        |ORDER BY col_a, col_b""".stripMargin),
+    "q_chisq" -> (qChisq _,
       """WITH cells AS (
         |  SELECT event_type, CAST(user_id % 3 AS BIGINT) AS cohort, COUNT(*) AS n
         |  FROM events GROUP BY event_type, CAST(user_id % 3 AS BIGINT)),
@@ -1966,8 +1929,8 @@ object Profiling extends QueryModule {
         |       ROUND(contrib, 6) AS contrib,
         |       CAST(SUM(CAST(ROUND(contrib * 1e6) AS BIGINT)) OVER () AS DOUBLE) / 1e6
         |         AS chi2_total
-        |FROM scored ORDER BY event_type, cohort""".stripMargin,
-    "q_fk_audit" ->
+        |FROM scored ORDER BY event_type, cohort""".stripMargin),
+    "q_fk_audit" -> (qFkAudit _,
       """SELECT 'lineitem->orders' AS fk_edge, (SELECT COUNT(*) FROM lineitem) AS n_rows,
         |       (SELECT COUNT(*) FROM lineitem WHERE NOT EXISTS
         |         (SELECT 1 FROM orders WHERE o_orderkey = l_orderkey)) AS n_orphans
@@ -1979,8 +1942,8 @@ object Profiling extends QueryModule {
         |SELECT 'customer->nation', (SELECT COUNT(*) FROM customer),
         |       (SELECT COUNT(*) FROM customer WHERE NOT EXISTS
         |         (SELECT 1 FROM nation WHERE n_nationkey = c_nationkey))
-        |ORDER BY fk_edge""".stripMargin,
-    "q_hist" ->
+        |ORDER BY fk_edge""".stripMargin),
+    "q_hist" -> (qHist _,
       """WITH b AS (
         |  SELECT CAST(FLOOR(o_totalprice / 25000.0) AS BIGINT) AS bucket,
         |         o_totalprice,
@@ -1990,8 +1953,8 @@ object Profiling extends QueryModule {
         |       MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price,
         |       ROUND(CAST(SUM(CAST(pc AS DECIMAL(38,0))) AS DOUBLE)
         |             / CAST(COUNT(*) AS DOUBLE) / 100.0, 2) AS avg_price
-        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q_hist_equidepth" ->
+        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin),
+    "q_hist_equidepth" -> (qHistEquidepth _,
       """WITH b AS (
         |  SELECT o_orderkey, o_totalprice,
         |         CAST(ROUND(o_totalprice * 100) AS BIGINT) AS pc
@@ -2005,8 +1968,8 @@ object Profiling extends QueryModule {
         |       ROUND(CAST(SUM(CAST(pc AS DECIMAL(38,0))) AS DOUBLE)
         |             / CAST(COUNT(*) AS DOUBLE) / 100.0, 2) AS avg_price
         |FROM (SELECT *, ((rn - 1) * 8) // n + 1 AS bucket FROM r)
-        |GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q_profile" ->
+        |GROUP BY bucket ORDER BY bucket""".stripMargin),
+    "q_profile" -> (qProfile _,
       """SELECT 'o_orderkey' AS col_name,
         |       COUNT(CASE WHEN o_orderkey IS NULL THEN 1 END) AS n_nulls,
         |       COUNT(DISTINCT o_orderkey) AS n_distinct,
@@ -2034,8 +1997,8 @@ object Profiling extends QueryModule {
         |       CAST(EPOCH_US(MIN(o_orderdate)) AS DOUBLE),
         |       CAST(EPOCH_US(MAX(o_orderdate)) AS DOUBLE)
         |FROM orders
-        |ORDER BY col_name""".stripMargin,
-    "q_abtest" ->
+        |ORDER BY col_name""".stripMargin),
+    "q_abtest" -> (qAbtest _,
       """WITH per AS (
         |  SELECT event_type, CAST(user_id % 2 AS INT) AS variant, COUNT(*) AS n,
         |         SUM(CAST(CAST(ROUND(value * 100) AS BIGINT) AS DECIMAL(38,0))) AS s,
@@ -2068,8 +2031,8 @@ object Profiling extends QueryModule {
         |       ROUND(((v0 / n0 + v1 / n1) * (v0 / n0 + v1 / n1))
         |             / ((v0 / n0) * (v0 / n0) / (n0 - 1)
         |                + (v1 / n1) * (v1 / n1) / (n1 - 1)), 1) AS df
-        |FROM v WHERE v0 + v1 > 0 ORDER BY event_type""".stripMargin,
-    "q_anomaly_zscore" ->
+        |FROM v WHERE v0 + v1 > 0 ORDER BY event_type""".stripMargin),
+    "q_anomaly_zscore" -> (qAnomalyZscore _,
       """WITH cents AS (
         |  SELECT event_id, event_type, value,
         |         CAST(ROUND(value * 100) AS BIGINT) AS vc
@@ -2090,8 +2053,8 @@ object Profiling extends QueryModule {
         |FROM cents c JOIN s USING (event_type)
         |WHERE s.std_c > 0
         |  AND ABS((CAST(c.vc AS DOUBLE) - s.mean_c) / s.std_c) > 2.5
-        |ORDER BY c.event_id""".stripMargin,
-    "q_hll_sketch" ->
+        |ORDER BY c.event_id""".stripMargin),
+    "q_hll_sketch" -> (qHllSketch _,
       """WITH regs AS (
         |  SELECT bucket, MAX(rho) AS m_b FROM (
         |    SELECT h % 256 AS bucket,
@@ -2122,8 +2085,8 @@ object Profiling extends QueryModule {
         |         AS abs_err_ppm,
         |       CAST(CAST(718273 AS HUGEINT) * 65536 * (1::HUGEINT << CAST(r_max AS INTEGER))
         |            // (1000000::HUGEINT * s_scaled) AS BIGINT) >= n_exact AS over
-        |FROM sc CROSS JOIN ex""".stripMargin,
-    "q_count_min" ->
+        |FROM sc CROSS JOIN ex""".stripMargin),
+    "q_count_min" -> (qCountMin _,
       """WITH toks AS (
         |  SELECT tok FROM (
         |    SELECT UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS tok
@@ -2145,8 +2108,8 @@ object Profiling extends QueryModule {
         |  CAST('0x' || SUBSTR(MD5(CAST(r.row_id AS VARCHAR) || ':' || t.tok), 1, 15)
         |    AS BIGINT) % 256
         |GROUP BY 1, 2
-        |ORDER BY true_count DESC, token""".stripMargin,
-    "q_slice_finder" ->
+        |ORDER BY true_count DESC, token""".stripMargin),
+    "q_slice_finder" -> (qSliceFinder _,
       """WITH per_doc AS (
         |  SELECT lang, source,
         |         (1000000 * CAST(LEN(LIST_DISTINCT(toks)) AS BIGINT)) // LEN(toks)
@@ -2163,6 +2126,6 @@ object Profiling extends QueryModule {
         |GROUP BY lang, source, g.global_avg_ppm
         |HAVING COUNT(*) >= 4
         |ORDER BY slice_avg_ppm ASC, lang, source
-        |LIMIT 10""".stripMargin,
+        |LIMIT 10""".stripMargin),
   )
 }

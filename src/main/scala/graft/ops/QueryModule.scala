@@ -2,11 +2,15 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One operator family = one module. SparkEntry concatenates all modules'
-  * maps, so every query key (SURVEY.md §2) registers exactly once with its
-  * DuckDB oracle twin (absent only for non-SQL-expressible ops).
+/** One operator family = one module. Each query key registers exactly once,
+  * in `registry`, together with its DuckDB oracle twin, so a key cannot
+  * exist without an oracle. SparkEntry concatenates all modules' maps.
   */
 trait QueryModule {
-  def queries: Map[String, (SparkSession, String) => DataFrame]
-  def oracle: Map[String, String]
+  type Query = (SparkSession, String) => DataFrame
+  /** key → (query function, oracle SQL). A module declares it after the
+    * private SQL vals it reads: an object initializes its vals in order. */
+  def registry: Map[String, (Query, String)]
+  final lazy val queries: Map[String, Query] = registry.map { case (k, (q, _)) => k -> q }
+  final lazy val oracle: Map[String, String] = registry.map { case (k, (_, sql)) => k -> sql }
 }

@@ -248,6 +248,10 @@ object Relational extends QueryModule {
   private[graft] val sinkRoot: String =
     s"${System.getProperty("java.io.tmpdir")}/graft_sink_p${ProcessHandle.current().pid()}_"
 
+  /** The sink directory `name` of the input dataset `dir` under [[sinkRoot]]. */
+  private[graft] def sinkPath(dir: String, name: String): String =
+    s"$sinkRoot${Integer.toHexString(dir.hashCode)}/$name"
+
   /** Deletes every sink directory of this JVM. [[graft.GraftSession]] runs
     * it when the application ends, never inside a query: a lazily returned
     * plan reads its sink until it has run. */
@@ -284,7 +288,7 @@ object Relational extends QueryModule {
     * concurrent JVMs (e.g. bench and verify on the same sf) never race
     * each other's mode("overwrite") of a shared directory. */
   def qSinkPartitionPrune(spark: SparkSession, dir: String): DataFrame = {
-    val sink = s"$sinkRoot${Integer.toHexString(dir.hashCode)}/events_by_type"
+    val sink = sinkPath(dir, "events_by_type")
     Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("value"), col("ts"), col("event_type"))
       .write.mode("overwrite").partitionBy("event_type").parquet(sink)
@@ -310,7 +314,7 @@ object Relational extends QueryModule {
     * clustered copy is oracle-checked against the source table — the
     * rewrite must lose nothing. */
   def qSinkCompact(spark: SparkSession, dir: String): DataFrame = {
-    val sink = s"$sinkRoot${Integer.toHexString(dir.hashCode)}/events_clustered"
+    val sink = sinkPath(dir, "events_clustered")
     Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"), col("ts"))
       .repartitionByRange(8, col("ts"))
@@ -343,7 +347,7 @@ object Relational extends QueryModule {
     * schema in a metastore/Delta log, which this key's contract
     * (old-null, new-summed) is exactly the test for. */
   def qSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val sink = s"$sinkRoot${Integer.toHexString(dir.hashCode)}/events_evolved"
+    val sink = sinkPath(dir, "events_evolved")
     val ev = Tables.events(spark, dir)
     val cut = lit("2024-01-15 00:00:00").cast("timestamp")
     ev.filter(col("ts") < cut)
@@ -543,7 +547,7 @@ object Relational extends QueryModule {
     * that makes star-schema queries touch only the partitions the dim
     * filter implies. */
   def qJoinDpp(spark: SparkSession, dir: String): DataFrame = {
-    val sink = s"$sinkRoot${Integer.toHexString(dir.hashCode)}/orders_by_month"
+    val sink = sinkPath(dir, "orders_by_month")
     Tables.orders(spark, dir)
       .withColumn("omonth",
         expr("CAST(year(o_orderdate) * 100 + month(o_orderdate) AS INT)"))
@@ -637,7 +641,7 @@ object Relational extends QueryModule {
     * (test-sized) table, which is what lets the zero-row claim be
     * verified. */
   def qChangeFeed(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$sinkRoot${Integer.toHexString(dir.hashCode)}/cdf_${System.nanoTime()}"
+    val path = sinkPath(dir, s"cdf_${System.nanoTime()}")
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
     TxnLog.init(ev.filter(col("event_id") % 3 =!= 0), path, nFiles = 4)
@@ -696,7 +700,7 @@ object Relational extends QueryModule {
     * is one pinned-version scan. At 100 TB the retained-set diff is the
     * entire cost, which is why real formats vacuum continuously. */
   def qTxnVacuum(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$sinkRoot${Integer.toHexString(dir.hashCode)}/vac_${System.nanoTime()}"
+    val path = sinkPath(dir, s"vac_${System.nanoTime()}")
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
     TxnLog.init(ev.filter(col("event_id") % 5 =!= 0), path, nFiles = 4)
@@ -717,8 +721,7 @@ object Relational extends QueryModule {
   }
 
   def qTxnCommit(spark: SparkSession, dir: String): DataFrame =
-    txnCommitCensus(spark, dir,
-      s"$sinkRoot${Integer.toHexString(dir.hashCode)}/txn_${System.nanoTime()}")
+    txnCommitCensus(spark, dir, sinkPath(dir, s"txn_${System.nanoTime()}"))
 
   /** [[qTxnCommit]] with the table created at `path`. */
   private[graft] def txnCommitCensus(spark: SparkSession, dir: String,
@@ -782,7 +785,7 @@ object Relational extends QueryModule {
     * discovery = one semi-join carrying FILE NAMES to the driver — the
     * kilobytes a log entry holds); censuses are per-version scans. */
   def qTxnMerge(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$sinkRoot${Integer.toHexString(dir.hashCode)}/mrg_${System.nanoTime()}"
+    val path = sinkPath(dir, s"mrg_${System.nanoTime()}")
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
     TxnLog.init(ev, path, nFiles = 4)
@@ -810,52 +813,23 @@ object Relational extends QueryModule {
     }.reduce(_ unionByName _).orderBy(col("version"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_txn_merge" -> (qTxnMerge _),
-    "q_txn_commit" -> (qTxnCommit _),
-    "q_txn_vacuum" -> (qTxnVacuum _),
-    "q_change_feed" -> (qChangeFeed _),
-    "q_join_dpp" -> (qJoinDpp _),
-    "q_compaction_plan" -> (qCompactionPlan _),
-    "q_zonemap_prune" -> (qZonemapPrune _),
-    "q_ivm_agg" -> (qIvmAgg _),
-    "q_zorder" -> (qZorder _),
-    "q_schema_evolution" -> (qSchemaEvolution _),
-    "q_purge_cascade" -> (qPurgeCascade _),
-    "q_sink_partition_prune" -> (qSinkPartitionPrune _),
-    "q_sink_compact" -> (qSinkCompact _),
-    "q_cdc_diff"  -> (qCdcDiff _),
-    "q_scan"      -> (qScan _),
-    "q_project"   -> (qProject _),
-    "q_filter"    -> (qFilter _),
-    "q_dropna"    -> (qDropna _),
-    "q_fillna"    -> (qFillna _),
-    "q_case"      -> (qCase _),
-    "q_limit"     -> (qLimit _),
-    "q_distinct"  -> (qDistinct _),
-    "q_dedup_key" -> (qDedupKey _),
-    "q_sort"      -> (qSort _),
-    "q_topk"      -> (qTopk _),
-    "q_merge_upsert" -> (qMergeUpsert _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_join_dpp" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_join_dpp" -> (qJoinDpp _,
       """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
         |       CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT)
         |         AS cents
         |FROM orders
         |WHERE YEAR(o_orderdate) = 1996 AND MONTH(o_orderdate) <= 3
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_txn_vacuum" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_txn_vacuum" -> (qTxnVacuum _,
       """SELECT CAST(2 AS BIGINT) AS head_version,
         |       CAST(6 AS BIGINT) AS n_files_before,
         |       CAST(4 AS BIGINT) AS n_removed,
         |       CAST(2 AS BIGINT) AS n_retained,
         |       CAST(COUNT(*) AS BIGINT) AS n_rows,
         |       CAST(COALESCE(SUM(event_id), 0) AS BIGINT) AS chk
-        |FROM events""".stripMargin,
-    "q_change_feed" ->
+        |FROM events""".stripMargin),
+    "q_change_feed" -> (qChangeFeed _,
       """WITH b AS (
         |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
         |         CAST(SUM(event_id) AS BIGINT) AS s
@@ -875,8 +849,8 @@ object Relational extends QueryModule {
         |  SELECT 0, 1, 'append', '*', t.n, 0, t.s, 0 FROM t
         |  UNION ALL
         |  SELECT 1, 2, 'compact', '*', 0, 0, 0, 0)
-        |ORDER BY from_v, event_type""".stripMargin,
-    "q_txn_merge" ->
+        |ORDER BY from_v, event_type""".stripMargin),
+    "q_txn_merge" -> (qTxnMerge _,
       """WITH ev AS (
         |  SELECT event_id, CAST(ROUND(value * 100) AS BIGINT) AS cents FROM events),
         |v1 AS (
@@ -909,8 +883,8 @@ object Relational extends QueryModule {
         |  SELECT 1, 'merge_fresh', 1, 0, c1.n, c1.si, c1.sc FROM c1
         |  UNION ALL
         |  SELECT 2, 'merge_stale', 3, 1, c2.n, c2.si, c2.sc FROM c2)
-        |ORDER BY version""".stripMargin,
-    "q_txn_commit" ->
+        |ORDER BY version""".stripMargin),
+    "q_txn_commit" -> (qTxnCommit _,
       """WITH b AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |         CAST(COALESCE(SUM(event_id), 0) AS BIGINT) AS s
@@ -927,8 +901,8 @@ object Relational extends QueryModule {
         |  SELECT 1, 'append', 1, 5, a.n, a.s FROM a
         |  UNION ALL
         |  SELECT 2, 'compact', 2, 2, a.n, a.s FROM a)
-        |ORDER BY version""".stripMargin,
-    "q_compaction_plan" ->
+        |ORDER BY version""".stripMargin),
+    "q_compaction_plan" -> (qCompactionPlan _,
       """WITH census AS (
         |  SELECT YEAR(o_orderdate) * 100 + MONTH(o_orderdate) AS file_id,
         |         CAST(COUNT(*) AS BIGINT) AS n_rows
@@ -946,8 +920,8 @@ object Relational extends QueryModule {
         |       MAX(n_rows) AS largest_file_rows,
         |       MIN(n_rows) AS smallest_file_rows,
         |       (1000000 * CAST(SUM(n_rows) AS BIGINT)) // MIN(target_rows) AS fill_ppm
-        |FROM planned GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_zonemap_prune" ->
+        |FROM planned GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_zonemap_prune" -> (qZonemapPrune _,
       """WITH r AS (
         |  SELECT CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) % 4096 AS px,
         |         CAST(DATEDIFF('day', DATE '1995-01-01', CAST(l_shipdate AS DATE))
@@ -989,8 +963,8 @@ object Relational extends QueryModule {
         |       CAST(SUM(n_match) AS BIGINT) AS rows_matching,
         |       (1000000 * CAST(SUM(CASE WHEN scanned THEN n_rows ELSE 0 END) AS BIGINT))
         |         // GREATEST(CAST(SUM(n_match) AS BIGINT), 1) AS read_amp_ppm
-        |FROM flagged GROUP BY layout ORDER BY layout""".stripMargin,
-    "q_ivm_agg" ->
+        |FROM flagged GROUP BY layout ORDER BY layout""".stripMargin),
+    "q_ivm_agg" -> (qIvmAgg _,
       """WITH o AS (
         |  SELECT o_orderkey, o_orderpriority, o_orderdate,
         |         CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -1027,8 +1001,8 @@ object Relational extends QueryModule {
         |       (n_maintained = n_recomputed
         |        AND cents_maintained = cents_recomputed) AS consistent
         |FROM m FULL JOIN rc ON m.o_orderpriority = rc.o_orderpriority
-        |ORDER BY m.o_orderpriority""".stripMargin,
-    "q_zorder" ->
+        |ORDER BY m.o_orderpriority""".stripMargin),
+    "q_zorder" -> (qZorder _,
       """WITH b AS (
         |  SELECT o_custkey % 16 AS cb,
         |         (YEAR(o_orderdate) * 12 + MONTH(o_orderdate)) % 16 AS tb
@@ -1043,8 +1017,8 @@ object Relational extends QueryModule {
         |SELECT z // 16 AS file_id, COUNT(*) AS n,
         |       CAST(MIN(z) AS BIGINT) AS z_min, CAST(MAX(z) AS BIGINT) AS z_max,
         |       COUNT(DISTINCT (cb, tb)) AS n_cells
-        |FROM z GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_schema_evolution" ->
+        |FROM z GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_schema_evolution" -> (qSchemaEvolution _,
       """WITH ev AS (
         |  SELECT value, make_timestamp(epoch_us(ts)) AS ts FROM events)
         |SELECT 1 AS batch, COUNT(*) AS n_rows,
@@ -1056,8 +1030,8 @@ object Relational extends QueryModule {
         |       CAST(COALESCE(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)), 0)
         |            AS BIGINT)
         |FROM ev WHERE ts >= TIMESTAMP '2024-01-15 00:00:00'
-        |ORDER BY batch""".stripMargin,
-    "q_purge_cascade" ->
+        |ORDER BY batch""".stripMargin),
+    "q_purge_cascade" -> (qPurgeCascade _,
       """WITH er AS (SELECT c_custkey FROM customer WHERE c_custkey % 97 = 0),
         |op AS (SELECT o_orderkey FROM orders
         |       WHERE o_custkey IN (SELECT c_custkey FROM er)),
@@ -1078,21 +1052,21 @@ object Relational extends QueryModule {
         |SELECT tbl, n_total, n_purged,
         |       (1000000 * n_purged) // n_total AS purged_ppm,
         |       n_total - n_purged AS n_remaining
-        |FROM rows_ ORDER BY tbl""".stripMargin,
-    "q_sink_compact" ->
+        |FROM rows_ ORDER BY tbl""".stripMargin),
+    "q_sink_compact" -> (qSinkCompact _,
       """SELECT event_type, COUNT(*) AS n,
         |       CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT)
         |         AS sum_micro
         |FROM events
         |WHERE ts >= TIMESTAMP '2024-01-08 00:00:00'
         |  AND ts < TIMESTAMP '2024-01-15 00:00:00'
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_sink_partition_prune" ->
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
+    "q_sink_partition_prune" -> (qSinkPartitionPrune _,
       """SELECT CAST(ts AS DATE) AS d, COUNT(*) AS n,
         |       CAST(SUM(CAST(FLOOR(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS sum_micro
         |FROM events WHERE event_type = 'click'
-        |GROUP BY CAST(ts AS DATE) ORDER BY d""".stripMargin,
-    "q_cdc_diff" ->
+        |GROUP BY CAST(ts AS DATE) ORDER BY d""".stripMargin),
+    "q_cdc_diff" -> (qCdcDiff _,
       """WITH st AS (
         |  SELECT o_custkey,
         |         COUNT(CASE WHEN od >= DATE '1996-07-01' AND od < DATE '1997-01-01' THEN 1 END) AS na,
@@ -1108,8 +1082,8 @@ object Relational extends QueryModule {
         |            WHEN na <> nb OR sa <> sb THEN 'update' ELSE 'unchanged' END AS op,
         |       COUNT(*) AS n_keys,
         |       ROUND(CAST(SUM(COALESCE(sb, 0) - COALESCE(sa, 0)) AS DOUBLE) / 100.0, 2) AS net_delta
-        |FROM st GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_merge_upsert" ->
+        |FROM st GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_merge_upsert" -> (qMergeUpsert _,
       """WITH changes AS (
         |  SELECT o_orderkey, o_orderstatus, o_totalprice, 0 AS src FROM orders
         |  UNION ALL
@@ -1123,34 +1097,34 @@ object Relational extends QueryModule {
         |         ROW_NUMBER() OVER (PARTITION BY o_orderkey ORDER BY src DESC) AS rn
         |  FROM changes)
         |SELECT o_orderkey, o_orderstatus, o_totalprice
-        |FROM ranked WHERE rn = 1 ORDER BY o_orderkey""".stripMargin,
-    "q_scan" ->
+        |FROM ranked WHERE rn = 1 ORDER BY o_orderkey""".stripMargin),
+    "q_scan" -> (qScan _,
       """SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity,
         |       l_extendedprice, l_discount, l_tax, l_returnflag, l_linestatus,
         |       CAST(l_shipdate AS DATE) AS l_shipdate
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_project" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    "q_project" -> (qProject _,
       """SELECT l_orderkey, l_linenumber,
         |       l_extendedprice * (1.0 - l_discount) AS revenue,
         |       l_returnflag AS flag
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_filter" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    "q_filter" -> (qFilter _,
       """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag, l_discount
         |FROM lineitem
         |WHERE l_quantity BETWEEN 10 AND 30
         |  AND l_returnflag IN ('A','N')
         |  AND l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
         |  AND (l_linestatus LIKE 'O%' OR l_discount > 0.05)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_dropna" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    "q_dropna" -> (qDropna _,
       """SELECT l_orderkey, l_linenumber,
         |       NULLIF(l_returnflag, 'R') AS city_like,
         |       NULLIF(l_partkey % 7, 0) AS code_like
         |FROM lineitem
         |WHERE NULLIF(l_returnflag, 'R') IS NOT NULL
         |  AND NULLIF(l_partkey % 7, 0) IS NOT NULL
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_fillna" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    "q_fillna" -> (qFillna _,
       """WITH raw AS (
         |  SELECT l_orderkey, l_linenumber,
         |         CASE WHEN l_linenumber % 4 = 0 THEN ''
@@ -1161,32 +1135,32 @@ object Relational extends QueryModule {
         |SELECT l_orderkey, l_linenumber,
         |       CASE WHEN raw_rate IS NULL OR TRIM(raw_rate) = '' THEN 0.0
         |            ELSE CAST(raw_rate AS DOUBLE) END AS rate_filled
-        |FROM raw ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_case" ->
+        |FROM raw ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    "q_case" -> (qCase _,
       """SELECT CASE WHEN o_totalprice < 1000 THEN 'low'
         |            WHEN o_totalprice < 5000 THEN 'mid'
         |            ELSE 'high' END AS bucket,
         |       COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS total
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "q_limit" ->
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin),
+    "q_limit" -> (qLimit _,
       """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders ORDER BY o_orderkey LIMIT 20""".stripMargin,
-    "q_distinct" ->
+        |FROM orders ORDER BY o_orderkey LIMIT 20""".stripMargin),
+    "q_distinct" -> (qDistinct _,
       """SELECT DISTINCT l_returnflag, l_linestatus
-        |FROM lineitem ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_dedup_key" ->
+        |FROM lineitem ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    "q_dedup_key" -> (qDedupKey _,
       """SELECT l_orderkey, l_partkey, l_quantity FROM (
         |  SELECT l_orderkey, l_partkey, l_quantity,
         |         ROW_NUMBER() OVER (PARTITION BY l_orderkey
         |           ORDER BY l_linenumber, l_partkey, l_suppkey, l_quantity, l_extendedprice) AS rn
         |  FROM lineitem) t
-        |WHERE rn = 1 ORDER BY l_orderkey""".stripMargin,
-    "q_sort" ->
+        |WHERE rn = 1 ORDER BY l_orderkey""".stripMargin),
+    "q_sort" -> (qSort _,
       """SELECT l_returnflag, l_quantity, l_orderkey, l_linenumber
         |FROM lineitem
-        |ORDER BY l_returnflag DESC, l_quantity ASC, l_orderkey ASC, l_linenumber ASC""".stripMargin,
-    "q_topk" ->
+        |ORDER BY l_returnflag DESC, l_quantity ASC, l_orderkey ASC, l_linenumber ASC""".stripMargin),
+    "q_topk" -> (qTopk _,
       """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
+        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin),
   )
 }

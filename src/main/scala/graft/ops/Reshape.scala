@@ -253,21 +253,8 @@ object Reshape extends QueryModule {
     finally spark.catalog.dropTempView(v)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sql_pivot"  -> (qSqlPivot _),
-    "q_sample_split"      -> (qSampleSplit _),
-    "q_pivot"             -> (qPivot _),
-    "q_unpivot"           -> (qUnpivot _),
-    "q_sql_subquery"      -> (qSqlSubquery _),
-    "q_sql_cte"           -> (qSqlCte _),
-    "q_sql_recursive"     -> (qSqlRecursive _),
-    "q_sql_lateral"       -> (qSqlLateral _),
-    "q_sample_stratified" -> (qSampleStratified _),
-    "q_sample_weighted"   -> (qSampleWeighted _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_sql_pivot" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_sql_pivot" -> (qSqlPivot _,
       """SELECT o_orderpriority AS priority,
         |       CAST(COUNT(CASE WHEN YEAR(o_orderdate) = 1995 THEN 1 END) AS BIGINT)
         |         AS "1995_n",
@@ -284,16 +271,16 @@ object Reshape extends QueryModule {
         |       CAST(SUM(CASE WHEN YEAR(o_orderdate) = 1997
         |                THEN CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) END)
         |            AS BIGINT) AS "1997_cents"
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_sql_lateral" ->
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_sql_lateral" -> (qSqlLateral _,
       """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
         |FROM customer c,
         |LATERAL (
         |  SELECT o_orderkey, o_totalprice FROM orders o
         |  WHERE o.o_custkey = c.c_custkey
         |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 3) t
-        |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin,
-    "q_sql_recursive" ->
+        |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin),
+    "q_sql_recursive" -> (qSqlRecursive _,
       """WITH RECURSIVE anc(p_partkey, anc_key, depth, cents) AS (
         |  SELECT p_partkey, p_partkey, 0,
         |         CAST(ROUND(p_retailprice * 100) AS BIGINT)
@@ -307,8 +294,8 @@ object Reshape extends QueryModule {
         |FROM anc
         |WHERE depth >= 1 AND anc_key BETWEEN 1 AND 99
         |GROUP BY anc_key
-        |ORDER BY category""".stripMargin,
-    "q_sample_split" ->
+        |ORDER BY category""".stripMargin),
+    "q_sample_split" -> (qSampleSplit _,
       """WITH assigned AS (
         |  SELECT doc_id, n_chars,
         |         CAST(('0x' || SUBSTR(MD5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))
@@ -325,8 +312,8 @@ object Reshape extends QueryModule {
         |  FROM labeled GROUP BY split)
         |SELECT split, n_docs, n_chars,
         |       (1000000 * n_docs) // CAST(SUM(n_docs) OVER () AS BIGINT) AS share_ppm
-        |FROM census ORDER BY split""".stripMargin,
-    "q_sample_weighted" ->
+        |FROM census ORDER BY split""".stripMargin),
+    "q_sample_weighted" -> (qSampleWeighted _,
       """WITH clocked AS (
         |  SELECT o_orderkey, o_totalprice,
         |         -LN((CAST(CAST(('0x' || SUBSTR(MD5(CAST(o_orderkey AS VARCHAR)), 1, 13)) AS BIGINT)
@@ -339,13 +326,13 @@ object Reshape extends QueryModule {
         |  FROM clocked)
         |SELECT CAST(pick AS INT) AS pick, o_orderkey,
         |       ROUND(o_totalprice, 2) AS weight
-        |FROM picked WHERE pick <= 20 ORDER BY pick""".stripMargin,
-    "q_pivot" ->
+        |FROM picked WHERE pick <= 20 ORDER BY pick""".stripMargin),
+    "q_pivot" -> (qPivot _,
       """SELECT l_returnflag,
         |       ROUND(SUM(CASE WHEN l_linestatus = 'F' THEN l_extendedprice END), 2) AS status_f,
         |       ROUND(SUM(CASE WHEN l_linestatus = 'O' THEN l_extendedprice END), 2) AS status_o
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_unpivot" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q_unpivot" -> (qUnpivot _,
       """WITH p AS (
         |  SELECT l_returnflag,
         |         ROUND(SUM(CASE WHEN l_linestatus = 'F' THEN l_extendedprice END), 2) AS status_f,
@@ -356,8 +343,8 @@ object Reshape extends QueryModule {
         |  UNION ALL
         |  SELECT l_returnflag, 'status_o' AS status, status_o AS revenue FROM p) u
         |WHERE revenue IS NOT NULL
-        |ORDER BY l_returnflag, status""".stripMargin,
-    "q_sample_stratified" ->
+        |ORDER BY l_returnflag, status""".stripMargin),
+    "q_sample_stratified" -> (qSampleStratified _,
       """WITH s AS (
         |  SELECT doc_id,
         |         CASE WHEN lang = 'en' THEN 'en' ELSE 'other' END AS stratum
@@ -369,8 +356,8 @@ object Reshape extends QueryModule {
         |SELECT doc_id, stratum FROM h
         |WHERE (stratum = 'en' AND u32 < 2147483648)
         |   OR (stratum <> 'en' AND u32 < 429496729)
-        |ORDER BY doc_id""".stripMargin,
-    "q_sql_cte" ->
+        |ORDER BY doc_id""".stripMargin),
+    "q_sql_cte" -> (qSqlCte _,
       """WITH rev AS (
         |  SELECT n.n_name,
         |         SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,4))) AS revenue
@@ -381,14 +368,14 @@ object Reshape extends QueryModule {
         |  GROUP BY n.n_name)
         |SELECT n_name, CAST(revenue AS DOUBLE) AS revenue,
         |       RANK() OVER (ORDER BY revenue DESC, n_name) AS rk
-        |FROM rev ORDER BY rk, n_name""".stripMargin,
-    "q_sql_subquery" ->
+        |FROM rev ORDER BY rk, n_name""".stripMargin),
+    "q_sql_subquery" -> (qSqlSubquery _,
       """SELECT o_orderpriority, COUNT(*) AS n_above_avg
         |FROM orders o
         |WHERE o_totalprice > (SELECT AVG(o2.o_totalprice) FROM orders o2
         |                      WHERE o2.o_custkey = o.o_custkey)
         |  AND o_totalprice > (SELECT AVG(o_totalprice) FROM orders) * 0.5
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+        |ORDER BY o_orderpriority""".stripMargin),
   )
 }

@@ -87,17 +87,8 @@ object SetOps extends QueryModule {
       .orderBy(col("kind"), col("id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_union"         -> (qUnion _),
-    "q_union_by_name" -> (qUnionByName _),
-    "q_intersect"     -> (qIntersect _),
-    "q_except"        -> (qExcept _),
-    "q_intersect_all" -> (qIntersectAll _),
-    "q_except_all"    -> (qExceptAll _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_union" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_union" -> (qUnion _,
       """SELECT batch, COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS total
         |FROM (
         |  SELECT o_orderkey, o_totalprice, 'batch_f' AS batch FROM orders
@@ -105,8 +96,8 @@ object SetOps extends QueryModule {
         |  UNION ALL
         |  SELECT o_orderkey, o_totalprice, 'batch_big' AS batch FROM orders
         |  WHERE o_totalprice > 50000) t
-        |GROUP BY batch ORDER BY batch""".stripMargin,
-    "q_union_by_name" ->
+        |GROUP BY batch ORDER BY batch""".stripMargin),
+    "q_union_by_name" -> (qUnionByName _,
       """SELECT * FROM (
         |  SELECT c_custkey AS id, c_name AS name,
         |         ROUND(c_acctbal, 2) AS acctbal, 'customer' AS kind
@@ -115,29 +106,29 @@ object SetOps extends QueryModule {
         |  SELECT s_suppkey AS id, s_name AS name,
         |         CAST(s_nationkey AS BIGINT) AS nationkey, 'supplier' AS kind
         |  FROM supplier WHERE s_acctbal > 9000) t
-        |ORDER BY kind, id""".stripMargin,
-    "q_intersect" ->
+        |ORDER BY kind, id""".stripMargin),
+    "q_intersect" -> (qIntersect _,
       """SELECT o_custkey AS custkey FROM orders
         |INTERSECT
         |SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 5000
-        |ORDER BY custkey""".stripMargin,
-    "q_except" ->
+        |ORDER BY custkey""".stripMargin),
+    "q_except" -> (qExcept _,
       """SELECT c_custkey AS custkey FROM customer
         |EXCEPT
         |SELECT o_custkey AS custkey FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |ORDER BY custkey""".stripMargin,
-    "q_intersect_all" ->
+        |ORDER BY custkey""".stripMargin),
+    "q_intersect_all" -> (qIntersectAll _,
       """SELECT custkey, COUNT(*) AS multiplicity FROM (
         |  SELECT o_custkey AS custkey FROM orders
         |  INTERSECT ALL
         |  SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 5000) t
-        |GROUP BY custkey ORDER BY custkey""".stripMargin,
-    "q_except_all" ->
+        |GROUP BY custkey ORDER BY custkey""".stripMargin),
+    "q_except_all" -> (qExceptAll _,
       """SELECT custkey, COUNT(*) AS multiplicity FROM (
         |  SELECT o_custkey AS custkey FROM orders
         |  EXCEPT ALL
         |  SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F') t
-        |GROUP BY custkey ORDER BY custkey""".stripMargin,
+        |GROUP BY custkey ORDER BY custkey""".stripMargin),
   )
 }

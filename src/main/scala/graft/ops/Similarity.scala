@@ -428,7 +428,7 @@ object Similarity extends QueryModule {
     val e = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
       .select(col("vec_id"), col("embedding"))
-    val path = s"${Relational.sinkRoot}${Integer.toHexString(dir.hashCode)}/ivf_index"
+    val path = Relational.sinkPath(dir, "ivf_index")
     IvfIndex.init(spark, e.filter(col("vec_id") % 10 =!= 0), path)
     IvfIndex.upsert(spark, e.filter(col("vec_id") % 10 === 0), path)
     val queries = e.filter(servingBatchPred)
@@ -789,7 +789,7 @@ object Similarity extends QueryModule {
     * double — one fixed expression, micro-floored. */
   def qSimSparse(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(split(lower(trim(col("text"))), " ")).as("token"))
+      .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("token"))
     val tf = toks.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val stats = Tables.documents(spark, dir).agg(count(lit(1)).as("n_docs"))
@@ -1460,38 +1460,6 @@ object Similarity extends QueryModule {
       .orderBy(col("cid"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_kmeans"             -> (qKmeans _),
-    "q_kcenter"            -> (qKcenter _),
-    "q_jl_projection"      -> (qJlProjection _),
-    "q_ann_nndescent"      -> (qAnnNndescent _),
-    "q_ann_graph_serve"    -> (qAnnGraphServe _),
-    "q_hard_negatives"     -> (qHardNegatives _),
-    "q_confusion"          -> (qConfusion _),
-    "q_embed_drift"        -> (qEmbedDrift _),
-    "q_embed_quantize"     -> (qEmbedQuantize _),
-    "q_knn_classify"       -> (qKnnClassify _),
-    "q_sim_sparse"         -> (qSimSparse _),
-    "q_gram_matrix"        -> (qGramMatrix _),
-    "q_pca_power"          -> (qPcaPower _),
-    "q_cosine_topk"        -> (qCosineTopk _),
-    "q_cosine_topk_native" -> (qCosineTopkNative _),
-    "q_rag_retrieve"       -> (qRagRetrieve _),
-    "q_rank_fusion"        -> (qRankFusion _),
-    "q_knn_join"           -> (qKnnJoin _),
-    "q_retrieval_eval"     -> (qRetrievalEval _),
-    "q_embedding_qa"       -> (qEmbeddingQa _),
-    "q_ann_recall"         -> (qAnnRecall _),
-    "q_ann_lsh"            -> (qAnnLsh _),
-    "q_ann_ivf"            -> (qAnnIvf _),
-    "q_ann_ivf_batch"      -> (qAnnIvfBatch _),
-    "q_ivf_incremental"    -> (qIvfIncremental _),
-    "q_dedup_embedding"    -> (qDedupEmbedding _),
-    "q_semdedup"           -> (qSemdedup _),
-    "q_mmr_diversify"      -> (qMmrDiversify _),
-    "q_ann_pq"             -> (qAnnPq _),
-  )
-
   /** Metadata-filtered retrieval — the canonical RAG serving query: join
     * the vector table to its document metadata 1:1, pre-filter on the
     * metadata (language + length), THEN rank the survivors by cosine to
@@ -1844,11 +1812,11 @@ object Similarity extends QueryModule {
       |ORDER BY qid, rk""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "q_ann_graph_serve" -> graphServeSql,
-    "q_kmeans" -> kmeansSql,
-    "q_kcenter" -> kcenterSql,
-    "q_jl_projection" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_ann_graph_serve" -> (qAnnGraphServe _, graphServeSql),
+    "q_kmeans" -> (qKmeans _, kmeansSql),
+    "q_kcenter" -> (qKcenter _, kcenterSql),
+    "q_jl_projection" -> (qJlProjection _,
       s"""WITH sgn AS (
         |  SELECT gi.i, gk.k,
         |    CASE WHEN SUBSTRING(MD5('jl:' || CAST(gi.i AS VARCHAR) || ':' || CAST(gk.k AS VARCHAR)), 1, 1)
@@ -1882,8 +1850,8 @@ object Similarity extends QueryModule {
         |SELECT vec_a, vec_b, d_orig, d_proj,
         |       CAST(FLOOR(CAST(d_proj AS DOUBLE) * 1000000 / (16.0 * CAST(d_orig AS DOUBLE)) + 0.5) AS BIGINT) AS ratio_ppm
         |FROM pairs WHERE d_orig > 0
-        |ORDER BY vec_a, vec_b""".stripMargin,
-    "q_ann_nndescent" -> {
+        |ORDER BY vec_a, vec_b""".stripMargin),
+    "q_ann_nndescent" -> (qAnnNndescent _, {
       s"""WITH $knnGraphSqlCtes,
         |sample AS MATERIALIZED (SELECT vec_id AS a, v FROM e
         |           WHERE vec_id % 50 = 0 AND vec_id < ${50L * ServingBatchCap}),
@@ -1906,8 +1874,8 @@ object Similarity extends QueryModule {
         |                   FROM nn1 JOIN exact USING (a, b)))
         |         // (SELECT CAST(COUNT(*) AS BIGINT) FROM exact)
         |ORDER BY round""".stripMargin
-    },
-    "q_confusion" -> {
+    }),
+    "q_confusion" -> (qConfusion _, {
       val codeSql = (0 until 8).map { h =>
         val dot = planeWeights(h).zipWithIndex
           .map { case (w, j) => s"v[${j + 1}] * ($w)" }.mkString(" + ")
@@ -1944,8 +1912,8 @@ object Similarity extends QueryModule {
         |  CASE WHEN tp * 2 + fp + fn > 0
         |       THEN CAST(tp * 2 AS DOUBLE) / CAST(tp * 2 + fp + fn AS DOUBLE) END AS f1
         |FROM m ORDER BY cls""".stripMargin
-    },
-    "q_embed_drift" ->
+    }),
+    "q_embed_drift" -> (qEmbedDrift _,
       """WITH ex AS (
         |  SELECT label, vec_id % 2 = 0 AS h0,
         |         UNNEST(LIST_TRANSFORM(embedding,
@@ -1978,8 +1946,8 @@ object Similarity extends QueryModule {
         |                       (SQRT(CAST(d.nn0 AS DOUBLE)) * SQRT(CAST(d.nn1 AS DOUBLE))),
         |                       6) + 0.0 END AS centroid_cos
         |FROM dots d JOIN cnt c USING (label)
-        |ORDER BY d.label""".stripMargin,
-    "q_ann_pq" ->
+        |ORDER BY d.label""".stripMargin),
+    "q_ann_pq" -> (qAnnPq _,
       s"""WITH e AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
          |  WHERE LEN(embedding) = 64
@@ -2012,8 +1980,8 @@ object Similarity extends QueryModule {
          |  FROM codes cd JOIN lut l ON l.s = cd.s AND l.code = cd.code
          |  WHERE cd.vec_id <> 0 GROUP BY cd.vec_id)
          |SELECT vec_id, ROUND(CAST(adc AS DOUBLE) / 1e12, 6) AS adc_dot
-         |FROM scored ORDER BY adc DESC, vec_id LIMIT 10""".stripMargin,
-    "q_mmr_diversify" ->
+         |FROM scored ORDER BY adc DESC, vec_id LIMIT 10""".stripMargin),
+    "q_mmr_diversify" -> (qMmrDiversify _,
       s"""WITH e AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
          |  WHERE LEN(embedding) = 64
@@ -2028,8 +1996,8 @@ object Similarity extends QueryModule {
          |  ORDER BY rel DESC, vec_id LIMIT 1),
          |${(2 to 5).map(mmrRound).mkString(",\n")}
          |SELECT vec_id, rk, ROUND(rel, 6) AS relevance
-         |FROM pp5 ORDER BY rk""".stripMargin,
-    "q_semdedup" ->
+         |FROM pp5 ORDER BY rk""".stripMargin),
+    "q_semdedup" -> (qSemdedup _,
       s"""WITH $ivfCtes,
          |pairs AS (
          |  SELECT a.vec_id AS u, b.vec_id AS vid
@@ -2039,8 +2007,8 @@ object Similarity extends QueryModule {
          |dom AS (SELECT vid, MIN(u) AS dominated_by FROM pairs GROUP BY vid)
          |SELECT a.vec_id, a.cid, (d.vid IS NULL) AS kept, d.dominated_by
          |FROM assigned a LEFT JOIN dom d ON d.vid = a.vec_id
-         |ORDER BY a.vec_id""".stripMargin,
-    "q_sim_sparse" ->
+         |ORDER BY a.vec_id""".stripMargin),
+    "q_sim_sparse" -> (qSimSparse _,
       """WITH toks AS (
         |  SELECT doc_id, UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS token
         |  FROM documents),
@@ -2071,8 +2039,8 @@ object Similarity extends QueryModule {
         |  JOIN norms nb ON nb.doc_id = doc_b)
         |SELECT doc_a, doc_b, cos FROM scored
         |WHERE cos >= 0.35
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q_gram_matrix" ->
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    "q_gram_matrix" -> (qGramMatrix _,
       """WITH q AS (
         |  SELECT vec_id,
         |         LIST_TRANSFORM(embedding, v -> CAST(ROUND(v * 1e6) AS BIGINT)) AS qv
@@ -2083,8 +2051,8 @@ object Similarity extends QueryModule {
         |       CAST(SUM(CAST(a.v * b.v AS HUGEINT)) AS DOUBLE) / 1e12 AS gram
         |FROM ex a JOIN ex b ON a.vec_id = b.vec_id AND b.i >= a.i
         |GROUP BY a.i, b.i
-        |ORDER BY a.i, b.i""".stripMargin,
-    "q_pca_power" ->
+        |ORDER BY a.i, b.i""".stripMargin),
+    "q_pca_power" -> (qPcaPower _,
       """WITH q AS (
         |  SELECT vec_id,
         |         LIST_TRANSFORM(embedding, v -> CAST(ROUND(v * 1e6) AS BIGINT)) AS qv
@@ -2116,8 +2084,8 @@ object Similarity extends QueryModule {
         |v5 AS (SELECT i AS j, CAST(ROUND(CAST(w AS DOUBLE) / CAST(m AS DOUBLE) * 1e6) AS BIGINT) AS vj
         |       FROM w5 CROSS JOIN m5)
         |SELECT j AS dim, CAST(vj AS DOUBLE) / 1e6 AS loading
-        |FROM v5 ORDER BY j""".stripMargin,
-    "q_rank_fusion" ->
+        |FROM v5 ORDER BY j""".stripMargin),
+    "q_rank_fusion" -> (qRankFusion _,
       """WITH q AS (
         |  SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
         |scored AS (
@@ -2141,8 +2109,8 @@ object Similarity extends QueryModule {
         |  FROM ranked)
         |SELECT doc_id, CAST(r_dense AS BIGINT) AS r_dense, CAST(r_lex AS BIGINT) AS r_lex,
         |       FLOOR(rrf_raw * 100000000 + 0.5) / 100000000 AS rrf
-        |FROM fused ORDER BY rrf_raw DESC, doc_id LIMIT 10""".stripMargin,
-    "q_rag_retrieve" ->
+        |FROM fused ORDER BY rrf_raw DESC, doc_id LIMIT 10""".stripMargin),
+    "q_rag_retrieve" -> (qRagRetrieve _,
       """WITH q AS (
         |  SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
         |eligible AS (
@@ -2155,10 +2123,10 @@ object Similarity extends QueryModule {
         |    AND LIST_AGGREGATE(LIST_TRANSFORM(CAST(e.embedding AS DOUBLE[]), x -> x * x), 'sum') > 0
         |    AND d.lang = 'en' AND d.n_chars >= 200)
         |SELECT doc_id, source, n_chars, ROUND(c, 6) AS cosine
-        |FROM eligible ORDER BY c DESC, doc_id LIMIT 10""".stripMargin,
-    "q_cosine_topk"        -> cosineTopkOracle,
-    "q_cosine_topk_native" -> cosineTopkOracle,
-    "q_embed_quantize" ->
+        |FROM eligible ORDER BY c DESC, doc_id LIMIT 10""".stripMargin),
+    "q_cosine_topk"        -> (qCosineTopk _, cosineTopkOracle),
+    "q_cosine_topk_native" -> (qCosineTopkNative _, cosineTopkOracle),
+    "q_embed_quantize" -> (qEmbedQuantize _,
       """WITH e AS (
         |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS x FROM embeddings
         |  WHERE LEN(embedding) = 64
@@ -2184,8 +2152,8 @@ object Similarity extends QueryModule {
         |         'sum') AS BIGINT) AS dot
         |FROM q s CROSS JOIN qq
         |WHERE s.vec_id <> 0
-        |ORDER BY dot DESC, s.vec_id LIMIT 10""".stripMargin,
-    "q_knn_classify" ->
+        |ORDER BY dot DESC, s.vec_id LIMIT 10""".stripMargin),
+    "q_knn_classify" -> (qKnnClassify _,
       s"""WITH base AS (
         |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
         |  WHERE LEN(embedding) = 64
@@ -2205,8 +2173,8 @@ object Similarity extends QueryModule {
         |SELECT qid, label AS pred_label, votes FROM (
         |  SELECT qid, label, votes,
         |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY votes DESC, label) AS vr
-        |  FROM votes) WHERE vr = 1 ORDER BY qid""".stripMargin,
-    "q_hard_negatives" ->
+        |  FROM votes) WHERE vr = 1 ORDER BY qid""".stripMargin),
+    "q_hard_negatives" -> (qHardNegatives _,
       s"""WITH base AS (
         |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
         |  WHERE LEN(embedding) = 64
@@ -2224,8 +2192,8 @@ object Similarity extends QueryModule {
         |  FROM scored)
         |SELECT qid, qlabel, vec_id AS neg_id, label AS neg_label,
         |       ROUND(c, 6) AS cosine, rk
-        |FROM rk WHERE rk <= 3 ORDER BY qid, rk""".stripMargin,
-    "q_knn_join" ->
+        |FROM rk WHERE rk <= 3 ORDER BY qid, rk""".stripMargin),
+    "q_knn_join" -> (qKnnJoin _,
       s"""WITH base AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
         |  WHERE LEN(embedding) = 64
@@ -2240,8 +2208,8 @@ object Similarity extends QueryModule {
         |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY c DESC, vec_id) AS rk
         |  FROM scored)
         |SELECT qid, vec_id, ROUND(c, 6) AS cosine, rk
-        |FROM rk WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
-    "q_retrieval_eval" ->
+        |FROM rk WHERE rk <= 5 ORDER BY qid, rk""".stripMargin),
+    "q_retrieval_eval" -> (qRetrievalEval _,
       s"""WITH base AS (
         |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
         |  WHERE LEN(embedding) = 64
@@ -2278,8 +2246,8 @@ object Similarity extends QueryModule {
         |       CAST(idcg AS BIGINT) AS idcg,
         |       CASE WHEN idcg = 0 THEN NULL
         |            ELSE CAST((1000000 * dcg) // idcg AS BIGINT) END AS ndcg_ppm
-        |FROM dec ORDER BY qid""".stripMargin,
-    "q_embedding_qa" ->
+        |FROM dec ORDER BY qid""".stripMargin),
+    "q_embedding_qa" -> (qEmbeddingQa _,
       """WITH e AS (
         |  SELECT LEN(embedding) AS dim,
         |         LIST_AGGREGATE(LIST_TRANSFORM(CAST(embedding AS DOUBLE[]),
@@ -2300,8 +2268,8 @@ object Similarity extends QueryModule {
         |SELECT bucket, bucket * w AS lo_micro, n_in_bucket,
         |       n_vecs, n_ragged, n_zero
         |FROM summary LEFT JOIN hist ON TRUE
-        |ORDER BY bucket""".stripMargin,
-    "q_ann_recall" ->
+        |ORDER BY bucket""".stripMargin),
+    "q_ann_recall" -> (qAnnRecall _,
       s"""WITH $ivfCtes,
         |qs AS (SELECT vec_id AS qid, v AS qvec FROM e WHERE $servingBatchSql),
         |probes AS (
@@ -2339,8 +2307,8 @@ object Similarity extends QueryModule {
         |  SELECT CAST(SUM(recall_ppm) // COUNT(*) AS BIGINT) AS mean_recall_ppm
         |  FROM dec)
         |SELECT qid, n_exact, n_hit, recall_ppm, mean_recall_ppm
-        |FROM dec CROSS JOIN mean ORDER BY qid""".stripMargin,
-    "q_ann_lsh" -> {
+        |FROM dec CROSS JOIN mean ORDER BY qid""".stripMargin),
+    "q_ann_lsh" -> (qAnnLsh _, {
       // identical integer weights, identical left-to-right accumulation:
       // v[1]*w1 + v[2]*w2 + ... mirrors Spark's sequential HOF aggregate
       val codeSql = (0 until 16).map { h =>
@@ -2362,8 +2330,8 @@ object Similarity extends QueryModule {
         |  AND bit_count(xor(CAST(c.code AS BIGINT), CAST(q.qcode AS BIGINT))) <= 6
         |ORDER BY LIST_COSINE_SIMILARITY(c.v, q.qvec) DESC, c.vec_id
         |LIMIT 10""".stripMargin
-    },
-    "q_ann_ivf" ->
+    }),
+    "q_ann_ivf" -> (qAnnIvf _,
       s"""WITH $ivfCtes,
         |q AS (SELECT v AS qvec FROM e WHERE vec_id = 0),
         |probes AS (
@@ -2374,17 +2342,17 @@ object Similarity extends QueryModule {
         |FROM assigned a JOIN probes USING (cid) CROSS JOIN q
         |WHERE a.vec_id <> 0
         |ORDER BY LIST_COSINE_SIMILARITY(a.v, q.qvec) DESC, a.vec_id
-        |LIMIT 10""".stripMargin,
-    "q_ann_ivf_batch" ->
+        |LIMIT 10""".stripMargin),
+    "q_ann_ivf_batch" -> (qAnnIvfBatch _,
       s"""WITH $ivfCtes,
-        |$ivfProbeSql""".stripMargin,
-    "q_ivf_incremental" ->
+        |$ivfProbeSql""".stripMargin),
+    "q_ivf_incremental" -> (qIvfIncremental _,
       s"""WITH ${ivfCtesFrom("vec_id % 10 <> 0")},
-        |$ivfProbeSql""".stripMargin,
-    "q_dedup_embedding" ->
+        |$ivfProbeSql""".stripMargin),
+    "q_dedup_embedding" -> (qDedupEmbedding _,
       s"""WITH $embedPairCtes
          |SELECT v1, v2, ROUND(cos_raw, 6) AS cosine
-         |FROM epairs ORDER BY v1, v2""".stripMargin,
+         |FROM epairs ORDER BY v1, v2""".stripMargin),
   )
 
   /** Sign-band LSH + exact-cosine-verify pair CTEs — ONE copy shared by the
@@ -2392,7 +2360,7 @@ object Similarity extends QueryModule {
     * so the semantic-pair definition cannot drift between the tier and the
     * composed funnel. Ends with `epairs(v1, v2, cos_raw)`; CTE names are
     * emb_-prefixed to compose with the shingle chain without collisions. */
-  // lazy: referenced by the `oracle` val above during object init
+  // lazy: referenced by the `registry` val above during object init
   private[ops] lazy val embedPairCtes: String =
     """emb_e AS MATERIALIZED (
       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings

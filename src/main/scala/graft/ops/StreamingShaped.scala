@@ -1,15 +1,18 @@
 package graft.ops
 
 import graft.Tables
+import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming-shaped queries with batch semantics (SURVEY.md §2.3). The
   * reference is batch-only (schedule_interval=None, reference
   * dags/create-data-lake.py:18); these express the standard event-time
-  * windows over `events` as plain aggregations, DuckDB-verifiable. The same
-  * transformations run unmodified on a readStream source — that live path is
-  * exercised in [[graft.streaming.Streams]] + its MemoryStream smoke test.
+  * windows over `events` as plain aggregations, DuckDB-verifiable. The
+  * tumble, slide, session, join, top-k and enrich keys call the
+  * [[graft.streaming.Streams]] functions that also run on a readStream
+  * source (`withWatermark` is dropped on batch input), so the oracle checks
+  * the live code; StreamingSpec and StreamingE2ESpec run the live path.
   *
   * Scale notes: tumbling/sliding windows are hash aggregations on
   * (bucket, key) — partial aggregation applies, shuffle carries one row per
@@ -19,34 +22,26 @@ import org.apache.spark.sql.functions._
   */
 object StreamingShaped extends QueryModule {
 
-  /** Tumbling 10-minute counts per event type. */
+  /** Tumbling 10-minute counts per event type: [[Streams.tumblingCounts]]
+    * with `sum_value` rounded for the hash check. */
   def qStreamTumble(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "10 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
-      .select(col("w.start").as("wstart"), col("event_type"), col("n"), col("sum_value"))
+    Streams.tumblingCounts(Tables.events(spark, dir))
+      .withColumn("sum_value", round(col("sum_value"), 4))
 
   /** Sliding window: 10-minute width, 5-minute slide — every event lands in
     * exactly two windows. */
   def qStreamSlide(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("wstart"), col("event_type"), col("n"))
+    Streams.slidingCounts(Tables.events(spark, dir))
 
   /** Session windows per user, 5-minute inactivity gap. Output bounds follow
     * Spark's session semantics: end = last event + gap. */
   def qStreamSession(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(session_window(col("ts"), "5 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("sum_value"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"), col("sum_value"))
+    Streams.sessionCounts(Tables.events(spark, dir))
 
   /** Stream-stream interval join, batch twin: every view matched to the
     * same user's purchases within [0, 10 min] after it — the
     * impression⋈click attribution shape. The EXACT code path is
-    * [[graft.streaming.Streams.intervalJoin]] (unified Dataset API: its
+    * [[Streams.intervalJoin]] (unified Dataset API: its
     * `withWatermark` is a no-op on batch input), so the semantics the
     * oracle verifies here are the semantics the live watermarked
     * stream-stream join runs in StreamingSpec.
@@ -59,7 +54,7 @@ object StreamingShaped extends QueryModule {
     * streaming plans bound their working set by the same window. */
   def qStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-    graft.streaming.Streams.intervalJoin(
+    Streams.intervalJoin(
         ev.filter(col("event_type") === "view"),
         ev.filter(col("event_type") === "purchase"))
       .orderBy(col("user_id"), col("l_ts"), col("r_ts"))
@@ -98,8 +93,7 @@ object StreamingShaped extends QueryModule {
     * bucket, which Spark plans as WindowGroupLimit-able per-partition
     * work: no global sort, state bounded by |types| per bucket. */
   def qStreamTopk(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.Streams.rankTopk(
-        graft.streaming.Streams.hourlyTypeCounts(Tables.events(spark, dir)))
+    Streams.rankTopk(Streams.hourlyTypeCounts(Tables.events(spark, dir)))
       .orderBy(col("wstart"), col("rk"))
 
   /** Watermark-lateness census — the measurement that SIZES a watermark
@@ -134,7 +128,7 @@ object StreamingShaped extends QueryModule {
       .orderBy(col("event_type"))
 
   /** Stream-static enrichment, batch twin: the EXACT code path is
-    * [[graft.streaming.Streams.enrichedTierCounts]] (unified Dataset API —
+    * [[Streams.enrichedTierCounts]] (unified Dataset API —
     * its watermark is a no-op on batch input), joining every event to the
     * 5-row static tier dimension and rolling up hourly counts + exact cent
     * revenue per business tier. The live form is exercised end-to-end in
@@ -145,23 +139,11 @@ object StreamingShaped extends QueryModule {
     * map-side-combinable (window, tier) aggregation; the stream is never
     * shuffled except to merge partial aggregates. */
   def qStreamEnrich(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.Streams.enrichedTierCounts(
-        Tables.events(spark, dir), graft.streaming.Streams.tierDim(spark))
+    Streams.enrichedTierCounts(Tables.events(spark, dir), Streams.tierDim(spark))
       .orderBy(col("wstart"), col("tier"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_stream_enrich"  -> (qStreamEnrich _),
-    "q_watermark_lateness" -> (qWatermarkLateness _),
-    "q_stream_topk"    -> (qStreamTopk _),
-    "q_stream_dedup"   -> (qStreamDedup _),
-    "q_stream_tumble"  -> (qStreamTumble _),
-    "q_stream_slide"   -> (qStreamSlide _),
-    "q_stream_session" -> (qStreamSession _),
-    "q_stream_join"    -> (qStreamJoin _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_stream_enrich" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_stream_enrich" -> (qStreamEnrich _,
       """WITH tiers(event_type, tier) AS (VALUES
         |  ('click', 'engagement'), ('view', 'engagement'),
         |  ('purchase', 'revenue'), ('signup', 'growth'), ('error', 'ops')),
@@ -170,8 +152,8 @@ object StreamingShaped extends QueryModule {
         |         CAST(ROUND(e.value * 100) AS BIGINT) AS cents
         |  FROM events e JOIN tiers t USING (event_type))
         |SELECT wstart, tier, COUNT(*) AS n, CAST(SUM(cents) AS BIGINT) AS cents
-        |FROM j GROUP BY wstart, tier ORDER BY wstart, tier""".stripMargin,
-    "q_watermark_lateness" ->
+        |FROM j GROUP BY wstart, tier ORDER BY wstart, tier""".stripMargin),
+    "q_watermark_lateness" -> (qWatermarkLateness _,
       """WITH e AS (
         |  SELECT event_type, event_id, epoch_us(ts) AS us FROM events),
         |w AS (
@@ -195,8 +177,8 @@ object StreamingShaped extends QueryModule {
         |         AS late_900s,
         |       (1000000 * CAST(SUM(CASE WHEN disorder_us > 60000000 THEN 1 ELSE 0 END)
         |          AS BIGINT)) // CAST(COUNT(*) AS BIGINT) AS late_60s_ppm
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_stream_topk" ->
+        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q_stream_topk" -> (qStreamTopk _,
       """WITH counts AS (
         |  SELECT TIME_BUCKET(INTERVAL '1 hour', ts) AS wstart, event_type,
         |         CAST(COUNT(*) AS BIGINT) AS n
@@ -207,21 +189,21 @@ object StreamingShaped extends QueryModule {
         |                            ORDER BY n DESC, event_type) AS rk
         |  FROM counts)
         |SELECT wstart, CAST(rk AS INT) AS rk, event_type, n
-        |FROM ranked WHERE rk <= 3 ORDER BY wstart, rk""".stripMargin,
-    "q_stream_dedup" ->
+        |FROM ranked WHERE rk <= 3 ORDER BY wstart, rk""".stripMargin),
+    "q_stream_dedup" -> (qStreamDedup _,
       """WITH b AS (
         |  SELECT user_id, event_type, DATE_TRUNC('hour', ts) AS h,
         |         COUNT(*) AS arrivals
         |  FROM events GROUP BY 1, 2, 3)
         |SELECT event_type, COUNT(*) AS kept,
         |       CAST(SUM(arrivals - 1) AS BIGINT) AS dropped
-        |FROM b GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_stream_tumble" ->
+        |FROM b GROUP BY event_type ORDER BY event_type""".stripMargin),
+    "q_stream_tumble" -> (qStreamTumble _,
       """SELECT TIME_BUCKET(INTERVAL '10 minutes', ts) AS wstart, event_type,
         |       COUNT(*) AS n, ROUND(SUM(value), 4) AS sum_value
         |FROM events GROUP BY wstart, event_type
-        |ORDER BY wstart, event_type""".stripMargin,
-    "q_stream_slide" ->
+        |ORDER BY wstart, event_type""".stripMargin),
+    "q_stream_slide" -> (qStreamSlide _,
       """WITH buckets AS (
         |  SELECT TIME_BUCKET(INTERVAL '5 minutes', ts) AS wstart, event_type FROM events
         |  UNION ALL
@@ -229,8 +211,8 @@ object StreamingShaped extends QueryModule {
         |         event_type FROM events)
         |SELECT wstart, event_type, COUNT(*) AS n
         |FROM buckets GROUP BY wstart, event_type
-        |ORDER BY wstart, event_type""".stripMargin,
-    "q_stream_join" ->
+        |ORDER BY wstart, event_type""".stripMargin),
+    "q_stream_join" -> (qStreamJoin _,
       """WITH ev AS (
         |  -- micro-floor as in q_stream_session: Spark joins on the
         |  -- micro-floored loader timestamps
@@ -243,8 +225,8 @@ object StreamingShaped extends QueryModule {
         |SELECT user_id, l_ts, r_ts, l_value, r_value
         |FROM l JOIN r ON user_id = r_user
         |  AND r_ts >= l_ts AND r_ts <= l_ts + INTERVAL '10 minutes'
-        |ORDER BY user_id, l_ts, r_ts""".stripMargin,
-    "q_stream_session" ->
+        |ORDER BY user_id, l_ts, r_ts""".stripMargin),
+    "q_stream_session" -> (qStreamSession _,
       """WITH ev AS (
         |  -- micro-floor BEFORE the gap arithmetic: the parquet ts is nanos
         |  -- and Spark sessionizes on micro-floored timestamps, so a gap of
@@ -267,6 +249,6 @@ object StreamingShaped extends QueryModule {
         |       MAX(ts) + INTERVAL '5 minutes' AS session_end,
         |       COUNT(*) AS n_events, ROUND(SUM(value), 4) AS sum_value
         |FROM sessions GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
+        |ORDER BY user_id, session_start""".stripMargin),
   )
 }

@@ -21,10 +21,15 @@ object TextAnalysis extends QueryModule {
 
   private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "it")
 
+  /** The engine's one tokenizer, the oracles' `string_split(lower(trim(text)), ' ')`:
+    * trimmed, lower-cased text split on each single space, so a run of
+    * spaces yields empty tokens on both engines. */
+  def tokens(text: Column): Column = split(lower(trim(text)), " ")
+
   /** Corpus token frequencies: top 50 tokens by count. */
   def qTextTokens(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(explode(split(lower(trim(col("text"))), " ")).as("token"))
+      .select(explode(tokens(col("text"))).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token"))
@@ -39,7 +44,7 @@ object TextAnalysis extends QueryModule {
     * only to be counted (took q_text_quality from ~8 s to regex-free). */
   def qTextQuality(spark: SparkSession, dir: String): DataFrame = {
     Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", tokens(col("text")))
       .select(
         col("doc_id"),
         col("n_chars"),
@@ -70,7 +75,7 @@ object TextAnalysis extends QueryModule {
     * agree (rounding first would reopen the midpoint hazard). */
   def qQualityFlags(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(lower(trim(col("text"))), " ").as("toks"))
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
     val top = toks.select(col("doc_id"), explode(col("toks")).as("t"))
       .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id")).agg(max(col("c")).as("top_c"))
@@ -97,7 +102,7 @@ object TextAnalysis extends QueryModule {
   /** Stopword-profile language ID + agreement rate with the labeled lang. */
   def qTextLangid(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", tokens(col("text")))
       .withColumn("en_hits",
         size(expr(s"filter(toks, t -> t IN (${stopwords.map("'" + _ + "'").mkString(",")}))")))
       .withColumn("lang_pred",
@@ -164,7 +169,7 @@ object TextAnalysis extends QueryModule {
     * fingerprint; any reorder/edit → different. */
   def qTextFingerprint(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", tokens(col("text")))
       .withColumn("fingerprint", expr(
         """aggregate(transform(toks, t -> CAST(length(t) + ascii(t) AS BIGINT)),
           |  0L, (acc, v) -> (acc * 31 + v) % 1000000007)""".stripMargin))
@@ -182,7 +187,7 @@ object TextAnalysis extends QueryModule {
     * engines). */
   def qTextRepetition(spark: SparkSession, dir: String): DataFrame = {
     val bigrams = Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", tokens(col("text")))
       .select(col("doc_id"), explode(expr(
         """CASE WHEN size(toks) < 2 THEN array()
           |ELSE transform(sequence(0, size(toks) - 2),
@@ -253,7 +258,7 @@ object TextAnalysis extends QueryModule {
     val total = docs.select(countDistinct(col("doc_id")).as("n_docs"))
     docs
       .select(col("doc_id"),
-        explode(array_distinct(split(lower(trim(col("text"))), " "))).as("token"))
+        explode(array_distinct(tokens(col("text")))).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(total))
@@ -329,7 +334,7 @@ object TextAnalysis extends QueryModule {
     * vocabulary-sized shuffle, never a per-document collect. */
   def qNgramTop(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", tokens(col("text")))
       .select(col("doc_id"), explode(expr(
         """CASE WHEN size(toks) < 2 THEN array()
           |ELSE transform(sequence(0, size(toks) - 2),
@@ -352,7 +357,7 @@ object TextAnalysis extends QueryModule {
     * floor-rounded for display only. */
   def qNgramPmi(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
-      .withColumn("toks", split(lower(trim(col("text"))), " "))
+      .withColumn("toks", tokens(col("text")))
     val pairs = toks.select(explode(expr(
         """CASE WHEN size(toks) < 2 THEN array()
           |ELSE transform(sequence(0, size(toks) - 2),
@@ -386,7 +391,7 @@ object TextAnalysis extends QueryModule {
   def qTextChunk(spark: SparkSession, dir: String): DataFrame =
     chunkTokens(
       Tables.documents(spark, dir)
-        .select(col("doc_id"), split(lower(trim(col("text"))), " ").as("toks")),
+        .select(col("doc_id"), tokens(col("text")).as("toks")),
       idCol = "doc_id", toksCol = "toks", chunkSize = 32)
       .orderBy(col("doc_id"), col("chunk_idx"))
 
@@ -430,7 +435,7 @@ object TextAnalysis extends QueryModule {
   def qTextPerplexity(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
-        split(lower(trim(col("text"))), " ").as("toks"))
+        tokens(col("text")).as("toks"))
     val docBi = toks.select(col("doc_id"), col("lang"), explode(expr(
         """CASE WHEN size(toks) < 2 THEN array()
           |ELSE transform(sequence(0, size(toks) - 2),
@@ -442,7 +447,7 @@ object TextAnalysis extends QueryModule {
     val lmBi = en.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_ab"))
     val lmCtx = en.groupBy(col("w1")).agg(count(lit(1)).as("n_a"))
     val vocab = Tables.documents(spark, dir).filter(col("lang") === "en")
-      .select(explode(split(lower(trim(col("text"))), " ")).as("w"))
+      .select(explode(tokens(col("text"))).as("w"))
       .agg(countDistinct(col("w")).cast("double").as("v"))
     docBi
       .join(lmBi, Seq("w1", "w2"), "left")
@@ -546,7 +551,7 @@ object TextAnalysis extends QueryModule {
   def qTextKeyphrase(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), posexplode(split(lower(trim(col("text"))), " ")))
+      .select(col("doc_id"), posexplode(tokens(col("text"))))
       .select(col("doc_id"), col("pos"), col("col").as("w"))
       .filter(col("w") =!= "")
       .withColumn("stop", col("w").isInCollection(stopwords))
@@ -588,7 +593,7 @@ object TextAnalysis extends QueryModule {
     * THAT at 100 TB where chunks stream straight to the retrieval indexer. */
   def qChunkOverlap(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"), split(lower(trim(col("text"))), " ").as("_toks"))
+      .select(col("doc_id"), tokens(col("text")).as("_toks"))
       .select(col("doc_id"), col("_toks"),
         explode(expr(
           """CASE WHEN size(_toks) = 0 THEN array()
@@ -615,7 +620,7 @@ object TextAnalysis extends QueryModule {
     * corpus never pairs with itself. */
   def qWinnowFingerprint(spark: SparkSession, dir: String): DataFrame = {
     val fps = Tables.documents(spark, dir)
-      .select(col("doc_id"), split(lower(trim(col("text"))), " ").as("toks"))
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
       // one winnow window needs >= 4 hashes = >= 7 tokens. The guard MUST
       // be phrased on the token count: a size(hashes) >= 4 predicate gets
       // pushed below the projection and re-inlines the whole per-4-gram
@@ -657,7 +662,7 @@ object TextAnalysis extends QueryModule {
   def qTextClassify(spark: SparkSession, dir: String): DataFrame = {
     val docTok = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
-        explode(split(lower(trim(col("text"))), " ")).as("token"))
+        explode(tokens(col("text"))).as("token"))
       .localCheckpoint(eager = false) // feeds training counts AND scoring
     val cnt = docTok.groupBy(col("lang"), col("token")).agg(count(lit(1)).as("cnt"))
     val tot = docTok.groupBy(col("lang")).agg(count(lit(1)).as("tot"))
@@ -685,35 +690,11 @@ object TextAnalysis extends QueryModule {
       .orderBy(col("true_lang"), col("pred_lang"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_text_classify"    -> (qTextClassify _),
-    "q_chunk_overlap"    -> (qChunkOverlap _),
-    "q_winnow_fingerprint" -> (qWinnowFingerprint _),
-    "q_text_keyphrase"   -> (qTextKeyphrase _),
-    "q_text_blocklist"   -> (qTextBlocklist _),
-    "q_text_readability" -> (qTextReadability _),
-    "q_text_perplexity"  -> (qTextPerplexity _),
-    "q_text_tokens"      -> (qTextTokens _),
-    "q_text_quality"     -> (qTextQuality _),
-    "q_quality_flags"    -> (qQualityFlags _),
-    "q_text_langid"       -> (qTextLangid _),
-    "q_text_langid_ngram" -> (qTextLangidNgram _),
-    "q_text_fingerprint" -> (qTextFingerprint _),
-    "q_text_repetition"  -> (qTextRepetition _),
-    "q_text_entropy"     -> (qTextEntropy _),
-    "q_text_df"          -> (qTextDf _),
-    "q_text_pii"         -> (qTextPii _),
-    "q_text_clean"       -> (qTextClean _),
-    "q_ngram_top"        -> (qNgramTop _),
-    "q_ngram_pmi"        -> (qNgramPmi _),
-    "q_text_chunk"       -> (qTextChunk _),
-  )
-
   private val stopwordsSql = stopwords.map("'" + _ + "'").mkString(",")
   private val blocklistSql = blocklist.map("'" + _ + "'").mkString(",")
 
-  val oracle: Map[String, String] = Map(
-    "q_text_classify" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_text_classify" -> (qTextClassify _,
       """WITH tok AS (
         |  SELECT doc_id, lang,
         |         UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS token
@@ -743,8 +724,8 @@ object TextAnalysis extends QueryModule {
         |SELECT lang AS true_lang, w_lang AS pred_lang,
         |       CAST(COUNT(*) AS BIGINT) AS n_docs
         |FROM pred WHERE rk = 1
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_chunk_overlap" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q_chunk_overlap" -> (qChunkOverlap _,
       """WITH t AS (
         |  SELECT doc_id, STRING_SPLIT(LOWER(TRIM(text)), ' ') AS toks FROM documents)
         |SELECT doc_id, i AS chunk_idx, i * 16 AS start_pos,
@@ -752,8 +733,8 @@ object TextAnalysis extends QueryModule {
         |       ARRAY_TO_STRING(toks[CAST(i AS INT)*16+1 : CAST(i AS INT)*16+32], ' ') AS chunk
         |FROM t, UNNEST(RANGE(0, (LEN(toks) - 1) // 16 + 1)) AS u(i)
         |WHERE LEN(toks) > 0
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-    "q_winnow_fingerprint" ->
+        |ORDER BY doc_id, chunk_idx""".stripMargin),
+    "q_winnow_fingerprint" -> (qWinnowFingerprint _,
       """WITH t AS (
         |  SELECT doc_id, STRING_SPLIT(LOWER(TRIM(text)), ' ') AS toks FROM documents),
         |h AS (
@@ -770,8 +751,8 @@ object TextAnalysis extends QueryModule {
         |  FROM h WHERE LEN(hashes) >= 4)
         |SELECT fp, CAST(COUNT(*) AS BIGINT) AS df
         |FROM w GROUP BY fp HAVING COUNT(*) >= 2
-        |ORDER BY df DESC, fp LIMIT 50""".stripMargin,
-    "q_text_keyphrase" ->
+        |ORDER BY df DESC, fp LIMIT 50""".stripMargin),
+    "q_text_keyphrase" -> (qTextKeyphrase _,
       s"""WITH toks AS (
         |  SELECT doc_id, CAST(i AS INT) - 1 AS pos, t[CAST(i AS INT)] AS w
         |  FROM (SELECT doc_id, t, UNNEST(GENERATE_SERIES(1, LEN(t))) AS i
@@ -800,8 +781,8 @@ object TextAnalysis extends QueryModule {
         |  GROUP BY m.doc_id, m.run)
         |SELECT phrase, COUNT(*) AS n_occurrences, score_ppm
         |FROM cand GROUP BY phrase, score_ppm
-        |ORDER BY score_ppm DESC, phrase LIMIT 15""".stripMargin,
-    "q_text_blocklist" ->
+        |ORDER BY score_ppm DESC, phrase LIMIT 15""".stripMargin),
+    "q_text_blocklist" -> (qTextBlocklist _,
       s"""WITH hits AS (
         |  SELECT source,
         |         LEN(list_filter(STRING_SPLIT(LOWER(TRIM(text)), ' '),
@@ -813,8 +794,8 @@ object TextAnalysis extends QueryModule {
         |       (1000000 * CAST(SUM(CASE WHEN hits > 0 THEN 1 ELSE 0 END) AS BIGINT))
         |         // COUNT(*) AS flagged_ppm
         |FROM hits GROUP BY source
-        |ORDER BY source""".stripMargin,
-    "q_text_readability" ->
+        |ORDER BY source""".stripMargin),
+    "q_text_readability" -> (qTextReadability _,
       """WITH counts AS (
         |  SELECT doc_id,
         |         LEN(regexp_extract_all(LOWER(text), '[a-z]+')) AS n_words,
@@ -829,8 +810,8 @@ object TextAnalysis extends QueryModule {
         |             + 11.8 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE)) - 15.59, 4)
         |         + 0.0 AS fk_grade
         |FROM counts WHERE n_words > 0
-        |ORDER BY doc_id""".stripMargin,
-    "q_text_perplexity" ->
+        |ORDER BY doc_id""".stripMargin),
+    "q_text_perplexity" -> (qTextPerplexity _,
       """WITH toks AS (
         |  SELECT doc_id, lang, STRING_SPLIT(LOWER(TRIM(text)), ' ') AS t
         |  FROM documents),
@@ -860,13 +841,13 @@ object TextAnalysis extends QueryModule {
         |SELECT doc_id, lang, COUNT(*) AS n_bigrams,
         |       FLOOR(CAST(SUM(bits_micro) AS DOUBLE) / COUNT(*) + 0.5) / 1000000
         |         AS avg_bits
-        |FROM scored GROUP BY doc_id, lang ORDER BY doc_id""".stripMargin,
-    "q_text_tokens" ->
+        |FROM scored GROUP BY doc_id, lang ORDER BY doc_id""".stripMargin),
+    "q_text_tokens" -> (qTextTokens _,
       """SELECT token, COUNT(*) AS n
         |FROM (SELECT UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS token
         |      FROM documents) t
-        |GROUP BY token ORDER BY n DESC, token LIMIT 50""".stripMargin,
-    "q_text_quality" ->
+        |GROUP BY token ORDER BY n DESC, token LIMIT 50""".stripMargin),
+    "q_text_quality" -> (qTextQuality _,
       s"""WITH t AS (
         |  SELECT doc_id, n_chars, text,
         |         STRING_SPLIT(LOWER(TRIM(text)), ' ') AS toks FROM documents)
@@ -878,8 +859,8 @@ object TextAnalysis extends QueryModule {
         |       ROUND(LEN(LIST_FILTER(toks, t -> t IN ($stopwordsSql)))
         |         / CAST(LEN(toks) AS DOUBLE), 4) AS stopword_ratio,
         |       ROUND(LEN(LIST_DISTINCT(toks)) / CAST(LEN(toks) AS DOUBLE), 4) AS distinct_ratio
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q_quality_flags" ->
+        |FROM t ORDER BY doc_id""".stripMargin),
+    "q_quality_flags" -> (qQualityFlags _,
       s"""WITH t AS (
         |  SELECT doc_id, UNNEST(STRING_SPLIT(LOWER(TRIM(text)), ' ')) AS tok
         |  FROM documents),
@@ -903,8 +884,8 @@ object TextAnalysis extends QueryModule {
         |  FROM per p JOIN tc ON p.doc_id = tc.doc_id)
         |SELECT *, f_len AND f_word_len AND f_stopword AND f_repetition
         |          AND f_top_token AS keep
-        |FROM f ORDER BY doc_id""".stripMargin,
-    "q_text_langid" ->
+        |FROM f ORDER BY doc_id""".stripMargin),
+    "q_text_langid" -> (qTextLangid _,
       s"""WITH t AS (
         |  SELECT lang, STRING_SPLIT(LOWER(TRIM(text)), ' ') AS toks FROM documents),
         |scored AS (
@@ -914,8 +895,8 @@ object TextAnalysis extends QueryModule {
         |              THEN 'en' ELSE 'und' END AS lang_pred
         |  FROM t)
         |SELECT lang, lang_pred, COUNT(*) AS n
-        |FROM scored GROUP BY lang, lang_pred ORDER BY lang, lang_pred""".stripMargin,
-    "q_text_langid_ngram" ->
+        |FROM scored GROUP BY lang, lang_pred ORDER BY lang, lang_pred""".stripMargin),
+    "q_text_langid_ngram" -> (qTextLangidNgram _,
       """WITH docs AS (
         |  SELECT doc_id, lang, SUBSTRING(text, 1, 200) AS head FROM documents),
         |tri AS (
@@ -941,8 +922,8 @@ object TextAnalysis extends QueryModule {
         |  SELECT d.doc_id, d.lang, COALESCE(b.profile_lang, 'und') AS lang_pred
         |  FROM docs d LEFT JOIN (SELECT doc_id, profile_lang FROM best WHERE rk = 1) b USING (doc_id))
         |SELECT lang, lang_pred, COUNT(*) AS n
-        |FROM pred GROUP BY lang, lang_pred ORDER BY lang, lang_pred""".stripMargin,
-    "q_text_repetition" ->
+        |FROM pred GROUP BY lang, lang_pred ORDER BY lang, lang_pred""".stripMargin),
+    "q_text_repetition" -> (qTextRepetition _,
       """WITH bg AS (
         |  SELECT doc_id, UNNEST(CASE WHEN LEN(toks) < 2 THEN []
         |    ELSE LIST_TRANSFORM(RANGE(1, LEN(toks)),
@@ -958,8 +939,8 @@ object TextAnalysis extends QueryModule {
         |SELECT doc_id, n_bigrams,
         |       ROUND(1.0 - n_distinct / CAST(n_bigrams AS DOUBLE), 4) AS dup_bigram_frac,
         |       ROUND(top_n / CAST(n_bigrams AS DOUBLE), 4) AS top_bigram_frac
-        |FROM agg ORDER BY doc_id""".stripMargin,
-    "q_text_entropy" ->
+        |FROM agg ORDER BY doc_id""".stripMargin),
+    "q_text_entropy" -> (qTextEntropy _,
       """WITH ch AS (
         |  SELECT doc_id, UNNEST(LIST_TRANSFORM(RANGE(1, LENGTH(text) + 1),
         |    i -> SUBSTRING(text, i, 1))) AS ch
@@ -975,8 +956,8 @@ object TextAnalysis extends QueryModule {
         |SELECT doc_id, n_chars_counted,
         |       ROUND((LN(n_chars_counted) - sum_nlogn / n_chars_counted) / LN(2.0), 4)
         |         AS entropy
-        |FROM agg ORDER BY doc_id""".stripMargin,
-    "q_text_df" ->
+        |FROM agg ORDER BY doc_id""".stripMargin),
+    "q_text_df" -> (qTextDf _,
       """WITH tok AS (
         |  SELECT doc_id, UNNEST(LIST_DISTINCT(STRING_SPLIT(LOWER(TRIM(text)), ' '))) AS token
         |  FROM documents),
@@ -985,8 +966,8 @@ object TextAnalysis extends QueryModule {
         |SELECT token, df, ROUND(df / CAST(n_docs AS DOUBLE), 4) AS df_ratio
         |FROM df CROSS JOIN total
         |WHERE df / CAST(n_docs AS DOUBLE) >= 0.3
-        |ORDER BY df DESC, token""".stripMargin,
-    "q_text_pii" ->
+        |ORDER BY df DESC, token""".stripMargin),
+    "q_text_pii" -> (qTextPii _,
       """SELECT doc_id,
         |  LEN(REGEXP_EXTRACT_ALL(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
         |  LEN(REGEXP_EXTRACT_ALL(text, '\b\d{3}-\d{3}-\d{4}\b')) AS n_phones,
@@ -995,8 +976,8 @@ object TextAnalysis extends QueryModule {
         |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
         |    '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g'),
         |    '\b(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])(\.(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])){3,}\b', '<IP>', 'g') AS redacted
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_text_clean" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    "q_text_clean" -> (qTextClean _,
       """WITH c AS (
         |  SELECT doc_id, n_chars,
         |    TRIM(REGEXP_REPLACE(
@@ -1006,8 +987,8 @@ object TextAnalysis extends QueryModule {
         |      '[ ' || CHR(9) || CHR(13) || CHR(10) || ']+', ' ', 'g')) AS cleaned
         |  FROM documents)
         |SELECT doc_id, n_chars, LENGTH(cleaned) AS clean_chars, cleaned
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q_ngram_pmi" ->
+        |FROM c ORDER BY doc_id""".stripMargin),
+    "q_ngram_pmi" -> (qNgramPmi _,
       """WITH toks AS (
         |  SELECT STRING_SPLIT(LOWER(TRIM(text)), ' ') AS t FROM documents),
         |pairs AS (
@@ -1027,8 +1008,8 @@ object TextAnalysis extends QueryModule {
         |  FROM bi JOIN lft USING (w1) JOIN rgt USING (w2) CROSS JOIN tot
         |  WHERE bi.n_ab >= 20)
         |SELECT w1, w2, n_ab, FLOOR(pmi_raw * 1000000 + 0.5) / 1000000 AS pmi
-        |FROM scored ORDER BY pmi_raw DESC, w1, w2 LIMIT 40""".stripMargin,
-    "q_ngram_top" ->
+        |FROM scored ORDER BY pmi_raw DESC, w1, w2 LIMIT 40""".stripMargin),
+    "q_ngram_top" -> (qNgramTop _,
       """WITH bg AS (
         |  SELECT doc_id, UNNEST(CASE WHEN LEN(toks) < 2 THEN []
         |    ELSE LIST_TRANSFORM(RANGE(1, LEN(toks)),
@@ -1036,16 +1017,16 @@ object TextAnalysis extends QueryModule {
         |  FROM (SELECT doc_id, STRING_SPLIT(LOWER(TRIM(text)), ' ') AS toks
         |        FROM documents) t)
         |SELECT bigram, COUNT(*) AS n, COUNT(DISTINCT doc_id) AS df
-        |FROM bg GROUP BY bigram ORDER BY n DESC, bigram LIMIT 40""".stripMargin,
-    "q_text_chunk" ->
+        |FROM bg GROUP BY bigram ORDER BY n DESC, bigram LIMIT 40""".stripMargin),
+    "q_text_chunk" -> (qTextChunk _,
       """WITH t AS (
         |  SELECT doc_id, STRING_SPLIT(LOWER(TRIM(text)), ' ') AS toks FROM documents)
         |SELECT doc_id, i AS chunk_idx,
         |       LEN(toks[i*32+1 : i*32+32]) AS n_tokens,
         |       ARRAY_TO_STRING(toks[i*32+1 : i*32+32], ' ') AS chunk
         |FROM t, UNNEST(RANGE(0, CAST(CEIL(LEN(toks) / 32.0) AS BIGINT))) AS u(i)
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-    "q_text_fingerprint" ->
+        |ORDER BY doc_id, chunk_idx""".stripMargin),
+    "q_text_fingerprint" -> (qTextFingerprint _,
       """SELECT doc_id,
         |       LIST_REDUCE(
         |         LIST_PREPEND(CAST(0 AS BIGINT),
@@ -1053,6 +1034,6 @@ object TextAnalysis extends QueryModule {
         |             t -> CAST(LENGTH(t) +
         |                  CASE WHEN t = '' THEN 0 ELSE UNICODE(t) END AS BIGINT))),
         |         (acc, v) -> (acc * 31 + v) % 1000000007) AS fingerprint
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
   )
 }

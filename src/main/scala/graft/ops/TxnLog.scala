@@ -91,21 +91,22 @@ object TxnLog {
   /** Atomically claim `version` with the given live-file list. Returns
     * false if another writer already committed that version (the
     * put-if-absent race loss). */
-  private def tryCommit(path: String, version: Long, live: Seq[String]): Boolean = {
+  private[graft] def tryCommit(path: String, version: Long, live: Seq[String]): Boolean = {
     java.nio.file.Files.createDirectories(logDir(path))
     val tmp = java.nio.file.Files.createTempFile(logDir(path), s"v$version", ".tmp")
     java.nio.file.Files.writeString(tmp, live.mkString("\n"))
-    // claim the version name with a move that fails if the target exists
-    // (Files.move without REPLACE_EXISTING — the put-if-absent / atomic
-    // conditional-PUT primitive a real table format runs on)
+    // claim the version name with a hard link, which fails if the target
+    // exists (link(2) is the put-if-absent / atomic conditional-PUT
+    // primitive a real table format runs on). Files.move without
+    // REPLACE_EXISTING is not: it checks for the target, then rename(2)
+    // replaces it, so two racing writers could both claim one version.
     try {
-      java.nio.file.Files.move(tmp, vFile(path, version))
+      java.nio.file.Files.createLink(vFile(path, version), tmp)
       if (version % CheckpointInterval == 0L) advanceCheckpoint(path, version)
       true
     } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmp); false
-    }
+      case _: java.nio.file.FileAlreadyExistsException => false
+    } finally java.nio.file.Files.deleteIfExists(tmp): Unit
   }
 
   private val writeSeq = new java.util.concurrent.atomic.AtomicLong(0L)

@@ -485,29 +485,8 @@ object Windows extends QueryModule {
       .orderBy(col("pc"), col("p_partkey"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_skyline"        -> (qSkyline _),
-    "q_win_slope"      -> (qWinSlope _),
-    "q_rolling_corr"   -> (qRollingCorr _),
-    "q_win_rank"       -> (qWinRank _),
-    "q_win_dist"       -> (qWinDist _),
-    "q_win_lag"        -> (qWinLag _),
-    "q_win_cumsum"     -> (qWinCumsum _),
-    "q_win_movavg"     -> (qWinMovavg _),
-    "q_win_range"      -> (qWinRange _),
-    "q_win_share"      -> (qWinShare _),
-    "q_win_latest"     -> (qWinLatest _),
-    "q_win_ntile"      -> (qWinNtile _),
-    "q_win_first_last" -> (qWinFirstLast _),
-    "q_win_count_distinct" -> (qWinCountDistinct _),
-    "q_win_median"     -> (qWinMedian _),
-    "q_ewma"           -> (qEwma _),
-    "q_topk_per_group" -> (qTopkPerGroup _),
-    "q_topk_per_group_native" -> (qTopkPerGroupNative _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q_skyline" ->
+  val registry: Map[String, (Query, String)] = Map(
+    "q_skyline" -> (qSkyline _,
       """WITH p AS (
         |  SELECT p_partkey, CAST(ROUND(p_retailprice * 100) AS BIGINT) AS pc,
         |         CAST(p_size AS BIGINT) AS sz
@@ -520,8 +499,8 @@ object Windows extends QueryModule {
         |SELECT p.p_partkey, p.pc, p.sz
         |FROM p JOIN prof ON p.pc = prof.pc
         |WHERE p.sz = prof.bs AND (prof.pm IS NULL OR p.sz > prof.pm)
-        |ORDER BY p.pc, p.p_partkey""".stripMargin,
-    "q_rolling_corr" ->
+        |ORDER BY p.pc, p.p_partkey""".stripMargin),
+    "q_rolling_corr" -> (qRollingCorr _,
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS d,
         |         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS y
@@ -549,8 +528,8 @@ object Windows extends QueryModule {
         |       ROUND(CAST(n * sab - sa * sb AS DOUBLE)
         |             / (SQRT(CAST(va AS DOUBLE)) * SQRT(CAST(vb AS DOUBLE))), 6) AS corr14
         |FROM v WHERE va > 0 AND vb > 0
-        |ORDER BY d""".stripMargin,
-    "q_win_slope" ->
+        |ORDER BY d""".stripMargin),
+    "q_win_slope" -> (qWinSlope _,
       """WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS d,
         |         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS y
@@ -572,8 +551,8 @@ object Windows extends QueryModule {
         |       CAST(n * sxy - sx * sy AS DOUBLE)
         |         / CAST((n * sxx - sx * sx) * 100 AS DOUBLE) AS slope
         |FROM f WHERE n = 7
-        |ORDER BY event_type, d""".stripMargin,
-    "q_win_median" ->
+        |ORDER BY event_type, d""".stripMargin),
+    "q_win_median" -> (qWinMedian _,
       """WITH t AS (
         |  SELECT user_id, event_id,
         |         LIST_SORT(ARRAY_AGG(value) OVER (PARTITION BY user_id
@@ -582,8 +561,8 @@ object Windows extends QueryModule {
         |  FROM events)
         |SELECT user_id, event_id,
         |       ROUND(arr[CAST((LEN(arr) + 1) // 2 AS INT)], 4) AS rolling_median
-        |FROM t ORDER BY user_id, event_id""".stripMargin,
-    "q_ewma" ->
+        |FROM t ORDER BY user_id, event_id""".stripMargin),
+    "q_ewma" -> (qEwma _,
       """WITH t AS (
         |  SELECT user_id, event_id,
         |         ARRAY_AGG(CAST(ROUND(value * 100) AS BIGINT)) OVER (
@@ -594,8 +573,8 @@ object Windows extends QueryModule {
         |       LIST_SUM(LIST_TRANSFORM(arr,
         |         (x, i) -> CAST(x AS DOUBLE) * POW(2.0, -(LEN(arr) - i + 1))))
         |         / 100.0 AS ewma
-        |FROM t ORDER BY user_id, event_id""".stripMargin,
-    "q_win_count_distinct" ->
+        |FROM t ORDER BY user_id, event_id""".stripMargin),
+    "q_win_count_distinct" -> (qWinCountDistinct _,
       """WITH marked AS (
         |  SELECT event_id, event_type, ts,
         |         CASE WHEN ROW_NUMBER() OVER (PARTITION BY event_type, user_id
@@ -605,8 +584,8 @@ object Windows extends QueryModule {
         |SELECT event_id, event_type,
         |       CAST(SUM(is_first) OVER (PARTITION BY event_type ORDER BY epoch_us(ts), event_id)
         |            AS BIGINT) AS distinct_users_so_far
-        |FROM marked ORDER BY event_type, event_id""".stripMargin,
-    "q_win_first_last" ->
+        |FROM marked ORDER BY event_type, event_id""".stripMargin),
+    "q_win_first_last" -> (qWinFirstLast _,
       """SELECT DISTINCT c_mktsegment,
         |  FIRST_VALUE(o_orderkey) OVER w AS first_order,
         |  LAST_VALUE(o_orderkey) OVER w AS last_order,
@@ -616,39 +595,39 @@ object Windows extends QueryModule {
         |WINDOW w AS (PARTITION BY c_mktsegment
         |             ORDER BY o_orderdate, o_orderkey
         |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY c_mktsegment""".stripMargin,
-    "q_win_rank" ->
+        |ORDER BY c_mktsegment""".stripMargin),
+    "q_win_rank" -> (qWinRank _,
       """SELECT event_type, event_id, ROUND(value, 4) AS value, rn, rnk, drnk
         |FROM (SELECT event_type, event_id, value,
         |        ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS rn,
         |        RANK() OVER (PARTITION BY event_type ORDER BY value DESC) AS rnk,
         |        DENSE_RANK() OVER (PARTITION BY event_type ORDER BY value DESC) AS drnk
         |      FROM events) t
-        |WHERE rn <= 100 ORDER BY event_type, rn""".stripMargin,
-    "q_win_dist" ->
+        |WHERE rn <= 100 ORDER BY event_type, rn""".stripMargin),
+    "q_win_dist" -> (qWinDist _,
       """SELECT event_type, event_id, pct_rank, cume, rn
         |FROM (SELECT event_type, event_id,
         |        ROUND(PERCENT_RANK() OVER (PARTITION BY event_type ORDER BY value), 6) AS pct_rank,
         |        ROUND(CUME_DIST() OVER (PARTITION BY event_type ORDER BY value), 6) AS cume,
         |        ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn
         |      FROM events) t
-        |WHERE rn <= 100 ORDER BY event_type, rn""".stripMargin,
-    "q_win_lag" ->
+        |WHERE rn <= 100 ORDER BY event_type, rn""".stripMargin),
+    "q_win_lag" -> (qWinLag _,
       """SELECT user_id, event_id,
         |       ROUND(value - COALESCE(LAG(value, 1) OVER
         |         (PARTITION BY user_id ORDER BY epoch_us(ts), event_id), 0.0), 4) AS delta
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "q_win_cumsum" ->
+        |FROM events ORDER BY user_id, event_id""".stripMargin),
+    "q_win_cumsum" -> (qWinCumsum _,
       """SELECT user_id, event_id,
         |       ROUND(SUM(value) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
         |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_total
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "q_win_movavg" ->
+        |FROM events ORDER BY user_id, event_id""".stripMargin),
+    "q_win_movavg" -> (qWinMovavg _,
       """SELECT user_id, event_id,
         |       ROUND(AVG(value) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
         |         ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 4) AS movavg7
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "q_win_share" ->
+        |FROM events ORDER BY user_id, event_id""".stripMargin),
+    "q_win_share" -> (qWinShare _,
       """WITH g AS (
         |  SELECT l_returnflag, l_linestatus,
         |         SUM(CAST(CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS DECIMAL(38,0))) AS sp
@@ -662,8 +641,8 @@ object Windows extends QueryModule {
         |       CAST(sp AS DOUBLE) / 100.0 AS revenue,
         |       ROUND(CAST(sp AS DOUBLE) / CAST(flag_total AS DOUBLE), 6) AS share_flag,
         |       ROUND(CAST(sp AS DOUBLE) / CAST(grand_total AS DOUBLE), 6) AS share_total
-        |FROM w ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_win_range" ->
+        |FROM w ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    "q_win_range" -> (qWinRange _,
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS tus,
         |         CAST(ROUND(value * 100) AS BIGINT) AS vc
@@ -674,30 +653,30 @@ object Windows extends QueryModule {
         |FROM e
         |WINDOW w AS (PARTITION BY user_id ORDER BY tus
         |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_win_latest" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    "q_win_latest" -> (qWinLatest _,
       """SELECT user_id, event_id, event_type, ROUND(value, 4) AS value
         |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
         |        ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn FROM events) t
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "q_win_ntile" ->
+        |WHERE rn = 1 ORDER BY user_id""".stripMargin),
+    "q_win_ntile" -> (qWinNtile _,
       """SELECT c_mktsegment, c_custkey,
         |       NTILE(4) OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey) AS quartile,
         |       ROUND(PERCENT_RANK() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey), 6) AS pct_rank
-        |FROM customer ORDER BY c_mktsegment, c_custkey""".stripMargin,
-    "q_topk_per_group" ->
+        |FROM customer ORDER BY c_mktsegment, c_custkey""".stripMargin),
+    "q_topk_per_group" -> (qTopkPerGroup _,
       """SELECT c_nationkey, rn, c_custkey, c_acctbal
         |FROM (SELECT c_nationkey, c_custkey, c_acctbal,
         |        ROW_NUMBER() OVER (PARTITION BY c_nationkey
         |          ORDER BY c_acctbal DESC, c_custkey) AS rn
         |      FROM customer) t
-        |WHERE rn <= 3 ORDER BY c_nationkey, rn""".stripMargin,
-    "q_topk_per_group_native" ->
+        |WHERE rn <= 3 ORDER BY c_nationkey, rn""".stripMargin),
+    "q_topk_per_group_native" -> (qTopkPerGroupNative _,
       """SELECT c_nationkey, CAST(rn AS BIGINT) AS rn, c_custkey, c_acctbal
         |FROM (SELECT c_nationkey, c_custkey, c_acctbal,
         |        ROW_NUMBER() OVER (PARTITION BY c_nationkey
         |          ORDER BY c_acctbal DESC, c_custkey) AS rn
         |      FROM customer) t
-        |WHERE rn <= 3 ORDER BY c_nationkey, rn""".stripMargin,
+        |WHERE rn <= 3 ORDER BY c_nationkey, rn""".stripMargin),
   )
 }

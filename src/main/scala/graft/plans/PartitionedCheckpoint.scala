@@ -28,14 +28,9 @@ object PartitionedCheckpoint {
 
   /** Hash-place `df` on `key` into `numParts` partitions, sort each
     * partition by `key`, localCheckpoint, and return a DataFrame that
-    * remembers all of it. Lazy by default like
-    * `localCheckpoint(eager = false)`: materialized by the first action,
-    * cached MEMORY_AND_DISK. `eager = true` materializes NOW — the mode an
-    * iterative loop needs when it unpersists the superseded round via
-    * [[InternalDataFrames.unpersistCheckpoint]] (a lazy checkpoint cannot
-    * be dropped before something forces it, and a dropped local checkpoint
-    * is unrecoverable: lineage is already truncated). `level` overrides the
-    * cache storage: corpus-sized checkpoints that must coexist with
+    * remembers all of it. Lazy like `localCheckpoint(eager = false)`:
+    * materialized by the first action, cached MEMORY_AND_DISK. `level`
+    * overrides the cache storage: corpus-sized checkpoints that must coexist with
     * memory-hungry downstream stages belong in MEMORY_AND_DISK_SER (a
     * 24M-row edge table caches ~5× smaller serialized than as row
     * objects, and serialized blocks are evictable under execution
@@ -43,7 +38,6 @@ object PartitionedCheckpoint {
     * q_triangle sf1.0 lesson). localCheckpoint always forces useDisk so
     * truncated lineage stays recoverable after eviction. */
   def byKey(df: DataFrame, key: String, numParts: Int,
-      eager: Boolean = false,
       level: org.apache.spark.storage.StorageLevel =
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
     val spark = df.sparkSession
@@ -59,7 +53,6 @@ object PartitionedCheckpoint {
     // keeps the truncated lineage recoverable after eviction)
     rdd.persist(level)
     rdd.localCheckpoint()
-    if (eager) rdd.count(): Unit
     InternalDataFrames.ofPartitioned(spark, attrs, rdd,
       HashPartitioning(Seq(keyAttr), numParts),
       Seq(SortOrder(keyAttr, Ascending)))

@@ -40,9 +40,9 @@ object Streams {
     events
       .withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), "5 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
+      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("sum_value"))
       .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"))
+        col("w.end").as("session_end"), col("n_events"), col("sum_value"))
 
   /** Watermarked per-(hour, type) counts — the aggregation half of the
     * trending-top-k leaderboard ([[graft.ops.StreamingShaped.qStreamTopk]]

@@ -69,6 +69,21 @@ class TxnLogSpec extends SparkSpec {
     assert(head.count() == evs.count(), "no append may be lost or doubled")
   }
 
+  test("two writers racing for one version: exactly one claims it") {
+    val path = freshPath("txn_claim")
+    val contested = (1L to 500L).count { v =>
+      val wins = new java.util.concurrent.atomic.AtomicInteger()
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val writers = Seq("a", "b").map(w => new Thread(() => {
+        start.await()
+        if (TxnLog.tryCommit(path, v, Seq(s"$w$v"))) wins.incrementAndGet(): Unit
+      }))
+      writers.foreach(_.start()); writers.foreach(_.join())
+      wins.get() != 1
+    }
+    assert(contested == 0, s"$contested of 500 versions were claimed by both writers or by neither")
+  }
+
   test("vacuum deletes only superseded files; retained snapshots read intact") {
     val path = freshPath("txn_vacuum")
     TxnLog.init(evs.filter(col("event_id") % 5 =!= 0), path, nFiles = 4)

@@ -7,19 +7,15 @@ import java.nio.file.{Files, Paths}
   * `{"metric":"total","value":N,"unit":"sec","queries":{"name":sec,…},
   * "sf":…,"total_sec":N,"n":…,"n_errors":…,"errors":[…≤8…]}` — the FULL
   * per-query map, printed as the ABSOLUTE LAST stdout act (after
-  * spark.stop(), log level ERROR, flushed). History of the three
-  * "parsed": null rounds and why this shape: r08/r09 printed the map and
-  * parsed null; r09's ask shrank the line to totals-only (<200 bytes,
-  * provably complete inside the driver's recorded 2000-byte tail) and r10
-  * STILL parsed null — so truncation was never the cause. What every
-  * failed round shared: sbt's LoggedOutput prefixed the line with
-  * "[info] " (not valid JSON) and sbt's "[success] Total time…" banner
-  * landed after it. build.sbt now passes forked stdout through verbatim
-  * (StdoutOutput) and suppresses the banner (showSuccess := false), and
-  * the per-query map — which the driver's round-over-round differ and
-  * scaling table need — is restored. Every per-query number (both timing
-  * samples, GC-time and codegen-compile deltas, JVM counters, the optional concurrent pass)
-  * ALSO goes to `bench_full.json` plus a core-count-stamped copy
+  * spark.stop(), log level ERROR, flushed). Line length is not what
+  * breaks the parse: a totals-only line of under 200 bytes parsed null
+  * too. Under sbt, LoggedOutput prefixes the line with "[info] " (not
+  * valid JSON) and the "[success] Total time…" banner lands after it, so
+  * build.sbt passes forked stdout through verbatim (StdoutOutput) and
+  * suppresses the banner (showSuccess := false). Every per-query number
+  * (both timing samples, GC-time and codegen-compile deltas, JVM
+  * counters, the optional concurrent pass) ALSO goes to
+  * `bench_full.json` plus a core-count-stamped copy
   * (`bench_full_c<cpus>.json`), so the driver's 8-core rerun can no
   * longer clobber its 32-core per-query data.
   *
@@ -37,8 +33,7 @@ import java.nio.file.{Files, Paths}
 object Bench {
 
   /** Sum of collection time across all GC beans, ms. Deltas around a query
-    * attribute shared-JVM drift (the round-2 bench mystery) to GC rather
-    * than to the query's plan. */
+    * attribute shared-JVM drift to GC rather than to the query's plan. */
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
     ManagementFactory.getGarbageCollectorMXBeans.asScala
@@ -106,7 +101,7 @@ object Bench {
       extraConf = Map("spark.scheduler.mode" -> "FAIR"))
     // ERROR, not WARN: the driver's stdout capture is a bounded tail, and
     // benign per-query WARNs (WindowExec on audited vocabulary-bounded
-    // frames, see SURVEY §6.4) flooded the r10 tails with thousands of
+    // frames, see SURVEY §6.4) flood the tail with thousands of
     // lines. The contract line must be the last thing stdout sees.
     spark.sparkContext.setLogLevel("ERROR")
     // noop sink: forces full evaluation of every column (count() would let
@@ -211,9 +206,9 @@ object Bench {
       Paths.get(if (only.isEmpty) "bench_full.json" else "bench_only.json"), full)
     // Core-count-stamped copy (full runs only): the driver benches the same
     // tree at 32 and then 8 cores, and the second run used to overwrite the
-    // first's per-query data in bench_full.json — the r10 scaling-evidence
-    // loss. SPARK_GRAFT_BENCH_OUT additionally names an arbitrary durable
-    // path (round-stamped baseline/final copies) the driver never touches.
+    // first's per-query data in bench_full.json. SPARK_GRAFT_BENCH_OUT
+    // additionally names an arbitrary durable path (baseline/final copies)
+    // the driver never touches.
     if (only.isEmpty)
       Files.writeString(Paths.get(s"bench_full_c$cpus.json"), full)
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { out =>

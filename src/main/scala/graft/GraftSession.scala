@@ -100,7 +100,7 @@ object GraftSession {
     b.getOrCreate()
   }
 
-  /** The local entry-point shape Verify/Bench/Profile/Explain share: every
+  /** The local entry-point shape Verify/Bench/Explain share: every
     * session conf lives in [[build]], so a new shared conf is a one-line
     * change instead of an edit to six hand-rolled builders. */
   def buildLocal(cpus: String, appName: String,

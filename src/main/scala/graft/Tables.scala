@@ -38,8 +38,8 @@ object Tables {
     *     (2001–2096, i.e. [1e18, 3e18)) raises at execution instead of
     *     silently converting — if a future regeneration ships ts as plain
     *     epoch-micros BIGINT, every value would otherwise be divided 1000×
-    *     off with a green-looking load (the same silent-drift class as the
-    *     round-4 ts-encoding incident). The guard is a per-row codegen'd
+    *     off with a green-looking load (a ts-encoding change once failed
+    *     49 keys behind a green-looking gate). The guard is a per-row codegen'd
     *     comparison, not a driver-side job, so the loader stays lazy.
     *   - TIMESTAMP_NTZ: cast to TimestampType; the session timezone is
     *     pinned to UTC so the instant matches what DuckDB reads.

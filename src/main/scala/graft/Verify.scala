@@ -35,7 +35,7 @@ object Verify {
       }
     }
     // A failed query writes no result dir, so the driver's compare simply
-    // omits it — round 4 lost 49 keys to a testdata encoding change with a
+    // omits it — a testdata encoding change once dropped 49 keys behind a
     // GREEN-looking gate. Make the drop loud: a summary line on stderr plus
     // a machine-readable artifact next to the results.
     System.err.println(

@@ -63,7 +63,9 @@ object CovidShape {
     * `_corrupt_record IS NULL`: clean rows flow on, bad rows go to the
     * dead-letter sink with their original text intact for replay — the
     * ingest contract a 100 TB daily drop needs, where one mangled row must
-    * cost one row, not the job. */
+    * cost one row, not the job. No key or pipeline reads through it yet;
+    * it stays as the engine's path for malformed input, which CovidShapeSpec
+    * pins. */
   def readCsvQuarantine(spark: SparkSession, path: String,
       schema: StructType): DataFrame =
     spark.read
@@ -84,24 +86,6 @@ object CovidShape {
     * multiLine handles a top-level JSON array, as the REST API returns. */
   def readJson(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", "true").json(path)
-
-  /** JSON-lines ingest with the same dead-letter contract as
-    * [[readCsvQuarantine]] — the feed format API dumps and log shippers
-    * actually deliver at scale (one record per line, so the file splits
-    * across tasks; the multiLine array form above cannot). A line that is
-    * not valid JSON, or whose values cannot convert to the declared
-    * schema, lands whole in `_corrupt_record` for replay; clean lines
-    * flow on typed. Same cache() note as the CSV path: a plan referencing
-    * only the corrupt-record column of a raw scan is refused, and an
-    * ingest step reads once to write twice anyway. */
-  def readJsonlQuarantine(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    spark.read
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .schema(schema.add("_corrupt_record", "string"))
-      .json(path)
-      .cache()
 
   /** R3: pd.json_normalize — flatten arbitrarily nested structs into flat
     * dot-named columns, derived from the schema (works for any nesting
@@ -169,23 +153,16 @@ object CovidShape {
 
   /** R8: CSV row serialization (reference dags/create-data-lake.py:53-56 —
     * to_csv into the COPY buffer). Header off to match; the quote/escape
-    * handling the reference's sep="," COPY corrupts is correct here. */
+    * handling the reference's sep="," COPY corrupts is correct here. Only
+    * CovidShapeSpec calls it; it stays as the reference's R8 sink. */
   def loadReplaceCsv(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite)
       .option("header", "false")
       .csv(path)
 
-  /** ORC round-trip — the second columnar lake format Spark ships natively
-    * (orc-core is on every Spark classpath; no extra dependency). Same
-    * predicate-pushdown / column-pruning / min-max-stats story as parquet,
-    * so a lake standardized on ORC (common in Hive-lineage shops) runs the
-    * same plans. */
-  def loadReplaceOrc(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(path)
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
+  /** R9 over JDBC: the literal-Postgres replace-load, truncating instead of
+    * dropping the table. Only CovidShapeSpec calls it, against embedded
+    * Derby; it stays as the reference's R9 sink. */
   def loadReplaceJdbc(df: DataFrame, url: String, table: String,
       user: String, password: String): Unit =
     df.write.format("jdbc")

@@ -439,7 +439,7 @@ object Aggregations extends QueryModule {
   def qWinsorize(spark: SparkSession, dir: String): DataFrame = {
     // checkpointed: the chunked-rank bounds pass (chunk table + rank join)
     // and the final clamp join each consume this frame — uncheckpointed the
-    // events scan was planted 3× (round-10 plan)
+    // events scan was planted 3× in the plan
     val cents = Tables.events(spark, dir)
       .select(col("event_type"), col("event_id"),
         expr("CAST(round(value * 100) AS BIGINT)").as("c"))

@@ -34,7 +34,7 @@ object Behavior extends QueryModule {
     * in both engines), rounded to 6 dp. */
   def qBasketLift(spark: SparkSession, dir: String): DataFrame = {
     // checkpointed: four consumers (basket census, item counts, both pair
-    // sides) re-derived the scan+distinct otherwise — round-10 plan showed
+    // sides) re-derived the scan+distinct otherwise — the plan showed
     // 5 lineitem scans for this one key
     val items = Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
@@ -248,8 +248,8 @@ object Behavior extends QueryModule {
   /** Week-over-week revenue growth — the BI trendline: weekly revenue in
     * exact cents, previous week via lag, growth in integer ppm. Both
     * engines' integral division TRUNCATES toward zero (Spark `div` ≡
-    * DuckDB `//` — verified empirically on negatives this round,
-    * correcting an earlier repo assumption that `//` floors), so plain
+    * DuckDB `//` — verified empirically on negatives; `//` does not
+    * floor), so plain
     * `div` is the portable form even for NEGATIVE growth weeks. Weeks
     * with no prior week report NULL growth in both engines.
     *

@@ -120,14 +120,14 @@ object Dedup extends QueryModule {
     * table. */
   def nearDupPairsRaw(docs: DataFrame): DataFrame = {
     val sh = shingleTable(docs).localCheckpoint(eager = false)
-    // postings deliberately NOT checkpointed (r11 A/B): both self-join
+    // postings deliberately NOT checkpointed (an A/B): both self-join
     // sides replay the df rollup + stop-shingle join from the shingle
     // cache, but the two replays run as parallel sibling branches and
     // measured CHEAPER than materializing the postings frame — isolated
     // min-of-6 at sf0.1: q_dedup_near flat (2.26 → 2.22 s) while the
     // downstream consumers regressed (q_dedup_survivors 2.18 → 2.50 s,
     // q_corpus_filter 2.12 → 2.30 s) under the extra block-manager
-    // traffic. Same verdict class as the r10 q_join_interval rejection.
+    // traffic. Same verdict as q_join_interval's self-join sides.
     val postings = rarePostings(sh)
     val a = postings.select(col("shingle"), col("doc_id").as("d1"))
     val b = postings.select(col("shingle"), col("doc_id").as("d2"))
@@ -160,7 +160,7 @@ object Dedup extends QueryModule {
     * set; equality to the exact tier is additionally asserted in tests. */
   /** 24-band × 2-row MinHash signature table (doc_id, band, key) over a
     * shingle table — the unit the LSH tier buckets on AND the record a
-    * durable band index persists (see [[MinhashIndex]]).
+    * durable band index persists.
     *
     * 48 min-hashes as 48 aggregate columns over the posting table: ONE
     * codegen'd pass with map-side partial aggregation (a 48-seed row
@@ -258,8 +258,8 @@ object Dedup extends QueryModule {
     * density, which in dense corpora still touches every posting list the
     * batch shares a shingle with; the band index caps probe fanout at
     * 24 bands × bucket occupancy, the LSH guarantee — this is the ingest
-    * path a production pipeline keeps hot, with [[MinhashIndex]] as the
-    * durable form of the corpus side (same derivation, spec-pinned).
+    * path a production pipeline keeps hot, with the band index as the
+    * durable form of the corpus side.
     * Output contract matches qDedupIncremental: each new doc's best match
     * (max Jaccard ≥ threshold, tie-broken by oldest id), exact-verified —
     * banding only prunes candidates, never admits below-threshold pairs. */
@@ -525,7 +525,7 @@ object Dedup extends QueryModule {
     * ⌈t·nᵢ⌉ ≤ o. So counting join rows per pair and keeping cnt ≥ K loses
     * no true pair (asserted against brute force in LlmOpsSpec, and the
     * unchanged 1-prefix DuckDB oracle is the independent completeness
-    * gate). Chosen by measurement at sf0.1 (round 10): the regenerated
+    * gate). Chosen by measurement at sf0.1: the regenerated
     * corpus draws every document from one small vocabulary, so the
     * 1-prefix filter passed 667,400 candidates for 256 true pairs —
     * 2,600:1 false positives, 14.8 s total, nearly all in the verify
@@ -553,7 +553,7 @@ object Dedup extends QueryModule {
     val K = PrefixExt
     // checkpointed: BOTH sides of the candidate self-join consume the
     // prefix table, and Catalyst has no cross-branch reuse — uncheckpointed
-    // the (dfreq ⋈ sizes ⋈ window) derivation ran twice (round-10 plan)
+    // the (dfreq ⋈ sizes ⋈ window) derivation ran twice in the plan
     val prefix = toks.join(dfreq, "token").join(sizes, "doc_id")
       .withColumn("rn", row_number().over(w))
       // K-extended prefix: n − ceil(0.8·n) + K; ceil(8n/10) = (8n+9) div 10
@@ -976,8 +976,8 @@ object Dedup extends QueryModule {
     * match fraction of the 32 minima is an unbiased Jaccard estimate —
     * computed WITHOUT touching the corpus again. Everything — minima,
     * set sizes, AND the exact tier — derives from ONE corpus-sized
-    * exchange: `groupBy(shingle).agg(array_sort(collect_set(source)))`
-    * (the round-10 replan); per-source minima and sizes come from an
+    * exchange: `groupBy(shingle).agg(array_sort(collect_set(source)))`;
+    * per-source minima and sizes come from an
     * exploded rollup of that vocabulary-sized table, and the exact
     * pairwise intersection census from PAIR ARITHMETIC over each
     * shingle's sorted source set (|srcs| ≤ |sources|, a small constant).
@@ -997,8 +997,8 @@ object Dedup extends QueryModule {
         """CASE WHEN size(toks) < 3 THEN array()
           |ELSE transform(sequence(0, size(toks) - 3), i -> concat_ws(' ', slice(toks, i + 1, 3)))
           |END""".stripMargin)).as("shingle"))
-    // ONE corpus-sized exchange for the whole key (round-10 replan; the
-    // former chain paid five — distinct membership, distinct vocabulary,
+    // ONE corpus-sized exchange for the whole key (a chain of separate
+    // steps would pay five — distinct membership, distinct vocabulary,
     // a membership⋈hashes join, the per-source rollup, and an exact
     // membership self-join): group the raw shingle stream by shingle with
     // a collect_set of sources — map-side partials dedup BEFORE the

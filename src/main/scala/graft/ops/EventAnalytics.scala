@@ -547,8 +547,7 @@ object EventAnalytics extends QueryModule {
     * plain aggregates, and the mean stays exact: per-row micro BIGINT sum,
     * one integer division at the end. Scale shape: the window partitions
     * by (event_type, DAY), so a partition is one day of one type — bounded
-    * regardless of corpus size (the chunked-window convention from the
-    * round-3 re-plans), and the final agg rides the same exchange. */
+    * regardless of corpus size (the chunked-window convention), and the final agg rides the same exchange. */
   def qOhlc(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e = Tables.events(spark, dir)

@@ -221,8 +221,8 @@ object Functions extends QueryModule {
         expr("element_at(transform_values(m, (k, v) -> upper(v)), 'type')").as("type_upper"))
 
   /** Morton (Z-order) clustering key over two dimensions — the integer
-    * arithmetic behind [[Scale.zorderBy]]'s multi-dimensional data-skipping
-    * layout, exposed as a query so the oracle pins the bit interleave
+    * arithmetic of a multi-dimensional data-skipping layout
+    * (`OPTIMIZE ZORDER BY`), exposed as a query so the oracle pins the bit interleave
     * exactly (4 mask-shift dilation steps per dimension, bit i of x at
     * position 2i, bit i of y at 2i+1 — see Scale.spread16). Distinct
     * (x, y) pairs so the output is a set; z is a total recluster key. */
@@ -247,12 +247,11 @@ object Functions extends QueryModule {
     * verifying the variant round-trip preserves exactly the source
     * semantics.
     *
-    * Perf note (round 8): the original tour built the document as
-    * `to_json(struct(...))` then `parse_json`ed that string — a per-row
-    * serialize+reparse that made this the slowest scalar-function key
-    * (4.5 s isolated at sf0.1). Constructing the variant binary straight
-    * from the struct removes both text passes for the same output
-    * (to_json omits null fields where to_variant_object keeps variant
+    * Perf note: building the document as `to_json(struct(...))` and then
+    * `parse_json`ing that string is a per-row serialize+reparse that made
+    * this the slowest scalar-function key (4.5 s isolated at sf0.1).
+    * Constructing the variant binary straight from the struct removes both
+    * text passes for the same output (to_json omits null fields where to_variant_object keeps variant
     * nulls, but every extracted path NULLs identically either way). The
     * remaining cost was scan parallelism, not the expressions: the events
     * table is a single parquet row group, so the whole 6-path extraction

@@ -61,8 +61,8 @@ object Graph extends QueryModule {
     * broadcast build itself is the failure: 2.4M keys (~40 MB hashed)
     * at sf0.1 are comfortable, but the sf1.0 probe's 24M keys failed
     * the broadcast build outright in the 8 GiB driver — the cliff this
-    * constant exists to step over (caught by the round-7 sf1.0 sweep,
-    * not in production). */
+    * constant exists to step over (caught by an sf1.0 sweep, not in
+    * production). */
   private[graft] val BroadcastEdgeLimit = 8L * 1000 * 1000
 
   /** Wedge-closing semi kill against the packed edge-key set, adaptive
@@ -78,8 +78,7 @@ object Graph extends QueryModule {
     * can only match a key in its own chunk, so the union of the C
     * disjoint branches is the exact answer.
     *
-    * Why chunked-broadcast and not one big exact join (the round-7
-    * shape): the post-bloom SORT-MERGE semi join sorted both the
+    * Why chunked-broadcast and not one big exact join: the post-bloom SORT-MERGE semi join sorted both the
     * survivor stream and the full |E| key set next to the cached edge
     * checkpoints — at sf1.0 that sort OOM'd the default 8 GiB heap
     * (and a shuffle-hash build partition is the next allocation to
@@ -164,7 +163,7 @@ object Graph extends QueryModule {
     // iteration then runs exactly one join + one aggregation instead of two
     // joins (measured ~1/3 of the per-iteration time at sf0.1). The e0
     // double-plant below (degree rollup + join probe, no cross-branch
-    // reuse) was A/B'd in round 11 and KEPT: localCheckpoint(eager=false)
+    // reuse) was A/B'd and KEPT: localCheckpoint(eager=false)
     // on e0 measured 3.30 s vs 3.11 s (the second build is cheaper than
     // a corpus-sized materialization here), and folding the degree via
     // count().over(Window.partitionBy(src)) measured 3.64 s (the window
@@ -246,7 +245,7 @@ object Graph extends QueryModule {
     // submission builds FRESH edge/oriented checkpoints whose heap blocks
     // are reclaimed only by GC+ContextCleaner — three sf1.0 generations
     // of MEMORY_AND_DISK_SER blocks raced allocation and OOM'd the
-    // default 8 GiB heap (measured round 9). On disk the generations cost
+    // default 8 GiB heap (measured). On disk the generations cost
     // ~200 MB of /tmp each and zero heap; the slice pass re-reads them
     // once, so the audit's wall barely moves while its memory footprint
     // becomes invocation-count-independent.
@@ -323,8 +322,8 @@ object Graph extends QueryModule {
     // [[edgeSemiKill]] — broadcast under BroadcastEdgeLimit (the measured
     // 8x win over shuffling the 41M-row sf0.1 wedge stream: 54 s -> 6.7 s),
     // bloom kill + chunked exact broadcast past it (the sf1.0 probe's
-    // 24M-key broadcast failed the build in an 8 GiB driver, and the
-    // round-7 post-bloom sort-merge close OOM'd the same heap — the
+    // 24M-key broadcast failed the build in an 8 GiB driver, and a
+    // post-bloom sort-merge close OOM'd the same heap — the
     // chunked form never sorts or materializes anything edge-sized; see
     // [[edgeSemiKill]]). The one-row count that picks the regime reads
     // the checkpointed edge RDD — the sanctioned scalar driver-side use.
@@ -571,8 +570,7 @@ object Graph extends QueryModule {
     // consumers (pruned top-8 window, degree rollup) doubled that again —
     // FOUR corpus-sized pair builds per invocation. The explode emits both
     // orientations in one pass and the lazy checkpoint makes the two
-    // consumers share it: ONE strongEdges build total (plan pair in
-    // plans/r11/). The row set is identical (union all ≡ explode of both
+    // consumers share it: ONE strongEdges build total. The row set is identical (union all ≡ explode of both
     // orientations); sym is the thresholded sparse edge set, cheap to hold.
     val sym = strongEdges(spark, dir)
       .select(explode(array(
@@ -695,11 +693,11 @@ object Graph extends QueryModule {
     * on two node-placed frames (exchange-free) into a TakeOrdered, so the
     * terminal job plans ZERO exchanges (pinned in PlanSpec).
     *
-    * Memory budget (the round-8 fix): the edge set is derived ONCE into
-    * the src placement, and the dst placement + node table re-read THAT
-    * cache — no third standalone edge copy is ever resident (round 7
-    * held e0 + eSrc + eDst at once, the 3× amplification that made this
-    * key heap-bound at 36.8 s at sf1.0). Everything stays LAZY: the
+    * Memory budget: the edge set is derived ONCE into the src placement,
+    * and the dst placement + node table re-read THAT cache — no third
+    * standalone edge copy is ever resident (holding e0 + eSrc + eDst at
+    * once is a 3× amplification that made this key heap-bound at 36.8 s
+    * at sf1.0). Everything stays LAZY: the
     * score tables are node-sized (≪ |E|), so there is nothing
     * corpus-sized to reclaim mid-loop, and eagerly materializing every
     * round was measured SLOWER at sf1.0 (77 s vs 36.8 s — seven
@@ -750,13 +748,13 @@ object Graph extends QueryModule {
     * survivor edge set is EAGERLY localCheckpoint'ed (the [[qCommunityLpa]]
     * discipline — without the per-round truncation round 3's census
     * re-derives rounds 1–2 from scratch; measured 7.4 s → ~4 s at
-    * sf0.1/32 threads), and — the round-8 reclamation half — the
+    * sf0.1/32 threads), and — the reclamation half — the
     * SUPERSEDED round's edge set is unpersisted as soon as its successor
     * materializes: what the terminal union reads is three eagerly
     * checkpointed 1-ROW census frames, so at no point are two
     * corpus-sized edge copies resident beyond the one transient
-    * (prev → next) handoff. Round 7 held all four edge generations in
-    * executor memory at once — the 3–6× amplification that made this
+    * (prev → next) handoff. Holding all four edge generations in
+    * executor memory at once is a 3–6× amplification that made this
     * key heap-bound (63.9 s) at sf1.0. */
   def qKcore(spark: SparkSession, dir: String): DataFrame =
     kcorePeel(edges(spark, dir))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * similarity pipeline keeps BETWEEN batches, pairing the batched serving
   * shape ([[Similarity.qAnnIvfBatch]]) with an index that persists and
   * grows by upsert instead of being re-trained per run. The similarity-
-  * stack twin of [[MinhashIndex]].
+  * stack twin of [[Dedup.qMinhashIncremental]]'s band index.
   *
   * Layout: `<path>/centroids` (cid, cvec — the k=16 trained centroids,
   * frozen at init) and `<path>/assignments` (vec_id, embedding, cid — the
@@ -33,7 +33,7 @@ object IvfIndex {
   /** Train (k=16, 2 Lloyd iterations — the q_ann_ivf discipline) on
     * `vectors` (vec_id, embedding) and persist centroids + assignments,
     * replacing any prior index at `path`. */
-  def init(spark: SparkSession, vectors: DataFrame, path: String): Unit = {
+  def init(vectors: DataFrame, path: String): Unit = {
     val cent = Similarity.ivfCentroids(vectors, 16, 2)
     cent.write.mode("overwrite").parquet(s"$path/centroids")
     Similarity.assignToCentroids(vectors, cent)

@@ -251,7 +251,7 @@ object Joins extends QueryModule {
     * pairs. */
   def qJoinInterval(spark: SparkSession, dir: String): DataFrame = {
     val epoch = lit("1970-01-01").cast("date")
-    // NOT checkpointed (round-10 A/B): both self-join sides re-derive the
+    // NOT checkpointed (an A/B): both self-join sides re-derive the
     // scan + 3× explode, but materializing the replicated frame measured
     // neutral-to-worse isolated (3.02 s old vs 3.05–3.66 s checkpointed) —
     // the cheap scan+explode re-run beats writing 1.8M rows to the

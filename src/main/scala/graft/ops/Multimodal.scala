@@ -57,21 +57,6 @@ object Multimodal extends QueryModule {
     }
   }
 
-  /** STUB resize: downsample a feature vector to `bins` by averaging
-    * adjacent pairs — the deterministic stand-in for image resize (which in
-    * production operates on decoded pixels via the same mapPartitions
-    * shape). */
-  def resizeStub(feats: Dataset[DocFeatures], bins: Int): Dataset[DocFeatures] = {
-    import feats.sparkSession.implicits._
-    feats.mapPartitions { it =>
-      it.map { f =>
-        val factor = math.max(f.features.length / bins, 1)
-        val out = f.features.grouped(factor).map(g => g.sum / g.length).toArray
-        DocFeatures(f.doc_id, out.take(bins))
-      }
-    }
-  }
-
   /** End-to-end: binary column → typed Dataset → stub featurizer. */
   def features(spark: SparkSession, dir: String): Dataset[DocFeatures] = {
     import spark.implicits._
@@ -312,8 +297,7 @@ object Multimodal extends QueryModule {
     * mapPartitions "decode" pass builds a 16-bin high-nibble byte
     * histogram in EXACT integer counts (the stub decoder's shape, minus
     * the float normalization that would never cross-engine hash), then
-    * the "resize" pools adjacent bins 16→8 — the integer twin of
-    * [[resizeStub]]'s pair-averaging, exactly what image downsampling
+    * the "resize" pools adjacent bins 16→8, exactly what image downsampling
     * does to a feature map. Output is per-doc ppm weights of the 8 pooled
     * bins (flattened to scalar columns — the driver's checker can't hash
     * array cells).

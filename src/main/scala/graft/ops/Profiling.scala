@@ -379,7 +379,7 @@ object Profiling extends QueryModule {
           .as(s"med_$valueCol"))
     // checkpointed: each discMedian pass consumes its input twice (chunk
     // table + rank join) and `cents` additionally feeds the deviation
-    // join — uncheckpointed the events scan was planted 9× (round-10 plan)
+    // join — uncheckpointed the events scan was planted 9× in the plan
     val cents = Tables.events(spark, dir)
       .select(col("event_type"), col("event_id"),
         expr("CAST(round(value * 100) AS BIGINT)").as("c"))

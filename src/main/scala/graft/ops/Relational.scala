@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * conditional expressions, limit, distinct, dedup-by-key, sort, top-k.
   *
   * Re-expresses the reference's concrete operators (SURVEY.md §2.1):
-  *  - R1 CSV scan with inference (reference dags/create-data-lake.py:66-69)
-  *    → lazy parquet scan here; CSV parity lives in [[graft.etl.CovidShape]].
+  *  - R1 CSV scan (reference dags/create-data-lake.py:66-69) → lazy parquet
+  *    scan here; the CSV read, under a declared schema, lives in
+  *    [[graft.etl.CovidShape]].
   *  - R5 multi-column null-drop (reference dags/create-data-lake.py:73)
   *  - R6 blank/null → 0 coalesce (reference dags/create-data-lake.py:74-79)
   *  - R7 schema-only slice / limit (reference dags/create-data-lake.py:50)

@@ -1,16 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cluster-scale join strategies (SURVEY.md §4.2, 100 TB design point).
   * Correctness never depends on these — they reshape the physical plan:
   *
-  *  - Bucketing: persist both fact tables bucketed+sorted on the join key →
-  *    repeated fact⋈fact joins read co-located buckets and skip the shuffle
-  *    AND the sort entirely. At 100 TB the lineitem⋈orders shuffle is the
-  *    single largest network cost in the star-join family; bucketing
-  *    amortizes it to zero across every downstream query.
   *  - Salting: a skewed hot key (one city_ibge_code holding 20% of rows)
   *    turns one reducer into the job's critical path. Salting fans the hot
   *    key across N sub-partitions (fact side: deterministic row-hash salt;
@@ -19,27 +14,6 @@ import org.apache.spark.sql.functions._
   *    explicit contract for pathological keys.
   */
 object Scale {
-
-  /** Persist a DataFrame as a bucketed, bucket-sorted table. */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, key).sortBy(key)
-      .saveAsTable(table)
-
-  /** Join two bucketed tables on their bucket key — with matching bucket
-    * counts, the plan has no Exchange on either side. */
-  def bucketedJoin(spark: SparkSession, left: String, right: String,
-      leftKey: String, rightKey: String): DataFrame =
-    spark.table(left).join(spark.table(right),
-      col(leftKey) === col(rightKey), "inner")
-
-  /** Persist partitioned by a derived column (typically a date bucket) —
-    * queries filtering on it read only matching directories
-    * (PartitionFilters in the scan), the coarse-grained twin of parquet
-    * row-group skipping. At 100 TB, date-partitioning the fact table is the
-    * difference between scanning a day and scanning a decade. */
-  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(path)
 
   /** Buy task parallelism for an EXPENSIVE per-row projection whose input
     * scan produced fewer splits than the shuffle-partition target — the
@@ -60,31 +34,6 @@ object Scale {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  /** Small-file compaction: rewrite a parquet directory into
-    * ceil(totalBytes / targetBytes) files and swap it in place. Streaming
-    * sinks and per-batch loads leave thousands of KB-scale files; at
-    * 100 TB the resulting scan pays one task + one footer read per file,
-    * and the NameNode/listing cost grows unbounded — periodic compaction
-    * is the standard maintenance job (Delta/Iceberg OPTIMIZE, Hive
-    * concatenate). The rewrite is one `repartition(n)` round-robin pass
-    * (even output sizes, no skew), written to a sibling temp dir first so
-    * a crash mid-rewrite leaves the original intact; the swap is the
-    * non-transactional rename a real table format wraps in a commit.
-    * Returns the file count written. */
-  def compact(spark: SparkSession, path: String, targetBytes: Long): Int = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val total = fs.getContentSummary(p).getLength
-    val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    val tmp = new Path(path + "_compact_tmp")
-    spark.read.parquet(path).repartition(n)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(p, true)
-    require(fs.rename(tmp, p), s"compaction swap failed for $path")
-    n
-  }
-
   /** Bit-spread a 16-bit value into the even bit positions of a 32-bit
     * lane (the classic mask-shift Morton dilation — 4 shift/or/and steps,
     * no loop, pure codegen'd integer arithmetic). */
@@ -102,70 +51,6 @@ object Scale {
     * Pure integer mask-shift arithmetic — identical in any engine. */
   def zorder(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     spread16(a).bitwiseOR(shiftleft(spread16(b), 1))
-
-  /** For each target partition p in 0..n-1, the smallest non-negative int
-    * token whose Spark HashPartitioning id IS p — i.e.
-    * pmod(murmur3_32(token, seed=42), n) == p, the exact arithmetic of
-    * `repartition(n, col)` on an int column. Routing rows through these
-    * tokens makes a hash exchange behave as an EXPLICIT partitioner:
-    * slab s goes to partition s, injectively, with no sampling pass and no
-    * RDD round-trip out of Tungsten. Pure driver-side arithmetic (expected
-    * ~n·H(n) probes), independent of the data. */
-  private[graft] def injectiveHashTokens(n: Int): Array[Int] = {
-    val out = new Array[Int](n)
-    val found = new Array[Boolean](n)
-    var i = 0
-    var remaining = n
-    while (remaining > 0) {
-      val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(i, 42)
-      val p = ((h % n) + n) % n
-      if (!found(p)) { found(p) = true; out(p) = i; remaining -= 1 }
-      i += 1
-    }
-    out
-  }
-
-  /** Cluster a table for multi-dimensional data skipping: assign each row
-    * to one of `numFiles` fixed-width slabs of the Morton key of two
-    * filter columns, route slab s to output file s, and sort each file by
-    * the key. Each output file then covers a small RECTANGLE of the (a, b)
-    * space, so parquet min/max footer stats prune row groups for
-    * predicates on EITHER column — a linear sort on `a` gives perfect
-    * skipping on `a` and none on `b`; z-order splits the benefit across
-    * both. This is the standard lakehouse layout lever (Delta/Iceberg
-    * `OPTIMIZE ZORDER BY`) for 100 TB fact tables filtered on two
-    * independent dimensions.
-    *
-    * Slab boundaries are ARITHMETIC (`(z - zMin) div width`), not the
-    * sampled boundaries of `repartitionByRange`: the sampling pass made
-    * file rectangles nondeterministic run-to-run and misaligned with the
-    * power-of-two Morton structure (measured ~2,950 rows scanned for an
-    * aligned 1,024-row box). Fixed slabs are deterministic, bit-aligned
-    * whenever the z domain is a power of two, and cost one bounded min/max
-    * pass instead of the range sampler's scan. The routing exchange is a
-    * plain Tungsten hash repartition made injective by
-    * [[injectiveHashTokens]]. Tradeoff vs range sampling: a skewed z
-    * distribution gives uneven file SIZES (sizes follow density) — the
-    * right default for a layout job, where deterministic rectangle
-    * GEOMETRY is what the reader's pruning depends on. */
-  def zorderBy(df: DataFrame, aCol: String, bCol: String, numFiles: Int): DataFrame = {
-    val zc = zorder(col(aCol), col(bCol))
-    val bounds = df.agg(min(zc).cast("long"), max(zc).cast("long")).head()
-    if (bounds.isNullAt(0)) return df // empty input: nothing to cluster
-    val zMin = bounds.getLong(0)
-    val zMax = bounds.getLong(1)
-    // width such that slab ids land in [0, numFiles): for a span that is an
-    // exact multiple of numFiles this is span/numFiles (bit-aligned slabs);
-    // (zMax-zMin)/width < numFiles always holds.
-    val width = (zMax - zMin) / numFiles + 1
-    val toks = injectiveHashTokens(numFiles).mkString("array(", ",", ")")
-    df.withColumn("_z", zc)
-      .withColumn("_ztok",
-        expr(s"element_at($toks, int((_z - ${zMin}L) div ${width}L) + 1)"))
-      .repartition(numFiles, col("_ztok"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z", "_ztok")
-  }
 
   /** Typed Aggregator folding hash positions into a fixed-size bitset —
     * the custom-UDAF route (Aggregator + toColumn), chosen over a

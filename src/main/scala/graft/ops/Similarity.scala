@@ -102,7 +102,8 @@ object Similarity extends QueryModule {
   def qAnnLsh(spark: SparkSession, dir: String): DataFrame = {
     // 16 independent zip_with/aggregate dots over the SCAN column plus a
     // literal array — no derived-array HOF nesting, so projection collapse
-    // cannot re-evaluate anything (the round-1 inlining hazard).
+    // cannot re-evaluate anything (HOFs over DERIVED arrays get inlined
+    // and re-evaluated per consumer).
     val codeExpr = (0 until 16).map { h =>
       val planes = planeWeights(h).mkString("array(", ", ", ")")
       s"""(CASE WHEN aggregate(zip_with(embedding, $planes,
@@ -245,8 +246,8 @@ object Similarity extends QueryModule {
   def qAnnRecall(spark: SparkSession, dir: String): DataFrame = {
     // checkpointed: `exact` feeds the hits join AND the per-query census —
     // uncheckpointed, the ENTIRE brute-force serving chain (qKnnJoin's
-    // corpus scan + rank) was planted twice (round-10 plan: 12 embeddings
-    // scans, 58 exchanges for this one key). Both checkpoints are
+    // corpus scan + rank) was planted twice (the plan showed 12
+    // embeddings scans, 58 exchanges for this one key). Both checkpoints are
     // page-sized (≤ 64·5 rows / ≤ 64 rows).
     val exact = qKnnJoin(spark, dir).select(col("qid"), col("vec_id"))
       .localCheckpoint(eager = false)
@@ -407,7 +408,7 @@ object Similarity extends QueryModule {
 
   /** Durable-index IVF serving — the streaming-ingest twin of
     * [[qAnnIvfBatch]], exercising [[IvfIndex]] end to end the way
-    * `q_minhash_incremental` + `ops/MinhashIndex` do for dedup: train the
+    * `q_minhash_incremental` does for dedup: train the
     * index on the initial corpus (vec_id % 10 ≠ 0), UPSERT the new batch
     * (the stride-10 vectors) against the FROZEN centroids — assignment
     * cost ∝ |batch|, the standard IVF ingest contract (centroids retrain
@@ -429,7 +430,7 @@ object Similarity extends QueryModule {
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
       .select(col("vec_id"), col("embedding"))
     val path = Relational.sinkPath(dir, "ivf_index")
-    IvfIndex.init(spark, e.filter(col("vec_id") % 10 =!= 0), path)
+    IvfIndex.init(e.filter(col("vec_id") % 10 =!= 0), path)
     IvfIndex.upsert(spark, e.filter(col("vec_id") % 10 === 0), path)
     val queries = e.filter(servingBatchPred)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -664,8 +665,8 @@ object Similarity extends QueryModule {
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
     // 8 band keys per vector: bit j of band b = sign(embedding[b*8+j]).
     // The nested lambda reads only the scan column `embedding` directly, so
-    // projection-collapse inlining re-evaluates nothing (the round-1 HOF
-    // blowup hit DERIVED arrays); O(64) per row, one pass.
+    // projection-collapse inlining re-evaluates nothing (the HOF blowup
+    // hits DERIVED arrays); O(64) per row, one pass.
     val bands = e.select(col("vec_id"), col("embedding"),
       posexplode(expr(
         """transform(sequence(0, 7), b ->
@@ -1054,8 +1055,8 @@ object Similarity extends QueryModule {
 
   /** Intermediate frames of the NN-descent build, shared by
     * [[qAnnNndescent]] (which reports per-round counts + recall) and the
-    * durable [[KnnGraphIndex]] / [[qAnnGraphServe]] serving path (which
-    * consume only the final `nn1` edge set). `base` carries the sign
+    * [[qAnnGraphServe]] serving path (which consumes only the final `nn1`
+    * edge set). `base` carries the sign
     * codes and is lazily checkpointed — callers reuse it for truth
     * sampling without re-deriving the scan. */
   private[ops] case class KnnParts(base: DataFrame, cand0: DataFrame,
@@ -1068,9 +1069,9 @@ object Similarity extends QueryModule {
     * multi-consumer callers (beam serving) checkpoint it themselves.
     * `report = true` (the nndescent certificate) ADDITIONALLY checkpoints
     * the candidate frames, which that key both counts and scores; serving
-    * callers ([[qAnnGraphServe]], [[KnnGraphIndex]]) consume each
-    * candidate frame exactly once, so for them the checkpoint was a pure
-    * extra materialization pass (round-10 measurement). */
+    * callers ([[qAnnGraphServe]]) consume each candidate frame exactly
+    * once, so for them the checkpoint is a pure extra materialization
+    * pass. */
   private[ops] def knnGraphParts(vectors: DataFrame,
       report: Boolean = false): KnnParts = {
     import org.apache.spark.sql.expressions.Window
@@ -1221,13 +1222,15 @@ object Similarity extends QueryModule {
     * report = true (cand0/cand1 checkpointed, as q_ann_nndescent's
     * reporting path does), so the graph-build subtree stays behind
     * checkpoints and PlanSpec pins exactly the hop-join shape; production
-    * qAnnGraphServe builds report = false (the cheaper streaming build,
-    * round-10 change) — its build plan is NOT what this twin pins. */
+    * qAnnGraphServe builds report = false (the cheaper streaming build) —
+    * its build plan is NOT what this twin pins. Test-only; it and
+    * [[beamSearch]]'s `checkpoint` flag stay until an inline build mode
+    * (ROADMAP direction 3) replaces them, as PlanSpec's only pin on the
+    * hop joins. */
   private[graft] def graphServeUncheckpointed(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // report = true: the twin pins the HOP joins' shape, so the BUILD
-    // half stays behind its checkpoints exactly as it did before the
-    // round-10 serving-path change (PlanSpec reads this plan; the
+    // half stays behind its checkpoints (PlanSpec reads this plan; the
     // production key below runs the cheaper non-report build)
     val parts = knnGraphParts(Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
@@ -1249,9 +1252,7 @@ object Similarity extends QueryModule {
   /** Graph-ANN serving page — the composition of [[qAnnNndescent]]'s
     * one-round NN-descent top-4 graph with [[beamSearch]]: the standard
     * serving batch walks the graph 3 hops at beam 8 and reports its
-    * top-5 per query. This is the in-query twin of the durable
-    * [[KnnGraphIndex]] (same builder, same walk — KnnGraphIndexSpec pins
-    * served-from-disk ≡ this), and the third ANN serving tier next to
+    * top-5 per query. This is the third ANN serving tier next to
     * brute-force rerank (q_knn_join) and IVF lists (q_ann_ivf_batch):
     * the oracle unrolls the identical hops in SQL, so every visited-set
     * expansion — not just the final page — is hash-checked. */
@@ -1495,9 +1496,8 @@ object Similarity extends QueryModule {
     * Both global ranks are running counts ([[Windows.chunkedRunningSums]]):
     * the dense chunks bucket cos_raw (≤ 2·1024 buckets on [−1, 1]) and the
     * lex chunks bucket n_chars (value-range-bounded), so no window ever
-    * moves the corpus into one partition (the r10 driver tails' "No
-    * Partition Defined" WARN on this key was the only corpus-sized
-    * instance). */
+    * moves the corpus into one partition (Spark's "No Partition Defined"
+    * WARN). */
   def qRankFusion(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .filter(col("lang") === "en")
@@ -1731,7 +1731,7 @@ object Similarity extends QueryModule {
     * q_ann_graph_serve (identical integer plane weights + left-to-right
     * accumulation as the Spark [[signCode6]] — shared [[planeWeights]]
     * source of truth). MATERIALIZED throughout: DuckDB re-inlines plain
-    * CTEs per reference (the round-9 lesson). */
+    * CTEs per reference. */
   private def knnGraphSqlCtes: String = {
     def codeSqlOf(planes0: Int): String = (0 until 6).map { h =>
       val dot = planeWeights(planes0 + h).zipWithIndex

@@ -229,7 +229,9 @@ object TextAnalysis extends QueryModule {
 
   /** The pre-native relational formulation of [[qTextEntropy]] — retained
     * as the cross-check twin (its sorted-fold arithmetic defines the
-    * determinism contract the native expression reproduces). */
+    * determinism contract the native expression reproduces). Test-only; it
+    * stays as the reference implementation the native expression is
+    * compared against. */
   def qTextEntropyRelational(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .filter(length(col("text")) > 0)
@@ -562,7 +564,7 @@ object TextAnalysis extends QueryModule {
       .filter(!col("stop"))
       .withColumn("plen", count(lit(1)).over(byRun))
       // feeds the word-score rollup AND the scoring join — uncheckpointed
-      // the posexplode + two windows ran twice (round-10 plan: 2 scans)
+      // the posexplode + two windows ran twice (2 scans in the plan)
       .localCheckpoint(eager = false)
     val wstats = members.groupBy(col("w"))
       .agg(count(lit(1)).as("freq"), sum(col("plen")).as("deg"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Minimal optimistic-concurrency transaction log — the atomic-commit
   * protocol a lakehouse table format (Delta/Iceberg) wraps around the
   * plain-parquet maintenance jobs this repo already ships
-  * ([[Scale.compact]], `q_compaction_plan`, `q_ivm_agg`): data files are
+  * (`q_sink_compact`, `q_compaction_plan`, `q_ivm_agg`): data files are
   * immutable; each commit writes `_txnlog/v<N>.txt` listing the table's
   * LIVE files after version N; and version N is claimed atomically via
   * put-if-absent file creation (`Files.createFile` throws if vN exists —

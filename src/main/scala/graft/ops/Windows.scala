@@ -311,8 +311,8 @@ object Windows extends QueryModule {
     val wUser = Window.partitionBy(col("event_type"), col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     // checkpointed: the chunk table AND the running window both consume
-    // this frame, and Catalyst has no cross-branch reuse — the round-10
-    // plan showed the whole scan→window subtree planted twice (once under
+    // this frame, and Catalyst has no cross-branch reuse — the plan
+    // showed the whole scan→window subtree planted twice (once under
     // the broadcast side), doubling the stage work
     val marked = Tables.events(spark, dir)
       .withColumn("is_first", when(row_number().over(wUser) === 1, 1L).otherwise(0L))

@@ -16,6 +16,11 @@ import org.apache.spark.sql.functions._
   * unboundedly at 100 TB/day ingest. Sinks should use append mode +
   * checkpointing; state store partitioning follows
   * spark.sql.shuffle.partitions.
+  *
+  * The live-only functions (the `start*` sinks, [[readEventsStream]] and
+  * the stateful twins) are reached only from tests. Each stays because a
+  * test holds it equal to a registered batch key, or because it is the
+  * source or sink such a test needs.
   */
 object Streams {
 
@@ -68,47 +73,19 @@ object Streams {
       .filter(col("rk") <= k)
       .select(col("wstart"), col("rk"), col("event_type"), col("n"))
 
-  /** Stateful exact dedup by event_id within the watermark horizon —
-    * the streaming twin of batch dropDuplicates. */
-  def dedupEvents(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
-
   /** Live twin of [[graft.ops.StreamingShaped.qStreamDedup]]: keep one
     * arrival per (user, event_type, event-time hour), dropping re-deliveries
     * while the hour's state is inside the watermark horizon. The kept-key
     * CENSUS is arrival-order independent (it's the distinct-key count), so
     * the e2e test replays a shuffled stream and asserts census equality
     * with the batch twin; which PHYSICAL row survives is arrival order by
-    * design — the same at-least-once contract as the engine it models. */
+    * design — the same at-least-once contract as the engine it models.
+    * Test-only; it stays as the live twin of q_stream_dedup. */
   def dedupFirstPerHour(events: DataFrame): DataFrame =
     events
       .withColumn("hour_bucket", date_trunc("hour", col("ts")))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("user_id", "event_type", "hour_bucket")
-
-  /** Custom state machine: per-user running value totals via
-    * mapGroupsWithState — arbitrary state beyond what windowed aggregation
-    * expresses (the hook for sessionization with business rules, running
-    * ML features, CDC merge). State lives in the state store, partitioned
-    * by the group key; at 100 TB ingest the only scaling knobs are key
-    * cardinality and a timeout policy (production sets
-    * GroupStateTimeout.EventTimeTimeout to evict idle users; NoTimeout here
-    * keeps the demo deterministic). */
-  def runningUserTotals(events: DataFrame): DataFrame = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    events.select(col("user_id"), col("value")).as[(Long, Double)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[Double, (Long, Double)](GroupStateTimeout.NoTimeout) {
-        (user, rows, state) =>
-          val total = state.getOption.getOrElse(0.0) + rows.map(_._2).sum
-          state.update(total)
-          (user, total)
-      }
-      .toDF("user_id", "running_total")
-  }
 
   /** Streaming twin of [[graft.ops.EventAnalytics.throttle]]: keep an
     * event iff more than `gapMicros` has passed since the last KEPT event
@@ -122,7 +99,8 @@ object Streams {
     * time order yields exactly the batch operator's kept set (asserted in
     * the e2e suite). At 100 TB ingest the state store holds 8 bytes per
     * active user, partitioned by the group key; production adds
-    * GroupStateTimeout.EventTimeTimeout to retire idle users. */
+    * GroupStateTimeout.EventTimeTimeout to retire idle users. Test-only;
+    * it stays as the live twin of q_throttle_dedup's recurrence. */
   def throttleStream(events: DataFrame, gapMicros: Long): DataFrame = {
     import events.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
@@ -156,7 +134,8 @@ object Streams {
     * stages (asserted in the e2e suite against the harness corpus). Stage
     * is monotone, so Update-mode emissions converge to the final stage.
     * At 100 TB ingest: ~17 bytes of state per active user; production
-    * adds EventTimeTimeout to retire idle users. */
+    * adds EventTimeTimeout to retire idle users. Test-only; it stays as the
+    * live twin of q_funnel_window. */
   def funnelStream(events: DataFrame, windowMicros: Long): DataFrame = {
     import events.sparkSession.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
@@ -217,7 +196,8 @@ object Streams {
     * bounds it with a watermark + EventTimeTimeout eviction once a user's
     * window can no longer change (the standard buffer-until-watermark
     * pattern), which NoTimeout here leaves out to keep the test corpus
-    * deterministic. */
+    * deterministic. Test-only; it stays as the reorder-tolerant live twin
+    * of q_funnel_window. */
   def funnelStreamLate(events: DataFrame, windowMicros: Long): DataFrame = {
     import events.sparkSession.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
@@ -238,14 +218,6 @@ object Streams {
       }
       .toDF("user_id", "stage")
   }
-
-  /** Stream-static enrichment: join the event stream against a static
-    * dimension frame. The static side is planned per micro-batch (and
-    * broadcast when small), so dimension updates between batches are picked
-    * up automatically — no state store involved, the streaming analog of
-    * the batch broadcast-dim join. */
-  def enrichWithDim(events: DataFrame, dim: DataFrame): DataFrame =
-    events.join(broadcast(dim), Seq("event_type"), "left")
 
   /** Stream-stream interval join: match each left event to right events of
     * the same user within [0, 10 min] after it — the impression⋈click
@@ -279,7 +251,9 @@ object Streams {
     * delivery. Work happens on executors via foreachPartition (one
     * connection + one transaction per partition, rows streamed through
     * prepared statements — never collected to the driver). The table needs
-    * PRIMARY KEY (wstart, event_type), matching the aggregation key. */
+    * PRIMARY KEY (wstart, event_type), matching the aggregation key.
+    * Test-only; it stays as the sink that holds the streamed
+    * q_stream_tumble aggregate equal to the batch one. */
   def startJdbcUpsert(windowed: DataFrame, url: String, table: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     windowed.writeStream
@@ -323,23 +297,6 @@ object Streams {
       }
   }
 
-  /** foreachBatch → durable-index ingest: every micro-batch upserts into a
-    * persistent index, the streaming half of the [[graft.ops.MinhashIndex]]
-    * / [[graft.ops.IvfIndex]] state machines. Both upserts are idempotent
-    * (anti-join on already-stored ids), so the at-least-once micro-batch
-    * replay a crash between sink write and checkpoint commit causes lands
-    * exactly-once in the index — the same contract as [[startJdbcUpsert]],
-    * with the id anti-join playing the role of the keyed DELETE. Append
-    * output mode: rows enter the index once and centroid/signature rules
-    * are frozen, so nothing is ever re-emitted. */
-  def startIndexIngest(stream: DataFrame, checkpointDir: String)(
-      upsert: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) => upsert(batch) }
-      .start()
-
   /** Stream micro-batches into a [[graft.ops.TxnLog]] table with
     * exactly-once semantics — the streaming→lakehouse closing piece: each
     * micro-batch commits through [[graft.ops.TxnLog.appendOnce]] keyed by
@@ -348,7 +305,8 @@ object Streams {
     * the log and skips, and concurrent BATCH writers (append/compact/
     * merge) interleave safely through the same optimistic commit
     * protocol. This is the scalable dual of the reference's replace-mode
-    * load run continuously: ACID versions instead of truncate+reload. */
+    * load run continuously: ACID versions instead of truncate+reload.
+    * Test-only; it stays as the streaming sink of q_txn_commit's log. */
   def startTxnAppend(stream: DataFrame, tablePath: String, appId: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
@@ -359,20 +317,25 @@ object Streams {
       }
       .start()
 
-  /** Stream documents (doc_id, text, …) into a durable MinHash band index
-    * — the live dedup-ingest twin of [[graft.ops.MinhashIndex.upsert]]. */
-  def startMinhashIngest(docs: DataFrame, indexPath: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    startIndexIngest(docs, checkpointDir)(b =>
-      graft.ops.MinhashIndex.upsert(b.sparkSession, b, indexPath))
-
-  /** Stream vectors (vec_id, embedding) into a durable IVF index under its
-    * frozen centroids — the live ANN-ingest twin of
-    * [[graft.ops.IvfIndex.upsert]]. */
+  /** foreachBatch → durable-index ingest: stream vectors (vec_id,
+    * embedding) into a [[graft.ops.IvfIndex]] under its frozen centroids,
+    * the live twin of [[graft.ops.IvfIndex.upsert]]. The upsert is
+    * idempotent (anti-join on already-stored ids), so the at-least-once
+    * micro-batch replay a crash between sink write and checkpoint commit
+    * causes lands exactly-once in the index — the same contract as
+    * [[startJdbcUpsert]], with the id anti-join playing the role of the
+    * keyed DELETE. Append output mode: rows enter the index once and the
+    * centroids are frozen, so nothing is ever re-emitted. Test-only; it
+    * stays as the live twin of q_ivf_incremental. */
   def startIvfIngest(vectors: DataFrame, indexPath: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    startIndexIngest(vectors, checkpointDir)(b =>
-      graft.ops.IvfIndex.upsert(b.sparkSession, b, indexPath))
+    vectors.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        graft.ops.IvfIndex.upsert(batch.sparkSession, batch, indexPath)
+      }
+      .start()
 
   /** The static event-type → business-tier dimension used by
     * [[enrichedTierCounts]] — in production a metastore lookup table; here
@@ -405,7 +368,8 @@ object Streams {
   /** File-source entry: tail a DIRECTORY of parquet event files as a stream
     * (the file source rejects single files; production: Kafka source, same
     * downstream plan). Applies the same nanos→micros ts normalization as
-    * the batch loader. */
+    * the batch loader. Test-only; it stays as the source of the live-twin
+    * tests. */
   def readEventsStream(spark: SparkSession, eventsDir: String): DataFrame =
     graft.Tables.normalizeTs(
       spark.readStream

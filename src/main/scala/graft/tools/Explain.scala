@@ -4,6 +4,7 @@ import graft.{GraftSession, SparkEntry}
 
 /** Dev tool: dump formatted physical plans for representative queries.
   * Usage: runMain graft.tools.Explain <sfDir> <q1> <q2> ...
+  * It stays until Bench can dump plans itself (ROADMAP direction 1).
   */
 object Explain {
   def main(args: Array[String]): Unit = {

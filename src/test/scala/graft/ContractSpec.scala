@@ -92,4 +92,106 @@ class ContractSpec extends AnyFunSuite {
     assert(total == SparkEntry.queries.size,
       "a key registered in two modules would shadow one implementation")
   }
+
+  /** Definitions in `src/main` that nothing outside the tests reaches, each
+    * with why it stays: the entry points, and test-only code kept on
+    * purpose. */
+  private val unreachedAllowList: Map[String, String] = Map(
+    "entry" -> "SparkEntry.entry, the driver's smoke entry point",
+    "main" -> "the main method of each entry-point object",
+    "Bench" -> "entry point: per-key timings",
+    "Verify" -> "entry point: the correctness dump the oracle checks",
+    "Explain" -> "dev tool that stays until Bench can dump plans (ROADMAP direction 1)",
+    "readCsvQuarantine" -> "the engine's path for malformed input (ROADMAP aim 3)",
+    "loadReplaceCsv" -> "the reference's R8 sink",
+    "loadReplaceJdbc" -> "the reference's R9 sink",
+    "qTextEntropyRelational" -> "the reference implementation q_text_entropy's native expression is compared against",
+    "graphServeUncheckpointed" -> "PlanSpec's only pin on the hop joins, until an inline build mode (ROADMAP direction 3)",
+    "dedupFirstPerHour" -> "live twin a test holds equal to q_stream_dedup",
+    "throttleStream" -> "live twin a test holds equal to q_throttle_dedup's recurrence",
+    "funnelStream" -> "live twin a test holds equal to q_funnel_window",
+    "funnelStreamLate" -> "reorder-tolerant live twin a test holds equal to q_funnel_window",
+    "startIvfIngest" -> "live twin a test holds equal to q_ivf_incremental",
+    "startJdbcUpsert" -> "sink a test needs to hold the streamed tumbling counts equal to the batch ones",
+    "startTxnAppend" -> "streaming sink a test needs for q_txn_commit's log",
+    "readEventsStream" -> "file-stream source the live-twin tests need")
+
+  /** Scala source with its comments blanked. String literals (plain and
+    * triple-quoted) and char literals are copied through, so a `//` inside
+    * a string is not read as a comment. */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder
+    val n = src.length
+    var i = 0
+    while (i < n) {
+      if (src.startsWith("\"\"\"", i)) {
+        var j = src.indexOf("\"\"\"", i + 3)
+        j = if (j < 0) n else j + 3
+        while (j < n && src(j) == '"') j += 1
+        out.append(src.substring(i, j)); i = j
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < n && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        j = math.min(j + 1, n)
+        out.append(src.substring(i, j)); i = j
+      } else if (src(i) == '\'' && i + 2 < n &&
+          (src(i + 2) == '\'' || (src(i + 1) == '\\' && i + 3 < n && src(i + 3) == '\''))) {
+        val j = if (src(i + 2) == '\'') i + 3 else i + 4
+        out.append(src.substring(i, j)); i = j
+      } else if (src.startsWith("//", i)) {
+        val j = src.indexOf('\n', i)
+        i = if (j < 0) n else j
+      } else if (src.startsWith("/*", i)) {
+        var depth = 1; var j = i + 2
+        while (j < n && depth > 0) {
+          if (src.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (src.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        out.append("\n" * src.substring(i, j).count(_ == '\n')); i = j
+      } else { out.append(src(i)); i += 1 }
+    }
+    out.toString
+  }
+
+  /** Every `def` and `object` in `src/main` must be named somewhere in
+    * `src/main` or `perfbench/src` other than by a declaration, or be on
+    * [[unreachedAllowList]] with its reason. The check is a floor, not a
+    * proof: it matches names as words, so a dead definition whose name
+    * collides with another word (a parameter, a field, a second method of
+    * the same name) still passes, and so does code reached only from other
+    * dead code. */
+  test("every src/main definition is reached outside the tests, or is listed with its reason") {
+    import scala.jdk.CollectionConverters._
+    def sources(dir: String): Seq[(String, String)] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .map(p => p.toString -> stripComments(new String(
+          java.nio.file.Files.readAllBytes(p), "UTF-8")))
+      finally walk.close()
+    }
+    val main = sources("src/main")
+    val all = (main ++ sources("perfbench/src")).map(_._2).mkString("\n")
+    val declRe = """\b(def|object)\s+([A-Za-z_][A-Za-z0-9_]*)""".r
+    val declared: Map[String, Seq[String]] = main.flatMap { case (file, text) =>
+      declRe.findAllMatchIn(text).filterNot { m =>
+        val lineStart = text.lastIndexOf('\n', m.start) + 1
+        text.substring(lineStart, m.start).matches(""".*\boverride\b.*""")
+      }.map(m => m.group(2) -> file)
+    }.groupMap(_._1)(_._2)
+    def tally(names: Iterator[String]): Map[String, Int] =
+      names.toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+    val uses = tally("""[A-Za-z0-9_]+""".r.findAllIn(all))
+    val decls = tally("""\b(?:def|object|class|trait|val|var)\s+([A-Za-z_][A-Za-z0-9_]*)""".r
+      .findAllMatchIn(all).map(_.group(1)))
+    val unreached = declared.keySet.filter(n => uses(n) <= decls(n))
+    val unlisted = (unreached -- unreachedAllowList.keySet).toSeq.sorted
+    assert(unlisted.isEmpty, "definitions nothing outside the tests reaches — delete them " +
+      "or list them with a reason: " +
+      unlisted.map(n => s"$n (${declared(n).distinct.mkString(", ")})").mkString("; "))
+    val stale = (unreachedAllowList.keySet -- unreached).toSeq.sorted
+    assert(stale.isEmpty,
+      s"allow-list entries that are no longer declared, or are now reached: ${stale.mkString(", ")}")
+  }
 }

@@ -246,34 +246,6 @@ class CovidShapeSpec extends SparkSpec {
     df.unpersist()
   }
 
-  test("jsonl quarantine: bad syntax and bad types each cost one row, text preserved") {
-    import org.apache.spark.sql.types._
-    val d = Files.createTempDirectory("jsonlq").toString
-    val jsonl =
-      """{"city":"Recife","code":2611606,"rate":12.5}
-        |{"city":"Broken","code":NOT_JSON
-        |{"city":"Olinda","code":2609600,"rate":7.25}
-        |{"city":"BadType","code":"not_a_number","rate":1.0}
-        |{"city":"Missing"}
-        |""".stripMargin
-    Files.write(Paths.get(d, "drop.jsonl"), jsonl.getBytes)
-    val schema = StructType(Seq(
-      StructField("city", StringType), StructField("code", LongType),
-      StructField("rate", DoubleType)))
-    val df = CovidShape.readJsonlQuarantine(spark, s"$d/drop.jsonl", schema)
-    val clean = df.filter(col("_corrupt_record").isNull)
-    val dead = df.filter(col("_corrupt_record").isNotNull)
-    // valid lines: Recife, Olinda, and Missing (absent fields are null,
-    // not corruption — schema evolution must not dead-letter old records)
-    assert(clean.count() == 3, "well-formed lines survive, missing fields are nulls")
-    assert(clean.filter(col("city") === "Missing" && col("code").isNull).count() == 1)
-    // corrupt: the unparseable line and the type-mismatched line
-    assert(dead.count() == 2, "one bad line costs one row, not the batch")
-    assert(dead.filter(col("_corrupt_record").contains("NOT_JSON")).count() == 1)
-    assert(dead.filter(col("_corrupt_record").contains("not_a_number")).count() == 1)
-    df.unpersist()
-  }
-
   test("csv quarantine at scale: exact row-level loss accounting over mixed corruption") {
     import org.apache.spark.sql.types._
     val d = Files.createTempDirectory("quarantine_chaos").toString
@@ -336,22 +308,5 @@ class CovidShapeSpec extends SparkSpec {
     import spark.implicits._
     val flat = Seq((1, "a")).toDF("x", "y")
     assert(CovidShape.flatten(flat).columns.sameElements(Array("x", "y")))
-  }
-
-  test("orc sink round-trips schema and rows, and filters push into the orc scan") {
-    val src = Tables.orders(spark, sf)
-    val path = java.nio.file.Files.createTempDirectory("orc-sink").toString + "/orders"
-    CovidShape.loadReplaceOrc(src, path)
-    CovidShape.loadReplaceOrc(src, path) // replace mode is idempotent
-    val back = CovidShape.readOrc(spark, path)
-    assert(back.schema == src.schema, "orc must preserve the exact schema")
-    assert(back.count() == src.count())
-    assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
-    // same data-skipping story as parquet: the predicate reaches the scan
-    val q = back.filter(col("o_totalprice") > 100000.0)
-    val scanLine = q.queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("FileScan orc")).getOrElse("")
-    assert(scanLine.contains("PushedFilters: [") && scanLine.contains("o_totalprice"),
-      s"filter must push into the orc scan: $scanLine")
   }
 }

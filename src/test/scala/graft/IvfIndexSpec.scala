@@ -26,7 +26,7 @@ class IvfIndexSpec extends SparkSpec {
     val v = vectors
     val init = v.filter(col("vec_id") % 10 =!= 0)
     val batch = v.filter(col("vec_id") % 10 === 0)
-    IvfIndex.init(spark, init, path)
+    IvfIndex.init(init, path)
     IvfIndex.upsert(spark, batch, path)
     val upserted = lists(spark.read.parquet(s"$path/assignments"))
     // from-scratch: the FULL corpus assigned under the init-trained
@@ -47,7 +47,7 @@ class IvfIndexSpec extends SparkSpec {
     val stage = s"$tmp/in"; val cp = s"$tmp/cp"; val path = s"$tmp/idx"
     val v = vectors
     val seed = v.filter(col("vec_id") % 4 === 0)
-    IvfIndex.init(spark, seed, path) // centroids train once, then freeze
+    IvfIndex.init(seed, path) // centroids train once, then freeze
     // stage the remaining vectors as TWO parquet files → two micro-batches
     v.filter(col("vec_id") % 4 =!= 0).repartition(2).write.parquet(stage)
     val stream = spark.readStream
@@ -65,7 +65,7 @@ class IvfIndexSpec extends SparkSpec {
     // and the serving path reads the streamed state identically to an
     // index built by the batch init+upsert sequence on the same corpus
     val batchPath = s"$tmp/idx_batch"
-    IvfIndex.init(spark, seed, batchPath)
+    IvfIndex.init(seed, batchPath)
     IvfIndex.upsert(spark, v.filter(col("vec_id") % 4 =!= 0), batchPath)
     val queries = v.filter(col("vec_id") % 40 === 0 && col("vec_id") < 2560)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -79,7 +79,7 @@ class IvfIndexSpec extends SparkSpec {
   test("probe from the upserted index equals the in-query serving result") {
     val path = java.nio.file.Files.createTempDirectory("ivf_probe").toString + "/idx"
     val v = vectors
-    IvfIndex.init(spark, v.filter(col("vec_id") % 10 =!= 0), path)
+    IvfIndex.init(v.filter(col("vec_id") % 10 =!= 0), path)
     IvfIndex.upsert(spark, v.filter(col("vec_id") % 10 === 0), path)
     val queries = v.filter(col("vec_id") % 40 === 0 && col("vec_id") < 2560)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))

@@ -681,12 +681,6 @@ class LlmOpsSpec extends SparkSpec {
         assert(r.getAs[String]("last_frame_md5") == hexMd5(last))
       }
     }
-    // resize: 16 -> 8 bins, mass preserved (mean of pair-means * 2 = sum)
-    val resized = Multimodal.resizeStub(Multimodal.features(spark, sf), 8).collect()
-    resized.take(10).foreach { f =>
-      assert(f.features.length == 8)
-      assert(math.abs(f.features.sum * 2 - 1.0f) < 1e-2)
-    }
   }
 
   test("multimodal phash: exact dup pairs found via bands, disjoint docs absent, no cartesian") {

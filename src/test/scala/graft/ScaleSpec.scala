@@ -5,149 +5,6 @@ import org.apache.spark.sql.functions._
 
 class ScaleSpec extends SparkSpec {
 
-  test("bucketed join plans without an Exchange on either side") {
-    Scale.writeBucketed(Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_quantity", "l_extendedprice"),
-      "li_bucketed", "l_orderkey", 4)
-    Scale.writeBucketed(Tables.orders(spark, sf)
-      .select("o_orderkey", "o_totalprice"),
-      "o_bucketed", "o_orderkey", 4)
-    // sf0.001 tables fit the broadcast threshold, which would bypass the
-    // bucket-join path entirely — disable broadcast to exercise the plan
-    // shape that matters at scale (SMJ over co-located buckets, no shuffle).
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = Scale.bucketedJoin(spark, "li_bucketed", "o_bucketed",
-        "l_orderkey", "o_orderkey")
-      joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        "bucketed fact-fact join must not shuffle:\n" + plan.linesIterator.take(10).mkString("\n"))
-      // and it's still the correct join
-      val expected = Tables.lineitem(spark, sf).join(Tables.orders(spark, sf),
-        col("l_orderkey") === col("o_orderkey")).count()
-      assert(joined.count() == expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("date-partitioned writes prune to matching partitions at scan time") {
-    val out = java.nio.file.Files.createTempDirectory("events-part").toString + "/events"
-    Scale.writePartitioned(
-      Tables.events(spark, sf).withColumn("day", to_date(col("ts"))),
-      out, "day")
-    val q = spark.read.parquet(out).filter(col("day") === lit("2024-01-01").cast("date"))
-    q.collect()
-    val scan = q.queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("FileScan")).getOrElse("")
-    assert(scan.contains("PartitionFilters: [isnotnull(day"),
-      s"day filter must prune partitions, not rows: $scan")
-    // and day never reaches PushedFilters (it's a directory, not a column)
-    assert(!scan.replaceAll(".*PushedFilters", "").contains("day"))
-  }
-
-  test("z-order layout prunes row groups on BOTH dimensions; linear sort on one") {
-    val grid = spark.range(1 << 16).select(
-      (col("id") % 256).as("x"), ((col("id") / 256) % 256).as("y"),
-      col("id").as("payload"))
-    val base = java.nio.file.Files.createTempDirectory("zorder").toString
-    // linear layout: clustered on x only — y stats span the full range in
-    // every file, so a y predicate skips nothing. Built with the same
-    // deterministic arithmetic-slab routing as zorderBy (x div 4 → one of
-    // 64 files): repartitionByRange's sampled boundaries occasionally put
-    // a file boundary mid-x-value, which flaked the exact scan count.
-    val linToks = Scale.injectiveHashTokens(64).mkString("array(", ",", ")")
-    grid.withColumn("_tok", expr(s"element_at($linToks, int(x div 4) + 1)"))
-      .repartition(64, col("_tok"))
-      .sortWithinPartitions(col("x")).drop("_tok")
-      .write.mode("overwrite").parquet(s"$base/linear")
-    // z-order: each of the 64 files covers a 32x32 rectangle of (x, y)
-    Scale.zorderBy(grid, "x", "y", 64)
-      .write.mode("overwrite").parquet(s"$base/zorder")
-    def scanned(path: String): (Long, Long) = {
-      val q = spark.read.parquet(path).filter(col("x") < 32 && col("y") < 32)
-      // collect() (not count()) so the metric comes from THIS query
-      // execution — no exchange, so the plan is not AQE-wrapped and the
-      // scan node is directly collectible
-      val out = q.collect().length.toLong
-      val scan = q.queryExecution.executedPlan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-      }.head
-      (scan.metrics("numOutputRows").value, out)
-    }
-    val (zScan, zRows) = scanned(s"$base/zorder")
-    val (lScan, lRows) = scanned(s"$base/linear")
-    assert(zRows == 1024 && lRows == 1024, "both layouts return the same box")
-    // Arithmetic z-slabs are deterministic and bit-aligned on this
-    // power-of-two grid: slab 0 = z in [0, 1024) = EXACTLY the query box
-    // [0,32)^2, so the scan reads one file / one row group — 1,024 rows,
-    // no more. The linear layout reads all 8 x-range files that carry the
-    // full y range (8,192 rows). Exact assertions: any sampling or
-    // misalignment regression fails this deterministically.
-    assert(zScan == 1024,
-      s"aligned z-slab layout must scan exactly the matching file: z=$zScan")
-    assert(lScan == 8192,
-      s"linear layout scans the 8 x-files spanning all y: linear=$lScan")
-  }
-
-  test("zorderBy output files cover disjoint z ranges, deterministically") {
-    import org.apache.spark.sql.functions._
-    val grid = spark.range(1 << 14).select(
-      (col("id") % 128).as("x"), ((col("id") / 128) % 128).as("y"),
-      col("id").as("payload"))
-    def slabRanges(): Seq[(Long, Long)] = {
-      val parts = Scale.zorderBy(grid, "x", "y", 16)
-        .withColumn("z", Scale.zorder(col("x"), col("y")))
-        .withColumn("pid", spark_partition_id())
-        .groupBy("pid").agg(min("z").as("lo"), max("z").as("hi"))
-        .orderBy("lo")
-        .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
-      parts
-    }
-    val r1 = slabRanges()
-    assert(r1.size == 16, s"all 16 slabs populated on a uniform grid: ${r1.size}")
-    r1.sliding(2).foreach { case Seq((_, hi), (lo, _)) =>
-      assert(hi < lo, s"z ranges must be disjoint: hi=$hi lo=$lo")
-    case _ => ()
-    }
-    // bit-aligned: each slab spans exactly 2^14/16 = 1024 z values
-    r1.zipWithIndex.foreach { case ((lo, hi), i) =>
-      assert(lo == i * 1024L && hi == i * 1024L + 1023L,
-        s"slab $i must be the aligned [${i * 1024}, ${i * 1024 + 1023}] range, got [$lo, $hi]")
-    }
-    // no sampling anywhere: a second run yields the identical layout
-    assert(slabRanges() == r1, "layout must be deterministic run-to-run")
-  }
-
-  test("injectiveHashTokens routes slab s to partition s for common fan-outs") {
-    for (n <- Seq(1, 2, 3, 16, 64, 200)) {
-      val toks = Scale.injectiveHashTokens(n)
-      assert(toks.distinct.length == n)
-      // the contract: Spark's own hash partitioning of the token == slab id
-      val ids = spark.createDataFrame(
-        toks.zipWithIndex.map { case (t, s) => (s, t) }.toSeq).toDF("slab", "tok")
-        .repartition(n, col("tok"))
-        .select(col("slab"), spark_partition_id().as("pid"))
-        .collect()
-      ids.foreach(r => assert(r.getInt(0) == r.getInt(1),
-        s"n=$n: slab ${r.getInt(0)} landed in partition ${r.getInt(1)}"))
-    }
-  }
-
-  test("compaction collapses a many-small-files layout and preserves the data") {
-    val path = java.nio.file.Files.createTempDirectory("compact").toString + "/events"
-    val src = Tables.events(spark, sf).select("event_id", "user_id", "event_type")
-    src.repartition(64).write.mode("overwrite").parquet(path)
-    def dataFiles() = new java.io.File(path).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(dataFiles() == 64, "fixture: a fragmented layout")
-    val n = graft.ops.Scale.compact(spark, path, 8L * 1024 * 1024)
-    assert(dataFiles() == n && n < 8, s"expected a handful of files, got $n")
-    val back = spark.read.parquet(path)
-    assert(back.count() == src.count())
-    assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
-  }
-
   test("salted join returns exactly the rows of the plain join") {
     val fact = Tables.lineitem(spark, sf).select("l_orderkey", "l_linenumber", "l_quantity")
     val dim  = Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")

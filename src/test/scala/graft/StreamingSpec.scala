@@ -58,47 +58,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
   }
 
-  test("mapGroupsWithState carries per-user totals across micro-batches") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[(Long, Double)]
-    val streamDf = mem.toDF.toDF("user_id", "value")
-    val q = Streams.runningUserTotals(streamDf).writeStream
-      .format("memory").queryName("state_smoke").outputMode("update").start()
-    try {
-      mem.addData(Seq((1L, 10.0), (2L, 5.0), (1L, 2.0)))
-      q.processAllAvailable()
-      mem.addData(Seq((1L, 3.0)))   // second micro-batch: state must persist
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("state_smoke").collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    // update mode appends one row per key per batch; the LAST row per key
-    // holds the accumulated total
-    assert(rows.contains((1L, 12.0)), s"batch-1 total: ${rows.mkString(",")}")
-    assert(rows.contains((1L, 15.0)), s"batch-2 must include batch-1 state: ${rows.mkString(",")}")
-    assert(rows.contains((2L, 5.0)))
-  }
-
-  test("stream-static enrichment joins dims per micro-batch") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[(Timestamp, String, Double)]
-    val streamDf = mem.toDF.toDF("ts", "event_type", "value")
-    val dim = Seq(("click", "interactive"), ("view", "passive"))
-      .toDF("event_type", "category")
-    val t0 = Timestamp.valueOf("2025-01-01 00:00:00")
-    mem.addData(Seq((t0, "click", 1.0), (t0, "view", 2.0), (t0, "scroll", 3.0)))
-    val q = Streams.enrichWithDim(streamDf, dim).writeStream
-      .format("memory").queryName("enrich_smoke").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val rows = spark.table("enrich_smoke").collect()
-      .map(r => r.getAs[String]("event_type") -> Option(r.getAs[String]("category"))).toMap
-    assert(rows("click").contains("interactive"))
-    assert(rows("view").contains("passive"))
-    assert(rows("scroll").isEmpty, "left join keeps unmatched events with null dim")
-  }
-
   test("q_stream_join batch twin equals the streamed interval join on the harness corpus") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
@@ -157,19 +116,6 @@ class StreamingSpec extends SparkSpec {
     // the plan must be a stateful stream-stream join, not a static one
     assert(spark.table("ssjoin_smoke").schema.fieldNames
       .sameElements(Array("user_id", "l_ts", "r_ts", "l_value", "r_value")))
-  }
-
-  test("stateful streaming dedup drops the duplicate event_id") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[(Long, Timestamp, Double)]
-    val streamDf = mem.toDF.toDF("event_id", "ts", "value")
-    val t0 = Timestamp.valueOf("2025-01-01 00:00:00")
-    mem.addData(Seq((1L, t0, 1.0), (2L, t0, 2.0), (1L, t0, 1.0)))
-    val q = Streams.dedupEvents(streamDf).writeStream
-      .format("memory").queryName("dedup_smoke").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    assert(spark.table("dedup_smoke").count() == 2)
   }
 
   test("foreachBatch JDBC upsert: update-mode re-emissions and replays land exactly once") {

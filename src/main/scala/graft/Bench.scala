@@ -105,9 +105,10 @@ object Bench {
     // lines. The contract line must be the last thing stdout sees.
     spark.sparkContext.setLogLevel("ERROR")
     // noop sink: forces full evaluation of every column (count() would let
-    // Catalyst prune the whole projection and measure only the scan).
+    // Catalyst prune the whole projection and measure only the scan). The
+    // key's checkpoints are released as soon as its write returns.
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Materialize.scoped(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
     // One untimed warmup pass: JIT + codegen compilation + parquet footer
     // caching otherwise lands entirely on whichever query happens to run
     // first and dominates its wall time 3-10x over steady state. It warms
@@ -118,23 +119,11 @@ object Bench {
     selected.foreach { case (_, fn) =>
       try run(fn) catch { case _: Throwable => () }
     }
-    // Nudge ContextCleaner before the timed pass: the warmup invocations
-    // left localCheckpoint blocks (dedup/langid intra-query reuse) whose
-    // driver references are dead but not yet collected; without a GC an
-    // idle 128 GiB heap may never release them, and storage eviction mid-
-    // timed-pass would add nondeterministic spill to the measurements.
-    System.gc()
     // Timed pass in SORTED key order: Map iteration order shifts whenever a
     // key is added, which would silently reorder which query absorbs any
-    // residual warm-up/GC settling and make per-query times incomparable
-    // across rounds. The first sorted query is additionally re-primed
-    // untimed, because the System.gc() above (and the JIT deopt/reopt churn
-    // it triggers on a 128 GiB heap) otherwise lands entirely on it —
-    // measured 6.2 s first-timed vs 1.4 s steady-state for the same query.
+    // residual warm-up settling and make per-query times incomparable
+    // across rounds.
     val ordered = selected.toSeq.sortBy(_._1)
-    ordered.headOption.foreach { case (_, fn) =>
-      try run(fn) catch { case _: Throwable => () }
-    }
     val results = ordered.map { case (name, fn) => sample(name)(run(fn)) }
     // Optional concurrent pass: families submitted from N driver threads,
     // each thread in its own FAIR pool. Wall-clock for the whole pass plus
@@ -143,7 +132,6 @@ object Bench {
     val concurrent: Option[(Double, Seq[(String, Double)])] =
       if (benchThreads <= 1) None
       else {
-        System.gc()
         // LPT (longest-processing-time-first) dispatch: the alphabetical
         // queue started the 46 s Graph family 9th of 19, pushing the pass
         // wall to 160 s against a ~100 s critical-path bound (measured this

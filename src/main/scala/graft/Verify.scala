@@ -27,8 +27,8 @@ object Verify {
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try Materialize.scoped(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed += name -> String.valueOf(e.getMessage).take(300)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -440,10 +440,9 @@ object Aggregations extends QueryModule {
     // checkpointed: the chunked-rank bounds pass (chunk table + rank join)
     // and the final clamp join each consume this frame — uncheckpointed the
     // events scan was planted 3× in the plan
-    val cents = Tables.events(spark, dir)
+    val cents = Materialize.shared(Tables.events(spark, dir)
       .select(col("event_type"), col("event_id"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("c"))
-      .localCheckpoint(eager = false)
+        expr("CAST(round(value * 100) AS BIGINT)").as("c")))
     val bounds = Windows.chunkedRunningSums(
         cents.withColumn("chunk", floor(col("c") / lit(1000L))), Seq("event_type"), "chunk",
         Seq(col("c"), col("event_id")), "rn" -> lit(1L))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,10 +36,9 @@ object Behavior extends QueryModule {
     // checkpointed: four consumers (basket census, item counts, both pair
     // sides) re-derived the scan+distinct otherwise — the plan showed
     // 5 lineitem scans for this one key
-    val items = Tables.lineitem(spark, dir)
+    val items = Materialize.shared(Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-      .localCheckpoint(eager = false)
+      .distinct())
     val n = items.select(countDistinct(col("ok")).as("n_baskets"))
     val itemCnt = items.groupBy(col("pk")).agg(count(lit(1)).as("c"))
     val pairs = items.as("a")
@@ -116,7 +115,7 @@ object Behavior extends QueryModule {
     * the classic named segments called out.
     *
     * Scale shape: the per-customer base table aggregates once (one
-    * o_custkey shuffle) and is localCheckpoint'd because four consumers
+    * o_custkey shuffle) and is checkpointed because four consumers
     * read it (three threshold computations + the scoring pass). Each
     * threshold set uses the chunked exact rank of [[discThresholds]] — at
     * 1.5e8 customers a flat global ROW_NUMBER would put the whole table
@@ -127,14 +126,13 @@ object Behavior extends QueryModule {
   def qRfm(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
     val maxD = o.select(max(col("o_orderdate").cast("date")).as("max_d"))
-    val base = o
+    val base = Materialize.barrier(o
       .crossJoin(broadcast(maxD))
       .groupBy(col("o_custkey"))
       .agg(
         min(datediff(col("max_d"), col("o_orderdate").cast("date"))).as("rec_days"),
         count(lit(1)).as("freq"),
-        sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("mon_cents"))
-      .localCheckpoint()
+        sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("mon_cents")))
     val probs = Seq(0.2, 0.4, 0.6, 0.8)
     val rT = discThresholds(base, "rec_days", "o_custkey", 30L, probs)
       .select(col("t20").as("r20"), col("t40").as("r40"), col("t60").as("r60"), col("t80").as("r80"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -52,8 +52,8 @@ object Corpus extends QueryModule {
   def qDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     // both join sides (benchmark grams AND corpus grams) consume this table
     // and Catalyst has no cross-branch reuse — same intra-query
-    // materialization pattern as Dedup.jaccardPairs (lazy: first job fills)
-    val grams = gramTable(spark, dir).localCheckpoint(eager = false)
+    // materialization pattern as Dedup.jaccardPairs
+    val grams = Materialize.shared(gramTable(spark, dir))
     val bench = grams.filter(col("source") === BenchmarkSource)
       .select(col("gram")).distinct()
     grams.filter(col("source") =!= BenchmarkSource)
@@ -442,13 +442,13 @@ object Corpus extends QueryModule {
     * to the distinct-word TYPE table once (the only corpus-sized rollup,
     * map-side combinable), and every rewrite/re-count runs per TYPE, so
     * each extra merge round costs vocabulary, not corpus. The argmax rows
-    * are 1-row broadcasts. The TYPE table is lazily localCheckpointed:
+    * are 1-row broadcasts. The TYPE table is checkpointed:
     * three pair censuses consume it and Catalyst has no cross-branch
     * reuse. */
   def qBpeMergeStep(spark: SparkSession, dir: String): DataFrame = {
-    val w0 = bpeWords(spark, dir).localCheckpoint(eager = false)
+    val w0 = Materialize.shared(bpeWords(spark, dir))
     val m1 = bpeArgmax(bpePairs(w0))
-    val w1 = bpeApply(w0, m1).localCheckpoint(eager = false)
+    val w1 = Materialize.shared(bpeApply(w0, m1))
     val m2 = bpeArgmax(bpePairs(w1))
     val w2 = bpeApply(w1, m2)
     val survivors = bpePairs(w2)
@@ -572,19 +572,17 @@ object Corpus extends QueryModule {
       .withColumn("toks", TextAnalysis.tokens(col("text")))
     // vocabulary-bounded; feeds five consumers below (same lazy-checkpoint
     // reuse pattern as qDecontaminate's gram table)
-    val uni = docs.select(explode(col("toks")).as("w"))
+    val uni = Materialize.shared(docs.select(explode(col("toks")).as("w"))
       .filter(col("w") =!= "")
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
-    val big = docs.select(explode(expr(
+      .groupBy(col("w")).agg(count(lit(1)).as("c")))
+    val big = Materialize.shared(docs.select(explode(expr(
       """CASE WHEN size(toks) < 2 THEN array()
         |ELSE transform(sequence(0, size(toks) - 2),
         |  i -> struct(toks[i] AS w1, toks[i + 1] AS w2)) END""".stripMargin))
       .as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
       .filter(col("w1") =!= "" && col("w2") =!= "")
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .localCheckpoint(eager = false)
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
     val wTop  = Window.orderBy(col("c").desc, col("w"))
     val wRare = Window.orderBy(col("c").asc, col("w"))
     // row_number over the post-limit 10-row frame: single tiny partition
@@ -659,11 +657,10 @@ object Corpus extends QueryModule {
     val uni = tok.groupBy(col("w")).agg(count(lit(1)).as("c"))
     val rel = uni.crossJoin(broadcast(uni.agg(sum(col("c")).as("n_tot"))))
       .select(col("w"), expr("div(1000000 * c, n_tot)").as("r_ppm"))
-    val perDoc = tok.join(broadcast(rel), Seq("w"))
+    val perDoc = Materialize.shared(tok.join(broadcast(rel), Seq("w"))
       .groupBy(col("doc_id"), col("n_chars"))
       .agg(expr("div(sum(r_ppm), count(1))").as("d_ppm"))
-      .withColumn("bucket", expr("div(d_ppm, 10)"))
-      .localCheckpoint(eager = false) // feeds the profile AND the census
+      .withColumn("bucket", expr("div(d_ppm, 10)"))) // feeds the profile AND the census
     val prof = perDoc.groupBy(col("bucket")).agg(count(lit(1)).as("cn"))
     val cum = prof
       .withColumn("cum", sum(col("cn")).over(Window.orderBy(col("bucket"))))
@@ -716,10 +713,9 @@ object Corpus extends QueryModule {
         |ELSE transform(sequence(0, size(toks) - 2),
         |  i -> struct(toks[i] AS w1, toks[i + 1] AS w2)) END""".stripMargin)
     // vocabulary-bounded; feeds the two unigram joins AND the total
-    val uni = docs.select(explode(col("toks")).as("w"))
+    val uni = Materialize.shared(docs.select(explode(col("toks")).as("w"))
       .filter(col("w") =!= "")
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
+      .groupBy(col("w")).agg(count(lit(1)).as("c")))
     val big = docs.select(explode(bigramsOf).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
       .filter(col("w1") =!= "" && col("w2") =!= "")
@@ -745,8 +741,7 @@ object Corpus extends QueryModule {
   }
 
   def qCcnetBuckets(spark: SparkSession, dir: String): DataFrame = {
-    val perDoc = lmScoredDocs(spark, dir)
-      .localCheckpoint(eager = false) // feeds the profile AND the census
+    val perDoc = Materialize.shared(lmScoredDocs(spark, dir)) // feeds the profile AND the census
     val prof = perDoc.groupBy(col("lang"), col("bucket")).agg(count(lit(1)).as("cn"))
     val cum = prof
       .withColumn("cum", sum(col("cn"))
@@ -781,10 +776,10 @@ object Corpus extends QueryModule {
     * entire 9-threshold sweep runs on that profile — the corpus is never
     * multiplied by the number of candidate thresholds. */
   def qFilterSweep(spark: SparkSession, dir: String): DataFrame = {
-    val prof = lmScoredDocs(spark, dir)
+    // bounded profile feeds cum + sweep
+    val prof = Materialize.shared(lmScoredDocs(spark, dir)
       .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("cn"), sum(col("n_chars")).as("ch"))
-      .localCheckpoint(eager = false) // bounded profile feeds cum + sweep
+      .agg(count(lit(1)).as("cn"), sum(col("n_chars")).as("ch")))
     val n = prof.agg(sum(col("cn")).as("n_all"))
     val cumd = prof
       .withColumn("cum", sum(col("cn")).over(Window.orderBy(col("bucket"))
@@ -825,13 +820,13 @@ object Corpus extends QueryModule {
     * the ≤|V|-row encoded table. At 100 TB the corpus-sized pass is the
     * map-side-combinable word count; everything else is |V|. */
   def qBpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val wl = Tables.documents(spark, dir)
+    // feeds the type table AND the census join
+    val wl = Materialize.shared(Tables.documents(spark, dir)
       .select(col("lang"), explode(TextAnalysis.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "" && !col("w").contains(BpeSep))
-      .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("wf"))
-      .localCheckpoint(eager = false) // feeds the type table AND the census join
+      .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("wf")))
     // training twin of qBpeMergeStep: global type table, len >= 2
-    val w0 = bpeWords(spark, dir).localCheckpoint(eager = false)
+    val w0 = Materialize.shared(bpeWords(spark, dir))
     val m1 = bpeArgmax(bpePairs(w0))
     val m2 = bpeArgmax(bpePairs(bpeApply(w0, m1)))
     // encode EVERY type (len-1 words pass the anchored replace untouched)
@@ -870,9 +865,9 @@ object Corpus extends QueryModule {
     * cell table; everything after is cell-bounded arithmetic over two
     * 1-row broadcasts. The cheapest shape there is. */
   def qTemperatureMixture(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.documents(spark, dir)
-      .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n_docs"))
-      .localCheckpoint(eager = false) // feeds the total AND the weights
+    // feeds the total AND the weights
+    val cells = Materialize.shared(Tables.documents(spark, dir)
+      .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n_docs")))
     val tot = cells.agg(sum(col("n_docs")).as("n_tot"))
     val w = cells.crossJoin(broadcast(tot))
       .withColumn("w_micro", expr(
@@ -1008,10 +1003,9 @@ object Corpus extends QueryModule {
     * cheapest full-corpus artifact there is — and the first thing a 100 TB
     * ingest should publish. */
   def qDatasetCard(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
+    val docs = Materialize.shared(Tables.documents(spark, dir)
       .withColumn("toks", TextAnalysis.tokens(col("text")))
-      .withColumn("n", size(col("toks")).cast("long"))
-      .localCheckpoint(eager = false) // feeds stats, dups, vocab, profile
+      .withColumn("n", size(col("toks")).cast("long"))) // feeds stats, dups, vocab, profile
     val basic = docs.agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"),
       countDistinct(col("lang")).as("n_langs"),
       countDistinct(col("source")).as("n_sources"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -96,20 +96,18 @@ object Dedup extends QueryModule {
 
   /** Candidate pairs sharing ≥1 non-stop shingle, with exact Jaccard.
     *
-    * The shingle table is localCheckpoint'ed because FOUR consumers inside
+    * The shingle table is checkpointed because FOUR consumers inside
     * this one query re-derive it otherwise (posting sides a+b, the df
     * aggregate, the sizes aggregate) — Catalyst does no cross-branch
     * common-subexpression reuse, so without it the documents scan + split +
     * explode runs 4×. Measured at sf0.1: steady-state 4.2→2.9 s. This is
-    * INTRA-query materialization (freed when the query's RDDs are GC'd),
-    * not the cross-query caching SURVEY §2.6 rejects; it is disk-backed
-    * and proportional to one table's shingle count, the same footprint the
-    * shuffle for the self-join already pays. eager=false keeps plan
-    * inspection (Explain) side-effect-free — materialization happens on
-    * the query's own first job. Caveat vs reliable checkpoint(): a lost
-    * executor fails the query instead of recomputing (acceptable for a
-    * per-query intermediate; a multi-hour pipeline would use checkpoint()
-    * to a cluster store). */
+    * INTRA-query materialization, not the cross-query caching SURVEY §2.6
+    * rejects; it is disk-backed and proportional to one table's shingle
+    * count, the same footprint the shuffle for the self-join already
+    * pays. Caveat vs reliable checkpoint(): a lost executor fails the
+    * query instead of recomputing (acceptable for a per-query
+    * intermediate; a multi-hour pipeline would use checkpoint() to a
+    * cluster store). */
   private def jaccardPairs(spark: SparkSession, dir: String): DataFrame =
     nearDupPairsRaw(Tables.documents(spark, dir))
 
@@ -119,7 +117,7 @@ object Dedup extends QueryModule {
     * clustering/survivor/filter queries instantiate against the harness
     * table. */
   def nearDupPairsRaw(docs: DataFrame): DataFrame = {
-    val sh = shingleTable(docs).localCheckpoint(eager = false)
+    val sh = Materialize.shared(shingleTable(docs))
     // postings deliberately NOT checkpointed (an A/B): both self-join
     // sides replay the df rollup + stop-shingle join from the shingle
     // cache, but the two replays run as parallel sibling branches and
@@ -192,7 +190,7 @@ object Dedup extends QueryModule {
   def qDedupMinhash(spark: SparkSession, dir: String): DataFrame = {
     // one checkpointed shingle table feeds signature building AND the verify
     // step (intra-query reuse — see the note on jaccardPairs)
-    val shCk = shingleTable(Tables.documents(spark, dir)).localCheckpoint(eager = false)
+    val shCk = Materialize.shared(shingleTable(Tables.documents(spark, dir)))
     val sig = bandSignatures(shCk)
     val a = sig.select(col("band"), col("key"), col("doc_id").as("d1"))
     val b = sig.select(col("band"), col("key"), col("doc_id").as("d2"))
@@ -232,7 +230,7 @@ object Dedup extends QueryModule {
     * dedup about what a near-dup is. */
   def qDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh = shingleTable(Tables.documents(spark, dir)).localCheckpoint(eager = false)
+    val sh = Materialize.shared(shingleTable(Tables.documents(spark, dir)))
     val postings = rarePostings(sh)
     val newSide = postings.filter(col("doc_id") % 10 === 0)
       .select(col("shingle"), col("doc_id").as("d1"))
@@ -265,8 +263,8 @@ object Dedup extends QueryModule {
     * banding only prunes candidates, never admits below-threshold pairs. */
   def qMinhashIncremental(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val shCk = shingleTable(Tables.documents(spark, dir)).localCheckpoint(eager = false)
-    val sig = bandSignatures(shCk).localCheckpoint(eager = false)
+    val shCk = Materialize.shared(shingleTable(Tables.documents(spark, dir)))
+    val sig = Materialize.shared(bandSignatures(shCk))
     val candidates = sig.filter(col("doc_id") % 10 === 0)
       .select(col("band"), col("key"), col("doc_id").as("d1"))
       .join(sig.filter(col("doc_id") % 10 =!= 0)
@@ -538,14 +536,13 @@ object Dedup extends QueryModule {
     * threshold-0.8 bigram-set similarity join over an arbitrary document
     * frame, as (d1, d2, o, n1, n2, jaccard). */
   private def ppjoinPairs(documents: DataFrame): DataFrame = {
-    val toks = documents
+    val toks = Materialize.shared(documents
       .withColumn("t", TextAnalysis.tokens(col("text")))
       .select(col("doc_id"), explode(array_distinct(expr(
         """CASE WHEN size(t) < 2 THEN array()
           |ELSE transform(sequence(1, size(t) - 1),
           |  i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))
-          |END""".stripMargin))).as("token"))
-      .localCheckpoint(eager = false) // feeds sizes, dfreq, prefix, and verify
+          |END""".stripMargin))).as("token"))) // feeds sizes, dfreq, prefix, and verify
     val sizes = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val dfreq = toks.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window
@@ -554,12 +551,11 @@ object Dedup extends QueryModule {
     // checkpointed: BOTH sides of the candidate self-join consume the
     // prefix table, and Catalyst has no cross-branch reuse — uncheckpointed
     // the (dfreq ⋈ sizes ⋈ window) derivation ran twice in the plan
-    val prefix = toks.join(dfreq, "token").join(sizes, "doc_id")
+    val prefix = Materialize.shared(toks.join(dfreq, "token").join(sizes, "doc_id")
       .withColumn("rn", row_number().over(w))
       // K-extended prefix: n − ceil(0.8·n) + K; ceil(8n/10) = (8n+9) div 10
       .filter(col("rn") <= col("n") - expr("(8 * n + 9) div 10") + lit(K))
-      .select(col("doc_id"), col("token"), col("n"), col("rn"))
-      .localCheckpoint(eager = false)
+      .select(col("doc_id"), col("token"), col("n"), col("rn")))
     // positional overlap upper bound per occurrence: a shared token at
     // rarity positions (i, j) admits o ≤ m − 1 + 1 + min(n1−i, n2−j) when
     // it is the pair's m-th smallest shared token, so rows needed by the
@@ -687,11 +683,10 @@ object Dedup extends QueryModule {
     * one division is rounded at output. */
   def qDedupSubstring(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = Tables.documents(spark, dir)
+    val toks = Materialize.shared(Tables.documents(spark, dir)
       .withColumn("toks", TextAnalysis.tokens(col("text")))
       .select(col("doc_id"), col("toks"), size(col("toks")).as("n_tokens"))
-      .filter(col("n_tokens") >= 5)
-      .localCheckpoint(eager = false) // feeds postings AND the final left join
+      .filter(col("n_tokens") >= 5)) // feeds postings AND the final left join
     val pos = toks.select(col("doc_id"), col("n_tokens"),
         posexplode(expr(
           "transform(sequence(0, n_tokens - 5), i -> concat_ws(' ', slice(toks, i + 1, 5)))")))
@@ -740,8 +735,7 @@ object Dedup extends QueryModule {
     * tier sees only the previous tier's survivors — exactly why production
     * pipelines order them this way. */
   def qDedupPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      .localCheckpoint(eager = false)
+    val docs = Materialize.shared(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
     val (keep1, keep2, keep3) = funnelKeeps(spark, dir, docs)
     docs.agg(count(lit(1)).as("n0"))
       .crossJoin(keep1.agg(count(lit(1)).as("n1")))
@@ -765,9 +759,8 @@ object Dedup extends QueryModule {
     * inside the oracle's budget; the compared frame is 3 rows at any
     * scale. */
   def qDedupPipelineCert(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      .filter(col("doc_id") % 4 === 0)
-      .localCheckpoint(eager = false)
+    val docs = Materialize.shared(Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+      .filter(col("doc_id") % 4 === 0))
     val (keep1, keep2, keep3) = funnelKeeps(spark, dir, docs)
     def census(k: DataFrame, n: String, c: String): DataFrame =
       k.agg(count(lit(1)).as(n), coalesce(sum(col("doc_id")), lit(0L)).as(c))
@@ -790,15 +783,13 @@ object Dedup extends QueryModule {
     * set is corpus-wide; restricting keep2 restricts the join output). */
   private def funnelKeeps(spark: SparkSession, dir: String,
       docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val keep1 = docs.groupBy(lower(trim(col("text"))).as("norm"))
-      .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
-      .localCheckpoint(eager = false)
+    val keep1 = Materialize.shared(docs.groupBy(lower(trim(col("text"))).as("norm"))
+      .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id")))
     val s1 = docs.join(keep1, "doc_id")
     val losers2 = nearDupPairsRaw(s1)
       .filter(col("jaccard_raw") >= JaccardThreshold)
       .select(col("d2").as("doc_id")).distinct()
-    val keep2 = keep1.join(losers2, Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = false)
+    val keep2 = Materialize.shared(keep1.join(losers2, Seq("doc_id"), "left_anti"))
     val losers3 = Similarity.qDedupEmbedding(spark, dir)
       .join(keep2.select(col("doc_id").as("v1")), Seq("v1"))
       .join(keep2.select(col("doc_id").as("v2")), Seq("v2"))
@@ -836,7 +827,7 @@ object Dedup extends QueryModule {
   def qErLinkage(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val p = Tables.part(spark, dir)
-    val dirty = p.select(
+    val dirty = Materialize.shared(p.select(
       col("p_partkey").as("true_key"),
       (col("p_partkey") + 1000000L).as("dirty_id"),
       col("p_brand").as("brand"), col("p_size").as("size"),
@@ -849,8 +840,7 @@ object Dedup extends QueryModule {
           .otherwise(concat(
             expr("substring(p_name, 1, cast(pos as int) - 1)"),
             expr("substring(p_name, cast(pos as int) + 1)"))))
-      .drop("p_name", "pos")
-      .localCheckpoint(eager = false) // feeds the candidate join AND the census denominators
+      .drop("p_name", "pos")) // feeds the candidate join AND the census denominators
     val clean = p.select(col("p_partkey").as("matched_key"),
       col("p_brand").as("brand"), col("p_size").as("size"),
       col("p_name").as("c_name"))
@@ -947,10 +937,9 @@ object Dedup extends QueryModule {
       Tables.documents(spark, dir)
         .select(col("source"), TextAnalysis.tokens(col("text")).as("toks")),
       idCol = "source", toksCol = "toks", chunkSize = 16)
-    val perSrc = segs
+    val perSrc = Materialize.shared(segs
       .groupBy(md5(col("chunk")).as("h"), col("source"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = false) // both sides of the within-hash join
+      .agg(count(lit(1)).as("cnt"))) // both sides of the within-hash join
     val a = perSrc.select(col("h"), col("source").as("source_a"),
       col("cnt").as("cnt_a"))
     val b = perSrc.select(col("h"), col("source").as("source_b"),
@@ -1011,9 +1000,9 @@ object Dedup extends QueryModule {
     // PAIR ARITHMETIC over each shingle's sorted source set (the
     // qDupCrossSource cluster-arithmetic discipline) instead of the
     // former corpus-sized equi-self-join.
-    val byShingle = sh.groupBy(col("shingle"))
-      .agg(array_sort(collect_set(col("source"))).as("srcs"))
-      .localCheckpoint(eager = false) // feeds the membership rollup AND the census
+    // feeds the membership rollup AND the census
+    val byShingle = Materialize.shared(sh.groupBy(col("shingle"))
+      .agg(array_sort(collect_set(col("source"))).as("srcs")))
     val hashCols = (0 until K).map(i =>
       md5(concat(lit(s"$i:"), col("shingle"))).as(s"h$i"))
     val member = byShingle.select(col("srcs") +: hashCols: _*)
@@ -1022,9 +1011,8 @@ object Dedup extends QueryModule {
     val minCols = (0 until K).map(i => min(col(s"h$i")).as(s"h$i"))
     // sketch minima AND distinct-shingle sizes in one rollup, checkpointed:
     // |sources| rows feeding four consumers below
-    val perSrc = member.groupBy(col("source"))
-      .agg(count(lit(1)).as("n"), minCols: _*)
-      .localCheckpoint(eager = false)
+    val perSrc = Materialize.shared(member.groupBy(col("source"))
+      .agg(count(lit(1)).as("n"), minCols: _*))
     val matchExpr = (0 until K)
       .map(i => s"CASE WHEN a.h$i = b.h$i THEN 1 ELSE 0 END").mkString(" + ")
     val est = perSrc.as("a").join(broadcast(perSrc.as("b")),
@@ -1070,12 +1058,11 @@ object Dedup extends QueryModule {
     * predicate prunes candidates BEFORE the verify join. At 100 TB this is
     * the decontamination pass run per split refresh. */
   def qTrainTestLeakage(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
+    val docs = Materialize.shared(Tables.documents(spark, dir)
       .withColumn("is_test", expr(
         "CAST(conv(substring(md5(concat('split:', CAST(doc_id AS STRING))), 1, 15), " +
-          "16, 10) AS BIGINT) % 10 = 0"))
-      .localCheckpoint(eager = false) // feeds the shingles AND the lang census
-    val shCk = shingleTable(docs).localCheckpoint(eager = false)
+          "16, 10) AS BIGINT) % 10 = 0"))) // feeds the shingles AND the lang census
+    val shCk = Materialize.shared(shingleTable(docs))
     val sig = bandSignatures(shCk)
       .join(docs.select(col("doc_id"), col("is_test")), "doc_id")
     val te = sig.filter(col("is_test"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -298,11 +298,10 @@ object Evaluation extends QueryModule {
       .select(col("lang"), col("doc_id"), col("n_chars").as("score_a"),
         expr("div(1000000 * cast(size(array_distinct(toks)) as bigint), size(toks))")
           .as("score_b"))
-    val top = scored
+    val top = Materialize.shared(scored
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("lang")).orderBy(col("score_a").desc, col("doc_id"))))
-      .filter(col("rk") <= 30)
-      .localCheckpoint(eager = false) // bounded list feeds both pair sides
+      .filter(col("rk") <= 30)) // bounded list feeds both pair sides
     val l = top.select(col("lang"), col("doc_id").as("i"),
       col("score_a").as("a1"), col("score_b").as("b1"))
     val r = top.select(col("lang"), col("doc_id").as("j"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per iteration: one join of edges⋈ranks on src (both sides
   * pre-partitioned on the same key, so AQE reuses the exchange), one
-  * aggregation on dst. Ranks are `localCheckpoint`ed each round to
+  * aggregation on dst. Ranks are checkpointed each round to
   * truncate the lineage — without it the plan doubles per iteration and
   * the job graph blows up by iteration ~20 (the standard iterative-Spark
   * trap). Degrees are computed once and re-joined, never recomputed.
@@ -150,9 +150,8 @@ object Graph extends QueryModule {
   /** 3-iteration integer PageRank over the part co-purchase graph.
     *
     * Exchange budget: the edge table is hash-placed and sorted on `src`
-    * ONCE via [[graft.plans.PartitionedCheckpoint]] (a plain
-    * localCheckpoint forgets the layout under AQE — see that object's doc)
-    * and every rank table comes back from the same helper placed on
+    * ONCE via [[Materialize.byKey]] (a plain checkpoint forgets the
+    * layout under AQE) and every rank table comes back from it placed on
     * `node`, so each iteration's sort-merge join needs NO exchange and NO
     * sort on either side: the only per-iteration data movement left is the
     * contributions shuffle into groupBy(dst), which is PageRank's
@@ -163,20 +162,20 @@ object Graph extends QueryModule {
     // iteration then runs exactly one join + one aggregation instead of two
     // joins (measured ~1/3 of the per-iteration time at sf0.1). The e0
     // double-plant below (degree rollup + join probe, no cross-branch
-    // reuse) was A/B'd and KEPT: localCheckpoint(eager=false)
-    // on e0 measured 3.30 s vs 3.11 s (the second build is cheaper than
+    // reuse) was A/B'd and KEPT: a shared checkpoint on e0 measured
+    // 3.30 s vs 3.11 s (the second build is cheaper than
     // a corpus-sized materialization here), and folding the degree via
     // count().over(Window.partitionBy(src)) measured 3.64 s (the window
     // pays an extra hash+sort pass the join form does not) — isolated
     // min-of-6 probes each; the join form stands.
     val e0 = edges(spark, dir)
     val deg = e0.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    val e = graft.plans.PartitionedCheckpoint.byKey(e0.join(deg, "src"), "src", parts)
-    var ranks = graft.plans.PartitionedCheckpoint.byKey(
+    val e = Materialize.byKey(e0.join(deg, "src"), "src", parts)
+    var ranks = Materialize.byKey(
       e.select(col("src").as("node")).distinct().withColumn("r", lit(1000000L)),
       "node", parts)
     for (_ <- 1 to Iterations) {
-      ranks = graft.plans.PartitionedCheckpoint.byKey(
+      ranks = Materialize.byKey(
         e.join(ranks, e("src") === ranks("node"))
           .select(col("dst"), expr("r div d").as("c"))
           .groupBy(col("dst"))
@@ -272,32 +271,28 @@ object Graph extends QueryModule {
       level: org.apache.spark.storage.StorageLevel =
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       : (DataFrame, DataFrame) = {
-    // localCheckpoint: the edge table feeds THREE consumers (undirected
-    // half, degree table, wedge-closing probe) and the oriented table two
-    // (both wedge sides) — without it Catalyst re-derives the lineitem
-    // self-join + distinct once per reference (measured ~8x the work;
-    // eager=false so plan dumps don't trigger jobs — same intra-query
-    // reuse pattern as qTextLangidNgram / Dedup.jaccardPairs).
+    // The edge table feeds THREE consumers (undirected half, degree table,
+    // wedge-closing probe) and the oriented table two (both wedge sides) —
+    // without the checkpoints Catalyst re-derives the lineitem self-join +
+    // distinct once per reference (measured ~8x the work).
     // SERIALIZED cache, deliberately: both corpus-sized checkpoints here
     // must coexist with the wedge stage's 32 concurrent aggregation
     // tasks — at sf1.0 the deserialized row-object caches (~3 GiB for
     // e + o) left too little headroom for the stage's page allocations
     // and the default 8 GiB heap OOM'd; serialized they are ~5× smaller
-    // AND evictable under execution pressure (useDisk is forced by
-    // localCheckpoint, so eviction is recoverable).
-    val ser = level
-    val e = edges(spark, dir).localCheckpoint(eager = false, ser)
+    // AND evictable under execution pressure (a local checkpoint always
+    // adds disk, so eviction is recoverable).
+    val e = Materialize.shared(edges(spark, dir), level)
     val und = e.filter(col("src") < col("dst")) // each undirected edge once
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .select(col("src").as("node"), col("d"))
     // The oriented table is hash-placed AND sorted on the wedge apex `u`
-    // via PartitionedCheckpoint (not a plain localCheckpoint, which
-    // forgets layout under AQE — see that object's doc): the wedge
-    // self-join below then needs ZERO exchanges and ZERO sorts on either
-    // side — the same trick as the pagerank iteration, applied to a
-    // self-join (measured 15.8 s -> ~11 s at sf0.1/4 cpus).
+    // via Materialize.byKey (a plain checkpoint forgets the layout under
+    // AQE): the wedge self-join below then needs ZERO exchanges and ZERO
+    // sorts on either side — the same trick as the pagerank iteration,
+    // applied to a self-join (measured 15.8 s -> ~11 s at sf0.1/4 cpus).
     val parts = spark.sessionState.conf.numShufflePartitions
-    val o = graft.plans.PartitionedCheckpoint.byKey(
+    val o = Materialize.byKey(
       und
         .join(deg.select(col("node").as("src"), col("d").as("d_src")), "src")
         .join(deg.select(col("node").as("dst"), col("d").as("d_dst")), "dst")
@@ -308,7 +303,7 @@ object Graph extends QueryModule {
           when(col("d_src") < col("d_dst")
             || (col("d_src") === col("d_dst") && col("src") < col("dst")),
             col("dst")).otherwise(col("src")).as("v")),
-      "u", parts, level = ser)
+      "u", parts, level)
     // wedges at the apex: unordered out-neighbor pairs, fixed by id order.
     // The cert's apex restriction lands HERE, before the self-join — the
     // wedge stream (the stage's dominant volume) shrinks by the slice
@@ -342,7 +337,7 @@ object Graph extends QueryModule {
     * recommendation-neighborhood measure.
     *
     * Scale shape per hop: ONE join frontier⋈edges on src (frontier and
-    * edges both live on the src hash layout via PartitionedCheckpoint, so
+    * edges both live on the src hash layout via [[Materialize.byKey]], so
     * the join is exchange-free), a distinct on the new frontier, and a
     * left-anti against the visited set — visited stays sharded on node and
     * grows monotonically; nothing ever collects. The driver loop is
@@ -350,10 +345,10 @@ object Graph extends QueryModule {
     * per-hop frontier is bounded by the node set, never the edge set. */
   def qKhop(spark: SparkSession, dir: String): DataFrame = {
     val parts = spark.sessionState.conf.numShufflePartitions
-    val e = graft.plans.PartitionedCheckpoint.byKey(edges(spark, dir), "src", parts)
+    val e = Materialize.byKey(edges(spark, dir), "src", parts)
     val seeds = e.select(col("src").as("node")).distinct()
       .filter(col("node") % 1000 === 0)
-    var visited = graft.plans.PartitionedCheckpoint.byKey(
+    var visited = Materialize.byKey(
       seeds.withColumn("hop", lit(0)), "node", parts)
     var frontier = visited
     for (h <- 1 to Iterations) {
@@ -361,8 +356,8 @@ object Graph extends QueryModule {
         .select(col("dst").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
         .withColumn("hop", lit(h))
-      frontier = graft.plans.PartitionedCheckpoint.byKey(next, "node", parts)
-      visited = graft.plans.PartitionedCheckpoint.byKey(
+      frontier = Materialize.byKey(next, "node", parts)
+      visited = Materialize.byKey(
         visited.unionByName(frontier), "node", parts)
     }
     // an exhausted frontier still reports its hop with 0 (small dense
@@ -410,7 +405,7 @@ object Graph extends QueryModule {
     * 2³². */
   def qLinkPredict(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = edges(spark, dir).localCheckpoint(eager = false)
+    val e = Materialize.shared(edges(spark, dir))
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
     val focus = deg.orderBy(col("d").desc, col("src")).limit(25)
       .select(col("src").as("qn"), col("d").as("d_q"))
@@ -515,8 +510,8 @@ object Graph extends QueryModule {
     ccFromEdges(strongEdges(spark, dir).select(col("u"), col("v")))
 
   /** The alternation loop on an arbitrary (u, v) edge frame — split out so
-    * the property suite can drive it over generated graphs. Plain
-    * localCheckpoint, NOT PartitionedCheckpoint: largeStar opens with a
+    * the property suite can drive it over generated graphs. A plain
+    * barrier, NOT [[Materialize.byKey]]: largeStar opens with a
     * union of both orientations, which destroys any co-partitioning a
     * pinned layout would buy, and pinning also disables AQE's post-shuffle
     * coalescing — on the thresholded (sparse) edge set the loop is
@@ -525,13 +520,13 @@ object Graph extends QueryModule {
     * sf0.1). Lineage still truncates every round, which is the part the
     * iterative-Spark trap actually requires. */
   private[graft] def ccFromEdges(edges: DataFrame): DataFrame = {
-    var cur = edges.localCheckpoint()
+    var cur = Materialize.barrier(edges)
     var fp: (Long, Long) = (-1L, -1L)
     var rounds = 0
     val maxRounds = 64 // ~2·log2(n) rounds suffice; the valve only guards bugs
     var converged = false
     while (!converged && rounds < maxRounds) {
-      val next = smallStar(largeStar(cur)).localCheckpoint()
+      val next = Materialize.barrier(smallStar(largeStar(cur)))
       val row = next.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).first()
       val nfp = (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
       converged = nfp == fp
@@ -572,26 +567,25 @@ object Graph extends QueryModule {
     // orientations in one pass and the lazy checkpoint makes the two
     // consumers share it: ONE strongEdges build total. The row set is identical (union all ≡ explode of both
     // orientations); sym is the thresholded sparse edge set, cheap to hold.
-    val sym = strongEdges(spark, dir)
+    val sym = Materialize.shared(strongEdges(spark, dir)
       .select(explode(array(
         struct(col("u"), col("v"), col("c")),
         struct(col("v").as("u"), col("u").as("v"), col("c")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"), col("e.c").as("c"))
-      .withColumn("w", expr("div(1000000L, c) + 1"))
-      .localCheckpoint(eager = false)
+      .withColumn("w", expr("div(1000000L, c) + 1")))
     val byW = Window.partitionBy(col("u")).orderBy(col("w"), col("v"))
     val pruned = sym.withColumn("rk", row_number().over(byW))
       .filter(col("rk") <= 8).select(col("u"), col("v"), col("w"))
-    val e = graft.plans.PartitionedCheckpoint.byKey(pruned, "u", parts)
+    val e = Materialize.byKey(pruned, "u", parts)
     val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("d"))
     val sources = deg.orderBy(col("d").desc, col("u")).limit(3)
       .select(col("u").as("node"))
-    var dist = graft.plans.PartitionedCheckpoint.byKey(
+    var dist = Materialize.byKey(
       sources.withColumn("dist", lit(0L)), "node", parts)
     for (_ <- 1 to 4) {
       val relaxed = e.join(dist, e("u") === dist("node"))
         .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = graft.plans.PartitionedCheckpoint.byKey(
+      dist = Materialize.byKey(
         dist.unionByName(relaxed)
           .groupBy(col("node")).agg(min(col("dist")).as("dist")),
         "node", parts)
@@ -632,7 +626,7 @@ object Graph extends QueryModule {
     * the row set is identical (union all ≡ explode of both orientations). */
   private def symStrongByV(spark: SparkSession, dir: String): DataFrame = {
     val parts = spark.sessionState.conf.numShufflePartitions
-    graft.plans.PartitionedCheckpoint.byKey(
+    Materialize.byKey(
       strongEdges(spark, dir).select(explode(array(
         struct(col("u"), col("v")),
         struct(col("v").as("u"), col("u").as("v")))).as("e"))
@@ -657,16 +651,15 @@ object Graph extends QueryModule {
       .orderBy(col("cnt").desc, col("nlbl"))
     for (_ <- 1 to rounds) {
       val prev = labels
-      labels = sym
+      labels = Materialize.barrier(sym
         .join(labels.select(col("node").as("v"), col("lbl").as("nlbl")), "v")
         .groupBy(col("u").as("node"), col("nlbl"))
         .agg(count(lit(1)).as("cnt"))
         .withColumn("rk", row_number().over(byNode))
         .filter(col("rk") === 1)
-        .select(col("node"), col("nlbl").as("lbl"))
-        .localCheckpoint() // eager: prev's last consumer materialized
+        .select(col("node"), col("nlbl").as("lbl"))) // eager: prev's last consumer materialized
       // no-op on the round-1 seed (a plain distinct, not a checkpoint)
-      org.apache.spark.sql.graftshim.InternalDataFrames.unpersistCheckpoint(prev)
+      Materialize.release(prev)
     }
     labels
   }
@@ -684,7 +677,7 @@ object Graph extends QueryModule {
     * TakeOrdered, not a full sort.
     *
     * Exchange budget: the edge table is hash-placed TWICE via
-    * [[graft.plans.PartitionedCheckpoint]] — on `src` for the authority
+    * [[Materialize.byKey]] — on `src` for the authority
     * step, on `dst` for the hub step, because HITS alternates join sides
     * where PageRank reuses one — and every score table comes back placed
     * on `node`, so all four per-round joins are exchange-free, sort-free
@@ -705,23 +698,23 @@ object Graph extends QueryModule {
     * stages). */
   def qHits(spark: SparkSession, dir: String): DataFrame = {
     val parts = spark.sessionState.conf.numShufflePartitions
-    val eSrc = graft.plans.PartitionedCheckpoint.byKey(
+    val eSrc = Materialize.byKey(
       edges(spark, dir), "src", parts)
-    val eDst = graft.plans.PartitionedCheckpoint.byKey(eSrc, "dst", parts)
+    val eDst = Materialize.byKey(eSrc, "dst", parts)
     // explode, not union-of-two-selects: one scan of the eSrc checkpoint
     // instead of two feeding the node-set distinct (same row multiset)
     val nodes = eSrc.select(explode(array(col("src"), col("dst"))).as("node"))
       .distinct()
-    var h = graft.plans.PartitionedCheckpoint.byKey(
+    var h = Materialize.byKey(
       nodes.withColumn("h", lit(1024L)), "node", parts)
     var a: DataFrame = null
     for (_ <- 1 to 2) {
-      a = graft.plans.PartitionedCheckpoint.byKey(
+      a = Materialize.byKey(
         eSrc.join(h, eSrc("src") === h("node"))
           .groupBy(col("dst")).agg(expr("sum(h) div 1024").as("a"))
           .select(col("dst").as("node"), col("a")),
         "node", parts)
-      h = graft.plans.PartitionedCheckpoint.byKey(
+      h = Materialize.byKey(
         eDst.join(a, eDst("dst") === a("node"))
           .groupBy(col("src")).agg(expr("sum(a) div 1024").as("h"))
           .select(col("src").as("node"), col("h")),
@@ -745,7 +738,7 @@ object Graph extends QueryModule {
     * Scale shape per round: one map-side-combinable degree count, one
     * semi-join of edges against the ≥k node set on each endpoint — all
     * hash equi-joins on node ids, nothing corpus-broadcast. Each round's
-    * survivor edge set is EAGERLY localCheckpoint'ed (the [[qCommunityLpa]]
+    * survivor edge set is EAGERLY checkpointed (the [[qCommunityLpa]]
     * discipline — without the per-round truncation round 3's census
     * re-derives rounds 1–2 from scratch; measured 7.4 s → ~4 s at
     * sf0.1/32 threads), and — the reclamation half — the
@@ -781,28 +774,26 @@ object Graph extends QueryModule {
     * eagerly-checkpointed row (so the next round may safely drop this
     * round's edge set — a lazy census would read a truncated-lineage
     * cache after its blocks are gone), each round's edge set reclaimed
-    * via unpersistCheckpoint once its successor materializes. */
+    * via [[Materialize.release]] once its successor materializes. */
   private def kcorePeel(e0: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftshim.InternalDataFrames.unpersistCheckpoint
     val k = 3
-    var e = e0.localCheckpoint()
+    var e = Materialize.barrier(e0)
     val rounds = (1 to 3).map { round =>
       val prev = e
       val keep = prev.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("src").as("node"))
-      e = prev.join(keep.withColumnRenamed("node", "src"), "src")
+      e = Materialize.barrier(prev.join(keep.withColumnRenamed("node", "src"), "src")
         .join(keep.withColumnRenamed("node", "dst"), "dst")
-        .select(col("src"), col("dst"))
-        .localCheckpoint() // eager: materializes now — prev's last consumer
-      unpersistCheckpoint(prev)
-      e.agg(countDistinct(col("src")).as("n_nodes"), count(lit(1)).as("n_edges"),
+        .select(col("src"), col("dst"))) // eager: materializes now — prev's last consumer
+      Materialize.release(prev)
+      Materialize.barrier(e.agg(countDistinct(col("src")).as("n_nodes"),
+          count(lit(1)).as("n_edges"),
           coalesce(sum(col("src")), lit(0L)).as("sum_src"),
           coalesce(sum(col("dst")), lit(0L)).as("sum_dst"))
-        .withColumn("round", lit(round.toLong))
-        .localCheckpoint()
+        .withColumn("round", lit(round.toLong)))
     }
     // census₃ above was the final core set's last consumer
-    unpersistCheckpoint(e)
+    Materialize.release(e)
     rounds.reduce(_ unionByName _)
   }
 
@@ -824,10 +815,10 @@ object Graph extends QueryModule {
     * and two equi-joins decorating each edge endpoint with its degree —
     * the same join pattern every other key in this family runs per
     * round; the moment fold is a single global aggregate. The edge set
-    * is lazily localCheckpointed: the degree table AND the probe side
+    * is checkpointed: the degree table AND the probe side
     * both consume it and Catalyst has no cross-branch reuse. */
   def qDegreeAssort(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).localCheckpoint(eager = false)
+    val e = Materialize.shared(edges(spark, dir))
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     val moments = e
       .join(deg.select(col("node").as("src"), col("deg").as("dx")), "src")
@@ -875,7 +866,7 @@ object Graph extends QueryModule {
     * 1-row broadcast. */
   def qGraphModularity(spark: SparkSession, dir: String): DataFrame = {
     val sym = symStrongByV(spark, dir)
-    val labels = lpaFromSym(sym, 3).localCheckpoint(eager = false)
+    val labels = Materialize.shared(lpaFromSym(sym, 3))
     val m = sym.agg(count(lit(1)).as("m"))
     val intra = sym
       .join(labels.select(col("node").as("u"), col("lbl").as("lu")), "u")
@@ -893,7 +884,7 @@ object Graph extends QueryModule {
         """div(1000000 * intra, m)
           |- CAST(CAST(1000000 AS DECIMAL(38,0)) * d_c * d_c
           |       div (CAST(m AS DECIMAL(38,0)) * m) AS BIGINT)""".stripMargin))
-    val cchk = contrib.localCheckpoint(eager = false)
+    val cchk = Materialize.shared(contrib)
     val q = cchk.agg(sum(col("contrib_ppm")).as("q_ppm"))
     cchk
       .orderBy(col("n_nodes").desc, col("community")).limit(10)
@@ -916,7 +907,7 @@ object Graph extends QueryModule {
     * one row per (walk, step, node).
     *
     * Scale shape: each step is ONE equi-join of the walk frontier against
-    * the hash-placed edge layout ([[graft.plans.PartitionedCheckpoint]] —
+    * the hash-placed edge layout ([[Materialize.byKey]] —
     * the same exchange-free discipline as the other iterative graph ops)
     * followed by a struct-min groupBy on walk_id (map-side combinable).
     * Cost per step ∝ frontier out-degree, state = |walks| rows; walks
@@ -926,20 +917,19 @@ object Graph extends QueryModule {
   def qRandomWalk(spark: SparkSession, dir: String): DataFrame = {
     val Steps = 3
     val parts = spark.sessionState.conf.numShufflePartitions
-    val e = graft.plans.PartitionedCheckpoint.byKey(edges(spark, dir), "src", parts)
+    val e = Materialize.byKey(edges(spark, dir), "src", parts)
     var cur = e.select(col("src").as("node")).distinct()
       .filter(col("node") % 250 === 0)
       .select(col("node").as("walk_id"), col("node"))
     val rows = scala.collection.mutable.Buffer(
       cur.select(col("walk_id"), lit(0L).as("step"), col("node")))
     for (s <- 1 to Steps) {
-      cur = e.join(cur, e("src") === cur("node"))
+      cur = Materialize.shared(e.join(cur, e("src") === cur("node"))
         .withColumn("h", md5(concat(lit(s"$s:"), col("src").cast("string"),
           lit(":"), col("dst").cast("string"))))
         .groupBy(col("walk_id"))
         .agg(min(struct(col("h"), col("dst"))).as("pick"))
-        .select(col("walk_id"), col("pick.dst").as("node"))
-        .localCheckpoint(eager = false) // frontier feeds output AND next step
+        .select(col("walk_id"), col("pick.dst").as("node"))) // frontier feeds output AND next step
       rows += cur.select(col("walk_id"), lit(s.toLong).as("step"), col("node"))
     }
     rows.reduce(_ unionByName _).orderBy(col("walk_id"), col("step"))

@@ -1,7 +1,7 @@
 package graft.ops
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.{Materialize, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing (BASELINE north-star; SURVEY.md §2.5): treat
@@ -9,12 +9,12 @@ import org.apache.spark.sql.functions._
   * metadata struct, and run decode / feature-extract / frame-sample as
   * distributed per-partition passes.
   *
-  * The container has no image/audio codecs, so the DECODE STEP IS A STUB —
-  * `featurizeStub` computes a deterministic byte-histogram standing in for
-  * a real decoder (swap the body for JNI/FFI image decode in production).
-  * Everything around it — the binary column, metadata struct, partitioned
-  * mapPartitions batch shape, frame slicing — is the real Spark plumbing and
-  * is tested.
+  * There are no image/audio codecs to call, so the DECODE STEP IS A STUB:
+  * [[qMultimodalPhash]] and [[qMultimodalResize]] compute a deterministic
+  * byte histogram standing in for a real decoder (swap it for JNI/FFI
+  * image decode in production). Everything around it — the binary column,
+  * metadata struct, partitioned mapPartitions batch shape, frame slicing —
+  * is the real Spark plumbing and is tested.
   *
   * Scale notes: binary payloads ride the same columnar scan as everything
   * else (Parquet stores them contiguously; column pruning means queries not
@@ -28,7 +28,6 @@ object Multimodal extends QueryModule {
   val FrameBytes = 256
 
   final case class DocBlob(doc_id: Long, bytes: Array[Byte])
-  final case class DocFeatures(doc_id: Long, features: Array[Float])
 
   /** Attach the opaque binary column + typed metadata struct. The harness
     * has no true binary payloads, so document text bytes stand in — the
@@ -41,28 +40,6 @@ object Multimodal extends QueryModule {
         octet_length(col("bytes")).as("n_bytes"),
         ceil(octet_length(col("bytes")) / lit(FrameBytes.toDouble)).cast("int")
           .as("n_frames")))
-
-  /** STUB decoder: 16-bin byte histogram, L1-normalized — deterministic
-    * stand-in for image/audio feature extraction. Real plumbing: typed
-    * Dataset, mapPartitions batch shape, Array[Float] feature column. */
-  def featurizeStub(blobs: Dataset[DocBlob]): Dataset[DocFeatures] = {
-    import blobs.sparkSession.implicits._
-    blobs.mapPartitions { it =>
-      it.map { blob =>
-        val hist = new Array[Float](16)
-        blob.bytes.foreach(b => hist((b & 0xFF) >> 4) += 1f)
-        val total = math.max(blob.bytes.length, 1).toFloat
-        DocFeatures(blob.doc_id, hist.map(_ / total))
-      }
-    }
-  }
-
-  /** End-to-end: binary column → typed Dataset → stub featurizer. */
-  def features(spark: SparkSession, dir: String): Dataset[DocFeatures] = {
-    import spark.implicits._
-    featurizeStub(withBinary(spark, dir)
-      .select(col("doc_id"), col("bytes")).as[DocBlob])
-  }
 
   /** Frame-sample: slice the payload into fixed FrameBytes frames, keep
     * every 4th — pure codegen'd expression work on binary. */
@@ -141,8 +118,8 @@ object Multimodal extends QueryModule {
     * pipeline runs over image corpora (feature → binarize → LSH band →
     * Hamming verify), with the decoded-pixel feature of a real pipeline
     * stood in by the payload's 64-bin byte histogram (the container has
-    * no codecs — [[featurizeStub]]'s declared constraint; swap the
-    * feature, keep every step downstream).
+    * no codecs — the module's declared stub; swap the feature, keep
+    * every step downstream).
     *
     * Construction, all integer and oracle-replayable:
     *  1. 64-bin byte histogram (bin = byte div 4) from `hex(bytes)` —
@@ -190,8 +167,8 @@ object Multimodal extends QueryModule {
   def qMultimodalPhash(spark: SparkSession, dir: String): DataFrame = {
     val NBins = 64
     val NBits = 60
-    // Per-payload 64-bin histogram in the SAME typed mapPartitions pass
-    // production feature extraction uses (module doc, [[featurizeStub]]):
+    // Per-payload 64-bin histogram in the typed mapPartitions pass
+    // production feature extraction uses (module doc):
     // one while-loop over the raw bytes per row — no explode, no shuffle,
     // no per-byte expression evaluation. (Two DataFrame-DSL formulations
     // were measured first and both lose badly: explode+conditional-sum
@@ -216,7 +193,7 @@ object Multimodal extends QueryModule {
       sum(col("total")).as("ctotal"))
     // The 60×64 sign-projection kernel runs as a typed mapPartitions
     // while-loop — the sanctioned last resort for per-row numeric kernels
-    // (same shape as [[featurizeStub]]), because Spark's higher-order
+    // (same shape as the histogram pass above), because Spark's higher-order
     // array functions are CodegenFallback: the HOF formulation evaluated
     // ~19M interpreted lambda steps (8 s at sf0.1, the slowest stage in
     // the whole bench), and a flat generated expression was worse still —
@@ -225,7 +202,12 @@ object Multimodal extends QueryModule {
     // oracle); the loop is ~19M primitive multiply-adds, milliseconds.
     // Map-only and partition-parallel, so the 100 TB shape is unchanged.
     import spark.implicits._
-    val phash = hist.crossJoin(broadcast(corpus))
+    // truncate lineage: the 60×64 projection expression is the expensive
+    // step and is consumed FOUR+ times downstream (both self-join sides
+    // × the band explode) — without the checkpoint Catalyst re-derives
+    // it per consumer and the key runs ~20× slower (measured 96 s vs
+    // ~5 s at sf0.1)
+    val phash = Materialize.shared(hist.crossJoin(broadcast(corpus))
       .select(col("doc_id"), col("bins"), col("total"), col("cbins"), col("ctotal"))
       .as[(Long, Seq[Long], Long, Seq[Long], Long)]
       .mapPartitions { it =>
@@ -247,13 +229,7 @@ object Multimodal extends QueryModule {
           }
           (id, ph)
         }
-      }.toDF("doc_id", "phash")
-      // truncate lineage: the 60×64 projection expression is the expensive
-      // step and is consumed FOUR+ times downstream (both self-join sides
-      // × the band explode) — without the checkpoint Catalyst re-derives
-      // it per consumer and the key runs ~20× slower (measured 96 s vs
-      // ~5 s at sf0.1)
-      .localCheckpoint(eager = false)
+      }.toDF("doc_id", "phash"))
     // ---- value-collapsed banding: pair HASH VALUES, not doc rows ----
     val hv = phash.select(col("phash")).distinct()
     val bandedV = hv.select(col("phash"),

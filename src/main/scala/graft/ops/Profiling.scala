@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -380,14 +380,12 @@ object Profiling extends QueryModule {
     // checkpointed: each discMedian pass consumes its input twice (chunk
     // table + rank join) and `cents` additionally feeds the deviation
     // join — uncheckpointed the events scan was planted 9× in the plan
-    val cents = Tables.events(spark, dir)
+    val cents = Materialize.shared(Tables.events(spark, dir)
       .select(col("event_type"), col("event_id"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("c"))
-      .localCheckpoint(eager = false)
+        expr("CAST(round(value * 100) AS BIGINT)").as("c")))
     val med = discMedian(cents, "c")
-    val devs = cents.join(broadcast(med), "event_type")
-      .withColumn("dev", abs(col("c") - col("med_c")))
-      .localCheckpoint(eager = false) // feeds the MAD pass AND the final census
+    val devs = Materialize.shared(cents.join(broadcast(med), "event_type")
+      .withColumn("dev", abs(col("c") - col("med_c")))) // feeds the MAD pass AND the final census
     val mad = discMedian(devs.select(col("event_type"), col("event_id"), col("dev")),
       "dev")
     devs.join(broadcast(mad), "event_type")
@@ -713,14 +711,13 @@ object Profiling extends QueryModule {
     * 7-row broadcast, and the lag self-join keys on (event_type, date), so
     * no stage after the rollup ever sees a corpus-sized row count. */
   def qAcf(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
+    // consumed three times (stats + both sides of the lag join): compute
+    // the rollup once, not once per consumer
+    val daily = Materialize.shared(Tables.events(spark, dir)
       .select(col("event_type"), col("ts").cast("date").as("d"),
         expr("CAST(round(value * 100) AS BIGINT)").as("x"))
       .groupBy(col("event_type"), col("d"))
-      .agg(sum(col("x")).as("x"))
-      // consumed three times (stats + both sides of the lag join): compute
-      // the rollup once, not once per consumer
-      .localCheckpoint(eager = false)
+      .agg(sum(col("x")).as("x")))
     val stats = daily.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("x").cast("decimal(38,0)")).as("s"),
@@ -913,10 +910,9 @@ object Profiling extends QueryModule {
     def bucket(j: Int, tok: org.apache.spark.sql.Column) =
       (conv(substring(md5(concat(lit(s"$j:"), tok)), 1, 15), 16, 10)
         .cast("long") % W).as(s"b$j")
-    val toks = Tables.documents(spark, dir)
+    val toks = Materialize.shared(Tables.documents(spark, dir)
       .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
-      .filter(col("tok") =!= "")
-      .localCheckpoint(eager = false) // feeds the sketch AND the exact top-10
+      .filter(col("tok") =!= "")) // feeds the sketch AND the exact top-10
     val cells = toks
       .select(explode(array((0 until 4).map(j =>
         struct(lit(j).as("row_id"), bucket(j, col("tok")).as("bucket"))): _*))
@@ -958,8 +954,8 @@ object Profiling extends QueryModule {
     def bucket(j: Int, k: org.apache.spark.sql.Column) =
       (conv(substring(md5(concat(lit(s"$j:"), k.cast("string"))), 1, 15), 16, 10)
         .cast("long") % W)
-    val keys = Tables.lineitem(spark, dir).select(col("l_partkey").as("k"))
-      .localCheckpoint(eager = false) // feeds the sketch AND the exact F2
+    // feeds the sketch AND the exact F2
+    val keys = Materialize.shared(Tables.lineitem(spark, dir).select(col("l_partkey").as("k")))
     val cells = keys
       .select(explode(array((0 until 4).map(j =>
         struct(lit(j).as("row_id"), bucket(j, col("k")).as("bucket"))): _*)).as("c"))
@@ -1000,15 +996,15 @@ object Profiling extends QueryModule {
     * run the register rollup alone. */
   def qHllSketch(spark: SparkSession, dir: String): DataFrame = {
     val M = 256
-    val regs = Tables.lineitem(spark, dir)
+    // ≤256 rows feed summary AND the harmonic sum
+    val regs = Materialize.shared(Tables.lineitem(spark, dir)
       .select(col("l_partkey").cast("string").as("k"))
       .withColumn("h", conv(substring(md5(concat(lit("hll:"), col("k"))), 1, 15), 16, 10)
         .cast("long"))
       .select((col("h") % M).as("bucket"), expr("h div 256").as("w"))
       .withColumn("rho", when(col("w") === 0, lit(53))
         .otherwise(lit(53) - length(expr("bin(w)"))))
-      .groupBy(col("bucket")).agg(max(col("rho")).as("m_b"))
-      .localCheckpoint(eager = false) // ≤256 rows feed summary AND the harmonic sum
+      .groupBy(col("bucket")).agg(max(col("rho")).as("m_b")))
     val summary = regs.agg(
         count(lit(1)).as("n_used"),
         max(col("m_b")).cast("long").as("r_max"),
@@ -1040,12 +1036,11 @@ object Profiling extends QueryModule {
     * slice table is bounded by |lang|×|source|, so the final sort is noise
     * at any scale. */
   def qSliceFinder(spark: SparkSession, dir: String): DataFrame = {
-    val perDoc = Tables.documents(spark, dir)
+    val perDoc = Materialize.shared(Tables.documents(spark, dir)
       .withColumn("toks", TextAnalysis.tokens(col("text")))
       .select(col("lang"), col("source"),
         expr("div(1000000 * cast(size(array_distinct(toks)) as bigint), size(toks))")
-          .as("ratio_ppm"))
-      .localCheckpoint(eager = false) // feeds the slice rollup AND the global mean
+          .as("ratio_ppm"))) // feeds the slice rollup AND the global mean
     val global = perDoc.agg(
       expr("div(sum(ratio_ppm), count(1))").as("global_avg_ppm"))
     perDoc.groupBy(col("lang"), col("source"))
@@ -1080,12 +1075,11 @@ object Profiling extends QueryModule {
         .withColumn("pos", expr(
           s"CAST(conv(substring(md5(concat('bf', CAST(i AS STRING), ':', " +
             s"CAST(k AS STRING))), 1, 15), 16, 10) AS BIGINT) % $mBits"))
-    val members = Tables.orders(spark, dir)
+    val members = Materialize.shared(Tables.orders(spark, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_custkey")).distinct()
-      .localCheckpoint(eager = false) // feeds the bit set AND the probe anti-join
-    val bits = positions(members, "o_custkey").select(col("pos")).distinct()
-      .localCheckpoint(eager = false) // feeds n_bits_set AND the probe join
+      .select(col("o_custkey")).distinct()) // feeds the bit set AND the probe anti-join
+    // feeds n_bits_set AND the probe join
+    val bits = Materialize.shared(positions(members, "o_custkey").select(col("pos")).distinct())
     val probes = Tables.customer(spark, dir)
       .join(members, col("c_custkey") === col("o_custkey"), "left_anti")
       .select(col("c_custkey"))
@@ -1121,11 +1115,11 @@ object Profiling extends QueryModule {
     * map-side-combinable daily rollup — the corpus never pairs with
     * itself, only the 30-row profile does, partition-parallel per type. */
   def qTheilSen(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
+    // tiny profile feeds both pair sides
+    val daily = Materialize.shared(Tables.events(spark, dir)
       .groupBy(col("event_type"),
         expr("CAST(datediff(to_date(ts), DATE '2024-01-01') AS BIGINT)").as("d"))
-      .agg(expr("sum(CAST(round(value * 100) AS BIGINT))").as("y"))
-      .localCheckpoint(eager = false) // tiny profile feeds both pair sides
+      .agg(expr("sum(CAST(round(value * 100) AS BIGINT))").as("y")))
     val a = daily.select(col("event_type"), col("d").as("d1"), col("y").as("y1"))
     val b = daily.select(col("event_type"), col("d").as("d2"), col("y").as("y2"))
     val slopes = a.join(b, Seq("event_type")).filter(col("d1") < col("d2"))

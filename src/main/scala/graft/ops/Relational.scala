@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -584,10 +584,9 @@ object Relational extends QueryModule {
     * but the per-table file LIST is always metadata-sized), never the
     * fact table. */
   def qCompactionPlan(spark: SparkSession, dir: String): DataFrame = {
-    val fileCensus = Tables.orders(spark, dir)
+    val fileCensus = Materialize.shared(Tables.orders(spark, dir)
       .groupBy(expr("year(o_orderdate) * 100 + month(o_orderdate)").as("file_id"))
-      .agg(count(lit(1)).as("n_rows"))
-      .localCheckpoint(eager = false) // bounded profile feeds total AND plan
+      .agg(count(lit(1)).as("n_rows"))) // bounded profile feeds total AND plan
     val target = fileCensus.agg(expr("div(sum(n_rows), 8) + 1").as("target_rows"))
     fileCensus.crossJoin(broadcast(target))
       .withColumn("cum_before", coalesce(sum(col("n_rows")).over(
@@ -657,10 +656,9 @@ object Relational extends QueryModule {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ev.schema)
         else spark.read.parquet(fs: _*)
       // bag-diff over ONLY the commit's churn: added vs removed files
-      val ins = rd(next.diff(prev)).exceptAll(rd(prev.diff(next)))
-        .localCheckpoint(eager = false) // feeds per-type AND total censuses
-      val del = rd(prev.diff(next)).exceptAll(rd(next.diff(prev)))
-        .localCheckpoint(eager = false)
+      // (each feeds the per-type AND the total census)
+      val ins = Materialize.shared(rd(next.diff(prev)).exceptAll(rd(prev.diff(next))))
+      val del = Materialize.shared(rd(prev.diff(next)).exceptAll(rd(next.diff(prev))))
       val insT = ins.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_ins"), sum(col("event_id")).as("chk_ins"))
       val delT = del.groupBy(col("event_type"))

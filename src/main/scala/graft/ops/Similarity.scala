@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -249,18 +249,17 @@ object Similarity extends QueryModule {
     // corpus scan + rank) was planted twice (the plan showed 12
     // embeddings scans, 58 exchanges for this one key). Both checkpoints are
     // page-sized (≤ 64·5 rows / ≤ 64 rows).
-    val exact = qKnnJoin(spark, dir).select(col("qid"), col("vec_id"))
-      .localCheckpoint(eager = false)
+    val exact = Materialize.shared(qKnnJoin(spark, dir).select(col("qid"), col("vec_id")))
     val served = qAnnIvfBatch(spark, dir)
       .select(col("qid").as("q2"), col("vec_id").as("v2"))
     val hits = exact
       .join(served, col("qid") === col("q2") && col("vec_id") === col("v2"))
       .groupBy(col("qid")).agg(count(lit(1)).as("n_hit"))
-    val per = exact.groupBy(col("qid")).agg(count(lit(1)).as("n_exact"))
+    // feeds the mean AND the output join
+    val per = Materialize.shared(exact.groupBy(col("qid")).agg(count(lit(1)).as("n_exact"))
       .join(hits, Seq("qid"), "left")
       .na.fill(0L, Seq("n_hit"))
-      .withColumn("recall_ppm", expr("div(1000000 * n_hit, n_exact)"))
-      .localCheckpoint(eager = false) // feeds the mean AND the output join
+      .withColumn("recall_ppm", expr("div(1000000 * n_hit, n_exact)")))
     val mean = per.agg(
       expr("CAST(div(sum(recall_ppm), count(1)) AS BIGINT)").as("mean_recall_ppm"))
     per.crossJoin(broadcast(mean))
@@ -368,7 +367,7 @@ object Similarity extends QueryModule {
     }
     // consumed twice downstream (assignment + probes): truncate so the
     // training subplan runs once, not once per consumer
-    cent.localCheckpoint(eager = false)
+    Materialize.shared(cent)
   }
 
   /** Batched IVF ANN serving — the production shape of [[qAnnIvf]]: the
@@ -507,13 +506,12 @@ object Similarity extends QueryModule {
     val e = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
     // integer micro sub-vectors: one row per (vector, subspace)
-    val sub = e.select(col("vec_id"), posexplode(expr(
+    val sub = Materialize.shared(e.select(col("vec_id"), posexplode(expr(
         """transform(sequence(0, 3), s ->
           |  transform(sequence(0, 15),
           |    j -> CAST(round(element_at(embedding, s * 16 + j + 1) * 1e6) AS BIGINT)))"""
           .stripMargin)))
-      .toDF("vec_id", "s", "sv")
-      .localCheckpoint(eager = false) // seeds + assign + encode consumers
+      .toDF("vec_id", "s", "sv")) // seeds + assign + encode consumers
     val d2Expr =
       "aggregate(zip_with(sv, cv, (x, y) -> (x - y) * (x - y)), 0L, (a, b) -> a + b)"
     val argminW = Window.partitionBy(col("vec_id"), col("s"))
@@ -534,9 +532,9 @@ object Similarity extends QueryModule {
       .groupBy(col("s"), col("code"))
       .agg(expr("transform(array_sort(collect_list(struct(dim, sx, n))), t -> t.sx div t.n)")
         .as("nv"))
-    val cb = cb0.join(means, Seq("s", "code"), "left")
-      .select(col("s"), col("code"), coalesce(col("nv"), col("cv")).as("cv"))
-      .localCheckpoint(eager = false) // encode + LUT consumers
+    // encode + LUT consumers
+    val cb = Materialize.shared(cb0.join(means, Seq("s", "code"), "left")
+      .select(col("s"), col("code"), coalesce(col("nv"), col("cv")).as("cv")))
     val codes = assign(cb).select(col("vec_id"), col("s"), col("code"))
     // ADC lookup table: exact query·centroid dot per (subspace, code)
     val qsub = sub.filter(col("vec_id") === 0).select(col("s"), col("sv").as("qv"))
@@ -574,13 +572,12 @@ object Similarity extends QueryModule {
     val e = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-    val pool = e.crossJoin(broadcast(q))
+    // 4 rounds × 2 consumers re-derive the pool otherwise
+    val pool = Materialize.shared(e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= 0)
       .withColumn("rel", expr("cosine_sim(embedding, qvec)"))
       .orderBy(col("rel").desc, col("vec_id")).limit(20)
-      .select(col("vec_id"), col("embedding"), col("rel"))
-      // 4 rounds × 2 consumers re-derive the pool otherwise
-      .localCheckpoint(eager = false)
+      .select(col("vec_id"), col("embedding"), col("rel")))
     var picked = pool.orderBy(col("rel").desc, col("vec_id")).limit(1)
       .select(col("vec_id").as("pid"), col("embedding").as("pvec"),
         col("rel").as("prel"), lit(1).as("rk"))
@@ -595,7 +592,7 @@ object Similarity extends QueryModule {
         .orderBy(col("mmr").desc, col("vec_id")).limit(1)
         .select(col("vec_id").as("pid"), col("embedding").as("pvec"),
           col("rel").as("prel"), lit(r).as("rk"))
-      picked = picked.unionByName(next).localCheckpoint(eager = false)
+      picked = Materialize.shared(picked.unionByName(next))
     }
     picked.select(col("pid").as("vec_id"), col("rk"),
       round(col("prel"), 6).as("relevance"))
@@ -624,9 +621,8 @@ object Similarity extends QueryModule {
   def qSemdedup(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
-    val assigned = assignToCentroids(e, ivfCentroids(e, 16, 2))
-      // three consumers (both pair sides + the final left join): one pass
-      .localCheckpoint(eager = false)
+    // three consumers (both pair sides + the final left join): one pass
+    val assigned = Materialize.shared(assignToCentroids(e, ivfCentroids(e, 16, 2)))
     val a = assigned.select(col("cid"), col("vec_id").as("u"), col("embedding").as("eu"))
     val b = assigned.select(col("cid"), col("vec_id").as("vid"), col("embedding").as("ev"))
     val dom = a.join(b, Seq("cid"))
@@ -743,18 +739,17 @@ object Similarity extends QueryModule {
     * combined, shuffle volume O(partitions·d²) — see [[qGramMatrix]]);
     * the iterations run on the d×d table with a broadcast d-row vector
     * and a one-row broadcast max, so the loop costs O(d²) per step no
-    * matter the corpus size. The Gram table is localCheckpointed once so
+    * matter the corpus size. The Gram table is checkpointed once so
     * the five iterations reuse it instead of re-exploding the corpus. */
   def qPcaPower(spark: SparkSession, dir: String): DataFrame = {
     val q = Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64)
       .select(expr("transform(embedding, v -> CAST(round(v * 1e6) AS BIGINT))")
         .as("qv"))
-    val gram = q.select(col("qv"), posexplode(col("qv"))).toDF("qv", "i", "vi")
+    val gram = Materialize.barrier(q.select(col("qv"), posexplode(col("qv"))).toDF("qv", "i", "vi")
       .select(col("i"), col("vi"), posexplode(col("qv"))).toDF("i", "vi", "j", "vj")
       .groupBy(col("i"), col("j"))
-      .agg(sum(expr("CAST(vi * vj AS DECIMAL(38,0))")).as("s"))
-      .localCheckpoint()
+      .agg(sum(expr("CAST(vi * vj AS DECIMAL(38,0))")).as("s")))
     var v = gram.select(col("i").as("j")).distinct()
       .withColumn("vj", lit(1000000L))
     for (_ <- 1 to 5) {
@@ -762,11 +757,10 @@ object Similarity extends QueryModule {
         .groupBy(col("i"))
         .agg(sum(expr("CAST(s * vj AS DECIMAL(38,0))")).as("w"))
       val m = w.agg(expr("GREATEST(MAX(ABS(w)), CAST(1 AS DECIMAL(38,0)))").as("m"))
-      v = w.crossJoin(broadcast(m))
+      v = Materialize.barrier(w.crossJoin(broadcast(m))
         .select(col("i").as("j"),
           expr("CAST(ROUND(CAST(w AS DOUBLE) / CAST(m AS DOUBLE) * 1e6) AS BIGINT)")
-            .as("vj"))
-        .localCheckpoint()
+            .as("vj")))
     }
     v.select(col("j").as("dim"), (col("vj").cast("double") / 1e6).as("loading"))
       .orderBy(col("dim"))
@@ -796,14 +790,13 @@ object Similarity extends QueryModule {
     val stats = Tables.documents(spark, dir).agg(count(lit(1)).as("n_docs"))
     // integer cross-multiplication for the df cap (df * 5 <= n), not
     // division — exact and portable
-    val w = tf.join(dfreq, "token").crossJoin(broadcast(stats))
+    // consumed three times (norms + both join sides); materialize once
+    val w = Materialize.shared(tf.join(dfreq, "token").crossJoin(broadcast(stats))
       .filter(col("df") * 5 <= col("n_docs"))
       .withColumn("w", floor(
         col("tf") * log(col("n_docs").cast("double") / col("df").cast("double")) * 1000 + 0.5)
         .cast("long"))
-      .select(col("doc_id"), col("token"), col("w"))
-      // consumed three times (norms + both join sides); materialize once
-      .localCheckpoint(eager = false)
+      .select(col("doc_id"), col("token"), col("w")))
     val norms = w.groupBy(col("doc_id")).agg(sum(col("w") * col("w")).as("s2"))
     val dots = w.as("a").join(w.as("b"),
         col("a.token") === col("b.token") && col("a.doc_id") < col("b.doc_id"))
@@ -1076,11 +1069,11 @@ object Similarity extends QueryModule {
       report: Boolean = false): KnnParts = {
     import org.apache.spark.sql.expressions.Window
     def cpIfReport(df: DataFrame): DataFrame =
-      if (report) df.localCheckpoint(eager = false) else df
-    val base = vectors
+      if (report) Materialize.shared(df) else df
+    // feeds buckets, scoring, truth
+    val base = Materialize.shared(vectors
       .select(col("vec_id"), col("embedding"),
-        expr(signCode6(0)).as("code_a"), expr(signCode6(8)).as("code_b"))
-      .localCheckpoint(eager = false) // feeds buckets, scoring, truth
+        expr(signCode6(0)).as("code_a"), expr(signCode6(8)).as("code_b")))
     val va = base.select(col("vec_id").as("a"), col("embedding").as("va"))
     val vb = base.select(col("vec_id").as("b"), col("embedding").as("vb"))
     def topk(cand: DataFrame): DataFrame =
@@ -1095,10 +1088,10 @@ object Similarity extends QueryModule {
         .filter(col("a") =!= col("b")).select(col("a"), col("b"))
     val cand0 = cpIfReport(
       bucketPairs("code_a").unionByName(bucketPairs("code_b")).distinct())
-    val nn0 = topk(cand0).localCheckpoint(eager = false) // graph + next round
+    val nn0 = Materialize.shared(topk(cand0)) // graph + next round
     // symmetrize, then neighbors-of-neighbors through the shared endpoint
-    val u = nn0.unionByName(nn0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint(eager = false)
+    val u = Materialize.shared(nn0.unionByName(nn0.select(col("b").as("a"), col("a").as("b")))
+      .distinct())
     val cand1 = cpIfReport(
       u.select(col("a"), col("b").as("m"))
         .join(u.select(col("a").as("m"), col("b")), "m")
@@ -1143,12 +1136,11 @@ object Similarity extends QueryModule {
     val sample = base
       .filter(col("vec_id") % 50 === 0 && col("vec_id") < lit(50L * ServingBatchCap))
       .select(col("vec_id").as("a"), col("embedding").as("va"))
-    val exact = broadcast(sample).crossJoin(vb).filter(col("a") =!= col("b"))
+    val exact = Materialize.shared(broadcast(sample).crossJoin(vb).filter(col("a") =!= col("b"))
       .withColumn("cos", expr("cosine_sim(va, vb)"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("a")).orderBy(col("cos").desc, col("b"))))
-      .filter(col("rk") <= 4).select(col("a"), col("b"))
-      .localCheckpoint(eager = false) // compared against both rounds
+      .filter(col("rk") <= 4).select(col("a"), col("b"))) // compared against both rounds
     def report(round: Int, cand: DataFrame, nn: DataFrame): DataFrame = {
       val hits = nn.join(exact, Seq("a", "b")).agg(count(lit(1)).as("hits"))
       val truth = exact.agg(count(lit(1)).as("n_truth"))
@@ -1182,23 +1174,18 @@ object Similarity extends QueryModule {
     * graph ANN the lowest-latency serving tier at 100 TB (IVF probes read
     * nprobe/k of the corpus; the graph walk reads O(beam·hops) rows). */
   private[ops] def beamSearch(graph: DataFrame, vectors: DataFrame,
-      queries: DataFrame, hops: Int = 3, beam: Int = 8,
-      checkpoint: Boolean = true): DataFrame = {
+      queries: DataFrame, hops: Int = 3, beam: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // per-hop localCheckpoint: each visited generation feeds BOTH the next
-    // hop (frontier + anti-join) and the final rank — without it Catalyst
-    // re-derives hop h from scratch 2^(hops-h) times. `checkpoint = false`
-    // only for the PlanSpec pin, which must SEE the hop joins the
-    // checkpoints would otherwise hide behind scan nodes.
-    def cp(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(eager = false) else df
+    // each visited generation feeds BOTH the next hop (frontier +
+    // anti-join) and the final rank — without the checkpoint Catalyst
+    // re-derives hop h from scratch 2^(hops-h) times
     val entries = vectors.select(col("vec_id"))
       .withColumn("h", md5(concat(lit("gs:"), col("vec_id").cast("string"))))
       .orderBy(col("h"), col("vec_id")).limit(4)
       .select(col("vec_id").as("node"))
     val vecs = vectors.select(col("vec_id").as("node"), col("embedding"))
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("node"))
-    var visited = cp(vecs.join(broadcast(queries.crossJoin(entries)), "node")
+    var visited = Materialize.shared(vecs.join(broadcast(queries.crossJoin(entries)), "node")
       .withColumn("cos", expr("cosine_sim(embedding, qvec)"))
       .select(col("qid"), col("qvec"), col("node"), col("cos")))
     for (_ <- 1 to hops) {
@@ -1211,35 +1198,28 @@ object Similarity extends QueryModule {
       val scored = vecs.join(broadcast(cand), "node")
         .withColumn("cos", expr("cosine_sim(embedding, qvec)"))
         .select(col("qid"), col("qvec"), col("node"), col("cos"))
-      visited = cp(visited.unionByName(scored))
+      visited = Materialize.shared(visited.unionByName(scored))
     }
     visited.select(col("qid"), col("node"), col("cos"))
   }
 
-  /** [[qAnnGraphServe]] with plan-visible HOPS (the beam-search joins run
-    * uncheckpointed) — the PlanSpec seam. The twin intentionally DIVERGES
-    * from the production key on the BUILD half: it builds with
-    * report = true (cand0/cand1 checkpointed, as q_ann_nndescent's
-    * reporting path does), so the graph-build subtree stays behind
-    * checkpoints and PlanSpec pins exactly the hop-join shape; production
-    * qAnnGraphServe builds report = false (the cheaper streaming build) —
-    * its build plan is NOT what this twin pins. Test-only; it and
-    * [[beamSearch]]'s `checkpoint` flag stay until an inline build mode
-    * (ROADMAP direction 3) replaces them, as PlanSpec's only pin on the
-    * hop joins. */
-  private[graft] def graphServeUncheckpointed(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // report = true: the twin pins the HOP joins' shape, so the BUILD
-    // half stays behind its checkpoints (PlanSpec reads this plan; the
-    // production key below runs the cheaper non-report build)
+  /** The build half of [[qAnnGraphServe]]: [[qAnnNndescent]]'s one-round
+    * top-4 graph (a, b) and the vectors it indexes (`base` of
+    * [[KnnParts]]). */
+  private[graft] def annGraph(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val parts = knnGraphParts(Tables.embeddings(spark, dir)
       .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
-      .select(col("vec_id"), col("embedding")), report = true)
-    val queries = parts.base.filter(servingBatchPred)
+      .select(col("vec_id"), col("embedding")))
+    (Materialize.shared(parts.nn1), parts.base) // one edge set, 3 hop consumers
+  }
+
+  /** The serve half of [[qAnnGraphServe]]: the serving batch walks
+    * `graph` over `base` and reports its top-5 per query. */
+  private[graft] def annGraphServe(graph: DataFrame, base: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val queries = base.filter(servingBatchPred)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val visited = beamSearch(parts.nn1,
-      parts.base.select(col("vec_id"), col("embedding")), queries,
-      checkpoint = false)
+    val visited = beamSearch(graph, base.select(col("vec_id"), col("embedding")), queries)
     visited.filter(col("node") =!= col("qid"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("node"))))
@@ -1257,22 +1237,8 @@ object Similarity extends QueryModule {
     * the oracle unrolls the identical hops in SQL, so every visited-set
     * expansion — not just the final page — is hash-checked. */
   def qAnnGraphServe(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val parts = knnGraphParts(Tables.embeddings(spark, dir)
-      .filter(size(col("embedding")) === 64 && expr(normSqExpr) > 0)
-      .select(col("vec_id"), col("embedding")))
-    val graph = parts.nn1.localCheckpoint(eager = false) // one edge set, 3 hop consumers
-    val queries = parts.base.filter(servingBatchPred)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val visited = beamSearch(graph, parts.base.select(col("vec_id"), col("embedding")),
-      queries)
-    visited.filter(col("node") =!= col("qid"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("node"))))
-      .filter(col("rk") <= 5)
-      .select(col("qid"), col("node").as("vec_id"),
-        round(col("cos"), 6).as("cosine"), col("rk"))
-      .orderBy(col("qid"), col("rk"))
+    val (graph, base) = annGraph(spark, dir)
+    annGraphServe(graph, base)
   }
 
   /** The 64×16 Johnson–Lindenstrauss ±1 sign matrix, keyed by
@@ -1349,7 +1315,7 @@ object Similarity extends QueryModule {
     * Scale shape: exactly K passes over the corpus, each a map (squared
     * L2 to ONE broadcast center, running min) + a TakeOrdered(1) argmax —
     * never a pairwise join, never a global sort. The running min-distance
-    * column makes each pass O(n·d); per-iteration lazy localCheckpoints
+    * column makes each pass O(n·d); per-iteration checkpoints
     * stop the self-referencing lineage from doubling per step. At 100 TB
     * this is K linear scans — the known lower bound for exact greedy
     * k-center — and each scan's reduce moves ONE row. */
@@ -1363,24 +1329,20 @@ object Similarity extends QueryModule {
     val K = 8
     val d2 = "aggregate(zip_with(m, cm, (x, y) -> (x - y) * (x - y)), " +
       "CAST(0 AS BIGINT), (a, b) -> a + b)"
-    val v = quantizedVecs(spark, dir)
-      .localCheckpoint(eager = false) // K scan passes reuse the quantized table
-    val seed = v.orderBy(col("vec_id")).limit(1).localCheckpoint(eager = false)
-    var cur = v.crossJoin(broadcast(seed.select(col("m").as("cm"))))
-      .select(col("vec_id"), col("m"), expr(d2).as("mind"))
-      .localCheckpoint(eager = false)
+    val v = Materialize.shared(quantizedVecs(spark, dir)) // K scan passes reuse the quantized table
+    val seed = Materialize.shared(v.orderBy(col("vec_id")).limit(1))
+    var cur = Materialize.shared(v.crossJoin(broadcast(seed.select(col("m").as("cm"))))
+      .select(col("vec_id"), col("m"), expr(d2).as("mind")))
     val picks = scala.collection.mutable.Buffer(
       seed.select(lit(0L).as("pick_rank"), col("vec_id"), lit(0L).as("dist2")))
     for (i <- 1 until K) {
-      val p = kcenterPick(cur)
-        .localCheckpoint(eager = false) // 1 row: the next center
+      val p = Materialize.shared(kcenterPick(cur)) // 1 row: the next center
       picks += p.select(lit(i.toLong).as("pick_rank"), col("vec_id"),
         col("mind").as("dist2"))
       if (i < K - 1)
-        cur = cur.crossJoin(broadcast(p.select(col("m").as("cm"))))
+        cur = Materialize.shared(cur.crossJoin(broadcast(p.select(col("m").as("cm"))))
           .select(col("vec_id"), col("m"),
-            least(col("mind"), expr(d2)).as("mind"))
-          .localCheckpoint(eager = false)
+            least(col("mind"), expr(d2)).as("mind")))
     }
     picks.reduce(_ unionByName _).orderBy(col("pick_rank"))
   }
@@ -1431,8 +1393,7 @@ object Similarity extends QueryModule {
   def qKmeans(spark: SparkSession, dir: String): DataFrame = {
     val K = 8
     val Shift = 2000000L
-    val v = quantizedVecs(spark, dir)
-      .localCheckpoint(eager = false) // four passes (2× assign, 2× update)
+    val v = Materialize.shared(quantizedVecs(spark, dir)) // four passes (2× assign, 2× update)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("h"), col("vec_id"))
     val init = v
@@ -1448,7 +1409,7 @@ object Similarity extends QueryModule {
       assigned.groupBy(col("cid")).agg(sums.head, sums.tail: _*)
         .select(col("cid"), expr(s"array($cDims)").as("c"))
     }
-    val a2 = assign(update(assign(init))).localCheckpoint(eager = false)
+    val a2 = Materialize.shared(assign(update(assign(init))))
     val c2 = update(a2)
     val stats = a2.groupBy(col("cid")).agg(
       count(lit(1)).as("n_members"),
@@ -1502,15 +1463,14 @@ object Similarity extends QueryModule {
     val docs = Tables.documents(spark, dir)
       .filter(col("lang") === "en")
       .select(col("doc_id"), col("n_chars"))
-    val scored = withQuery(spark, dir)
+    val scored = Materialize.shared(withQuery(spark, dir)
       .filter(col("vec_id") =!= 0 && size(col("embedding")) === 64 && expr(normSqExpr) > 0)
       .withColumn("cos_raw", expr(cosineExpr))
       .join(docs, col("vec_id") === col("doc_id"))
       // ascending chunk ≡ descending ordering key; floor is monotone so
       // equal cos_raw values land in one chunk
       .withColumn("dchunk", floor(-col("cos_raw") * 1024))
-      .withColumn("lchunk", -floor(col("n_chars") / 64))
-      .localCheckpoint(eager = false) // feeds both chunk tables + ranks
+      .withColumn("lchunk", -floor(col("n_chars") / 64))) // feeds both chunk tables + ranks
     val dense = Windows.chunkedRunningSums(scored, Nil, "dchunk",
       Seq(col("cos_raw").desc, col("doc_id")), "r_dense" -> lit(1L))
     Windows.chunkedRunningSums(dense, Nil, "lchunk",

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -127,17 +127,15 @@ object TextAnalysis extends QueryModule {
     // this caps the trigram explosion at 198 rows/doc regardless of doc size
     val docs = Tables.documents(spark, dir)
       .withColumn("head", substring(col("text"), 1, 200))
-    // localCheckpoint: profiles AND scoring both consume the trigram table
-    // (Catalyst has no cross-branch subplan reuse), and the 200-char cap
-    // keeps the materialization small — intra-query only, freed on GC;
-    // eager=false so plan dumps don't trigger jobs (see Dedup.jaccardPairs
-    // for the reuse-vs-fault-tolerance notes)
-    val trigrams = docs.select(col("doc_id"), col("lang"),
+    // profiles AND scoring both consume the trigram table (Catalyst has no
+    // cross-branch subplan reuse), and the 200-char cap keeps the
+    // materialization small (see Dedup.jaccardPairs for the
+    // reuse-vs-fault-tolerance notes)
+    val trigrams = Materialize.shared(docs.select(col("doc_id"), col("lang"),
       explode(array_distinct(expr(
         """CASE WHEN length(head) < 3 THEN array()
           |ELSE transform(sequence(1, length(head) - 2), i -> substring(head, i, 3))
-          |END""".stripMargin))).as("trigram"))
-      .localCheckpoint(eager = false)
+          |END""".stripMargin))).as("trigram")))
     val profileW = Window.partitionBy(col("lang")).orderBy(col("n").desc, col("trigram"))
     val profiles = trigrams.groupBy(col("lang"), col("trigram"))
       .agg(count(lit(1)).as("n"))
@@ -426,7 +424,7 @@ object TextAnalysis extends QueryModule {
     * hit unseen bigrams and score high).
     *
     * Scale shape: the per-doc bigram stream is derived ONCE
-    * (localCheckpoint — three consumers: LM bigrams, LM contexts, scoring)
+    * (checkpointed — three consumers: LM bigrams, LM contexts, scoring)
     * and every join is keyed on the bigram/context token (high
     * cardinality); the vocabulary size rides a broadcast one-row cross
     * join. Per-instance bits floor to integer micro-units before the
@@ -438,13 +436,12 @@ object TextAnalysis extends QueryModule {
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         tokens(col("text")).as("toks"))
-    val docBi = toks.select(col("doc_id"), col("lang"), explode(expr(
+    val docBi = Materialize.shared(toks.select(col("doc_id"), col("lang"), explode(expr(
         """CASE WHEN size(toks) < 2 THEN array()
           |ELSE transform(sequence(0, size(toks) - 2),
           |  i -> struct(element_at(toks, i + 1) AS w1, element_at(toks, i + 2) AS w2))
           |END""".stripMargin)).as("p"))
-      .select(col("doc_id"), col("lang"), col("p.w1"), col("p.w2"))
-      .localCheckpoint(eager = false)
+      .select(col("doc_id"), col("lang"), col("p.w1"), col("p.w2")))
     val en = docBi.filter(col("lang") === "en")
     val lmBi = en.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_ab"))
     val lmCtx = en.groupBy(col("w1")).agg(count(lit(1)).as("n_a"))
@@ -559,13 +556,12 @@ object TextAnalysis extends QueryModule {
       .withColumn("stop", col("w").isInCollection(stopwords))
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val byRun = Window.partitionBy(col("doc_id"), col("run"))
-    val members = toks
+    // feeds the word-score rollup AND the scoring join — uncheckpointed
+    // the posexplode + two windows ran twice (2 scans in the plan)
+    val members = Materialize.shared(toks
       .withColumn("run", sum(when(col("stop"), 1L).otherwise(0L)).over(byDoc))
       .filter(!col("stop"))
-      .withColumn("plen", count(lit(1)).over(byRun))
-      // feeds the word-score rollup AND the scoring join — uncheckpointed
-      // the posexplode + two windows ran twice (2 scans in the plan)
-      .localCheckpoint(eager = false)
+      .withColumn("plen", count(lit(1)).over(byRun)))
     val wstats = members.groupBy(col("w"))
       .agg(count(lit(1)).as("freq"), sum(col("plen")).as("deg"))
       .withColumn("wscore_ppm", expr("div(1000000 * deg, freq)"))
@@ -662,14 +658,12 @@ object TextAnalysis extends QueryModule {
     * (≤|V| rows per doc) and two rollups (doc×class, then argmax). No
     * floats anywhere, so the cross-engine hash compares exact integers. */
   def qTextClassify(spark: SparkSession, dir: String): DataFrame = {
-    val docTok = Tables.documents(spark, dir)
+    val docTok = Materialize.shared(Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
-        explode(tokens(col("text"))).as("token"))
-      .localCheckpoint(eager = false) // feeds training counts AND scoring
+        explode(tokens(col("text"))).as("token"))) // feeds training counts AND scoring
     val cnt = docTok.groupBy(col("lang"), col("token")).agg(count(lit(1)).as("cnt"))
     val tot = docTok.groupBy(col("lang")).agg(count(lit(1)).as("tot"))
-    val vocab = docTok.select(col("token")).distinct()
-      .localCheckpoint(eager = false) // feeds V AND the grid
+    val vocab = Materialize.shared(docTok.select(col("token")).distinct()) // feeds V AND the grid
     val v = vocab.agg(count(lit(1)).as("v_size"))
     val grid = tot.crossJoin(vocab).crossJoin(broadcast(v))
     val weights = grid

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -314,10 +314,9 @@ object Windows extends QueryModule {
     // this frame, and Catalyst has no cross-branch reuse — the plan
     // showed the whole scan→window subtree planted twice (once under
     // the broadcast side), doubling the stage work
-    val marked = Tables.events(spark, dir)
+    val marked = Materialize.shared(Tables.events(spark, dir)
       .withColumn("is_first", when(row_number().over(wUser) === 1, 1L).otherwise(0L))
-      .withColumn("bucket", date_trunc("day", col("ts")))
-      .localCheckpoint(eager = false)
+      .withColumn("bucket", date_trunc("day", col("ts"))))
     chunkedRunningSums(marked, Seq("event_type"), "bucket", Seq(col("ts"), col("event_id")),
         "distinct_users_so_far" -> col("is_first"))
       .select(col("event_id"), col("event_type"), col("distinct_users_so_far"))

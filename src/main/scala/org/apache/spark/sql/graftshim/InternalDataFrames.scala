@@ -15,7 +15,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * final at capture time and the resulting `LogicalRDD` degrades to
   * UnknownPartitioning — verified against the bundled Spark 4.1.2: a
   * checkpointed-then-joined table re-exchanges on every use. Iterative
-  * algorithms (graft.ops.Graph) pay that lost exchange once per iteration.
+  * algorithms (graft.ops.Graph) would pay that lost exchange once per
+  * iteration; `graft.Materialize.byKey` is the caller that avoids it.
   *
   * This lives in a subpackage of `org.apache.spark.sql` purely to satisfy
   * the `private[sql]` scope of `Dataset.ofRows` — the standard extension-
@@ -35,22 +36,6 @@ object InternalDataFrames {
     ClassicDataset.ofRows(classic,
       LogicalRDD(output, rdd, partitioning, ordering, isStreaming = false)(classic))
   }
-
-  /** Drop the persisted blocks behind a (local-)checkpointed DataFrame —
-    * the reclamation half of the iterative-loop checkpoint discipline.
-    * A checkpointed frame's lineage is already truncated, so unpersisting
-    * it is IRREVERSIBLE: any later action on the frame fails with a
-    * missing-block error. Callers therefore only release frames whose
-    * every consumer has already materialized (eager checkpoints / eager
-    * 1-row census rows). Without this, a 3-round peel loop holds every
-    * round's corpus-sized edge set in executor memory at once — the
-    * 3–6× amplification that made q_kcore heap-bound at sf1.0.
-    * No-op on frames that are not checkpoint wrappers. */
-  def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false): Unit
-      case _ => ()
-    }
 
   /** Wrap an arbitrary (already-resolved) logical plan as a DataFrame —
     * the doorway a library needs to hand Catalyst a CUSTOM logical node

@@ -106,7 +106,7 @@ class ContractSpec extends AnyFunSuite {
     "loadReplaceCsv" -> "the reference's R8 sink",
     "loadReplaceJdbc" -> "the reference's R9 sink",
     "qTextEntropyRelational" -> "the reference implementation q_text_entropy's native expression is compared against",
-    "graphServeUncheckpointed" -> "PlanSpec's only pin on the hop joins, until an inline build mode (ROADMAP direction 3)",
+    "inline" -> "Materialize's plan-test seam: plans a key past its checkpoints",
     "dedupFirstPerHour" -> "live twin a test holds equal to q_stream_dedup",
     "throttleStream" -> "live twin a test holds equal to q_throttle_dedup's recurrence",
     "funnelStream" -> "live twin a test holds equal to q_funnel_window",
@@ -155,6 +155,16 @@ class ContractSpec extends AnyFunSuite {
     out.toString
   }
 
+  /** Each `.scala` file under `dir`, as (path, source with comments blanked). */
+  private def sources(dir: String): Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => p.toString -> stripComments(new String(
+        java.nio.file.Files.readAllBytes(p), "UTF-8")))
+    finally walk.close()
+  }
+
   /** Every `def` and `object` in `src/main` must be named somewhere in
     * `src/main` or `perfbench/src` other than by a declaration, or be on
     * [[unreachedAllowList]] with its reason. The check is a floor, not a
@@ -163,14 +173,6 @@ class ContractSpec extends AnyFunSuite {
     * the same name) still passes, and so does code reached only from other
     * dead code. */
   test("every src/main definition is reached outside the tests, or is listed with its reason") {
-    import scala.jdk.CollectionConverters._
-    def sources(dir: String): Seq[(String, String)] = {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-        .map(p => p.toString -> stripComments(new String(
-          java.nio.file.Files.readAllBytes(p), "UTF-8")))
-      finally walk.close()
-    }
     val main = sources("src/main")
     val all = (main ++ sources("perfbench/src")).map(_._2).mkString("\n")
     val declRe = """\b(def|object)\s+([A-Za-z_][A-Za-z0-9_]*)""".r
@@ -182,7 +184,8 @@ class ContractSpec extends AnyFunSuite {
     }.groupMap(_._1)(_._2)
     def tally(names: Iterator[String]): Map[String, Int] =
       names.toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
-    val uses = tally("""[A-Za-z0-9_]+""".r.findAllIn(all))
+    // an annotation such as `@inline` is not a use of a def of that name
+    val uses = tally("""(?<![@A-Za-z0-9_])[A-Za-z0-9_]+""".r.findAllIn(all))
     val decls = tally("""\b(?:def|object|class|trait|val|var)\s+([A-Za-z_][A-Za-z0-9_]*)""".r
       .findAllMatchIn(all).map(_.group(1)))
     val unreached = declared.keySet.filter(n => uses(n) <= decls(n))
@@ -193,5 +196,35 @@ class ContractSpec extends AnyFunSuite {
     val stale = (unreachedAllowList.keySet -- unreached).toSeq.sorted
     assert(stale.isEmpty,
       s"allow-list entries that are no longer declared, or are now reached: ${stale.mkString(", ")}")
+  }
+
+  /** Materializations in `src/main` outside [[Materialize]], keyed by the
+    * enclosing `def`, each with why it stays. */
+  private val materializeAllowList: Map[String, String] = Map(
+    "edgeSemiKill" -> "its DISK_ONLY spool keeps the survivors' lineage, which a checkpoint would cut; it runs only past BroadcastEdgeLimit",
+    "readCsvQuarantine" -> "Spark's documented workaround for plans over the corrupt-record column")
+
+  /** Every checkpoint, persist and cache goes through [[Materialize]], so a
+    * scope can release it and `Materialize.inline` can plan past it. A
+    * site is named by the nearest `def` before it. */
+  test("src/main materializes only through Materialize, or the site is listed with its reason") {
+    val callRe = """localCheckpoint\(|\.checkpoint\(|\.persist\(|\.cache\(\)""".r
+    val defRe = """\bdef\s+([A-Za-z_][A-Za-z0-9_]*)""".r
+    val sites: Seq[(String, String)] = sources("src/main")
+      .filterNot(_._1.endsWith(java.io.File.separator + "Materialize.scala"))
+      .flatMap { case (file, text) =>
+        callRe.findAllMatchIn(text).map { m =>
+          val before = text.substring(0, m.start)
+          val enclosing = defRe.findAllMatchIn(before).map(_.group(1)).toSeq.lastOption
+            .getOrElse("<top level>")
+          enclosing -> s"$file:${before.count(_ == '\n') + 1}"
+        }
+      }
+    val unlisted = sites.filterNot { case (name, _) => materializeAllowList.contains(name) }
+    assert(unlisted.isEmpty, "materialize through graft.Materialize (shared, barrier, " +
+      "byKey), or list the site with a reason: " +
+      unlisted.map { case (name, at) => s"$name ($at)" }.mkString("; "))
+    val stale = (materializeAllowList.keySet -- sites.map(_._1)).toSeq.sorted
+    assert(stale.isEmpty, s"allow-list entries with no materialization left: ${stale.mkString(", ")}")
   }
 }

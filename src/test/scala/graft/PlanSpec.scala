@@ -133,12 +133,12 @@ class PlanSpec extends SparkSpec {
       s"expected a (event_type, salt) exchange; got:\n${ex.mkString("\n")}")
   }
 
-  test("PartitionedCheckpoint joins exchange-free and sort-free (the pagerank iteration shape)") {
+  test("Materialize.byKey joins exchange-free and sort-free (the pagerank iteration shape)") {
     import org.apache.spark.sql.functions._
     val c = Tables.customer(spark, sf)
-    val left = graft.plans.PartitionedCheckpoint.byKey(
+    val left = Materialize.byKey(
       c.select(col("c_custkey"), col("c_acctbal")), "c_custkey", 8)
-    val right = graft.plans.PartitionedCheckpoint.byKey(
+    val right = Materialize.byKey(
       c.select(col("c_custkey").as("k"), col("c_nationkey")), "k", 8)
     val joined = left.join(right, left("c_custkey") === right("k"))
     joined.write.format("noop").mode("overwrite").save()
@@ -154,7 +154,7 @@ class PlanSpec extends SparkSpec {
     assert(joined.exceptAll(expected).isEmpty && expected.exceptAll(joined).isEmpty)
   }
 
-  test("a plain localCheckpoint forgets its hash layout: the reason PartitionedCheckpoint exists") {
+  test("a plain localCheckpoint forgets its hash layout: the reason Materialize.byKey exists") {
     // The restored LogicalRDD reports no partitioning, so a join under AQE
     // re-exchanges both sides though each is already hash-placed and sorted
     // on the key. When this fails, Spark keeps the layout and the graftshim
@@ -168,7 +168,7 @@ class PlanSpec extends SparkSpec {
         .localCheckpoint(eager)
     val left = placed("k1", "c_acctbal", eager = true)
     val right = placed("k2", "c_nationkey", eager = false)
-    // the hint keeps a sort-merge join, the shape PartitionedCheckpoint serves
+    // the hint keeps a sort-merge join, the shape Materialize.byKey serves
     val joined = left.join(right.hint("shuffle_merge"), col("k1") === col("k2"))
     assert(joined.collect().length == c.count())
     val plan = joined.queryExecution.executedPlan.toString
@@ -191,7 +191,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_hits' terminal job is exchange-free: node-placed full-outer into TakeOrdered") {
-    // both final score tables come back from PartitionedCheckpoint placed
+    // both final score tables come back from Materialize.byKey placed
     // on `node`, so the full-outer SMJ needs no exchange and no sort, and
     // the top-100 is a TakeOrdered — the terminal stage plans ZERO
     // exchanges. A regression here means a score table lost its layout
@@ -355,10 +355,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_ann_graph_serve walks with broadcast hops — no cartesian, no corpus shuffle joins") {
-    // the production key localCheckpoints each hop (hiding its joins
-    // behind scan nodes); the uncheckpointed twin has the same logical
-    // shape with every hop join visible
-    val plan = planOf(graft.ops.Similarity.graphServeUncheckpointed(spark, sf))
+    // the production key checkpoints each hop (hiding its joins behind
+    // scan nodes); its serve half planned under Materialize.inline, over
+    // the graph its own build half makes, shows every hop join
+    val (graph, base) = graft.ops.Similarity.annGraph(spark, sf)
+    val plan = planOf(Materialize.inline(graft.ops.Similarity.annGraphServe(graph, base)))
     // every hop joins the bounded frontier/candidate page INTO the
     // corpus-partitioned edge/vector tables as a broadcast; a sort-merge
     // or shuffled-hash join there would shuffle the corpus per hop

@@ -41,10 +41,13 @@ object Materialize {
       case _ => None
     }
 
-  /** A lazy checkpoint for a frame several consumers read: materialized by
-    * the first job that needs it, so plan dumps and planning trigger no
-    * jobs. `level` is the cache storage; local checkpoints always add disk,
-    * so an evicted block is re-read, never recomputed. */
+  /** A lazy checkpoint for a frame several consumers read. Lazy only in
+    * its last stage: under AQE the call plans the frame adaptively, which
+    * runs every shuffle and broadcast stage under it as a job now; the
+    * result stage, which fills the cache, runs with the first consumer. A
+    * frame with no exchange runs no job at the call. `level` is the cache
+    * storage; local checkpoints always add disk, so an evicted block is
+    * re-read, never recomputed. */
   def shared(df: DataFrame,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
     if (inlined.get) df else recorded(df.localCheckpoint(eager = false, level))

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Materialize, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph computation on DataFrames — the pattern behind PageRank,
@@ -30,29 +30,36 @@ object Graph extends QueryModule {
   private val Iterations = 3
 
   /** Hot-basket guard: at most this many DISTINCT parts per order feed the
-    * co-purchase pair builders. Pair fanout per order is C(n,2), and the
-    * self-join on `l_orderkey` lands every pair of one order in ONE task —
-    * so a single pathological mega-basket (a 10⁵-line order at 100×) would
-    * be a single-key quadratic no salt can split, because the quadratic is
-    * the OUTPUT, not the shuffle. Capping at the 64 smallest partkeys per
-    * order bounds any order's contribution at C(64,2) = 2,016 pairs and
-    * its window partition at the basket size (streamed, not buffered).
-    * The cap is semantic, mirrored verbatim in every graph oracle; on the
-    * TPC-H-shaped corpus (baskets ≤ 7 lines) it never binds, so all nine
-    * graph keys are bit-identical with or without it. */
+    * co-purchase pair builders. Pair fanout per order is C(n,2), and every
+    * pair of one order is exploded in ONE task — so a single pathological
+    * mega-basket (a 10⁵-line order at 100×) would be a single-key
+    * quadratic no salt can split, because the quadratic is the OUTPUT, not
+    * the shuffle. Capping at the 64 smallest partkeys per order bounds any
+    * order's contribution at 64² exploded rows. The cap is semantic,
+    * mirrored verbatim in every graph oracle; on the TPC-H-shaped corpus
+    * (baskets ≤ 7 lines) it never binds, so all nine graph keys are
+    * bit-identical with or without it. */
   private[graft] val MaxBasketLines = 64
 
-  /** Distinct (order, part) basket lines, capped at [[MaxBasketLines]]
-    * smallest partkeys per order (deterministic: distinct first, then
-    * rank by partkey — duplicate lineitem rows for the same part can
-    * never displace a distinct part). */
-  private[graft] def cappedLines(li: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("l_orderkey")).orderBy(col("l_partkey"))
-    li.select(col("l_orderkey"), col("l_partkey")).distinct()
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= MaxBasketLines)
-      .select(col("l_orderkey"), col("l_partkey"))
+  /** Every ordered (src, dst) pair of parts sharing an order's capped
+    * basket, self-pairs included, once per order. ONE shuffle: the lines
+    * group by `l_orderkey` into the sorted distinct basket, capped at the
+    * [[MaxBasketLines]] smallest partkeys, and the pairs explode from the
+    * array in the same task — no self-join, so no second pass over the
+    * lines and no join-side exchange. `collect_list` drops NULL parts and
+    * the NULL order is filtered, as the oracles' equi-join drops both, so
+    * a NULL part never takes a cap slot. `node` narrows each basket AFTER
+    * the cap (the oracles cap first, then slice), so the pairs of a node
+    * subgraph come out without building the full pair set first. */
+  private[graft] def basketPairs(lines: DataFrame,
+      node: Option[Column => Column] = None): DataFrame = {
+    val baskets = lines.filter(col("l_orderkey").isNotNull)
+      .groupBy(col("l_orderkey"))
+      .agg(slice(array_sort(array_distinct(collect_list(col("l_partkey")))),
+        1, MaxBasketLines).as("b"))
+    val kept = node.fold(baskets)(p => baskets.select(filter(col("b"), p).as("b")))
+    kept.select(explode(col("b")).as("src"), col("b"))
+      .select(col("src"), explode(col("b")).as("dst"))
   }
 
   /** Up to this many distinct directed edges, the packed (src·2³²|dst)
@@ -131,21 +138,14 @@ object Graph extends QueryModule {
       probe.join(broadcast(prunedE), Seq("_ek"), "left_anti")
     }
 
-  /** Distinct directed co-occurrence edges (both directions present). */
-  private def edges(spark: SparkSession, dir: String): DataFrame =
-    edgesFromLines(cappedLines(
-      Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey"))))
-
-  /** The pair builder on an arbitrary capped (l_orderkey, l_partkey)
-    * frame — split out so the hot-basket guard is testable on planted
-    * mega-orders without writing parquet. */
-  private[graft] def edgesFromLines(lines: DataFrame): DataFrame = {
-    val a = lines.select(col("l_orderkey"), col("l_partkey").as("src"))
-    val b = lines.select(col("l_orderkey"), col("l_partkey").as("dst"))
-    a.join(b, "l_orderkey")
+  /** Distinct directed co-occurrence edges (both directions present),
+    * optionally of the subgraph induced by `node`: the basket pairs minus
+    * self-pairs, deduplicated across orders. */
+  private[graft] def edges(spark: SparkSession, dir: String,
+      node: Option[Column => Column] = None): DataFrame =
+    basketPairs(Tables.lineitem(spark, dir), node)
       .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst")).distinct()
-  }
+      .distinct()
 
   /** 3-iteration integer PageRank over the part co-purchase graph.
     *
@@ -273,8 +273,8 @@ object Graph extends QueryModule {
       : (DataFrame, DataFrame) = {
     // The edge table feeds THREE consumers (undirected half, degree table,
     // wedge-closing probe) and the oriented table two (both wedge sides) —
-    // without the checkpoints Catalyst re-derives the lineitem self-join +
-    // distinct once per reference (measured ~8x the work).
+    // without the checkpoints Catalyst re-derives the lineitem basket
+    // build + distinct once per reference (measured ~8x the work).
     // SERIALIZED cache, deliberately: both corpus-sized checkpoints here
     // must coexist with the wedge stage's 32 concurrent aggregation
     // tasks — at sf1.0 the deserialized row-object caches (~3 GiB for
@@ -292,10 +292,14 @@ object Graph extends QueryModule {
     // sorts on either side — the same trick as the pagerank iteration,
     // applied to a self-join (measured 15.8 s -> ~11 s at sf0.1/4 cpus).
     val parts = spark.sessionState.conf.numShufflePartitions
+    // deg is broadcast by hint: it is node-sized, while the edge
+    // checkpoint carries the estimate of exploded basket pairs, which
+    // Catalyst puts far below the real size, so unhinted AQE broadcast
+    // the 1.2M undirected edges instead (10 MB at sf0.1)
     val o = Materialize.byKey(
       und
-        .join(deg.select(col("node").as("src"), col("d").as("d_src")), "src")
-        .join(deg.select(col("node").as("dst"), col("d").as("d_dst")), "dst")
+        .join(broadcast(deg.select(col("node").as("src"), col("d").as("d_src"))), "src")
+        .join(broadcast(deg.select(col("node").as("dst"), col("d").as("d_dst"))), "dst")
         .select(
           when(col("d_src") < col("d_dst")
             || (col("d_src") === col("d_dst") && col("src") < col("dst")),
@@ -435,21 +439,15 @@ object Graph extends QueryModule {
     * make the raw co-purchase graph one giant quasi-clique; what remains
     * is the persistent-affinity graph — the input a real similarity/CC
     * pipeline builds (and the same sparsification that keeps the DuckDB
-    * closure oracle polynomial-sized at every SF). */
-  private def strongEdges(spark: SparkSession, dir: String): DataFrame = {
-    val li = cappedLines(
-      Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey")))
-    val a = li.select(col("l_orderkey"), col("l_partkey").as("u"))
-    val b = li.select(col("l_orderkey"), col("l_partkey").as("v"))
-    a.join(b, "l_orderkey")
-      .filter(col("u") < col("v"))
-      .groupBy(col("u"), col("v"))
-      // plain count, NOT countDistinct: cappedLines is distinct on
-      // (order, part), so each order contributes any (u, v) pair exactly
-      // once — the distinct-aggregate Expand would be pure overhead
+    * closure oracle polynomial-sized at every SF). A plain count, not a
+    * distinct count: each basket is distinct, so an order yields any pair
+    * once. */
+  private[graft] def strongEdges(spark: SparkSession, dir: String): DataFrame =
+    basketPairs(Tables.lineitem(spark, dir))
+      .filter(col("src") < col("dst"))
+      .groupBy(col("src").as("u"), col("dst").as("v"))
       .agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2)
-  }
 
   /** Large-star round of the Kiveris et al. MapReduce connected-components
     * algorithm: every node links its LARGER neighbors to the minimum of its
@@ -560,13 +558,14 @@ object Graph extends QueryModule {
     import org.apache.spark.sql.expressions.Window
     val parts = spark.sessionState.conf.numShufflePartitions
     // Symmetrize by EXPLODE, not union-of-two-selects: the union planted
-    // the whole strongEdges pipeline (cappedLines window + self-join +
-    // per-pair count) once per orientation, and the two downstream
-    // consumers (pruned top-8 window, degree rollup) doubled that again —
-    // FOUR corpus-sized pair builds per invocation. The explode emits both
-    // orientations in one pass and the lazy checkpoint makes the two
-    // consumers share it: ONE strongEdges build total. The row set is identical (union all ≡ explode of both
-    // orientations); sym is the thresholded sparse edge set, cheap to hold.
+    // the whole strongEdges pipeline (basket build + per-pair count) once
+    // per orientation, and the two downstream consumers (pruned top-8
+    // window, degree rollup) doubled that again — FOUR corpus-sized pair
+    // builds per invocation. The explode emits both orientations in one
+    // pass and the lazy checkpoint makes the two consumers share it: ONE
+    // strongEdges build total. The row set is identical (union all ≡
+    // explode of both orientations); sym is the thresholded sparse edge
+    // set, cheap to hold.
     val sym = Materialize.shared(strongEdges(spark, dir)
       .select(explode(array(
         struct(col("u"), col("v"), col("c")),
@@ -594,6 +593,22 @@ object Graph extends QueryModule {
       .orderBy(col("dist_micro"), col("partkey"))
   }
 
+  /** Symmetrized (directed-double) strong-edge set, hash-placed on `v` for
+    * the LPA join — shared by [[qCommunityLpa]] and [[qGraphModularity]].
+    * Symmetrized by EXPLODE, not union-of-two-selects: the union planted
+    * the whole strongEdges pipeline (basket build + per-pair count) once
+    * per orientation inside the checkpoint's
+    * materialization job; the explode emits both orientations in one pass —
+    * the row set is identical (union all ≡ explode of both orientations). */
+  private def symStrongByV(spark: SparkSession, dir: String): DataFrame = {
+    val parts = spark.sessionState.conf.numShufflePartitions
+    Materialize.byKey(
+      strongEdges(spark, dir).select(explode(array(
+        struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("e"))
+        .select(col("e.u").as("u"), col("e.v").as("v")), "v", parts)
+  }
+
   /** Community detection by SYNCHRONOUS label propagation (3 fixed
     * rounds) over the thresholded affinity graph — the O(E)-per-round
     * community finder (Raghavan et al.) next to [[qGraphCc]]'s exact
@@ -617,22 +632,6 @@ object Graph extends QueryModule {
     * independent of the corpus (planted-hub case in GraphSpec); and
     * [[MaxBasketLines]] already caps how much degree any one ORDER can
     * mint, so D itself grows only with genuinely distinct co-purchases. */
-  /** Symmetrized (directed-double) strong-edge set, hash-placed on `v` for
-    * the LPA join — shared by [[qCommunityLpa]] and [[qGraphModularity]].
-    * Symmetrized by EXPLODE, not union-of-two-selects: the union planted
-    * the whole strongEdges pipeline (cappedLines window + self-join +
-    * per-pair count) once per orientation inside the checkpoint's
-    * materialization job; the explode emits both orientations in one pass —
-    * the row set is identical (union all ≡ explode of both orientations). */
-  private def symStrongByV(spark: SparkSession, dir: String): DataFrame = {
-    val parts = spark.sessionState.conf.numShufflePartitions
-    Materialize.byKey(
-      strongEdges(spark, dir).select(explode(array(
-        struct(col("u"), col("v")),
-        struct(col("v").as("u"), col("u").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v")), "v", parts)
-  }
-
   def qCommunityLpa(spark: SparkSession, dir: String): DataFrame = {
     val sym = symStrongByV(spark, dir)
     lpaFromSym(sym, 3).groupBy(col("lbl").as("community"))
@@ -735,20 +734,10 @@ object Graph extends QueryModule {
     * deliverable — a monotone curve whose flattening certifies
     * convergence, same contract as the unrolled LPA/SSSP keys).
     *
-    * Scale shape per round: one map-side-combinable degree count, one
-    * semi-join of edges against the ≥k node set on each endpoint — all
-    * hash equi-joins on node ids, nothing corpus-broadcast. Each round's
-    * survivor edge set is EAGERLY checkpointed (the [[qCommunityLpa]]
-    * discipline — without the per-round truncation round 3's census
-    * re-derives rounds 1–2 from scratch; measured 7.4 s → ~4 s at
-    * sf0.1/32 threads), and — the reclamation half — the
-    * SUPERSEDED round's edge set is unpersisted as soon as its successor
-    * materializes: what the terminal union reads is three eagerly
-    * checkpointed 1-ROW census frames, so at no point are two
-    * corpus-sized edge copies resident beyond the one transient
-    * (prev → next) handoff. Holding all four edge generations in
-    * executor memory at once is a 3–6× amplification that made this
-    * key heap-bound (63.9 s) at sf1.0. */
+    * Memory: [[kcorePeel]] holds ONE corpus-sized edge copy, the
+    * checkpointed input; every per-round table it materializes is
+    * node-sized. One resident edge generation per round would be a 3–6×
+    * amplification, enough to make this key heap-bound at sf1.0. */
   def qKcore(spark: SparkSession, dir: String): DataFrame =
     kcorePeel(edges(spark, dir))
       .select(col("round"), col("n_nodes"), col("n_edges"))
@@ -761,40 +750,40 @@ object Graph extends QueryModule {
     * three round-filter join chains exhaust the single-process DuckDB's
     * disk at sf1.0 (zero value mismatches); the induced-subgraph twin
     * keeps the identical peel logic verifiable at the decade point inside
-    * the oracle's budget, and the census never exceeds 3 rows. */
+    * the oracle's budget, and the census never exceeds 3 rows. The slice
+    * narrows the baskets before the pairs explode, so the full edge set
+    * is never built. */
   def qKcoreCert(spark: SparkSession, dir: String): DataFrame =
-    kcorePeel(edges(spark, dir)
-      .filter(col("src") % 4 === 0 && col("dst") % 4 === 0))
+    kcorePeel(edges(spark, dir, Some(_ % 4 === 0)))
       .select(col("round"), col("n_nodes"), col("n_edges"),
         col("sum_src"), col("sum_dst"))
       .orderBy(col("round"))
 
-  /** Shared peel loop of [[qKcore]]/[[qKcoreCert]]: 3 rounds of
-    * "keep nodes with out-degree ≥ 3, induce", each round's census one
-    * eagerly-checkpointed row (so the next round may safely drop this
-    * round's edge set — a lazy census would read a truncated-lineage
-    * cache after its blocks are gone), each round's edge set reclaimed
-    * via [[Materialize.release]] once its successor materializes. */
-  private def kcorePeel(e0: DataFrame): DataFrame = {
-    val k = 3
-    var e = Materialize.barrier(e0)
-    val rounds = (1 to 3).map { round =>
-      val prev = e
-      val keep = prev.groupBy(col("src")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("src").as("node"))
-      e = Materialize.barrier(prev.join(keep.withColumnRenamed("node", "src"), "src")
-        .join(keep.withColumnRenamed("node", "dst"), "dst")
-        .select(col("src"), col("dst"))) // eager: materializes now — prev's last consumer
-      Materialize.release(prev)
-      Materialize.barrier(e.agg(countDistinct(col("src")).as("n_nodes"),
-          count(lit(1)).as("n_edges"),
-          coalesce(sum(col("src")), lit(0L)).as("sum_src"),
-          coalesce(sum(col("dst")), lit(0L)).as("sum_dst"))
-        .withColumn("round", lit(round.toLong)))
-    }
-    // census₃ above was the final core set's last consumer
-    Materialize.release(e)
-    rounds.reduce(_ unionByName _)
+  /** Shared peel of [[qKcore]]/[[qKcoreCert]]: 3 rounds of "keep nodes
+    * with out-degree ≥ 3, induce". The keep sets nest (a round keeps only
+    * nodes of the previous round's edges), so round r's edge set is the
+    * INPUT semi-joined to keep_r on both endpoints: no round's edge set is
+    * ever materialized, only the input once. Each round shares one per-src
+    * degree table (d = out-degree, s_dst = Σ dst), which is both the
+    * round's census (nodes = rows, edges = Σ d, Σ src = Σ src·d,
+    * Σ dst = Σ s_dst) and the next round's keep set (d ≥ 3), so the
+    * terminal union reads three node-sized tables and no edges. */
+  private[graft] def kcorePeel(e0: DataFrame): DataFrame = {
+    val e = Materialize.barrier(e0)
+    def degrees(edges: DataFrame): DataFrame =
+      Materialize.shared(edges.groupBy(col("src"))
+        .agg(count(lit(1)).as("d"), sum(col("dst")).as("s_dst")))
+    var deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
+    (1 to 3).map { round =>
+      val keep = deg.filter(col("d") >= 3).select(col("src").as("node"))
+      deg = degrees(e.join(keep, e("src") === keep("node"), "left_semi")
+        .join(keep, e("dst") === keep("node"), "left_semi"))
+      deg.agg(count(lit(1)).as("n_nodes"),
+          coalesce(sum(col("d")), lit(0L)).as("n_edges"),
+          coalesce(sum(col("src") * col("d")), lit(0L)).as("sum_src"),
+          coalesce(sum(col("s_dst")), lit(0L)).as("sum_dst"))
+        .withColumn("round", lit(round.toLong))
+    }.reduce(_ unionByName _)
   }
 
   /** Degree assortativity of the co-purchase graph — Newman's r: the
@@ -816,13 +805,17 @@ object Graph extends QueryModule {
     * the same join pattern every other key in this family runs per
     * round; the moment fold is a single global aggregate. The edge set
     * is checkpointed: the degree table AND the probe side
-    * both consume it and Catalyst has no cross-branch reuse. */
+    * both consume it and Catalyst has no cross-branch reuse. The degree
+    * table is broadcast by hint: it is node-sized, while the edge
+    * checkpoint carries the size estimate of exploded basket pairs, which
+    * Catalyst puts ~25× low (1.5 MB for 38 MB at sf0.1), so unhinted AQE
+    * built the hash table on the 2.4M edges instead. */
   def qDegreeAssort(spark: SparkSession, dir: String): DataFrame = {
     val e = Materialize.shared(edges(spark, dir))
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     val moments = e
-      .join(deg.select(col("node").as("src"), col("deg").as("dx")), "src")
-      .join(deg.select(col("node").as("dst"), col("deg").as("dy")), "dst")
+      .join(broadcast(deg.select(col("node").as("src"), col("deg").as("dx"))), "src")
+      .join(broadcast(deg.select(col("node").as("dst"), col("deg").as("dy"))), "dst")
       .agg(count(lit(1)).as("m"),
         sum(col("dx")).as("sx"), sum(col("dy")).as("sy"),
         sum(col("dx") * col("dy")).as("sxy"),
@@ -969,7 +962,7 @@ object Graph extends QueryModule {
 
   /** Shared oracle CTE block: the 64-capped order lines + the distinct
     * directed co-purchase edge set — the exact SQL twin of
-    * [[cappedLines]]/[[edges]]. One source of truth for the cap and the
+    * [[basketPairs]]/[[edges]]. One source of truth for the cap and the
     * pair build across every graph-family oracle that consumes the plain
     * directed edge list (q_degree_assort, q_kcore, q_hits, q_link_predict,
     * q_khop, q_pagerank, q_triangle and the decade certificates) — a

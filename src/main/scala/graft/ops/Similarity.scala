@@ -1473,8 +1473,8 @@ object Similarity extends QueryModule {
       .withColumn("lchunk", -floor(col("n_chars") / 64))) // feeds both chunk tables + ranks
     val dense = Windows.chunkedRunningSums(scored, Nil, "dchunk",
       Seq(col("cos_raw").desc, col("doc_id")), "r_dense" -> lit(1L))
-    Windows.chunkedRunningSums(dense, Nil, "lchunk",
-        Seq(col("n_chars").desc, col("doc_id")), "r_lex" -> lit(1L))
+    Windows.chunkedRunningSumsOf(dense, scored, Nil, "lchunk",
+        Seq(col("n_chars").desc, col("doc_id")), Seq("r_lex" -> lit(1L)))
       .withColumn("r_dense", col("r_dense").cast("int"))
       .withColumn("r_lex", col("r_lex").cast("int"))
       .withColumn("rrf_raw", expr(

@@ -52,12 +52,22 @@ object Windows extends QueryModule {
     * chunk keep their place. `df` is read twice (the chunk table and the
     * rows): checkpoint it first when it is costly to derive. */
   private[graft] def chunkedRunningSums(df: DataFrame, partitionBy: Seq[String],
-      chunk: String, orderBy: Seq[Column], sums: (String, Column)*): DataFrame = {
+      chunk: String, orderBy: Seq[Column], sums: (String, Column)*): DataFrame =
+    chunkedRunningSumsOf(df, df, partitionBy, chunk, orderBy, sums)
+
+  /** [[chunkedRunningSums]] over the rows of `df`, with the chunk table
+    * summed over `chunkRows`: a frame with the same rows, chunk and sum
+    * values as `df` but a shorter plan. A second ranking chained on a
+    * first passes the frame the first one started from, so its chunk
+    * table does not read through the first ranking's broadcast join. */
+  private[graft] def chunkedRunningSumsOf(df: DataFrame, chunkRows: DataFrame,
+      partitionBy: Seq[String], chunk: String, orderBy: Seq[Column],
+      sums: Seq[(String, Column)]): DataFrame = {
     val keys = partitionBy :+ chunk
     val names = sums.map(_._1)
     val chunkSums = sums.map { case (n, v) => sum(v).as(s"_cs_$n") }
     val byChunk = Window.partitionBy(partitionBy.map(col): _*).orderBy(col(chunk))
-    val offsets = df.groupBy(keys.map(col): _*).agg(chunkSums.head, chunkSums.tail: _*)
+    val offsets = chunkRows.groupBy(keys.map(col): _*).agg(chunkSums.head, chunkSums.tail: _*)
       .select(keys.map(k => col(k).as(s"_k_$k")) ++ names.flatMap { n => Seq(
         sum(col(s"_cs_$n")).over(byChunk.rowsBetween(Window.unboundedPreceding, -1))
           .as(s"_off_$n"),

@@ -335,16 +335,84 @@ class GraphSpec extends SparkSpec {
     val small = Seq((2L, 100001L), (2L, 100002L), (2L, 100003L))
     val dup   = Seq((2L, 100002L))                     // duplicate line must not displace a part
     val lines = (mega ++ small ++ dup).toDF("l_orderkey", "l_partkey")
-    val capped = Graph.cappedLines(lines)
-    val perOrder = capped.groupBy("l_orderkey").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(perOrder(1L) == Graph.MaxBasketLines.toLong, "mega-order clamped to the cap")
-    assert(perOrder(2L) == 3L, "normal baskets pass through untouched, duplicates dropped")
-    val kept = capped.filter($"l_orderkey" === 1L).collect().map(_.getLong(1)).sorted.toSeq
-    assert(kept == (1L to Graph.MaxBasketLines.toLong), "deterministic: the cap keeps the SMALLEST partkeys")
+    val pairs = Graph.basketPairs(lines)
+    // the self-pairs list each order's capped basket once (the two orders'
+    // parts are disjoint)
+    val basket = pairs.filter($"src" === $"dst").collect().map(_.getLong(0)).toSeq
+    assert(basket.count(_ <= 10000L) == Graph.MaxBasketLines, "mega-order clamped to the cap")
+    assert(basket.filter(_ > 10000L).sorted == Seq(100001L, 100002L, 100003L),
+      "normal baskets pass through untouched, duplicates dropped")
+    assert(basket.filter(_ <= 10000L).sorted == (1L to Graph.MaxBasketLines.toLong),
+      "deterministic: the cap keeps the SMALLEST partkeys")
     val cap = Graph.MaxBasketLines.toLong
-    assert(Graph.edgesFromLines(capped).count() == cap * (cap - 1) + 3L * 2L,
+    assert(pairs.filter($"src" =!= $"dst").distinct().count() == cap * (cap - 1) + 3L * 2L,
       "directed pair fanout bounded at cap*(cap-1) per order")
+  }
+
+  test("a NULL part never takes a cap slot: in a 70-part order part #64 is kept") {
+    import spark.implicits._
+    val lines = ((1L to 70L).map(p => (7L, Option(p))) :+ ((7L, Option.empty[Long])))
+      .toDF("l_orderkey", "l_partkey")
+    val pairs = Graph.basketPairs(lines).collect()
+    assert(pairs.forall(r => !r.isNullAt(0) && !r.isNullAt(1)), "the NULL part never pairs")
+    val parts = pairs.map(_.getLong(0)).toSet
+    assert(parts == (1L to Graph.MaxBasketLines.toLong).toSet,
+      s"the cap keeps the 64 smallest non-NULL parts, #64 included: ${parts.toSeq.sorted}")
+  }
+
+  test("basket pairs equal an in-memory self-join of the capped baskets") {
+    import spark.implicits._
+    val lines: Seq[(Option[Long], Option[Long])] =
+      (1L to 10000L).map(p => (Some(1L), Some(p))) ++         // 10k mega-order
+      Seq(2L, 4L, 3L, 4L, 2L).map(p => (Some(2L), Some(p))) ++ // duplicate lines
+      Seq((Some(3L), Some(8L))) ++                             // single-part order
+      Seq((None, Some(5L)), (None, Some(6L))) ++               // NULL order key
+      Seq(5L, 8L, 12L, 13L, 16L).map(p => (Some(4L), Some(p)))
+    val df = lines.toDF("l_orderkey", "l_partkey")
+    def want(keep: Long => Boolean): Seq[(Long, Long)] =
+      lines.collect { case (Some(o), Some(p)) => (o, p) }.groupBy(_._1).values.toSeq
+        .flatMap { ls =>
+          val basket = ls.map(_._2).distinct.sorted.take(Graph.MaxBasketLines).filter(keep)
+          for (a <- basket; b <- basket) yield (a, b)
+        }.sorted
+    def got(pairs: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(got(Graph.basketPairs(df)) == want(_ => true))
+    // the node predicate narrows AFTER the cap: the mega-order keeps the
+    // multiples of 4 among its 64 smallest parts, not the 64 smallest
+    // multiples of 4
+    val mod4 = got(Graph.basketPairs(df, Some(_ % 4 === 0)))
+    assert(mod4 == want(_ % 4 == 0))
+    assert(mod4.exists(_._1 == 64L) && !mod4.exists(_._1 == 68L))
+  }
+
+  test("k-core peel: a K4 core with pendant chains loses nodes in every round") {
+    import spark.implicits._
+    // core K4 on 1..4; a chain of length L hangs off core node 1 and ends
+    // in a leaf, every chain node also tied to one more core node, so it
+    // has degree 3 until its outer neighbor goes: round 1 drops the
+    // leaves, round 2 the chains' last nodes, round 3 the next ones
+    val core = for (a <- 1L to 4L; b <- 1L to 4L if a < b) yield (a, b)
+    def chain(base: Long, len: Int): Seq[(Long, Long)] = {
+      val nodes = (1 to len).map(base + _) :+ (base + 9L) // the last one is the leaf
+      (1L +: nodes).sliding(2).map(p => (p(0), p(1))).toSeq ++
+        nodes.init.map(n => (2L + n % 3, n))
+    }
+    val und = core ++ chain(10L, 1) ++ chain(20L, 2) ++ chain(30L, 3)
+    var e = (und ++ und.map(_.swap)).toSet
+    val want = (1 to 3).map { round =>
+      val keep = e.groupBy(_._1).collect { case (n, es) if es.size >= 3 => n }.toSet
+      val next = e.filter { case (s, d) => keep(s) && keep(d) }
+      assert(next.map(_._1).size < e.map(_._1).size, s"round $round must remove nodes")
+      e = next
+      (round.toLong, e.map(_._1).size.toLong, e.size.toLong,
+        e.toSeq.map(_._1).sum, e.toSeq.map(_._2).sum)
+    }
+    val got = Graph.kcorePeel(und.flatMap(p => Seq(p, p.swap)).toDF("src", "dst"))
+      .orderBy("round").collect()
+      .map(r => (r.getAs[Long]("round"), r.getAs[Long]("n_nodes"), r.getAs[Long]("n_edges"),
+        r.getAs[Long]("sum_src"), r.getAs[Long]("sum_dst"))).toSeq
+    assert(got == want, s"got $got\nwant $want")
   }
 
   test("edge-probe kills: bloom regime returns exactly the broadcast regime's rows") {

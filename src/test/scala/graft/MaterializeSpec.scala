@@ -5,9 +5,10 @@ import org.apache.spark.SparkException
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** The three behaviours of [[Materialize]] beyond the checkpoint itself:
-  * a scope frees what a key made, `inline` plans past every checkpoint,
-  * and a released checkpoint fails loudly instead of returning rows. */
+/** The behaviours of [[Materialize]] beyond the checkpoint itself: a
+  * scope frees what a key made, `inline` plans past every checkpoint,
+  * `shared` defers only its result stage, and a released checkpoint fails
+  * loudly instead of returning rows. */
 class MaterializeSpec extends SparkSpec {
 
   /** The id the next RDD will get: every RDD made after this call has an
@@ -52,6 +53,19 @@ class MaterializeSpec extends SparkSpec {
     val keyed = Materialize.inline(Materialize.byKey(Tables.customer(spark, sf), "c_custkey", 8))
     assert(logicalRdds(keyed).isEmpty)
     assert(keyed.count() == Tables.customer(spark, sf).count())
+  }
+
+  test("shared runs a frame's shuffle stages at the call; the result stage waits for a consumer") {
+    Materialize.scoped {
+      val agg = Tables.lineitem(spark, sf).groupBy("l_orderkey").count()
+      val scan = Tables.customer(spark, sf).select("c_custkey")
+      val (sharedAgg, aggJobs) = JobCount(spark)(Materialize.shared(agg))
+      val (_, scanJobs) = JobCount(spark)(Materialize.shared(scan))
+      assert(aggJobs == 1, s"the aggregation's shuffle stage runs at the call: $aggJobs jobs")
+      assert(scanJobs == 0, s"a frame with no exchange runs nothing at the call: $scanJobs jobs")
+      val (n, readJobs) = JobCount(spark)(sharedAgg.count())
+      assert(n == agg.count() && readJobs >= 1, "the cache fills with the first consumer")
+    }
   }
 
   test("an action on a released barrier fails on the missing checkpoint block, never returning rows") {

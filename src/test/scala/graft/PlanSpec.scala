@@ -206,18 +206,56 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_kcore's census union reads three checkpointed round RDDs, no join re-derivation") {
-    // each round's survivor edge set is eagerly localCheckpoint'ed; the
-    // final census union must aggregate those three RDD scans directly —
-    // a Join in the terminal plan means a round prefix is being re-derived
-    // lazily (the pre-round-7 shape that made q_kcore the slowest key).
+    // each round's census folds that round's checkpointed per-src degree
+    // table; a Join in the terminal plan means a round's edge set is being
+    // re-derived lazily, and an edge-shaped scan means the census went back
+    // to counting edges
     val df = graft.ops.Graph.qKcore(spark, sf)
     val optimized = df.queryExecution.optimizedPlan
     import org.apache.spark.sql.catalyst.plans.logical.Join
     import org.apache.spark.sql.execution.LogicalRDD
     assert(optimized.collect { case j: Join => j }.isEmpty,
       s"census must not re-derive round joins:\n$optimized")
-    assert(optimized.collect { case r: LogicalRDD => r }.size == 3,
-      s"expected one checkpointed RDD per round:\n$optimized")
+    val scans = optimized.collect { case r: LogicalRDD => r.output.map(_.name) }
+    assert(scans == Seq.fill(3)(Seq("src", "d", "s_dst")),
+      s"expected one (src, d, s_dst) degree table per round:\n$optimized")
+  }
+
+  test("the co-purchase pair builders plan no join and no broadcast") {
+    // one aggregation by order, then the pairs explode from the basket
+    // array: a Join here is the self-join on l_orderkey coming back
+    import graft.ops.Graph
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    Materialize.inline {
+      for ((name, df) <- Seq(
+          "edges" -> Graph.edges(spark, sf),
+          "edges mod 4" -> Graph.edges(spark, sf, Some(_ % 4 === 0)),
+          "strongEdges" -> Graph.strongEdges(spark, sf))) {
+        val optimized = df.queryExecution.optimizedPlan
+        assert(optimized.collect { case j: Join => j }.isEmpty, s"$name joins:\n$optimized")
+        assert(!planOf(df).contains("BroadcastExchange"), s"$name broadcasts:\n${planOf(df)}")
+      }
+    }
+  }
+
+  test("q_kcore and q_kcore_cert stay within their job budgets at sf0.001") {
+    // AQE runs each shuffle stage as its own job; these budgets are the
+    // measured counts of the one-copy peel (fixed from run to run), so a
+    // barrier or a per-round edge copy creeping back fails here
+    val budgets = Seq(
+      // footer read 1 + edge barrier 3 + degree tables 3/2/2 (keep-set broadcast, degree shuffle) + census 4
+      "q_kcore" -> 15,
+      // the same peel over the mod-4 slice, which only narrows the baskets
+      "q_kcore_cert" -> 15)
+    val over = budgets.flatMap { case (key, budget) =>
+      val q = SparkEntry.queries(key)
+      val (_, jobs) = JobCount(spark) {
+        Materialize.scoped(q(spark, sf).write.format("noop").mode("overwrite").save())
+      }
+      info(s"$key ran $jobs jobs (budget $budget)")
+      if (jobs > budget) Some(s"$key ran $jobs jobs, budget $budget") else None
+    }
+    assert(over.isEmpty, over.mkString("; "))
   }
 
   test("q_sim_sparse consumes ONE weighted-postings checkpoint — no parquet re-derivation, no cartesian") {
